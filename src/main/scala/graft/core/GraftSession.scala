@@ -12,6 +12,12 @@ import org.apache.spark.sql.SparkSession
   * - AQE on: runtime coalescing + skew-join handling — the local[N]
   *   stand-in for what a 1000-executor cluster needs even more.
   * - shuffle.partitions sized to cores, not the 200 default (local mode).
+  * - artifact isolation off: every streaming query runs on a clone of
+  *   the session, and per-session classloaders would defeat Spark's
+  *   codegen cache (keyed by classloader and source), so each
+  *   `DailyRunner.runOnce` would recompile identical classes. The
+  *   engine adds no session artifacts, so sharing one loader loses
+  *   nothing.
   */
 object GraftSession {
   def builder(cores: String): SparkSession.Builder =
@@ -22,6 +28,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // The driver fixtures write events.ts as parquet TIMESTAMP(NANOS),
       // which vanilla Spark 4.x rejects (PARQUET_TYPE_ILLEGAL). Read the
       // raw int64 nanos and convert in Tables.load.

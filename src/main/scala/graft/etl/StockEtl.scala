@@ -80,22 +80,27 @@ object StockEtl {
     * dump_bigq.py:148-149). The count comes from an [[Observation]]
     * attached to the write itself — at 100 TB a read-back count() is a
     * full second scan; observed metrics are free. */
-  def overwriteTable(df: DataFrame, path: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
-    obs.get("n").asInstanceOf[Long]
-  }
+  def overwriteTable(df: DataFrame, path: String): Long =
+    countedWrite(df)(_.write.mode(SaveMode.Overwrite).parquet(path))
 
   /** L2 at scale: partitioned layout + dynamic partition overwrite —
     * a re-run replaces only the partitions present in the incoming
     * frame (the 100 TB shape of WRITE_TRUNCATE: daily refresh rewrites
-    * the day, not the table). */
-  def overwritePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    * the day, not the table). Returns the written row count, observed
+    * on the write like [[overwriteTable]]'s. */
+  def overwritePartitioned(df: DataFrame, path: String, partitionCol: String): Long =
+    countedWrite(df)(_.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
-      .parquet(path)
+      .parquet(path))
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted by an
+    * [[org.apache.spark.sql.Observation]] on the same job. */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n")))
+    obs.get("n").asInstanceOf[Long]
+  }
 
   /** O1: the whole pipeline; returns the loaded table for inspection. */
   def runPipeline(spark: SparkSession, csvPath: String, tablePath: String): DataFrame = {

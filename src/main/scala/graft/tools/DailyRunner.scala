@@ -48,7 +48,12 @@ object DailyRunner {
   /** One scheduled run: drain all unseen CSV files under `csvDir`
     * through clean → warehouse refresh, then return (files may be the
     * whole landing zone on day one, one file on a normal day, zero on
-    * a double-fire). Returns the number of rows loaded by this run. */
+    * a double-fire). Returns the number of rows loaded by this run.
+    *
+    * Each micro-batch is one Spark job: the partitioned write. Its row
+    * count comes from the write itself (an observed metric), which is
+    * the reference's post-load `num_rows` check (dump_bigq.py:148-149)
+    * without a second pass over the data. */
   def runOnce(spark: SparkSession, csvDir: String, tablePath: String,
               checkpointDir: String): Long = {
     var loaded = 0L
@@ -65,17 +70,11 @@ object DailyRunner {
         val cleaned = graft.etl.StockEtl.clean(batch)
           .withColumn("Date", coalesce(col("Date"),
             lit("1970-01-01").cast("date")))
-          .cache()
-        try {
-          val n = cleaned.count()
-          if (n > 0) {
-            // Dynamic partition overwrite by trading date: a daily
-            // increment rewrites only the dates it carries — the
-            // 100 TB shape of the reference's WRITE_TRUNCATE refresh.
-            graft.etl.StockEtl.overwritePartitioned(cleaned, tablePath, "Date")
-            loaded += n
-          }
-        } finally { cleaned.unpersist(); () }
+        // Dynamic partition overwrite by trading date: a daily
+        // increment rewrites only the dates it carries — the 100 TB
+        // shape of the reference's WRITE_TRUNCATE refresh. An empty
+        // batch (a header-only file) writes no partition.
+        loaded += graft.etl.StockEtl.overwritePartitioned(cleaned, tablePath, "Date")
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

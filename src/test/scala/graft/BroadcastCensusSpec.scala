@@ -153,8 +153,11 @@ class BroadcastCensusSpec extends SparkTestBase {
         (visible ++ flaggedOf("<checkpointed>", tapA, tapB),
           perQuery, tapB, t0)
       } finally {
-        graft.core.CkptTap.stop()
+        // A failed Await leaves the queued queries running: drain them
+        // here, so they cannot run on into later suites.
         pool.shutdown()
+        pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
+        graft.core.CkptTap.stop()
       }
     info(f"census swept ${perQuery.size} queries in " +
       f"${(System.nanoTime() - t0) / 1e9}%.0f s; " +

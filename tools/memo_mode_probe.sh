@@ -10,14 +10,15 @@
 set -euo pipefail
 SFDIR="${1:?usage: tools/memo_mode_probe.sh <sf-dir> [rounds]}"
 ROUNDS="${2:-3}"
+source "$(dirname "$0")/host_sizing.sh"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-JVM=(java -Xmx100g -XX:+UseG1GC
+JVM=(java "-Xmx$SPARK_DRIVER_MEM" -XX:+UseG1GC
      --add-exports=java.base/sun.nio.ch=ALL-UNNAMED -cp "$CP")
 for i in $(seq 1 "$ROUNDS"); do
   for MODE in ckpt parquet; do
     FLAG=""
     [ "$MODE" = parquet ] && FLAG=1
-    LINE=$(SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="$SFDIR" \
+    LINE=$(SPARK_GRAFT_SF_DIR="$SFDIR" \
       SPARK_GRAFT_BENCH_ONLY=llm_stage_index \
       SPARK_GRAFT_MEMO_PARQUET="$FLAG" \
       "${JVM[@]}" graft.Bench 2>/dev/null)

@@ -20,8 +20,9 @@
 #   tools/bench_archive/bench_detail_<tag>_sf10dial.json
 set -euo pipefail
 TAG="${1:?usage: tools/sf10_dial_probe.sh <tag>}"
+source "$(dirname "$0")/host_sizing.sh"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-JVM=(java -Xmx100g -XX:+UseG1GC
+JVM=(java "-Xmx$SPARK_DRIVER_MEM" -XX:+UseG1GC
      --add-exports=java.base/sun.nio.ch=ALL-UNNAMED -cp "$CP")
 # llm_stage_index rides along in the timed runs (it runs first, as in
 # the full bench) so any staged memo a family member touches is warm
@@ -41,7 +42,7 @@ fi
 
 echo "[sf10_probe] dial-family Verify at sf10..."
 rm -rf /tmp/verify_sf10_dial
-SPARK_GRAFT_CPUS=32 "${JVM[@]}" graft.Verify testdata_sf10 \
+"${JVM[@]}" graft.Verify testdata_sf10 \
   /tmp/verify_sf10_dial "$FAMILY"
 
 echo "[sf10_probe] DuckDB oracle over the sf10 dial dump..."
@@ -51,12 +52,12 @@ grep -q "FAIL" "tools/bench_archive/oracle_sf10dial_${TAG}.txt" \
   && { echo "[sf10_probe] ORACLE FAILURES AT SF10"; exit 1; }
 
 echo "[sf10_probe] timed family at sf1..."
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=testdata_sf1 \
+SPARK_GRAFT_SF_DIR=testdata_sf1 \
   SPARK_GRAFT_BENCH_ONLY="$FAMILY,llm_stage_index" "${JVM[@]}" graft.Bench
 cp bench_detail.json "tools/bench_archive/bench_detail_${TAG}_sf1dial.json"
 
 echo "[sf10_probe] timed family at sf10..."
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=testdata_sf10 \
+SPARK_GRAFT_SF_DIR=testdata_sf10 \
   SPARK_GRAFT_BENCH_ONLY="$FAMILY,llm_stage_index" "${JVM[@]}" graft.Bench
 cp bench_detail.json "tools/bench_archive/bench_detail_${TAG}_sf10dial.json"
 

@@ -18,8 +18,9 @@
 set -euo pipefail
 TAG="${1:?usage: tools/sf1_gate.sh <tag> [--with-sf10]}"
 WITH_SF10="${2:-}"
+source "$(dirname "$0")/host_sizing.sh"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-JVM=(java -Xmx100g -XX:+UseG1GC
+JVM=(java "-Xmx$SPARK_DRIVER_MEM" -XX:+UseG1GC
      --add-exports=java.base/sun.nio.ch=ALL-UNNAMED -cp "$CP")
 
 if [ ! -d testdata_sf1 ]; then
@@ -29,7 +30,7 @@ fi
 
 echo "[sf1_gate] full-registry Verify at sf1..."
 rm -rf /tmp/verify_sf1_gate
-SPARK_GRAFT_CPUS=32 "${JVM[@]}" graft.Verify testdata_sf1 /tmp/verify_sf1_gate
+"${JVM[@]}" graft.Verify testdata_sf1 /tmp/verify_sf1_gate
 
 echo "[sf1_gate] DuckDB oracle over the sf1 dump..."
 python3 tools/oracle_check.py testdata_sf1 /tmp/verify_sf1_gate \
@@ -38,12 +39,12 @@ grep -q "FAIL" "tools/bench_archive/oracle_sf1_${TAG}.txt" \
   && { echo "[sf1_gate] ORACLE FAILURES AT SF1"; exit 1; }
 
 echo "[sf1_gate] bench at sf0.1..."
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   "${JVM[@]}" graft.Bench
 cp bench_detail.json "tools/bench_archive/bench_detail_${TAG}_run1.json"
 
 echo "[sf1_gate] bench at sf1..."
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=testdata_sf1 "${JVM[@]}" graft.Bench
+SPARK_GRAFT_SF_DIR=testdata_sf1 "${JVM[@]}" graft.Bench
 cp bench_detail.json "tools/bench_archive/bench_detail_${TAG}_sf1.json"
 
 if [ "$WITH_SF10" = "--with-sf10" ]; then
