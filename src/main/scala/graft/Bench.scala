@@ -484,11 +484,13 @@ object Bench {
       val add = e.length + (if (entries.isEmpty) 0 else 1)
       if (len + add <= lineBudget) { entries += e; len += add }
     }
-    println(prefix + entries.mkString(",") + suffix)
     // Release the memoized singletons + any persisted stragglers so a
     // long bench session ends with zero storage blocks (and so would a
-    // library user's long-lived app calling the same hook).
+    // library user's long-lived app calling the same hook). Both log
+    // (one WARN per released checkpoint), so they run before the
+    // contract line: it must be the last line the JVM writes.
     graft.core.CacheRelease(spark)
     spark.stop()
+    println(prefix + entries.mkString(",") + suffix)
   }
 }

@@ -18,8 +18,24 @@ import org.apache.spark.sql.SparkSession
   *   `DailyRunner.runOnce` would recompile identical classes. The
   *   engine adds no session artifacts, so sharing one loader loses
   *   nothing.
+  * - codegen cache sized to the measured working set: Spark keeps the
+  *   classes it compiles for generated code in an LRU cache of 100 by
+  *   default, and one staging cycle (release the memos, rebuild
+  *   `llm_stage_index`, run every memo consumer) cycles through far
+  *   more, so each warm rebuild recompiled classes it had compiled
+  *   one cycle earlier. The census (`Probe codegen` at sf0.1 over
+  *   `llm_stage_index` and the 18 memo consumers of
+  *   `perfbench/workloads.json`, 3 cycles, 4 cores) compiles 468
+  *   classes in the first cycle. Later cycles added 18–22 more (two
+  *   runs), the second plans of three consumers whose
+  *   DISTINCT-aggregate rewrite varies between builds, and recompiled
+  *   none: a working set under 500. The cache holds 2000, over 3× that; re-run the census as the
+  *   registry grows. It is a static conf: it takes effect only on the
+  *   first session a JVM creates.
   */
 object GraftSession {
+  val CodegenCacheEntries = "2000"
+
   def builder(cores: String): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
@@ -29,6 +45,7 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       // The driver fixtures write events.ts as parquet TIMESTAMP(NANOS),
       // which vanilla Spark 4.x rejects (PARQUET_TYPE_ILLEGAL). Read the
       // raw int64 nanos and convert in Tables.load.

@@ -262,36 +262,15 @@ object LlmText {
     * pipeline — memoized per (session, fixture dir) so the clusters
     * query and the apply query share one computation. The cached frame
     * is localCheckpointed (plan-free), so holding it is cheap. */
-  // Keyed by the session's UUID STRING, not the session object: a
-  // WeakHashMap[SparkSession, DataFrame] never collects, because the
-  // cached DataFrame strongly references its session
-  // (Dataset.sparkSession) — the classic value→key anti-pattern. A
-  // string key holds no session reference; entries are evicted by a
-  // listener when the owning SparkContext stops (every session of a
-  // stopped context is unusable, so its cached frames are garbage).
+  // Session-scoped (evicted when the owning SparkContext stops).
   // Memoized frames are eagerly-materialized localCheckpoints
   // (plan-free), so holding them while the app lives is cheap; the
   // near-dup PAIR table and the cluster table are both materialized
   // intermediates a real dedup pipeline writes once and reads from
-  // every consumer (clusters, alt-star CC, apply).
-  private val memoCache =
-    new java.util.HashMap[String, scala.collection.mutable.Map[String, DataFrame]]
-  private val evictionHooked = new java.util.HashSet[String]
-
-  // Spark 4's sessionUUID is private[sql], so mint our own stable id
-  // per session. The WeakHashMap value is a plain string — it holds no
-  // reference back to the session, so the weak key can still collect.
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(s)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(s, id)
-      }
-      id
-    }
+  // every consumer (clusters, alt-star CC, apply). Builds, timings and
+  // releases all run under this object's lock.
+  private val memoCache = new graft.core.SessionScoped(
+    () => scala.collection.mutable.Map.empty[String, DataFrame])
 
   /** Materialize a staged index relation (the memo bodies' tail call).
     *
@@ -316,8 +295,8 @@ object LlmText {
     * files instead of scanning the shared java.io.tmpdir, where a
     * leftover from a crashed JVM would satisfy a global check. */
   def parquetMemoDir(s: SparkSession): java.io.File =
-    new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft-memo-${sessionKey(s)}")
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-memo-${graft.core.SessionScoped.id(s)}")
 
   private def stagedMaterialize(s: SparkSession, key: String)(
       df: DataFrame): DataFrame =
@@ -339,20 +318,7 @@ object LlmText {
   private def memo(s: SparkSession, key: String)(
       compute: => DataFrame): DataFrame =
     memoCache.synchronized {
-      val sid = sessionKey(s)
-      if (evictionHooked.add(sid)) {
-        s.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              memoCache.synchronized {
-                memoCache.remove(sid); evictionHooked.remove(sid)
-              }
-          })
-      }
-      val perSession = memoCache.computeIfAbsent(
-        sid, _ => scala.collection.mutable.Map.empty)
-      perSession.getOrElseUpdate(key, {
+      memoCache(s).getOrElseUpdate(key, {
         // EXCLUSIVE build time: memo builds nest (clusters ⊇ neardup ⊇
         // sigs), so each frame on this depth stack accumulates its
         // children's wall time, which is subtracted on completion.
@@ -406,8 +372,7 @@ object LlmText {
     * not checkpoint RDDs. The storage actually lives on the
     * `LogicalRDD`'s backing RDD, so that is what gets unpersisted. */
   def releaseMemo(s: SparkSession): Unit = memoCache.synchronized {
-    val sid = sessionKey(s)
-    Option(memoCache.remove(sid)).foreach(_.values.foreach { df =>
+    memoCache.remove(s).foreach(_.values.foreach { df =>
       df.unpersist(blocking = true)
       org.apache.spark.sql.graftshims.DatasetShim.checkpointedRdds(df)
         .foreach(_.unpersist(blocking = true))
@@ -424,7 +389,19 @@ object LlmText {
     memo(s, s"clusters:$dir")(computeClusters(s, dir))
 
   private def computeClusters(s: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashNearDup(s, dir).select("doc_a", "doc_b")
+    val (labels, _) =
+      minLabelComponents(minhashNearDup(s, dir).select("doc_a", "doc_b"))
+    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
+      (col("node") === col("label")).as("is_keeper"))
+  }
+
+  /** Connected components of the undirected graph whose edges are the
+    * rows of `pairs` (doc_a, doc_b): (node, label), where label is the
+    * smallest node id in the node's component, plus the propagation
+    * steps run. Labels only ever fall, so min-label propagation always
+    * reaches its fixpoint, within diameter + 1 steps; the loop runs
+    * until a step changes no label, however long the chain. */
+  private[graft] def minLabelComponents(pairs: DataFrame): (DataFrame, Int) = {
     val rawEdges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .persist()
@@ -453,20 +430,19 @@ object LlmText {
         .tappedLocalCheckpoint()
     }
     var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 25) {
+    var steps = 0
+    while (changed > 0) {
       // two propagation steps per convergence check: fixpoint is still
       // detected exactly (a full unchanged step), with half the
       // check-job overhead per round
       val next = propagate(propagate(labels).drop("chg"))
       changed = next.filter(col("chg")).count()
       labels = next.drop("chg")
-      iter += 2
+      steps += 2
     }
     // labels is localCheckpoint'd (plan-free), so the edge cache can go.
     rawEdges.unpersist(blocking = false)
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
-      (col("node") === col("label")).as("is_keeper"))
+    (labels, steps)
   }
 
   /** Apply the dedup decision: the corpus with near-dup cluster

@@ -7,6 +7,7 @@ import graft.core.{GraftSession, Tables}
   *
   *   runMain graft.tools.Probe schemas <sfDir>
   *   runMain graft.tools.Probe explain <sfDir> <queryName>
+  *   runMain graft.tools.Probe codegen <sfDir> <q1,q2,...> [cycles]
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -71,6 +72,30 @@ object Probe {
           println(f"[timeMany] $q min=${times.min}%.3f " +
             times.map(t => f"$t%.3f").mkString("[", ",", "]"))
         }
+      // Codegen census: per cycle (memos released first, so every
+      // cycle rebuilds the staging index), the classes each query
+      // compiles and the compile time. A cycle after the first that
+      // compiles nothing fits in Spark's codegen cache; the first
+      // cycle's total, with the cache large enough, is the working set
+      // `GraftSession` sizes the cache from.
+      case "codegen" :: dir :: names :: cycles =>
+        import org.apache.spark.metrics.source.CodegenMetrics
+        import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        (1 to cycles.headOption.map(_.toInt).getOrElse(2)).foreach { c =>
+          graft.queries.LlmText.releaseMemo(spark)
+          val (n0, ns0, t0) = (compiles, CodeGenerator.compileTime, System.nanoTime())
+          names.split(',').filter(_.nonEmpty).foreach { q =>
+            val (n, ns) = (compiles, CodeGenerator.compileTime)
+            graft.SparkEntry.queries(q)(spark, dir)
+              .write.mode("overwrite").format("noop").save()
+            println(f"[codegen] cycle $c $q compiles=${compiles - n} " +
+              f"compile_ms=${(CodeGenerator.compileTime - ns) / 1e6}%.0f")
+          }
+          println(f"[codegen] cycle $c total compiles=${compiles - n0} " +
+            f"compile_ms=${(CodeGenerator.compileTime - ns0) / 1e6}%.0f " +
+            f"wall_s=${(System.nanoTime() - t0) / 1e9}%.2f")
+        }
       // AQE's runtime join re-planning (e.g. SMJ→BHJ once the build
       // side's true size is known) is invisible in the static plan:
       // execute, then print the FINAL adaptive plan. This is the audit
@@ -119,7 +144,8 @@ object Probe {
           }.mkString(" | "))
         }
       case other =>
-        System.err.println(s"usage: schemas <dir> | explain <dir> <query>; got $other")
+        System.err.println("usage: schemas <dir> | explain <dir> <query> | " +
+          s"codegen <dir> <queries> [cycles]; got $other")
     }
     spark.stop()
   }

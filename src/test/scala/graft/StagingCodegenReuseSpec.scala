@@ -1,0 +1,47 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
+import graft.core.GraftSession
+import graft.queries.LlmText
+
+/** A staging cycle (release the memos, rebuild `llm_stage_index`, run
+  * its consumers) cycles through more generated classes than Spark's
+  * default codegen cache holds (100), so with the default every warm
+  * rebuild recompiles classes it compiled one cycle earlier.
+  * `GraftSession` pins the cache to the measured working set; a second
+  * cycle must then compile nothing. The consumers are the benchmark's
+  * `llm_staging` cycle. */
+class StagingCodegenReuseSpec extends SparkTestBase {
+  private val cycle = Seq("llm_stage_index", "llm_minhash_sigs",
+    "llm_minhash_neardup", "llm_dedup_clusters", "llm_dedup_apply",
+    "llm_dedup_stats", "llm_cross_source_overlap",
+    "llm_dedup_threshold_sweep", "llm_pipeline_e2e")
+
+  // Spark's rewrite of several DISTINCT aggregates orders the distinct
+  // groups by a hash that covers expression ids, which every memo
+  // rebuild renews, so this query (two countDistincts) has two plans and
+  // compiles each once, when first seen, whatever the cache size. It
+  // runs in both cycles, but its own compiles are not counted.
+  private val twoPlans = "llm_dedup_threshold_sweep"
+
+  /** Classes compiled by the cycle's queries, `twoPlans` excepted. */
+  private def runCycle(): Long = cycle.map { q =>
+    val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    SparkEntry.queries(q)(spark, sf).write.mode("overwrite").format("noop").save()
+    if (q == twoPlans) 0L else CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+  }.sum
+
+  test("the codegen cache size is pinned on the session") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries)
+  }
+
+  test("a warm staging rebuild and its consumers compile no new classes") {
+    LlmText.releaseMemo(spark)
+    runCycle()
+    LlmText.releaseMemo(spark)
+    val compiled = runCycle()
+    assert(compiled == 0L, s"a warm staging cycle compiled $compiled classes")
+  }
+}
