@@ -5,8 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Pre-truncation plan tap for every `checkpoint`/`localCheckpoint`
-  * call site in the engine.
+/** Pre-truncation plan tap for every `localCheckpoint` call site in the
+  * engine.
   *
   * Why it exists: an eager checkpoint materializes a frame and
   * replaces its logical plan with a `LogicalRDD` leaf. That is the
@@ -17,10 +17,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * query's final optimized plan — the r13 round found `part` forced
   * broadcast behind `agg_market_basket`'s checkpoint only by hand.
   * This shim closes that hole: every engine checkpoint goes through
-  * [[TapSyntax.tappedLocalCheckpoint]]/[[TapSyntax.tappedCheckpoint]],
-  * which — ONLY while a census has the tap enabled — records the
-  * frame's optimized plan (pre-truncation) tagged with the census's
-  * thread-local label before delegating to Spark. A source-scan
+  * [[TapSyntax.tappedLocalCheckpoint]], which — ONLY while a census
+  * has the tap enabled — records the frame's optimized plan
+  * (pre-truncation) tagged with the census's thread-local label
+  * before delegating to Spark. A source-scan
   * guard test (CkptTapCoverageSpec) fails the build if a raw
   * `.checkpoint(`/`.localCheckpoint(` call appears in `src/main`
   * outside this file, so new sites cannot dodge the censuses.
@@ -72,10 +72,6 @@ object CkptTap {
     def tappedLocalCheckpoint(eager: Boolean = true): Dataset[T] = {
       record(ds)
       ds.localCheckpoint(eager)
-    }
-    def tappedCheckpoint(eager: Boolean = true): Dataset[T] = {
-      record(ds)
-      ds.checkpoint(eager)
     }
   }
 }

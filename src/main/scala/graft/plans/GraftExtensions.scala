@@ -11,6 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * GraftSession performs. This is the library-idiomatic packaging — a
   * user of the reference switching to this engine adds one config line
   * and `cosine_sim`/`dot_product` work in SQL text everywhere.
+  *
+  * It also plans [[TopKPerGroupPlan]] through [[TopKStrategy]]. Only
+  * callers of the [[TopKPerGroup]] API (`win_topk_heap`) build that
+  * node: the standard `row_number() <= k` window idiom is left to
+  * Spark's own `WindowGroupLimit`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -20,7 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectOptimizerRule(TopKRewriteRule)
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),
       info("cosine_sim",

@@ -129,7 +129,7 @@ object Analytics10 {
       // ≤2·|nations|² rows: collapse the 32 post-shuffle partitions so
       // the 4-round fixpoint schedules one task per stage, not 32
       // mostly-empty ones. At a real-graph scale the coalesce factor
-      // would follow |edges| (the ConnectedComponents cutover rule).
+      // would follow |edges| (the LlmText.minLabelComponents cutover).
       .coalesce(1)
       .tappedLocalCheckpoint()
   }

@@ -120,8 +120,8 @@ object Analytics31 {
        |FROM d""".stripMargin
 
   def winCci(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_cci_events")
-    s.sql("WITH " + cciSql("graft_cci_events"))
+    t(s, dir, "events").createOrReplaceTempView("graft_win_cci_events")
+    s.sql("WITH " + cciSql("graft_win_cci_events"))
   }
 
   // ---------------------------------------------------------------------

@@ -60,7 +60,7 @@ object Analytics33 {
     * id = min mutual partner. Every intermediate relation is ≤ 25²
     * rows — coalesced to one partition and checkpointed per round
     * (the graph-family fixpoint rule; at real-graph scale the cutover
-    * follows |edges| as in ConnectedComponents). */
+    * follows |edges| as in LlmText.minLabelComponents). */
   def graphScc(s: SparkSession, dir: String): DataFrame = {
     Seq("lineitem", "orders", "customer", "supplier")
       .foreach(n => t(s, dir, n)

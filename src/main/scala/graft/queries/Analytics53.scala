@@ -115,8 +115,8 @@ object Analytics53 {
        |    FROM $orders GROUP BY 1))""".stripMargin
 
   def eventsCcf(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_ccf_orders")
-    s.sql("WITH " + ccfSeries("graft_ccf_orders",
+    t(s, dir, "orders").createOrReplaceTempView("graft_crosscorr_orders")
+    s.sql("WITH " + ccfSeries("graft_crosscorr_orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')") +
       ",\nlg AS (SELECT explode(sequence(-5L, 5L)) AS l),\n" + ccfBody)
   }

@@ -108,8 +108,8 @@ object LlmText {
     // shpos checkpoint tokenizes the corpus ONCE per staging build.
     // MinHash's min-aggregation is duplicate-insensitive, so the
     // position-retaining stream feeds it unchanged.
-    memo(s, s"sigs:$dir")(stagedMaterialize(s, s"sigs:$dir")(
-      minhashSigsFrom(shinglePositions(s, dir))))
+    memo(s, s"sigs:$dir")(
+      minhashSigsFrom(shinglePositions(s, dir)).tappedLocalCheckpoint())
 
   /** The UNMEMOIZED signature build plan, for plan-shape tests: the
     * graded query returns the staged checkpoint (a plan-free RDD
@@ -199,7 +199,7 @@ object LlmText {
       // jaccard is an integer ratio — bit-identical raw; per-engine
       // round(4) flips on boundary-terminating rationals.
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .transform(stagedMaterialize(s, s"neardup:$dir"))
+      .tappedLocalCheckpoint()
   }
 
   /** Corpus-wide DISTINCT hashed shingle set, memoized per (session,
@@ -209,8 +209,8 @@ object LlmText {
     * measures over it" shape a real curation pipeline has. */
   private def shingleSet(s: SparkSession, dir: String): DataFrame =
     // From the shpos memo, not a fresh tokenize — see minhashSigs.
-    memo(s, s"shingleset:$dir")(stagedMaterialize(s, s"shingleset:$dir")(
-      hashedShingleSet(shinglePositions(s, dir))))
+    memo(s, s"shingleset:$dir")(
+      hashedShingleSet(shinglePositions(s, dir)).tappedLocalCheckpoint())
 
   /** Exact shingle-Jaccard near-dup with a natural blocking key (same
     * source) instead of LSH — the deterministic baseline the MinHash
@@ -250,70 +250,18 @@ object LlmText {
           .as("jaccard"))
   }
 
-  /** Near-dup CLUSTERS: connected components over the MinHash near-dup
-    * pair graph via iterative min-label propagation to fixpoint, so a
-    * chain a~b~c dedups to ONE keeper even when a~c was never a
-    * candidate pair. The loop is a convergence check (count of changed
-    * labels), not data collection; iterations are bounded by component
-    * diameter — near-dup clusters are shallow. At 100 TB the same loop
-    * runs with the large-star/small-star optimization; state per round
-    * is one (node, label) table. */
-  /** Cluster tables are materialized intermediates in a real dedup
-    * pipeline — memoized per (session, fixture dir) so the clusters
-    * query and the apply query share one computation. The cached frame
-    * is localCheckpointed (plan-free), so holding it is cheap. */
-  // Session-scoped (evicted when the owning SparkContext stops).
-  // Memoized frames are eagerly-materialized localCheckpoints
-  // (plan-free), so holding them while the app lives is cheap; the
-  // near-dup PAIR table and the cluster table are both materialized
-  // intermediates a real dedup pipeline writes once and reads from
-  // every consumer (clusters, alt-star CC, apply). Builds, timings and
-  // releases all run under this object's lock.
+  /** The staged index relations (shingle positions, shingle set,
+    * signatures, near-dup pairs, clusters), memoized per (session,
+    * fixture dir) and evicted when the owning SparkContext stops. Each
+    * is an eager `tappedLocalCheckpoint`: plan-free, so holding it is
+    * cheap, and every consumer (clusters, apply, runs, containment, ...)
+    * reads the one build. A lost checkpoint block cannot be recomputed
+    * (its lineage is truncated): the consumer fails with Spark's
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, and [[releaseMemo]] clears the
+    * entries so the next call rebuilds from source. Builds, timings and
+    * releases all run under this object's lock. */
   private val memoCache = new graft.core.SessionScoped(
     () => scala.collection.mutable.Map.empty[String, DataFrame])
-
-  /** Materialize a staged index relation (the memo bodies' tail call).
-    *
-    * Default: eager localCheckpoint — blocks live in the executor
-    * block manager, the fastest shape on a healthy host but also the
-    * suite's most host-sensitive residency (the sandbox's contention
-    * windows hit allocation-heavy JVM work hardest; PLANS.md §14).
-    * With SPARK_GRAFT_MEMO_PARQUET=1 the relation is instead written
-    * ONCE to local parquet under the JVM's scratch dir and re-read —
-    * a real cluster stages a shared index as a TABLE on storage, not
-    * as cached executor memory, so this flag is both a host-noise
-    * control (zero block-manager residency) and the 100 TB shape.
-    * Census coverage is unchanged: the default path taps the
-    * pre-truncation plan, and the censuses always run with the flag
-    * unset. */
-  private def parquetMemos: Boolean =
-    sys.props.get("graft.memo.parquet")
-      .orElse(sys.env.get("SPARK_GRAFT_MEMO_PARQUET")).contains("1")
-
-  /** This session's parquet-memo directory (SPARK_GRAFT_MEMO_PARQUET
-    * mode). Exposed so ParquetMemoSpec can assert on THIS session's
-    * files instead of scanning the shared java.io.tmpdir, where a
-    * leftover from a crashed JVM would satisfy a global check. */
-  def parquetMemoDir(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-memo-${graft.core.SessionScoped.id(s)}")
-
-  private def stagedMaterialize(s: SparkSession, key: String)(
-      df: DataFrame): DataFrame =
-    if (!parquetMemos)
-      df.tappedLocalCheckpoint()
-    else {
-      // Sanitized key + hash of the RAW key: sanitizing alone can
-      // collide distinct keys onto one file ("sigs:x" vs "sigs_x" —
-      // the second write would silently overwrite the first and both
-      // memos would read the same relation).
-      val safe = key.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "-" + Integer.toHexString(key.hashCode)
-      val path =
-        new java.io.File(parquetMemoDir(s), safe + ".parquet").getAbsolutePath
-      df.write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-    }
 
   private def memo(s: SparkSession, key: String)(
       compute: => DataFrame): DataFrame =
@@ -377,14 +325,12 @@ object LlmText {
       org.apache.spark.sql.graftshims.DatasetShim.checkpointedRdds(df)
         .foreach(_.unpersist(blocking = true))
     })
-    // Parquet-staged memo files (SPARK_GRAFT_MEMO_PARQUET mode), if any.
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(parquetMemoDir(s))
   }
 
+  /** Near-dup CLUSTERS: connected components over the MinHash near-dup
+    * pair graph ([[minLabelComponents]]), so a chain a~b~c dedups to ONE
+    * keeper even when a~c was never a candidate pair. Also serves
+    * `llm_cc_altstar`: same clustering, same oracle. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     memo(s, s"clusters:$dir")(computeClusters(s, dir))
 
@@ -394,6 +340,10 @@ object LlmText {
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
       (col("node") === col("label")).as("is_keeper"))
   }
+
+  /** Directed edge count below which [[minLabelComponents]] runs on one
+    * partition. */
+  private[graft] val SmallGraphEdges = 100000L
 
   /** Connected components of the undirected graph whose edges are the
     * rows of `pairs` (doc_a, doc_b): (node, label), where label is the
@@ -412,7 +362,7 @@ object LlmText {
     // Small graphs collapse to one partition; big graphs keep the
     // distributed layout.
     val edges =
-      if (rawEdges.count() < 100000) rawEdges.coalesce(1) else rawEdges
+      if (rawEdges.count() < SmallGraphEdges) rawEdges.coalesce(1) else rawEdges
     var labels = edges.select(col("doc_a").as("node")).distinct()
       .withColumn("label", col("node"))
       .tappedLocalCheckpoint()
@@ -454,25 +404,6 @@ object LlmText {
     docs(s, dir)
       .join(drop, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "source", "n_chars")
-  }
-
-  /** Same clustering as [[dedupClusters]] but through the alternating
-    * large-star/small-star contraction ([[graft.operators.ConnectedComponents]])
-    * — the O(log n)-round formulation for edge sets too large for
-    * diameter-bounded label propagation. Same output, same oracle.
-    * On a real cluster set `graft.cc.checkpointDir` to durable
-    * storage so per-round state survives executor loss (see
-    * [[graft.operators.ConnectedComponents.components]]); unset, the
-    * sandbox default of localCheckpoint applies. */
-  def ccAltStar(s: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashNearDup(s, dir)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val ckptDir =
-      Option(s.conf.get("graft.cc.checkpointDir", null)).filter(_.nonEmpty)
-    graft.operators.ConnectedComponents.components(s, pairs,
-      checkpointDir = ckptDir)
-      .select(col("node").as("doc_id"), col("component").as("cluster_id"),
-        (col("node") === col("component")).as("is_keeper"))
   }
 
   /** TF-IDF term scoring: tf per (doc, term), document frequency over
@@ -1231,8 +1162,8 @@ object LlmText {
     * query three times — staging it once is the same build-the-index-
     * once shape as [[shingleSet]]. */
   private def shinglePositions(s: SparkSession, dir: String): DataFrame =
-    memo(s, s"shpos:$dir")(stagedMaterialize(s, s"shpos:$dir")(
-      shinglePositionsBuildPlan(s, dir)))
+    memo(s, s"shpos:$dir")(
+      shinglePositionsBuildPlan(s, dir).tappedLocalCheckpoint())
 
   /** The UNMEMOIZED position-stamped shingle build, exposed (like
     * [[minhashSigsBuildPlan]]) so PlanShapeSpec can pin the staged
@@ -1642,7 +1573,7 @@ object LlmText {
     "llm_simhash_neardup" -> (simhashNearDup _),
     "llm_dedup_clusters" -> (dedupClusters _),
     "llm_dedup_apply" -> (dedupApply _),
-    "llm_cc_altstar" -> (ccAltStar _),
+    "llm_cc_altstar" -> (dedupClusters _),
     "llm_tfidf" -> (tfidf _),
     "llm_bm25" -> (bm25 _),
     "llm_ngram_lm" -> (ngramLm _),

@@ -34,7 +34,7 @@ class CkptTapCoverageSpec extends AnyFunSuite {
       .toSeq
     assert(offenders.isEmpty,
       "raw checkpoint calls bypass the census tap — use " +
-        "tappedLocalCheckpoint()/tappedCheckpoint() from " +
+        "tappedLocalCheckpoint() from " +
         "graft.core.CkptTap:\n  " + offenders.mkString("\n  "))
   }
 }

@@ -11,11 +11,12 @@ import graft.queries.LlmText
   * rebuild recompiles classes it compiled one cycle earlier.
   * `GraftSession` pins the cache to the measured working set; a second
   * cycle must then compile nothing. The consumers are the benchmark's
-  * `llm_staging` cycle. */
+  * `llm_staging` cycle plus `llm_cc_altstar`, which reads the
+  * `llm_dedup_clusters` memo and so must add no plan of its own. */
 class StagingCodegenReuseSpec extends SparkTestBase {
   private val cycle = Seq("llm_stage_index", "llm_minhash_sigs",
-    "llm_minhash_neardup", "llm_dedup_clusters", "llm_dedup_apply",
-    "llm_dedup_stats", "llm_cross_source_overlap",
+    "llm_minhash_neardup", "llm_dedup_clusters", "llm_cc_altstar",
+    "llm_dedup_apply", "llm_dedup_stats", "llm_cross_source_overlap",
     "llm_dedup_threshold_sweep", "llm_pipeline_e2e")
 
   // Spark's rewrite of several DISTINCT aggregates orders the distinct
