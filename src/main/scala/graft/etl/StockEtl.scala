@@ -109,7 +109,46 @@ object StockEtl {
     spark.read.parquet(tablePath)
   }
 
-  private val goldenCsv = "/root/reference/stock_data.csv"
+  /** Absolute path of the committed stock fixture
+    * (`src/main/resources/graft/etl/stock_fixture.csv`, written by
+    * `tools/gen_stock_fixture.py`): seeded synthetic bars in the
+    * scraped raw shape. Every graded `etl_*` query and its DuckDB twin
+    * read these bytes. Read from the classpath, so it does not depend
+    * on the working directory, and copied out by [[fixtureCopy]], since
+    * both engines read files and the classes may sit in a jar (sbt's
+    * `runMain` runs from one). Lazy: users of the cleaning functions
+    * alone never touch the fixture. */
+  lazy val goldenCsv: String = {
+    val in = getClass.getResourceAsStream("/graft/etl/stock_fixture.csv")
+    require(in != null, "graft/etl/stock_fixture.csv is not on the classpath")
+    val bytes = try in.readAllBytes() finally in.close()
+    fixtureCopy(bytes, java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+      .toString
+  }
+
+  /** A file in `dir` holding `bytes`, named by their hash. A file an
+    * earlier run left under that name is reused only if it holds
+    * exactly these bytes; otherwise it is replaced by an atomic move.
+    * The copy outlives the JVM on purpose: the DuckDB compare reads
+    * `oracle_sql.json`'s path after Verify has exited. */
+  private[graft] def fixtureCopy(bytes: Array[Byte],
+      dir: java.nio.file.Path): java.nio.file.Path = {
+    import java.nio.file.{Files, LinkOption, StandardCopyOption}
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(bytes).take(8).map("%02x".format(_)).mkString
+    val out = dir.resolve(s"graft-stock-fixture-$hash.csv")
+    val intact = Files.isRegularFile(out, LinkOption.NOFOLLOW_LINKS) &&
+      Files.size(out) == bytes.length &&
+      java.util.Arrays.equals(Files.readAllBytes(out), bytes)
+    if (!intact) {
+      val part = Files.createTempFile(dir, "graft-stock-fixture", ".part")
+      try {
+        Files.write(part, bytes)
+        Files.move(part, out, StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(part)
+    }
+    out
+  }
 
   private def lowercased(df: DataFrame): DataFrame =
     df.select(
@@ -117,7 +156,7 @@ object StockEtl {
       col("Open").as("open"), col("High").as("high"), col("Low").as("low"),
       col("Vol").as("vol"), col("Change").as("change"))
 
-  /** Clean of the golden CSV (no sink), lowercase column aliases for the
+  /** Clean of the stock fixture (no sink), lowercase column aliases for the
     * case-sensitive oracle compare. */
   def etlStockClean(s: SparkSession, dir: String): DataFrame =
     lowercased(clean(readRawCsv(s, goldenCsv)))
@@ -133,7 +172,10 @@ object StockEtl {
     * forward over non-trading days. The spine generation is per-group
     * `sequence()` — each group's spine explodes from ONE aggregated
     * row, so at scale the work distributes by stock and no driver-side
-    * calendar is involved. */
+    * calendar is involved. A (stock, date) scraped twice keeps both
+    * rows, and the fill carries the larger price, as [[barsCte]]'s
+    * consolidation does: ordering by date alone would leave the tie to
+    * the sort, and the two engines break it differently. */
   def etlGapfill(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bars = clean(readRawCsv(s, goldenCsv))
@@ -144,7 +186,8 @@ object StockEtl {
       .select(col("stock_name"),
         explode(sequence(col("d0"), col("d1"), expr("INTERVAL 1 DAY")))
           .as("date"))
-    val w = Window.partitionBy("stock_name").orderBy("date")
+    val w = Window.partitionBy("stock_name")
+      .orderBy(col("date"), col("price").asc_nulls_first)
       .rowsBetween(Window.unboundedPreceding, 0)
     spine.join(bars, Seq("stock_name", "date"), "left")
       .select(col("stock_name"),
@@ -416,11 +459,11 @@ object StockEtl {
          |        ON s.stock_name = b.stock_name AND s.date = b.date)
          |SELECT stock_name, strftime(date, '%Y-%m-%d') AS d,
          |  last_value(price IGNORE NULLS) OVER (PARTITION BY stock_name
-         |    ORDER BY date ROWS UNBOUNDED PRECEDING) AS price_ff,
+         |    ORDER BY date, price NULLS FIRST ROWS UNBOUNDED PRECEDING) AS price_ff,
          |  price IS NULL AS is_gap
          |FROM j""".stripMargin)
 
-  /** Register the lowercased cleaned golden-CSV table under `name` —
+  /** Register the lowercased cleaned stock-fixture table under `name` —
     * the entry point derived queries (e.g. Black–Scholes in
     * [[graft.queries.Analytics50]]) build on. */
   def cleanedView(s: SparkSession, name: String): Unit =
@@ -431,7 +474,7 @@ object StockEtl {
     * external queries. */
   def barsCteFor(cleaned: String): String = barsCte(cleaned)
 
-  /** The DuckDB spelling of the T1–T6 cleaning over the golden CSV,
+  /** The DuckDB spelling of the T1–T6 cleaning over the stock fixture,
     * for external oracles. */
   def duckdbEtlSql: String = etlSql
 }

@@ -19,8 +19,7 @@ object Demo {
 
     // 1. The reference pipeline (dump_bigq.py / run_pipeline), one lazy plan.
     val warehouse = sys.props("java.io.tmpdir") + "/graft_demo_stock"
-    val table = StockEtl.runPipeline(
-      spark, "/root/reference/stock_data.csv", warehouse)
+    val table = StockEtl.runPipeline(spark, StockEtl.goldenCsv, warehouse)
     println(s"[demo] stock warehouse loaded: ${table.count()} rows")
 
     // 2. The SQL the reference delegated to its warehouse.

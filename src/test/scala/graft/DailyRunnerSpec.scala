@@ -17,9 +17,9 @@ class DailyRunnerSpec extends SparkTestBase {
     val landing = s"$root/landing"; val table = s"$root/table"
     val ckpt = s"$root/ckpt"
     new java.io.File(landing).mkdirs()
-    // day 1: the golden CSV lands
+    // day 1: the committed stock fixture lands
     Files.copy(
-      java.nio.file.Paths.get("/root/reference/stock_data.csv"),
+      java.nio.file.Paths.get(graft.etl.StockEtl.goldenCsv),
       java.nio.file.Paths.get(s"$landing/day1.csv"))
 
     val n1 = graft.tools.DailyRunner.runOnce(spark, landing, table, ckpt)

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.etl.StockEtl
 
 /** Golden end-to-end: the reference's own stock_data.csv through the
-  * full pipeline, checked against facts pinned in FIXTURES.md §1. */
+  * full pipeline, checked against facts pinned in FIXTURES.md §1. The
+  * `etl_*` query checks run on the committed fixture (FIXTURES.md §1b)
+  * that those queries read. */
 class EtlSpec extends SparkTestBase {
 
   private lazy val table: org.apache.spark.sql.DataFrame = {
@@ -123,5 +125,49 @@ class EtlSpec extends SparkTestBase {
       assert(r.getAs[Double]("signal") == sig)
       assert(r.getAs[Double]("histogram") == macd - sig)
     }
+  }
+
+  test("etl_gapfill carries a twice-scraped day's larger price over the gap after it") {
+    val twice = StockEtl.queries("etl_stock_clean")(spark, "unused")
+      .filter(col("date").isNotNull && col("price").isNotNull)
+      .groupBy("stock_name", "date")
+      .agg(count(lit(1)).as("n"), max("price").as("p"))
+      .filter(col("n") > 1).collect()
+    val fill = StockEtl.queries("etl_gapfill")(spark, "unused")
+    val carried = twice.flatMap { r =>
+      val next = r.getDate(1).toLocalDate.plusDays(1).toString
+      fill.filter(col("stock_name") === r.getString(0) && col("d") === next
+          && col("is_gap"))
+        .select("price_ff").collect().map(g => (r.getDouble(3), g.getDouble(0)))
+    }
+    assert(carried.nonEmpty, "no twice-scraped day is followed by a gap")
+    carried.foreach { case (p, ff) => assert(ff == p, s"carried $ff, larger price $p") }
+  }
+
+  test("goldenCsv holds the committed fixture's bytes") {
+    val in = getClass.getResourceAsStream("/graft/etl/stock_fixture.csv")
+    val committed = try in.readAllBytes() finally in.close()
+    val copy = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(StockEtl.goldenCsv))
+    assert(java.util.Arrays.equals(copy, committed))
+  }
+
+  test("fixture copy: a file left under its name with other bytes is replaced") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_fixture_copy")
+    val bytes = "Date,Price\n\"Mar 07, 2025\",\"42,801.72\"\n".getBytes("UTF-8")
+    val out = StockEtl.fixtureCopy(bytes, dir)
+    assert(java.util.Arrays.equals(Files.readAllBytes(out), bytes))
+    Files.write(out, "Date,Price\n\"Mar 07, 2025\",1.00\n".getBytes("UTF-8"))
+    assert(StockEtl.fixtureCopy(bytes, dir) == out)
+    assert(java.util.Arrays.equals(Files.readAllBytes(out), bytes))
+    Files.delete(out)
+    // a link is replaced even when what it points at holds the bytes
+    Files.createSymbolicLink(out,
+      Files.write(Files.createTempFile(dir, "other", ".csv"), bytes))
+    StockEtl.fixtureCopy(bytes, dir)
+    assert(!Files.isSymbolicLink(out))
+    assert(java.util.Arrays.equals(Files.readAllBytes(out), bytes))
+    assert(Files.list(dir).toArray.length == 2, "no .part file is left behind")
   }
 }
