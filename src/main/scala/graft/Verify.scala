@@ -14,11 +14,14 @@ object Verify {
     // Optional third arg: comma-separated substring filters over query
     // names (any-match), for fast targeted local oracle checks. The
     // driver always passes two args.
+    // With a filter, oracle_sql.json names only the queries run here,
+    // so the compare grades exactly those.
     val nameFilter = args.drop(2).headOption.map(_.split(',').toSeq)
+    def selected(name: String) = nameFilter.forall(_.exists(name.contains))
     val spark = graft.core.GraftSession.get()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => nameFilter.forall(_.exists(name.contains)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -39,6 +42,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.core.CacheRelease(spark)

@@ -8,6 +8,7 @@ import graft.core.{GraftSession, Tables}
   *   runMain graft.tools.Probe schemas <sfDir>
   *   runMain graft.tools.Probe explain <sfDir> <queryName>
   *   runMain graft.tools.Probe codegen <sfDir> <q1,q2,...> [cycles]
+  *   runMain graft.tools.Probe stage <sfDir> [cycles]
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -96,6 +97,49 @@ object Probe {
             f"compile_ms=${(CodeGenerator.compileTime - ns0) / 1e6}%.0f " +
             f"wall_s=${(System.nanoTime() - t0) / 1e9}%.2f")
         }
+      // Staging census: per cycle, the memo release, the
+      // `llm_stage_index` build (the registry call, which runs every
+      // memo's eager checkpoint) and its count into the noop sink, each
+      // memo's exclusive build time, and the Spark jobs the build and
+      // count ran. Cycle 1 pays first-use codegen; later cycles are the
+      // warm rebuild the benchmark's staging cycle times.
+      case "stage" :: dir :: cycles =>
+        import graft.queries.LlmText
+        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        spark.sparkContext.addSparkListener(
+          new org.apache.spark.scheduler.SparkListener {
+            override def onJobStart(
+                e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+              jobs.incrementAndGet()
+          })
+        // Listener events arrive asynchronously: wait for the bus to
+        // drain before reading the job count.
+        def jobsNow: Int = {
+          org.apache.spark.sql.graftshims.DatasetShim
+            .drainListeners(spark.sparkContext)
+          jobs.get
+        }
+        def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+        (1 to cycles.headOption.map(_.toInt).getOrElse(3)).foreach { c =>
+          val t0 = System.nanoTime()
+          LlmText.releaseMemo(spark)
+          val releaseS = secs(t0)
+          LlmText.clearStageTimings()
+          val j0 = jobsNow
+          val t1 = System.nanoTime()
+          val df = graft.SparkEntry.queries("llm_stage_index")(spark, dir)
+          val buildS = secs(t1)
+          val t2 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          val countS = secs(t2)
+          val nJobs = jobsNow - j0
+          val memos = LlmText.stageTimings
+            .map { case (k, v) => f"${k.takeWhile(_ != ':')}=$v%.3f" }
+          println(f"[stage] cycle $c release_s=$releaseS%.3f " +
+            f"build_s=$buildS%.3f count_s=$countS%.3f " +
+            f"total_s=${buildS + countS}%.3f jobs=$nJobs " +
+            memos.mkString("memo_s(", " ", ")"))
+        }
       // AQE's runtime join re-planning (e.g. SMJ→BHJ once the build
       // side's true size is known) is invisible in the static plan:
       // execute, then print the FINAL adaptive plan. This is the audit
@@ -145,7 +189,7 @@ object Probe {
         }
       case other =>
         System.err.println("usage: schemas <dir> | explain <dir> <query> | " +
-          s"codegen <dir> <queries> [cycles]; got $other")
+          s"codegen <dir> <queries> [cycles] | stage <dir> [cycles]; got $other")
     }
     spark.stop()
   }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /** The one place graft touches Spark's `private[sql]` surface: wrapping
-  * a custom [[LogicalPlan]] back into a user-facing DataFrame. This is
+  * a custom [[LogicalPlan]] back into a user-facing DataFrame, and
+  * draining the `private[spark]` listener bus. This is
   * the established packaging for plan-level extension libraries (the
   * same move Delta Lake et al. make); everything else in graft sticks
   * to the public API.
@@ -28,4 +29,9 @@ object DatasetShim {
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
+
+  /** Block until every listener event posted so far has been delivered,
+    * so a `SparkListener` that counts jobs reads a settled count. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

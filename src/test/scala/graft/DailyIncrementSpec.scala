@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.ListenerDrain
+import org.apache.spark.sql.graftshims.DatasetShim.drainListeners
 
 import graft.etl.StockEtl
 import graft.tools.DailyRunner
@@ -32,11 +32,11 @@ class DailyIncrementSpec extends SparkTestBase {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    ListenerDrain(sc)
+    drainListeners(sc)
     sc.addSparkListener(l)
     try {
       val r = body
-      ListenerDrain(sc)
+      drainListeners(sc)
       (r, jobs.get)
     } finally sc.removeSparkListener(l)
   }

@@ -19,18 +19,11 @@ class StagingCodegenReuseSpec extends SparkTestBase {
     "llm_dedup_apply", "llm_dedup_stats", "llm_cross_source_overlap",
     "llm_dedup_threshold_sweep", "llm_pipeline_e2e")
 
-  // Spark's rewrite of several DISTINCT aggregates orders the distinct
-  // groups by a hash that covers expression ids, which every memo
-  // rebuild renews, so this query (two countDistincts) has two plans and
-  // compiles each once, when first seen, whatever the cache size. It
-  // runs in both cycles, but its own compiles are not counted.
-  private val twoPlans = "llm_dedup_threshold_sweep"
-
-  /** Classes compiled by the cycle's queries, `twoPlans` excepted. */
+  /** Classes compiled by the cycle's queries. */
   private def runCycle(): Long = cycle.map { q =>
     val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     SparkEntry.queries(q)(spark, sf).write.mode("overwrite").format("noop").save()
-    if (q == twoPlans) 0L else CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
   }.sum
 
   test("the codegen cache size is pinned on the session") {
