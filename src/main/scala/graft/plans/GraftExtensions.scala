@@ -10,7 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * cluster config), in addition to the runtime registration
   * GraftSession performs. This is the library-idiomatic packaging — a
   * user of the reference switching to this engine adds one config line
-  * and `cosine_sim`/`dot_product` work in SQL text everywhere.
+  * and `cosine_sim`/`dot_product` work in SQL text everywhere. It
+  * injects `cosine_sim`, `dot_product`, `jaro_winkler`, and the staging
+  * index's per-row kernels `word_shingles` and `md5_band_hashes`.
   *
   * It also plans [[TopKPerGroupPlan]] through [[TopKStrategy]]. Only
   * callers of the [[TopKPerGroup]] API (`win_topk_heap`) build that
@@ -40,5 +42,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("jaro_winkler",
         "jaro_winkler(a, b) - Jaro-Winkler similarity of two strings"),
       (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))))
+    e.injectFunction((
+      FunctionIdentifier("word_shingles"),
+      info("word_shingles",
+        "word_shingles(tokens) - word 3-grams of a string array, space-joined"),
+      (exprs: Seq[Expression]) => WordShingles(exprs(0))))
+    e.injectFunction((
+      FunctionIdentifier("md5_band_hashes"),
+      info("md5_band_hashes",
+        "md5_band_hashes(sh) - the 8 32-bit words of md5(sh) and md5(sh || '#')"),
+      (exprs: Seq[Expression]) => Md5BandHashes(exprs(0))))
   }
 }

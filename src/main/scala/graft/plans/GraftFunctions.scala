@@ -19,6 +19,10 @@ object GraftFunctions {
     registry.createOrReplaceTempFunction(
       "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
     registry.createOrReplaceTempFunction(
+      "word_shingles", exprs => WordShingles(exprs(0)), "built-in")
+    registry.createOrReplaceTempFunction(
+      "md5_band_hashes", exprs => Md5BandHashes(exprs(0)), "built-in")
+    registry.createOrReplaceTempFunction(
       "bitmap_distinct", exprs => {
         require(exprs.length == 2,
           "bitmap_distinct(key, maxKey) takes exactly 2 arguments")
@@ -66,4 +70,6 @@ object GraftFunctions {
 
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
+  def wordShingles(tokens: Column): Column = call_function("word_shingles", tokens)
+  def md5BandHashes(sh: Column): Column = call_function("md5_band_hashes", sh)
 }

@@ -25,11 +25,11 @@ object LlmText {
 
   private def toks(c: Column): Column = split(c, " ")
 
-  /** Word 3-gram shingles (empty when the doc has <3 tokens). */
+  /** Word 3-gram shingles (empty when the doc has <3 tokens), through
+    * the native `word_shingles` kernel ([[graft.plans.WordShingles]]),
+    * which stays inside whole-stage codegen. */
   private def shingles(tokens: Column): Column =
-    when(size(tokens) < 3, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(tokens) - 3),
-        i => concat_ws(" ", get(tokens, i), get(tokens, i + 1), get(tokens, i + 2))))
+    graft.plans.GraftFunctions.wordShingles(tokens)
 
   private def fanout(s: SparkSession): Int =
     s.conf.get("spark.sql.shuffle.partitions", "32").toInt
@@ -44,10 +44,8 @@ object LlmText {
   private def rawShingles(s: SparkSession, dir: String): DataFrame =
     docs(s, dir)
       .repartition(fanout(s))
-      // token array staged behind a projection boundary: inlined into
-      // shingles() it would re-split per size check AND per element
-      // access in the transform lambda (PlanShapeSpec pins the staged
-      // single-split shape for the scalar twins)
+      // token array staged behind a projection boundary, so the split
+      // runs once per doc (PlanShapeSpec pins the single-split shape)
       .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
       .select(col("doc_id"), col("source"),
         explode(shingles(col("t"))).as("sh"))
@@ -78,7 +76,7 @@ object LlmText {
   private val NBands = 8
 
   /** Per-(doc, band) MinHash signature. Two md5s per shingle, sliced
-    * into 8 independent 32-bit band hashes (8 hex chars each) — the
+    * into 8 independent 32-bit band hashes (the words of the digests) — the
     * standard few-hashes trick: vs hashing once per band it cuts both
     * the hash work and the pre-aggregation row count 4×, which
     * dominated the whole LLM pipeline's bench time. (A 16-bit variant
@@ -86,12 +84,15 @@ object LlmText {
     * with false candidates — measured net-slower.) Wide-then-stack
     * keeps it ONE aggregation pass.
     *
-    * The min runs over the hex slice parsed to a LONG, re-formatted to
-    * hex after aggregation: fixed-width lowercase hex is order-
+    * The min runs over each band word as an unsigned LONG (the native
+    * `md5_band_hashes` kernel, [[graft.plans.Md5BandHashes]]: no hex
+    * string is formatted and re-parsed per shingle), re-formatted to
+    * 8-digit lowercase hex after aggregation: that hex is order-
     * isomorphic to its unsigned value, so the result is bit-identical
-    * to a string min — but a numeric agg buffer plans as a map-side-
-    * partial HashAggregate where min(string) falls back to
-    * SortAggregate (a full sort of the exploded shingles). */
+    * to the DuckDB twin's string min of hex slices — and a numeric agg
+    * buffer plans as a map-side-partial HashAggregate where
+    * min(string) falls back to SortAggregate (a full sort of the
+    * exploded shingles). */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     minhashSigs(s, dir)
 
@@ -120,16 +121,11 @@ object LlmText {
     minhashSigsFrom(shinglePositionsBuildPlan(s, dir))
 
   private def minhashSigsFrom(sh: DataFrame): DataFrame = {
-    val h1 = md5(col("sh"))
-    val h2 = md5(concat(col("sh"), lit("#")))
-    val mins = (0 until NBands).map { b =>
-      val src = if (b < 4) h1 else h2
-      min(conv(substring(src, (b % 4) * 8 + 1, 8), 16, 10).cast("long"))
-        .as(s"s$b")
-    }
+    val mins = (0 until NBands).map(b => min(col("h").getItem(b)).as(s"s$b"))
     val stackExpr = (0 until NBands)
       .map(b => s"$b, s$b").mkString(s"stack($NBands, ", ", ", ") AS (band, sigv)")
-    sh.groupBy("doc_id")
+    sh.select(col("doc_id"), graft.plans.GraftFunctions.md5BandHashes(col("sh")).as("h"))
+      .groupBy("doc_id")
       .agg(mins.head, mins.tail: _*)
       .select(col("doc_id"), expr(stackExpr))
       .select(col("doc_id"), col("band"),
@@ -279,7 +275,10 @@ object LlmText {
         // extra locking.
         buildChildSec += 0.0
         val t0 = System.nanoTime()
-        val df = compute
+        val sc = s.sparkContext
+        val outer = sc.getLocalProperty(MemoJobProperty)
+        sc.setLocalProperty(MemoJobProperty, key.takeWhile(_ != ':'))
+        val df = try compute finally sc.setLocalProperty(MemoJobProperty, outer)
         val total = (System.nanoTime() - t0) / 1e9
         val children = buildChildSec.remove(buildChildSec.length - 1)
         if (buildChildSec.nonEmpty)
@@ -288,6 +287,14 @@ object LlmText {
         df
       })
     }
+
+  /** Spark local property that names the memo (its key up to the ':')
+    * whose build submitted a job. It is set on the building thread for
+    * the build's duration, innermost memo first, so every job carries
+    * the memo that was building when it started: a `SparkListener`
+    * reads it from `SparkListenerJobStart.properties` (`Probe stage`).
+    * Unset outside memo builds. */
+  private[graft] val MemoJobProperty = "graft.memo"
 
   /** (memo key, EXCLUSIVE build seconds — nested memo chains already
     * subtracted) for every shared-index memo computed in this JVM, in
@@ -363,33 +370,36 @@ object LlmText {
     // distributed layout.
     val edges =
       if (rawEdges.count() < SmallGraphEdges) rawEdges.coalesce(1) else rawEdges
-    var labels = edges.select(col("doc_a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .tappedLocalCheckpoint()
     // change flag computed inside the propagation pass — a separate
-    // labels⨝next comparison job per round doubled the loop's cost
+    // labels⨝next comparison job per round doubled the loop's cost.
+    // Every node has an edge (the edge set is symmetric), so each node
+    // has a neighbour minimum and the join back onto the labels is inner.
     def propagate(l: DataFrame): DataFrame = {
       val nbrMin = edges.join(l, col("doc_b") === col("node"))
         .groupBy(col("doc_a"))
         .agg(min(col("label")).as("nbr_min"))
         .select(col("doc_a").as("n2"), col("nbr_min"))
-      l.join(nbrMin, col("node") === col("n2"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-          (coalesce(col("nbr_min"), col("label")) < col("label")).as("chg"))
+      l.join(nbrMin, col("node") === col("n2"))
+        .select(col("node"), least(col("label"), col("nbr_min")).as("label"),
+          (col("nbr_min") < col("label")).as("chg"))
         .tappedLocalCheckpoint()
     }
-    var changed = 1L
-    var steps = 0
-    while (changed > 0) {
-      // two propagation steps per convergence check: fixpoint is still
-      // detected exactly (a full unchanged step), with half the
-      // check-job overhead per round
-      val next = propagate(propagate(labels).drop("chg"))
-      changed = next.filter(col("chg")).count()
-      labels = next.drop("chg")
+    // Step 1 needs no join: every label starts as the node's own id, so
+    // a node's neighbour minimum is the smallest doc_b on its edges.
+    val first = edges.groupBy(col("doc_a"))
+      .agg(least(col("doc_a"), min(col("doc_b"))).as("label"))
+      .select(col("doc_a").as("node"), col("label"))
+      .tappedLocalCheckpoint()
+    var next = propagate(first)
+    var steps = 2
+    // two propagation steps per convergence check: fixpoint is still
+    // detected exactly (a full unchanged step), with half the
+    // check-job overhead per round
+    while (next.filter(col("chg")).count() > 0) {
+      next = propagate(propagate(next.drop("chg")).drop("chg"))
       steps += 2
     }
+    val labels = next.drop("chg")
     // labels is localCheckpoint'd (plan-free), so the edge cache can go.
     rawEdges.unpersist(blocking = false)
     (labels, steps)
@@ -570,55 +580,71 @@ object LlmText {
   /** Incremental batch-vs-corpus dedup — the production ingest shape:
     * an EXISTING corpus (sources src0-src9) is an index the INCOMING
     * batch (src10+) probes; incoming docs never compare against each
-    * other. Layer 1 drops exact matches (normalized-text digest
-    * semi-join against the existing digest set); layer 2 drops
-    * near-dups (incoming MinHash band signatures joined against the
+    * other. Layer 1 drops exact matches (incoming docs whose
+    * normalized-text digest an existing doc shares); layer 2 drops
+    * near-dups (incoming MinHash band signatures paired with the
     * existing side's only, verified at shingle-Jaccard ≥ 0.5 — the
     * [[minhashNearDup]] protocol). Per incoming source: batch size,
     * drops per layer, survivors.
     *
     * 100 TB shape: the existing index (digests + band signatures) is
     * materialized once and reused per batch; probe cost scales with
-    * the BATCH, not the corpus. Membership joins run on doc_id/digest
+    * the BATCH, not the corpus. Membership runs on doc_id/digest
     * keys — no broadcast of corpus-sized sides. */
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val isExisting = substring(col("source"), 4, 10).cast("int") < 10
     val d = docs(s, dir)
     val norm = md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
-    val existingNorm = d.filter(isExisting).select(norm.as("norm_md5")).distinct()
-    val incoming = d.filter(!isExisting)
-    def exactDropped = incoming.select(col("doc_id"), norm.as("norm_md5"))
-      .join(existingNorm, Seq("norm_md5"), "left_semi")
-      .select(col("doc_id"), lit(1L).as("exact_dup"))
+    // Each plan below is one chain of shuffles. In a plan with two
+    // independent chains, AQE broadcast whichever side finished first
+    // and numbered the codegen stages in the order it created them, so
+    // a warm rebuild now and then compiled its classes again. So each
+    // drop set is one aggregation, checkpointed, and the per-source
+    // counts group a union of the batch and the drop sets, not a join.
+    //
+    // Exact drops: the incoming docs of a digest an existing doc has.
+    val exactDropped = d.select(norm.as("norm_md5"), isExisting.as("ex"),
+        when(!isExisting, col("doc_id")).as("doc_id"))
+      .groupBy("norm_md5")
+      .agg(max(col("ex")).as("hit"), collect_list(col("doc_id")).as("ids"))
+      .filter(col("hit"))
+      .select(explode(col("ids")).as("doc_id"))
+      .tappedLocalCheckpoint()
     // Probe-only: signatures and shingle sets come from the staged
     // index memos ([[minhashSigs]] / [[shingleSet]]) — this query pays
-    // the digest scan, the band probe join, and the candidate verify,
+    // the digest scan, the band probe, and the candidate verify,
     // never an index rebuild. That IS the incremental contract: per
-    // batch, cost scales with the batch and the candidate set.
-    val side = d.select(col("doc_id"), isExisting.as("ex"))
-    val sigs = minhashSigs(s, dir).join(side, "doc_id")
-    val exSigs = sigs.filter(col("ex"))
-      .select(col("doc_id").as("ex_id"), col("band"), col("sig"))
-    val inSigs = sigs.filter(!col("ex"))
-      .join(exactDropped.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("in_id"), col("band"), col("sig"))
-    val cands = inSigs.join(exSigs, Seq("band", "sig"))
-      .select(col("in_id").as("doc_a"), col("ex_id").as("doc_b"))
+    // batch, cost scales with the batch and the candidate set. The
+    // probe pairs each (band, sig) bucket's incoming docs with its
+    // existing ones; an exact drop it finds is counted as exact below.
+    val cands = minhashSigs(s, dir)
+      .join(d.select(col("doc_id"), isExisting.as("ex")), "doc_id")
+      .groupBy("band", "sig")
+      .agg(collect_list(when(!col("ex"), col("doc_id"))).as("ins"),
+        collect_list(when(col("ex"), col("doc_id"))).as("exs"))
+      .select(explode(col("ins")).as("doc_a"), col("exs"))
+      .select(col("doc_a"), explode(col("exs")).as("doc_b"))
       .distinct()
       .tappedLocalCheckpoint()
     val nearDropped = withJaccard(shingleSet(s, dir), cands)
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a").as("doc_id")).distinct()
-      .select(col("doc_id"), lit(1L).as("near_dup"))
-    incoming.select(col("doc_id"), col("source"))
-      .join(exactDropped, Seq("doc_id"), "left")
-      .join(nearDropped, Seq("doc_id"), "left")
+      .tappedLocalCheckpoint()
+    def flagged(ids: DataFrame, exact: Boolean, near: Boolean) =
+      ids.select(col("doc_id"), lit(null).cast("string").as("source"),
+        lit(exact).as("exact"), lit(near).as("near"))
+    d.filter(!isExisting)
+      .select(col("doc_id"), col("source"), lit(false).as("exact"), lit(false).as("near"))
+      .unionByName(flagged(exactDropped, exact = true, near = false))
+      .unionByName(flagged(nearDropped, exact = false, near = true))
+      .groupBy("doc_id")
+      .agg(max(col("source")).as("source"), max(col("exact")).as("exact"),
+        max(col("near")).as("near"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_in"),
-        sum(coalesce(col("exact_dup"), lit(0L))).as("n_exact_dup"),
-        sum(coalesce(col("near_dup"), lit(0L))).as("n_near_dup"),
-        sum(when(col("exact_dup").isNull && col("near_dup").isNull, 1L)
-          .otherwise(0L)).as("n_kept"))
+        count(when(col("exact"), 1)).as("n_exact_dup"),
+        count(when(!col("exact") && col("near"), 1)).as("n_near_dup"),
+        count(when(!col("exact") && !col("near"), 1)).as("n_kept"))
       .tappedLocalCheckpoint()
   }
 
@@ -1090,9 +1116,8 @@ object LlmText {
     // out across cores even though the op itself is narrow. The token
     // array is STAGED behind a projection boundary so the split runs
     // once per row — inlining it into both the sorted-distinct hash
-    // and shingles() (whose `when` guard defeats codegen subexpression
-    // reuse) re-split the text ~6x per row (same class as the round-6
-    // text_repetition regression).
+    // and the shingle lambda re-split the text ~6x per row (same class
+    // as the round-6 text_repetition regression).
     docs(s, dir).repartition(fanout(s))
       .select(col("doc_id"), toks(col("text")).as("t"))
       .select(col("doc_id"),
@@ -1169,15 +1194,8 @@ object LlmText {
       dir: String): DataFrame =
     docs(s, dir).repartition(fanout(s))
       // token array staged behind a projection boundary, like
-      // rawShingles: higher-order lambdas are CodegenFallback, and
-      // with toks() INLINED the interpreted GetArrayItem re-runs the
-      // split per element access — 3 splits per shingle + 2 per doc,
-      // each compiling its pattern. Measured at sf1 (r14): the
-      // inlined build ran 8.4 s in a quiet JVM and 134–610 s in the
-      // bench JVM (fragmented heap + host steal amplify the
-      // allocation storm); the staged single-split build is ~1 s and
-      // stays flat. Same rows either way — staging is plan shape,
-      // not semantics.
+      // rawShingles, so the split runs once per doc; the
+      // `word_shingles` kernel keeps the whole stage in codegen.
       //
       // Carries `source` (r16) so the sigs and shingleset memos can
       // derive from THIS staged stream instead of re-tokenizing the

@@ -101,23 +101,30 @@ object Probe {
       // `llm_stage_index` build (the registry call, which runs every
       // memo's eager checkpoint) and its count into the noop sink, each
       // memo's exclusive build time, and the Spark jobs the build and
-      // count ran. Cycle 1 pays first-use codegen; later cycles are the
+      // count ran, in total and per memo: a job is charged to the memo
+      // building when it started (`LlmText.MemoJobProperty`), or to
+      // `none`. Cycle 1 pays first-use codegen; later cycles are the
       // warm rebuild the benchmark's staging cycle times.
       case "stage" :: dir :: cycles =>
         import graft.queries.LlmText
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        val jobsBy = new java.util.concurrent.ConcurrentHashMap[String, Integer]
         spark.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
             override def onJobStart(
-                e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
+                e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+              val m = Option(e.properties)
+                .flatMap(p => Option(p.getProperty(LlmText.MemoJobProperty)))
+                .getOrElse("none")
+              jobsBy.merge(m, 1, (a: Integer, b: Integer) => a + b)
+            }
           })
         // Listener events arrive asynchronously: wait for the bus to
-        // drain before reading the job count.
-        def jobsNow: Int = {
+        // drain before reading the job counts.
+        def jobsNow: Map[String, Int] = {
           org.apache.spark.sql.graftshims.DatasetShim
             .drainListeners(spark.sparkContext)
-          jobs.get
+          import scala.jdk.CollectionConverters._
+          jobsBy.asScala.map { case (k, v) => k -> v.intValue }.toMap
         }
         def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
         (1 to cycles.headOption.map(_.toInt).getOrElse(3)).foreach { c =>
@@ -132,13 +139,16 @@ object Probe {
           val t2 = System.nanoTime()
           df.write.mode("overwrite").format("noop").save()
           val countS = secs(t2)
-          val nJobs = jobsNow - j0
+          val j1 = jobsNow
+          val perMemo = j1.map { case (k, n) => k -> (n - j0.getOrElse(k, 0)) }
+            .filter(_._2 > 0).toSeq.sortBy(_._1)
           val memos = LlmText.stageTimings
             .map { case (k, v) => f"${k.takeWhile(_ != ':')}=$v%.3f" }
           println(f"[stage] cycle $c release_s=$releaseS%.3f " +
             f"build_s=$buildS%.3f count_s=$countS%.3f " +
-            f"total_s=${buildS + countS}%.3f jobs=$nJobs " +
-            memos.mkString("memo_s(", " ", ")"))
+            f"total_s=${buildS + countS}%.3f jobs=${perMemo.map(_._2).sum} " +
+            memos.mkString("memo_s(", " ", ") ") +
+            perMemo.map { case (k, n) => s"$k=$n" }.mkString("jobs(", " ", ")"))
         }
       // AQE's runtime join re-planning (e.g. SMJ→BHJ once the build
       // side's true size is known) is invisible in the static plan:

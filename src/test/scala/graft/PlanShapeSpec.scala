@@ -82,6 +82,10 @@ class PlanShapeSpec extends SparkTestBase {
     assert(p.contains("HashAggregate"))
     assert(!p.contains("SortAggregate"),
       "numeric band-min regressed to SortAggregate (string agg buffer?)")
+    // The band words come from the native `md5_band_hashes` kernel,
+    // not from hex digests sliced and parsed per shingle.
+    assert(!p.contains("conv("),
+      s"signature build parses hex band hashes with conv again:\n$p")
   }
 
   test("scan_partitioned_roundtrip: read side prunes partitions") {
@@ -118,6 +122,11 @@ class PlanShapeSpec extends SparkTestBase {
     val nShpos = "split\\(text".r.findAllIn(shpos).size
     assert(nShpos == 1,
       s"shingle_positions build evaluates split(text) $nShpos times; expected 1:\n$shpos")
+    // ... and shingles it with the native `word_shingles` kernel: a
+    // higher-order `transform` lambda is CodegenFallback and runs
+    // interpreted per shingle.
+    assert(!shpos.contains("transform(") && !shpos.contains("lambdafunction"),
+      s"shingle_positions build shingles through a transform lambda:\n$shpos")
   }
 
   test("llm_segment_dedup: boilerplate set joins back as a hash join") {

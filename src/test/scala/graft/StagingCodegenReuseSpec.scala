@@ -12,12 +12,14 @@ import graft.queries.LlmText
   * `GraftSession` pins the cache to the measured working set; a second
   * cycle must then compile nothing. The consumers are the benchmark's
   * `llm_staging` cycle plus `llm_cc_altstar`, which reads the
-  * `llm_dedup_clusters` memo and so must add no plan of its own. */
+  * `llm_dedup_clusters` memo and so must add no plan of its own, and
+  * `llm_incremental_dedup`, whose plans are each one chain of shuffles,
+  * so the order in which AQE creates their stages cannot vary. */
 class StagingCodegenReuseSpec extends SparkTestBase {
   private val cycle = Seq("llm_stage_index", "llm_minhash_sigs",
     "llm_minhash_neardup", "llm_dedup_clusters", "llm_cc_altstar",
     "llm_dedup_apply", "llm_dedup_stats", "llm_cross_source_overlap",
-    "llm_dedup_threshold_sweep", "llm_pipeline_e2e")
+    "llm_dedup_threshold_sweep", "llm_pipeline_e2e", "llm_incremental_dedup")
 
   /** Classes compiled by the cycle's queries. */
   private def runCycle(): Long = cycle.map { q =>
