@@ -2,8 +2,9 @@ package graft.core
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset, Observation}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Pre-truncation plan tap for every `localCheckpoint` call site in the
   * engine.
@@ -72,6 +73,23 @@ object CkptTap {
     def tappedLocalCheckpoint(eager: Boolean = true): Dataset[T] = {
       record(ds)
       ds.localCheckpoint(eager)
+    }
+
+    /** An eager [[tappedLocalCheckpoint]] that also evaluates the
+      * aggregate `metrics` (each named by `.as`) over the rows it
+      * materializes, through an [[Observation]] on the checkpoint's own
+      * job: no second job reads the checkpoint to count it. Returns the
+      * checkpoint and the metric values by name. */
+    def observedLocalCheckpoint(metrics: Column*): (Dataset[T], Map[String, Any]) = {
+      val obs = Observation()
+      val cp = ds.observe(obs, metrics.head, metrics.tail: _*).tappedLocalCheckpoint()
+      (cp, obs.get)
+    }
+
+    /** [[observedLocalCheckpoint]] of the row count alone. */
+    def countedLocalCheckpoint(): (Dataset[T], Long) = {
+      val (cp, m) = observedLocalCheckpoint(count(lit(1)).as("n_rows"))
+      (cp, m("n_rows").asInstanceOf[Long])
     }
   }
 }

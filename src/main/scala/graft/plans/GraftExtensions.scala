@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * user of the reference switching to this engine adds one config line
   * and `cosine_sim`/`dot_product` work in SQL text everywhere. It
   * injects `cosine_sim`, `dot_product`, `jaro_winkler`, and the staging
-  * index's per-row kernels `word_shingles` and `md5_band_hashes`.
+  * index's per-row kernels `word_shingles`, `md5_band_hashes` and
+  * `sorted_intersect_size`.
   *
   * It also plans [[TopKPerGroupPlan]] through [[TopKStrategy]]. Only
   * callers of the [[TopKPerGroup]] API (`win_topk_heap`) build that
@@ -52,5 +53,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("md5_band_hashes",
         "md5_band_hashes(sh) - the 8 32-bit words of md5(sh) and md5(sh || '#')"),
       (exprs: Seq[Expression]) => Md5BandHashes(exprs(0))))
+    e.injectFunction((
+      FunctionIdentifier("sorted_intersect_size"),
+      info("sorted_intersect_size",
+        "sorted_intersect_size(a, b) - values shared by two sorted, distinct bigint arrays"),
+      (exprs: Seq[Expression]) => SortedIntersectSize(exprs(0), exprs(1))))
   }
 }

@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -69,6 +69,50 @@ object TextKernels {
     words(d.digest(), out, 4)
     UnsafeArrayData.fromPrimitiveArray(out)
   }
+
+  /** Element `k` of a `sortedIntersectSize` input, checked against the
+    * one before it. */
+  private def ascending(arr: ArrayData, k: Int): Long = {
+    if (arr.isNullAt(k))
+      throw new IllegalArgumentException(s"sorted_intersect_size: null element at index $k")
+    val v = arr.getLong(k)
+    if (k > 0 && v <= arr.getLong(k - 1))
+      throw new IllegalArgumentException("sorted_intersect_size: input is not sorted " +
+        s"ascending and distinct at index $k (${arr.getLong(k - 1)} then $v)")
+    v
+  }
+
+  /** The number of values `a` and `b` share. Precondition: each array is
+    * sorted ascending with no duplicates and no nulls (what
+    * `sort_array(collect_list(x))` gives over a distinct, non-null `x`).
+    * One linear merge that allocates nothing; an element the merge reads
+    * that is null or not above the one before it throws, since the
+    * count would be wrong. */
+  def sortedIntersectSize(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var n = 0
+    if (na > 0 && nb > 0) {
+      var i = 0
+      var j = 0
+      var x = ascending(a, 0)
+      var y = ascending(b, 0)
+      while (i < na && j < nb) {
+        if (x < y) {
+          i += 1
+          if (i < na) x = ascending(a, i)
+        } else if (x > y) {
+          j += 1
+          if (j < nb) y = ascending(b, j)
+        } else {
+          n += 1; i += 1; j += 1
+          if (i < na) x = ascending(a, i)
+          if (j < nb) y = ascending(b, j)
+        }
+      }
+    }
+    n
+  }
 }
 
 /** `word_shingles(tokens)`: the word 3-grams of a string array, in
@@ -129,4 +173,36 @@ case class Md5BandHashes(child: Expression) extends UnaryExpression with Seriali
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** `sorted_intersect_size(a, b)`: the number of values two
+  * `array<bigint>`s share, as `int`, when each is sorted ascending with
+  * no duplicates and no nulls. It equals `size(array_intersect(a, b))`
+  * on such arrays, by one linear merge instead of a hash set built per
+  * row ([[TextKernels.sortedIntersectSize]]); input that breaks the
+  * precondition where the merge reads it fails the query. Null for a
+  * null array. */
+case class SortedIntersectSize(left: Expression, right: Expression)
+    extends BinaryExpression with Serializable {
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "sorted_intersect_size"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"sorted_intersect_size requires two array<bigint>, got $l and $r")
+    }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    TextKernels.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.TextKernels.sortedIntersectSize($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }

@@ -110,7 +110,7 @@ object LlmText {
     // MinHash's min-aggregation is duplicate-insensitive, so the
     // position-retaining stream feeds it unchanged.
     memo(s, s"sigs:$dir")(
-      minhashSigsFrom(shinglePositions(s, dir)).tappedLocalCheckpoint())
+      minhashSigsFrom(shinglePositions(s, dir)).countedLocalCheckpoint())
 
   /** The UNMEMOIZED signature build plan, for plan-shape tests: the
     * graded query returns the staged checkpoint (a plan-free RDD
@@ -181,7 +181,7 @@ object LlmText {
     * this memo's exclusive build fell from 2.3–2.6 s to 1.1–1.3 s, and
     * the `llm_stage_index` build from 42 to 35 Spark jobs, with the
     * same 256 pairs. */
-  private def computeMinhashNearDup(s: SparkSession, dir: String): DataFrame = {
+  private def computeMinhashNearDup(s: SparkSession, dir: String): (DataFrame, Long) = {
     val cands = minhashSigs(s, dir).groupBy("band", "sig")
       .agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")).between(2, HotBucketCap))
@@ -195,7 +195,7 @@ object LlmText {
       .filter(col("jaccard") >= 0.5)
       // jaccard is an integer ratio — bit-identical raw; per-engine
       // round(4) flips on boundary-terminating rationals.
-      .tappedLocalCheckpoint()
+      .countedLocalCheckpoint()
   }
 
   /** Corpus-wide DISTINCT hashed shingle set, memoized per (session,
@@ -206,7 +206,7 @@ object LlmText {
   private def shingleSet(s: SparkSession, dir: String): DataFrame =
     // From the shpos memo, not a fresh tokenize — see minhashSigs.
     memo(s, s"shingleset:$dir")(
-      hashedShingleSet(shinglePositions(s, dir)).tappedLocalCheckpoint())
+      hashedShingleSet(shinglePositions(s, dir)).countedLocalCheckpoint())
 
   /** Exact shingle-Jaccard near-dup with a natural blocking key (same
     * source) instead of LSH — the deterministic baseline the MinHash
@@ -228,19 +228,23 @@ object LlmText {
   }
 
   /** (doc_a, doc_b, jaccard): exact distinct-shingle Jaccard of each
-    * candidate pair, one row per pair. Each doc's distinct shingle
-    * hashes are collected into one array, both arrays are joined onto
-    * the pair, and `array_intersect` sizes the overlap. The sizes are
-    * longs, so `jaccard` is the same double the shingle-row join gave.
-    * A pair with no shared shingle gets 0, not a missing row; every
-    * caller keeps only jaccard >= 0.5. */
+    * candidate pair, one row per pair. `shingled` holds each doc's
+    * shingle hashes once (the [[shingleSet]] memo), so each doc's
+    * hashes are collected once into a sorted array with no duplicates;
+    * both arrays are joined onto the pair, and the native
+    * `sorted_intersect_size` kernel ([[graft.plans.SortedIntersectSize]])
+    * sizes the overlap in one linear merge, with no hash set built per
+    * pair. The sizes are longs, so `jaccard` is the same double the
+    * shingle-row join gave. A pair with no shared shingle gets 0, not
+    * a missing row; every caller keeps only jaccard >= 0.5. */
   private def withJaccard(shingled: DataFrame, cands: DataFrame): DataFrame = {
-    val sets = shingled.groupBy("doc_id").agg(collect_list(col("sh")).as("shs"))
+    val sets = shingled.groupBy("doc_id")
+      .agg(sort_array(collect_list(col("sh"))).as("shs"))
     def side(d: String) = sets.select(col("doc_id").as(d), col("shs").as(s"sh_$d"))
     cands.join(side("doc_a"), "doc_a").join(side("doc_b"), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("sh_doc_a"), col("sh_doc_b"),
-        size(array_intersect(col("sh_doc_a"), col("sh_doc_b"))).cast("long")
-          .as("n_inter"))
+        graft.plans.GraftFunctions.sortedIntersectSize(col("sh_doc_a"), col("sh_doc_b"))
+          .cast("long").as("n_inter"))
       .select(col("doc_a"), col("doc_b"),
         (col("n_inter") / (size(col("sh_doc_a")).cast("long")
           + size(col("sh_doc_b")).cast("long") - col("n_inter"))).as("jaccard"))
@@ -248,19 +252,27 @@ object LlmText {
 
   /** The staged index relations (shingle positions, shingle set,
     * signatures, near-dup pairs, clusters), memoized per (session,
-    * fixture dir) and evicted when the owning SparkContext stops. Each
-    * is an eager `tappedLocalCheckpoint`: plan-free, so holding it is
-    * cheap, and every consumer (clusters, apply, runs, containment, ...)
-    * reads the one build. A lost checkpoint block cannot be recomputed
-    * (its lineage is truncated): the consumer fails with Spark's
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, and [[releaseMemo]] clears the
-    * entries so the next call rebuilds from source. Builds, timings and
+    * fixture dir) and evicted when the owning SparkContext stops, each
+    * with its row count. Each is an eager checkpoint
+    * (`countedLocalCheckpoint`): plan-free, so holding it is cheap, and
+    * every consumer (clusters, apply, runs, containment, ...) reads the
+    * one build. `compute` returns the frame with the row count an
+    * `Observation` took on the job that materialized it, so no job
+    * runs only to count ([[stageIndex]] reads the counts). A lost
+    * checkpoint block cannot be recomputed (its lineage is truncated):
+    * the consumer fails with Spark's CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
+    * and [[releaseMemo]] clears the entries, frames and counts alike,
+    * so the next call rebuilds from source. Builds, timings and
     * releases all run under this object's lock. */
   private val memoCache = new graft.core.SessionScoped(
-    () => scala.collection.mutable.Map.empty[String, DataFrame])
+    () => scala.collection.mutable.Map.empty[String, (DataFrame, Long)])
 
+  /** The memo `key` of session `s`, built on first use by `compute`,
+    * which returns the checkpointed frame and its observed row count
+    * (`countedLocalCheckpoint`); later calls return the same frame until
+    * [[releaseMemo]]. The row count stays beside it for [[memoRows]]. */
   private def memo(s: SparkSession, key: String)(
-      compute: => DataFrame): DataFrame =
+      compute: => (DataFrame, Long)): DataFrame =
     memoCache.synchronized {
       memoCache(s).getOrElseUpdate(key, {
         // EXCLUSIVE build time: memo builds nest (clusters ⊇ neardup ⊇
@@ -278,15 +290,20 @@ object LlmText {
         val sc = s.sparkContext
         val outer = sc.getLocalProperty(MemoJobProperty)
         sc.setLocalProperty(MemoJobProperty, key.takeWhile(_ != ':'))
-        val df = try compute finally sc.setLocalProperty(MemoJobProperty, outer)
+        val built = try compute finally sc.setLocalProperty(MemoJobProperty, outer)
         val total = (System.nanoTime() - t0) / 1e9
         val children = buildChildSec.remove(buildChildSec.length - 1)
         if (buildChildSec.nonEmpty)
           buildChildSec(buildChildSec.length - 1) += total
         memoTimings += ((key, total - children))
-        df
-      })
+        built
+      })._1
     }
+
+  /** Row count of the memo `key` of session `s`, as observed when it
+    * was built; the memo must be built. */
+  private def memoRows(s: SparkSession, key: String): Long =
+    memoCache.synchronized { memoCache(s)(key)._2 }
 
   /** Spark local property that names the memo (its key up to the ':')
     * whose build submitted a job. It is set on the building thread for
@@ -327,7 +344,7 @@ object LlmText {
     * not checkpoint RDDs. The storage actually lives on the
     * `LogicalRDD`'s backing RDD, so that is what gets unpersisted. */
   def releaseMemo(s: SparkSession): Unit = memoCache.synchronized {
-    memoCache.remove(s).foreach(_.values.foreach { df =>
+    memoCache.remove(s).foreach(_.values.foreach { case (df, _) =>
       df.unpersist(blocking = true)
       org.apache.spark.sql.graftshims.DatasetShim.checkpointedRdds(df)
         .foreach(_.unpersist(blocking = true))
@@ -341,27 +358,48 @@ object LlmText {
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     memo(s, s"clusters:$dir")(computeClusters(s, dir))
 
-  private def computeClusters(s: SparkSession, dir: String): DataFrame = {
-    val (labels, _) =
-      minLabelComponents(minhashNearDup(s, dir).select("doc_a", "doc_b"))
-    labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
-      (col("node") === col("label")).as("is_keeper"))
+  private def computeClusters(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val cc = minLabelComponents(minhashNearDup(s, dir).select("doc_a", "doc_b"))
+    (cc.labels.select(col("node").as("doc_id"), col("label").as("cluster_id"),
+      (col("node") === col("label")).as("is_keeper")), cc.nodes)
   }
 
-  /** Directed edge count below which [[minLabelComponents]] runs on one
-    * partition. */
+  /** Directed edge count below which [[minLabelComponents]] runs its
+    * steps after the first on one partition. */
   private[graft] val SmallGraphEdges = 100000L
+
+  /** [[minLabelComponents]]' result: (node, label) rows, the
+    * propagation steps run, and the number of nodes (rows of `labels`). */
+  private[graft] final case class Components(labels: DataFrame, steps: Int, nodes: Long)
 
   /** Connected components of the undirected graph whose edges are the
     * rows of `pairs` (doc_a, doc_b): (node, label), where label is the
     * smallest node id in the node's component, plus the propagation
-    * steps run. Labels only ever fall, so min-label propagation always
-    * reaches its fixpoint, within diameter + 1 steps; the loop runs
-    * until a step changes no label, however long the chain. */
-  private[graft] def minLabelComponents(pairs: DataFrame): (DataFrame, Int) = {
+    * steps run and the node count. Labels only ever fall, so min-label
+    * propagation always reaches its fixpoint, within diameter + 1
+    * steps; the loop runs until a step changes no label, however long
+    * the chain.
+    *
+    * Every step is one eager checkpoint, and the counts the loop
+    * decides on are observed on those checkpoints' own jobs: the
+    * directed edge count (for the one-partition cutover) and the node
+    * count on step 1, the labels a step changed on every later step.
+    * No job runs only to count. */
+  private[graft] def minLabelComponents(pairs: DataFrame): Components = {
+    // Not persisted: a cache is one more job to fill under AQE, and a
+    // re-read costs two scans of `pairs` (a checkpoint, for the clusters
+    // memo).
     val rawEdges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
+    // Step 1 needs no join: every label starts as the node's own id, so
+    // a node's neighbour minimum is the smallest doc_b on its edges.
+    // Its degrees sum to the directed edge count.
+    val (first, m) = rawEdges.groupBy(col("doc_a"))
+      .agg(least(col("doc_a"), min(col("doc_b"))).as("label"),
+        count(lit(1)).as("deg"))
+      .select(col("doc_a").as("node"), col("label"), col("deg"))
+      .observedLocalCheckpoint(count(lit(1)).as("n_nodes"),
+        coalesce(sum(col("deg")), lit(0L)).as("n_edges"))
     // Adaptive layout for the iterative phase: the edge set after the
     // Jaccard filter is usually tiny relative to the corpus, and the
     // label-propagation rounds are then dominated by task-scheduling
@@ -369,40 +407,37 @@ object LlmText {
     // Small graphs collapse to one partition; big graphs keep the
     // distributed layout.
     val edges =
-      if (rawEdges.count() < SmallGraphEdges) rawEdges.coalesce(1) else rawEdges
-    // change flag computed inside the propagation pass — a separate
-    // labels⨝next comparison job per round doubled the loop's cost.
-    // Every node has an edge (the edge set is symmetric), so each node
-    // has a neighbour minimum and the join back onto the labels is inner.
-    def propagate(l: DataFrame): DataFrame = {
+      if (m("n_edges").asInstanceOf[Long] < SmallGraphEdges) rawEdges.coalesce(1)
+      else rawEdges
+    // One step: the change flag is computed inside the propagation pass
+    // and counted on its checkpoint's job — a separate labels⨝next
+    // comparison job per round doubled the loop's cost. Every node has
+    // an edge (the edge set is symmetric), so each node has a neighbour
+    // minimum and the join back onto the labels is inner.
+    def propagate(l: DataFrame): (DataFrame, Long) = {
       val nbrMin = edges.join(l, col("doc_b") === col("node"))
         .groupBy(col("doc_a"))
         .agg(min(col("label")).as("nbr_min"))
         .select(col("doc_a").as("n2"), col("nbr_min"))
-      l.join(nbrMin, col("node") === col("n2"))
+      val (next, changed) = l.join(nbrMin, col("node") === col("n2"))
         .select(col("node"), least(col("label"), col("nbr_min")).as("label"),
           (col("nbr_min") < col("label")).as("chg"))
-        .tappedLocalCheckpoint()
+        .observedLocalCheckpoint(count_if(col("chg")).as("n_chg"))
+      (next.select("node", "label"), changed("n_chg").asInstanceOf[Long])
     }
-    // Step 1 needs no join: every label starts as the node's own id, so
-    // a node's neighbour minimum is the smallest doc_b on its edges.
-    val first = edges.groupBy(col("doc_a"))
-      .agg(least(col("doc_a"), min(col("doc_b"))).as("label"))
-      .select(col("doc_a").as("node"), col("label"))
-      .tappedLocalCheckpoint()
-    var next = propagate(first)
+    var (labels, changed) = propagate(first.select("node", "label"))
     var steps = 2
     // two propagation steps per convergence check: fixpoint is still
     // detected exactly (a full unchanged step), with half the
-    // check-job overhead per round
-    while (next.filter(col("chg")).count() > 0) {
-      next = propagate(propagate(next.drop("chg")).drop("chg"))
+    // checkpoints read per round
+    while (changed > 0) {
+      val (once, _) = propagate(labels)
+      val (twice, c) = propagate(once)
+      labels = twice
+      changed = c
       steps += 2
     }
-    val labels = next.drop("chg")
-    // labels is localCheckpoint'd (plan-free), so the edge cache can go.
-    rawEdges.unpersist(blocking = false)
-    (labels, steps)
+    Components(labels, steps, m("n_nodes").asInstanceOf[Long])
   }
 
   /** Apply the dedup decision: the corpus with near-dup cluster
@@ -1184,7 +1219,7 @@ object LlmText {
     * once shape as [[shingleSet]]. */
   private def shinglePositions(s: SparkSession, dir: String): DataFrame =
     memo(s, s"shpos:$dir")(
-      shinglePositionsBuildPlan(s, dir).tappedLocalCheckpoint())
+      shinglePositionsBuildPlan(s, dir).countedLocalCheckpoint())
 
   /** The UNMEMOIZED position-stamped shingle build, exposed (like
     * [[minhashSigsBuildPlan]]) so PlanShapeSpec can pin the staged
@@ -1214,16 +1249,25 @@ object LlmText {
     * `llm_cc_altstar`, which then looked 3× its true cost). Output is
     * one graded row per staged relation with its cardinality, so the
     * staging step is itself oracle-checked. The bench runs this entry
-    * first; every later query's number is then its own work. */
-  def stageIndex(s: SparkSession, dir: String): DataFrame = {
-    def one(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).cast("long").as("n_rows"))
-        .select(lit(name).as("relation"), col("n_rows"))
-    one("dedup_clusters", dedupClusters(s, dir))
-      .unionByName(one("minhash_band_sigs", minhashSigs(s, dir)))
-      .unionByName(one("minhash_neardup_pairs", minhashNearDup(s, dir)))
-      .unionByName(one("shingle_positions", shinglePositions(s, dir)))
-      .unionByName(one("shingle_set", shingleSet(s, dir)))
+    * first; every later query's number is then its own work.
+    *
+    * The counts are the ones recorded when each memo was built (an
+    * observation on its checkpoint's job, see [[memo]]), returned as a
+    * local relation: this query runs no job of its own and reads no
+    * memo block, so a lost block shows in the memo's consumers, not
+    * here. After [[releaseMemo]] it rebuilds and counts afresh. */
+  def stageIndex(s: SparkSession, dir: String): DataFrame = memoCache.synchronized {
+    def one(name: String, key: String, build: => DataFrame): (String, Long) = {
+      build
+      (name, memoRows(s, s"$key:$dir"))
+    }
+    val rows = Seq(
+      one("dedup_clusters", "clusters", dedupClusters(s, dir)),
+      one("minhash_band_sigs", "sigs", minhashSigs(s, dir)),
+      one("minhash_neardup_pairs", "neardup", minhashNearDup(s, dir)),
+      one("shingle_positions", "shpos", shinglePositions(s, dir)),
+      one("shingle_set", "shingleset", shingleSet(s, dir)))
+    s.createDataFrame(rows).toDF("relation", "n_rows")
   }
 
   def substringRuns(s: SparkSession, dir: String): DataFrame = {

@@ -8,7 +8,7 @@ import graft.core.{GraftSession, Tables}
   *   runMain graft.tools.Probe schemas <sfDir>
   *   runMain graft.tools.Probe explain <sfDir> <queryName>
   *   runMain graft.tools.Probe codegen <sfDir> <q1,q2,...> [cycles]
-  *   runMain graft.tools.Probe stage <sfDir> [cycles]
+  *   runMain graft.tools.Probe stage <sfDir> [cycles] [q1,q2,...]
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -103,9 +103,13 @@ object Probe {
       // memo's exclusive build time, and the Spark jobs the build and
       // count ran, in total and per memo: a job is charged to the memo
       // building when it started (`LlmText.MemoJobProperty`), or to
-      // `none`. Cycle 1 pays first-use codegen; later cycles are the
-      // warm rebuild the benchmark's staging cycle times.
-      case "stage" :: dir :: cycles =>
+      // `none` (the result write). Then each relation's row count (the
+      // query's own rows, observed at build time: collecting them runs
+      // no job), and, when a consumer list is given, each consumer's
+      // wall time into the noop sink right after the build. Cycle 1
+      // pays first-use codegen; later cycles are the warm rebuild the
+      // benchmark's staging cycle times.
+      case "stage" :: dir :: rest =>
         import graft.queries.LlmText
         val jobsBy = new java.util.concurrent.ConcurrentHashMap[String, Integer]
         spark.sparkContext.addSparkListener(
@@ -127,7 +131,8 @@ object Probe {
           jobsBy.asScala.map { case (k, v) => k -> v.intValue }.toMap
         }
         def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-        (1 to cycles.headOption.map(_.toInt).getOrElse(3)).foreach { c =>
+        val consumers = rest.drop(1).headOption.toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+        (1 to rest.headOption.map(_.toInt).getOrElse(3)).foreach { c =>
           val t0 = System.nanoTime()
           LlmText.releaseMemo(spark)
           val releaseS = secs(t0)
@@ -144,11 +149,19 @@ object Probe {
             .filter(_._2 > 0).toSeq.sortBy(_._1)
           val memos = LlmText.stageTimings
             .map { case (k, v) => f"${k.takeWhile(_ != ':')}=$v%.3f" }
+          val rows = df.collect().map(r => s"${r.getString(0)}=${r.getLong(1)}")
+          val consumed = consumers.map { q =>
+            val t = System.nanoTime()
+            graft.SparkEntry.queries(q)(spark, dir).write.mode("overwrite").format("noop").save()
+            f"$q=${secs(t)}%.3f"
+          }
           println(f"[stage] cycle $c release_s=$releaseS%.3f " +
             f"build_s=$buildS%.3f count_s=$countS%.3f " +
             f"total_s=${buildS + countS}%.3f jobs=${perMemo.map(_._2).sum} " +
             memos.mkString("memo_s(", " ", ") ") +
-            perMemo.map { case (k, n) => s"$k=$n" }.mkString("jobs(", " ", ")"))
+            perMemo.map { case (k, n) => s"$k=$n" }.mkString("jobs(", " ", ") ") +
+            rows.mkString("rows(", " ", ")") +
+            (if (consumed.isEmpty) "" else consumed.mkString(" consumers_s(", " ", ")")))
         }
       // AQE's runtime join re-planning (e.g. SMJ→BHJ once the build
       // side's true size is known) is invisible in the static plan:
@@ -199,7 +212,7 @@ object Probe {
         }
       case other =>
         System.err.println("usage: schemas <dir> | explain <dir> <query> | " +
-          s"codegen <dir> <queries> [cycles] | stage <dir> [cycles]; got $other")
+          s"codegen <dir> <queries> [cycles] | stage <dir> [cycles] [queries]; got $other")
     }
     spark.stop()
   }

@@ -11,7 +11,7 @@ class LabelPropagationSpec extends SparkTestBase {
   import spark.implicits._
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    LlmText.minLabelComponents(edges.toDF("doc_a", "doc_b"))._1
+    LlmText.minLabelComponents(edges.toDF("doc_a", "doc_b")).labels
       .as[(Long, Long)].collect().toMap
 
   /** In-memory union-find with min-label roots: node -> component min. */
@@ -33,7 +33,7 @@ class LabelPropagationSpec extends SparkTestBase {
     // Ids rise along the path, so the minimum label starts at one end
     // and needs all 40 hops to reach the other.
     val path = (100L until 140L).map(a => (a, a + 1))
-    val (labels, steps) =
+    val LlmText.Components(labels, steps, _) =
       LlmText.minLabelComponents(path.toDF("doc_a", "doc_b"))
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == 41)
@@ -47,7 +47,7 @@ class LabelPropagationSpec extends SparkTestBase {
     // points back towards the middle, so the label walks 20 hops each way.
     def id(p: Int): Long = (math.abs(p - 20) * 2 + (if (p < 20) 1 else 0)).toLong
     val path = (0 until 40).map(p => (id(p + 1), id(p)))
-    val (labels, steps) =
+    val LlmText.Components(labels, steps, _) =
       LlmText.minLabelComponents(path.toDF("doc_a", "doc_b"))
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size == 41)
@@ -102,7 +102,7 @@ class LabelPropagationSpec extends SparkTestBase {
     // One round of two steps, as with the old 26-step cap on every
     // fixture (sf0.001, sf0.01, sf0.1).
     val pairs = LlmText.minhashNearDup(spark, sf).select("doc_a", "doc_b")
-    val (_, steps) = LlmText.minLabelComponents(pairs)
+    val steps = LlmText.minLabelComponents(pairs).steps
     assert(steps == 2)
   }
 }

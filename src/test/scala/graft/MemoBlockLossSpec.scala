@@ -40,4 +40,39 @@ class MemoBlockLossSpec extends SparkTestBase {
       assert(nearDups() == expected)
     } finally LlmText.releaseMemo(spark)
   }
+
+  /** `llm_stage_index`'s rows: relation -> n_rows. */
+  private def stageCounts(): Map[String, Long] =
+    SparkEntry.queries("llm_stage_index")(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("llm_stage_index reports build-time counts, and fresh ones after releaseMemo") {
+    try {
+      LlmText.releaseMemo(spark)
+      val counts = stageCounts()
+      assert(counts.keySet == Set("dedup_clusters", "minhash_band_sigs",
+        "minhash_neardup_pairs", "shingle_positions", "shingle_set"))
+      assert(counts.values.forall(_ > 0), counts)
+      assert(counts("minhash_band_sigs") == LlmText.minhashSignatures(spark, sf).count())
+      assert(counts("minhash_neardup_pairs") == LlmText.minhashNearDup(spark, sf).count())
+      assert(counts("dedup_clusters") == LlmText.dedupClusters(spark, sf).count())
+
+      // The counts were recorded at build time: a lost block does not
+      // reach them, while a consumer of the memo still fails clearly.
+      DatasetShim.checkpointedRdds(LlmText.minhashNearDup(spark, sf))
+        .foreach(_.unpersist(blocking = true))
+      assert(stageCounts() == counts)
+      val e = intercept[SparkException](nearDups())
+      assert(conditions(e).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"),
+        s"unexpected failure: $e")
+
+      // After a release every memo is built and counted again.
+      LlmText.releaseMemo(spark)
+      LlmText.clearStageTimings()
+      assert(stageCounts() == counts)
+      assert(LlmText.stageTimings.map(_._1.takeWhile(_ != ':')).sorted ==
+        Seq("clusters", "neardup", "shingleset", "shpos", "sigs"))
+      assert(nearDups().size == counts("minhash_neardup_pairs"))
+    } finally LlmText.releaseMemo(spark)
+  }
 }

@@ -11,9 +11,10 @@ import graft.queries.LlmText
 
 /** The near-dup pair memo (`llm_minhash_neardup`) groups each (band,
   * sig) bucket once to emit its candidate pairs, and verifies each pair
-  * by intersecting the two documents' shingle-hash arrays. Both are
-  * checked against an in-test reference, and the verify's plan must
-  * run one row per pair: no join on a shingle, no regrouping of pairs. */
+  * by intersecting the two documents' sorted shingle-hash arrays. Both
+  * are checked against an in-test reference, and the verify's plan must
+  * run one row per pair: no join on a shingle, no regrouping of pairs,
+  * and no `array_intersect` hash set per pair. */
 class NearDupVerifySpec extends SparkTestBase {
   import spark.implicits._
 
@@ -95,6 +96,12 @@ class NearDupVerifySpec extends SparkTestBase {
         .filter(_.groupingExpressions.map(_.name).toSet == Set("doc_a", "doc_b"))
       assert(pairAggs.isEmpty,
         s"the verify regroups rows by (doc_a, doc_b):\n${ops.head}")
+      // the overlap is one sorted merge per pair, not hash sets
+      val fns = ops.flatMap(_.expressions).flatMap(_.collect { case e => e.prettyName })
+      assert(!fns.contains("array_intersect"),
+        s"the verify builds array_intersect hash sets:\n${ops.head}")
+      assert(fns.contains("sorted_intersect_size"),
+        s"the verify does not size the overlap by sorted merge:\n${ops.head}")
     }
   }
 }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.plans.GraftFunctions
 import graft.queries.LlmText
 
-/** The staging index's native per-row kernels, `word_shingles` and
-  * `md5_band_hashes`, give exactly what the built-in formulas they
-  * replaced give, row for row, both inside whole-stage codegen and
-  * interpreted. */
+/** The staging index's native per-row kernels, `word_shingles`,
+  * `md5_band_hashes` and `sorted_intersect_size`, give exactly what the
+  * built-in formulas they replaced give, row for row, both inside
+  * whole-stage codegen and interpreted. */
 class TextKernelsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -47,6 +47,26 @@ class TextKernelsSpec extends SparkTestBase {
   /** Band word `b` as it was parsed from the hex slice. */
   private def oldBandHash(sh: Column, b: Int): Column =
     conv(hexSlice(sh, b), 16, 10).cast("long")
+
+  /** Pairs of sorted, distinct long arrays, as `withJaccard` builds them. */
+  private val sortedPairs: Seq[(String, Seq[Long], Seq[Long])] = {
+    val rnd = new scala.util.Random(11)
+    def draw(n: Int): Seq[Long] = rnd.shuffle((0L until 10000L).toVector).take(n).sorted
+    val big = draw(5000)
+    Seq(
+      ("both empty", Seq.empty, Seq.empty),
+      ("left empty", Seq.empty, Seq(1L, 2L)),
+      ("right empty", Seq(-3L, 4L), Seq.empty),
+      ("identical", Seq(-5L, 0L, 7L, 9L), Seq(-5L, 0L, 7L, 9L)),
+      ("disjoint", Seq(1L, 3L, 5L), Seq(2L, 4L, 6L)),
+      ("interleaved", Seq(1L, 2L, 4L, 7L, 8L, 10L), Seq(0L, 2L, 3L, 7L, 10L, 11L)),
+      ("negatives and extremes", Seq(Long.MinValue, -9L, -1L, 0L, Long.MaxValue),
+        Seq(Long.MinValue, -1L, 5L, Long.MaxValue)),
+      ("only the extremes", Seq(Long.MinValue), Seq(Long.MaxValue)),
+      ("5,000 elements each", big, draw(5000)),
+      ("5,000 elements, identical", big, big),
+      ("5,000 elements and a few", big, Seq(-1L, big(17), big(4999), 10000L)))
+  }
 
   private val modes = Seq(
     "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
@@ -113,6 +133,44 @@ class TextKernelsSpec extends SparkTestBase {
             assert(got.isEmpty && want.forall(_.isEmpty), "null string")
           case (sh, got, want) =>
             assert(got.contains(want.flatten) && want.length == 8, s"'$sh'")
+        }
+      }
+    }
+
+    test(s"sorted_intersect_size equals size(array_intersect) ($mode)") {
+      withConf(conf) {
+        val pairs = sortedPairs.zipWithIndex.map { case ((_, a, b), i) => (i, a, b) }
+          .toDF("id", "a", "b").repartition(2)
+        val ds = pairs.select($"id",
+          GraftFunctions.sortedIntersectSize($"a", $"b"),
+          size(array_intersect($"a", $"b"))).as[(Int, Int, Int)]
+        val got = ds.collect().map { case (id, n, want) => id -> (n, want) }.toMap
+        assert(got.size == sortedPairs.length)
+        sortedPairs.zipWithIndex.foreach { case ((name, a, b), id) =>
+          assert(got(id) == ((a.intersect(b).size, a.intersect(b).size)), name)
+        }
+        assert(got(sortedPairs.indexWhere(_._1 == "5,000 elements, identical"))._1 == 5000)
+        if (mode == "codegen") {
+          val plan = ds.queryExecution.executedPlan.toString
+          assert(plan.linesIterator.exists(l =>
+            l.contains("sorted_intersect_size") && l.contains("*(")),
+            s"sorted_intersect_size is not in a whole-stage codegen stage:\n$plan")
+        }
+      }
+    }
+
+    test(s"sorted_intersect_size fails on unsorted or repeated input ($mode)") {
+      withConf(conf) {
+        for ((a, b) <- Seq(
+            (Seq(1L, 3L, 2L), Seq(0L, 2L, 3L)), // inversion in a
+            (Seq(0L, 2L, 3L), Seq(2L, 1L)),     // inversion in b
+            (Seq(1L, 1L, 2L), Seq(1L, 2L)))) {  // a repeated value
+          val df = Seq((a, b)).toDF("a", "b").repartition(1)
+            .select(GraftFunctions.sortedIntersectSize($"a", $"b"))
+          val e = intercept[Exception](df.collect())
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(t => String.valueOf(t.getMessage))
+          assert(msgs.exists(_.contains("not sorted ascending and distinct")), s"$a, $b: $e")
         }
       }
     }
