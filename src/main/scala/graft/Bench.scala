@@ -103,14 +103,8 @@ object Bench {
     System.setProperty("java.io.tmpdir", dir.getAbsolutePath)
     System.setProperty("spark.local.dir", dir.getAbsolutePath)
     // tmpfs is RAM: delete on exit even if main throws.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(dir)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.core.ScratchDirs.rm(dir)))
     Some(dir.getAbsolutePath)
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
   }
 
   /** Host-speed canary: a fixed single-threaded CPU + allocation

@@ -1,6 +1,12 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
+import graft.etl.StockEtl
+import graft.multimodal.Multimodal
+import graft.queries._
+import graft.streaming.{StatefulOps, StreamingOps}
+import graft.udf.Udfs
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` aggregates every implemented operator family's named
@@ -13,156 +19,98 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("join_inner_star")(spark, "/root/testdata/sf0.001")
 
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Every query family once: its queries and their DuckDB twins. */
+  private def families: Seq[(Map[String, Query], Map[String, String])] = Seq(
+    Relational.queries -> Relational.oracle,
+    Advanced.queries -> Advanced.oracle,
+    ScaleOps.queries -> ScaleOps.oracle,
+    Analytics.queries -> Analytics.oracle,
+    Analytics2.queries -> Analytics2.oracle,
+    Analytics3.queries -> Analytics3.oracle,
+    Analytics4.queries -> Analytics4.oracle,
+    Analytics5.queries -> Analytics5.oracle,
+    Analytics6.queries -> Analytics6.oracle,
+    Analytics7.queries -> Analytics7.oracle,
+    Analytics8.queries -> Analytics8.oracle,
+    Analytics9.queries -> Analytics9.oracle,
+    Analytics10.queries -> Analytics10.oracle,
+    Analytics11.queries -> Analytics11.oracle,
+    Analytics12.queries -> Analytics12.oracle,
+    Analytics13.queries -> Analytics13.oracle,
+    Analytics14.queries -> Analytics14.oracle,
+    Analytics15.queries -> Analytics15.oracle,
+    Analytics16.queries -> Analytics16.oracle,
+    Analytics17.queries -> Analytics17.oracle,
+    Analytics18.queries -> Analytics18.oracle,
+    Analytics19.queries -> Analytics19.oracle,
+    Analytics20.queries -> Analytics20.oracle,
+    Analytics21.queries -> Analytics21.oracle,
+    Analytics22.queries -> Analytics22.oracle,
+    Analytics23.queries -> Analytics23.oracle,
+    Analytics24.queries -> Analytics24.oracle,
+    Analytics25.queries -> Analytics25.oracle,
+    Analytics26.queries -> Analytics26.oracle,
+    Analytics27.queries -> Analytics27.oracle,
+    Analytics28.queries -> Analytics28.oracle,
+    Analytics29.queries -> Analytics29.oracle,
+    Analytics30.queries -> Analytics30.oracle,
+    Analytics31.queries -> Analytics31.oracle,
+    Analytics32.queries -> Analytics32.oracle,
+    Analytics33.queries -> Analytics33.oracle,
+    Analytics34.queries -> Analytics34.oracle,
+    Analytics35.queries -> Analytics35.oracle,
+    Analytics36.queries -> Analytics36.oracle,
+    Analytics37.queries -> Analytics37.oracle,
+    Analytics38.queries -> Analytics38.oracle,
+    Analytics39.queries -> Analytics39.oracle,
+    Analytics40.queries -> Analytics40.oracle,
+    Analytics41.queries -> Analytics41.oracle,
+    Analytics42.queries -> Analytics42.oracle,
+    Analytics43.queries -> Analytics43.oracle,
+    Analytics44.queries -> Analytics44.oracle,
+    Analytics45.queries -> Analytics45.oracle,
+    Analytics46.queries -> Analytics46.oracle,
+    Analytics47.queries -> Analytics47.oracle,
+    Analytics48.queries -> Analytics48.oracle,
+    Analytics49.queries -> Analytics49.oracle,
+    Analytics50.queries -> Analytics50.oracle,
+    Analytics51.queries -> Analytics51.oracle,
+    Analytics52.queries -> Analytics52.oracle,
+    Analytics53.queries -> Analytics53.oracle,
+    Analytics54.queries -> Analytics54.oracle,
+    Analytics55.queries -> Analytics55.oracle,
+    Analytics56.queries -> Analytics56.oracle,
+    Analytics57.queries -> Analytics57.oracle,
+    Analytics58.queries -> Analytics58.oracle,
+    Analytics59.queries -> Analytics59.oracle,
+    Analytics60.queries -> Analytics60.oracle,
+    Analytics61.queries -> Analytics61.oracle,
+    Analytics62.queries -> Analytics62.oracle,
+    Scalars.queries -> Scalars.oracle,
+    StockEtl.queries -> StockEtl.oracle,
+    Udfs.queries -> Udfs.oracle,
+    LlmText.queries -> LlmText.oracle,
+    LlmVectors.queries -> LlmVectors.oracle,
+    StreamingOps.queries -> StreamingOps.oracle,
+    Multimodal.queries -> Multimodal.oracle,
+    StatefulOps.queries -> StatefulOps.oracle)
+
+  /** The union of `parts`; a name in two of them is an error, not a
+    * silent overwrite of the earlier entry. */
+  private[graft] def merged[V](parts: Seq[Map[String, V]]): Map[String, V] =
+    parts.foldLeft(Map.empty[String, V]) { (acc, part) =>
+      val repeated = part.keySet.intersect(acc.keySet)
+      require(repeated.isEmpty,
+        s"query names defined twice: ${repeated.toSeq.sorted.mkString(", ")}")
+      acc ++ part
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Advanced.queries ++
-      graft.queries.ScaleOps.queries ++
-      graft.queries.Analytics.queries ++
-      graft.queries.Analytics2.queries ++
-      graft.queries.Analytics3.queries ++
-      graft.queries.Analytics4.queries ++
-      graft.queries.Analytics5.queries ++
-      graft.queries.Analytics6.queries ++
-      graft.queries.Analytics7.queries ++
-      graft.queries.Analytics8.queries ++
-      graft.queries.Analytics9.queries ++
-      graft.queries.Analytics10.queries ++
-      graft.queries.Analytics11.queries ++
-      graft.queries.Analytics12.queries ++
-      graft.queries.Analytics13.queries ++
-      graft.queries.Analytics14.queries ++
-      graft.queries.Analytics15.queries ++
-      graft.queries.Analytics16.queries ++
-      graft.queries.Analytics17.queries ++
-      graft.queries.Analytics18.queries ++
-      graft.queries.Analytics19.queries ++
-      graft.queries.Analytics20.queries ++
-      graft.queries.Analytics21.queries ++
-      graft.queries.Analytics22.queries ++
-      graft.queries.Analytics23.queries ++
-      graft.queries.Analytics24.queries ++
-      graft.queries.Analytics25.queries ++
-      graft.queries.Analytics26.queries ++
-      graft.queries.Analytics27.queries ++
-      graft.queries.Analytics28.queries ++
-      graft.queries.Analytics29.queries ++
-      graft.queries.Analytics30.queries ++
-      graft.queries.Analytics31.queries ++
-      graft.queries.Analytics32.queries ++
-      graft.queries.Analytics33.queries ++
-      graft.queries.Analytics34.queries ++
-      graft.queries.Analytics35.queries ++
-      graft.queries.Analytics36.queries ++
-      graft.queries.Analytics37.queries ++
-      graft.queries.Analytics38.queries ++
-      graft.queries.Analytics39.queries ++
-      graft.queries.Analytics40.queries ++
-      graft.queries.Analytics41.queries ++
-      graft.queries.Analytics42.queries ++
-      graft.queries.Analytics43.queries ++
-      graft.queries.Analytics44.queries ++
-      graft.queries.Analytics45.queries ++
-      graft.queries.Analytics46.queries ++
-      graft.queries.Analytics47.queries ++
-      graft.queries.Analytics48.queries ++
-      graft.queries.Analytics49.queries ++
-      graft.queries.Analytics50.queries ++
-      graft.queries.Analytics51.queries ++
-      graft.queries.Analytics52.queries ++
-      graft.queries.Analytics53.queries ++
-      graft.queries.Analytics54.queries ++
-      graft.queries.Analytics55.queries ++
-      graft.queries.Analytics56.queries ++
-      graft.queries.Analytics57.queries ++
-      graft.queries.Analytics58.queries ++
-      graft.queries.Analytics59.queries ++
-      graft.queries.Analytics60.queries ++
-      graft.queries.Analytics61.queries ++
-      graft.queries.Analytics62.queries ++
-      graft.queries.Scalars.queries ++
-      graft.etl.StockEtl.queries ++
-      graft.udf.Udfs.queries ++
-      graft.queries.LlmText.queries ++
-      graft.queries.LlmVectors.queries ++
-      graft.streaming.StreamingOps.queries ++
-      graft.multimodal.Multimodal.queries ++
-      graft.streaming.StatefulOps.queries
+  lazy val queries: Map[String, Query] = merged(families.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.Advanced.oracle ++
-      graft.queries.ScaleOps.oracle ++
-      graft.queries.Analytics.oracle ++
-      graft.queries.Analytics2.oracle ++
-      graft.queries.Analytics3.oracle ++
-      graft.queries.Analytics4.oracle ++
-      graft.queries.Analytics5.oracle ++
-      graft.queries.Analytics6.oracle ++
-      graft.queries.Analytics7.oracle ++
-      graft.queries.Analytics8.oracle ++
-      graft.queries.Analytics9.oracle ++
-      graft.queries.Analytics10.oracle ++
-      graft.queries.Analytics11.oracle ++
-      graft.queries.Analytics12.oracle ++
-      graft.queries.Analytics13.oracle ++
-      graft.queries.Analytics14.oracle ++
-      graft.queries.Analytics15.oracle ++
-      graft.queries.Analytics16.oracle ++
-      graft.queries.Analytics17.oracle ++
-      graft.queries.Analytics18.oracle ++
-      graft.queries.Analytics19.oracle ++
-      graft.queries.Analytics20.oracle ++
-      graft.queries.Analytics21.oracle ++
-      graft.queries.Analytics22.oracle ++
-      graft.queries.Analytics23.oracle ++
-      graft.queries.Analytics24.oracle ++
-      graft.queries.Analytics25.oracle ++
-      graft.queries.Analytics26.oracle ++
-      graft.queries.Analytics27.oracle ++
-      graft.queries.Analytics28.oracle ++
-      graft.queries.Analytics29.oracle ++
-      graft.queries.Analytics30.oracle ++
-      graft.queries.Analytics31.oracle ++
-      graft.queries.Analytics32.oracle ++
-      graft.queries.Analytics33.oracle ++
-      graft.queries.Analytics34.oracle ++
-      graft.queries.Analytics35.oracle ++
-      graft.queries.Analytics36.oracle ++
-      graft.queries.Analytics37.oracle ++
-      graft.queries.Analytics38.oracle ++
-      graft.queries.Analytics39.oracle ++
-      graft.queries.Analytics40.oracle ++
-      graft.queries.Analytics41.oracle ++
-      graft.queries.Analytics42.oracle ++
-      graft.queries.Analytics43.oracle ++
-      graft.queries.Analytics44.oracle ++
-      graft.queries.Analytics45.oracle ++
-      graft.queries.Analytics46.oracle ++
-      graft.queries.Analytics47.oracle ++
-      graft.queries.Analytics48.oracle ++
-      graft.queries.Analytics49.oracle ++
-      graft.queries.Analytics50.oracle ++
-      graft.queries.Analytics51.oracle ++
-      graft.queries.Analytics52.oracle ++
-      graft.queries.Analytics53.oracle ++
-      graft.queries.Analytics54.oracle ++
-      graft.queries.Analytics55.oracle ++
-      graft.queries.Analytics56.oracle ++
-      graft.queries.Analytics57.oracle ++
-      graft.queries.Analytics58.oracle ++
-      graft.queries.Analytics59.oracle ++
-      graft.queries.Analytics60.oracle ++
-      graft.queries.Analytics61.oracle ++
-      graft.queries.Analytics62.oracle ++
-      graft.queries.Scalars.oracle ++
-      graft.etl.StockEtl.oracle ++
-      graft.udf.Udfs.oracle ++
-      graft.queries.LlmText.oracle ++
-      graft.queries.LlmVectors.oracle ++
-      graft.streaming.StreamingOps.oracle ++
-      graft.multimodal.Multimodal.oracle ++
-      graft.streaming.StatefulOps.oracle
+  lazy val oracleSql: Map[String, String] = merged(families.map(_._2))
 }

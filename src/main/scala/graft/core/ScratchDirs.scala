@@ -1,29 +1,52 @@
 package graft.core
 
-/** JVM-exit cleanup for per-application scratch directories.
+import java.io.File
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.SparkSession
+
+/** Where every scratch file of the engine lives, and when it goes.
   *
-  * A few graded queries stage real files to demonstrate a storage
-  * layout (`scan_csv_multiline`'s multi-line CSV, `scan_time_travel`'s
-  * transaction log, the z-order layouts). The paths are keyed by
-  * applicationId so concurrent runs never collide — which also means
-  * repeated app runs accumulate litter under java.io.tmpdir. The dirs
-  * must outlive the RETURNED frame (it lazily re-reads them), so the
-  * correct scope is process exit, not query return: register each here
-  * and one shutdown hook removes them all. tmpfs-pinned bench runs are
-  * doubly covered (the bench already deletes its scratch root). */
+  * Some graded queries stage real files to exercise a storage layout
+  * (format round-trips, bucketed and z-ordered layouts, compaction, a
+  * transaction log, a blob landing zone) and return a lazy frame that
+  * reads them again. [[path]] is the one place such a path is decided:
+  * `<java.io.tmpdir>/graft-<applicationId>/<name>-<digest of dir>`.
+  *
+  *  - The application id keeps two runs on one host (two JVMs, or two
+  *    applications in one JVM) out of each other's files.
+  *  - The digest of the input dir keeps one query at two scales in one
+  *    application out of each other's files.
+  *  - The application's root directory is registered once, on its first
+  *    path, and removed with everything under it at JVM exit. Not at
+  *    query return: the returned frame still reads the files.
+  *
+  * `java.io.tmpdir` is read once per application, so `Bench`'s tmpfs
+  * pin (set before its session starts) moves the root with it. Two
+  * threads running the same query on the same dir in one application
+  * still share a path. */
 object ScratchDirs {
-  private val paths = new java.util.concurrent.ConcurrentHashMap[String, Unit]
-  private lazy val hook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => paths.keySet.forEach(p => rm(new java.io.File(p)))))
+  private val roots = new ConcurrentHashMap[String, File]
 
-  /** Remember `path` for removal at JVM exit (idempotent). */
-  def cleanupOnExit(path: String): String = {
-    hook
-    paths.put(path, ())
-    path
-  }
+  /** The scratch path `name` of query input `dir` in `s`'s application.
+    * Nothing is created; callers write there as they see fit. */
+  def path(s: SparkSession, name: String, dir: String): String =
+    new File(root(s), s"$name-${digest(dir)}").getPath
 
-  private def rm(f: java.io.File): Unit = {
+  /** This application's root, removed at JVM exit. */
+  private def root(s: SparkSession): File =
+    roots.computeIfAbsent(s.sparkContext.applicationId, id => {
+      val r = new File(sys.props("java.io.tmpdir"), s"graft-$id")
+      Runtime.getRuntime.addShutdownHook(new Thread(() => rm(r)))
+      r
+    })
+
+  private def digest(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** Deletes `f` and everything under it. */
+  private[graft] def rm(f: File): Unit = {
     val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
     f.delete(): Unit
   }

@@ -163,7 +163,7 @@ object StockEtl {
 
   /** Full E2E including the overwrite sink and read-back. */
   def etlStockPipeline(s: SparkSession, dir: String): DataFrame = {
-    val target = sys.props("java.io.tmpdir") + "/graft_stock_table"
+    val target = graft.core.ScratchDirs.path(s, "graft_stock_table", dir)
     lowercased(runPipeline(s, goldenCsv, target))
   }
 

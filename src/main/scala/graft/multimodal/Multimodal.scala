@@ -532,7 +532,7 @@ object Multimodal {
     * Exact-duplicate texts share a digest, so a blob matches every doc
     * carrying its content — the oracle mirrors that multiplicity. */
   def mmBinaryIngest(s: SparkSession, dir: String): DataFrame = {
-    val landing = sys.props("java.io.tmpdir") + "/graft_blob_landing"
+    val landing = graft.core.ScratchDirs.path(s, "graft_blob_landing", dir)
     val lp = new org.apache.hadoop.fs.Path(landing)
     val fs = lp.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(lp)) fs.delete(lp, true)

@@ -362,7 +362,7 @@ object Analytics {
     * type); doubles round-trip exactly through Jackson. */
   def scanJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = sys.props("java.io.tmpdir") + "/graft_jsonl_roundtrip"
+    val path = graft.core.ScratchDirs.path(s, "graft_jsonl_roundtrip", dir)
     t(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
@@ -387,7 +387,7 @@ object Analytics {
     * directly, so round-trip corruption fails the hash. */
   def scanCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = sys.props("java.io.tmpdir") + "/graft_csv_roundtrip"
+    val path = graft.core.ScratchDirs.path(s, "graft_csv_roundtrip", dir)
     t(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
@@ -412,7 +412,7 @@ object Analytics {
     * plan shape). The oracle filters the flat parquet, so a row landing
     * in the wrong partition fails the hash. */
   def scanPartitionedRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = sys.props("java.io.tmpdir") + "/graft_part_roundtrip"
+    val path = graft.core.ScratchDirs.path(s, "graft_part_roundtrip", dir)
     t(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)

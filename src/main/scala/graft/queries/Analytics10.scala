@@ -232,11 +232,7 @@ object Analytics10 {
     * table. The zval column exists only at write time; readers see the
     * plain schema and plain predicates. */
   def scanZorder(s: SparkSession, dir: String): DataFrame = {
-    // Keyed by the INPUT dir: two invocations against different
-    // corpora (the dual-scale gate, the empty-input spec) must not
-    // clobber each other's layout mid-read.
-    val path = sys.props("java.io.tmpdir") + "/graft_zorder_orders_" +
-      java.lang.Integer.toHexString(dir.hashCode)
+    val path = graft.core.ScratchDirs.path(s, "graft_zorder_orders", dir)
     val day = datediff(col("o_orderdate").cast("date"),
       lit("1995-01-01").cast("date")).cast("long")
     val o = t(s, dir, "orders")

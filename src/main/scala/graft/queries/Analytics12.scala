@@ -589,17 +589,9 @@ object Analytics12 {
     * and checks one-file-per-partition via
     * count(distinct `_metadata.file_name`). The oracle reproduces the
     * same census semantically from the base table, pinning that the
-    * file-system-derived grouping equals the value-derived one. The
-    * fixture path is keyed by input dir (the `scan_zorder_scaled`
-    * clobbering lesson). */
+    * file-system-derived grouping equals the value-derived one. */
   def scanMetadataCols(s: SparkSession, dir: String): DataFrame = {
-    // Keyed by BOTH the input dir and this JVM's application id: two
-    // concurrent runs (parallel Verify/Bench) or hash-colliding dirs
-    // must never overwrite a layout the other is mid-read on.
-    val path = graft.core.ScratchDirs.cleanupOnExit(
-      sys.props("java.io.tmpdir") + "/graft_meta_orders_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        s.sparkContext.applicationId)
+    val path = graft.core.ScratchDirs.path(s, "graft_meta_orders", dir)
     val laid = t(s, dir, "orders")
       .withColumn("bkt", pmod(col("o_orderkey"), lit(4)).cast("int"))
       .repartition(4, col("bkt"))

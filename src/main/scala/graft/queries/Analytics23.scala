@@ -52,10 +52,7 @@ object Analytics23 {
     * lines = tokens). */
   def scanCsvMultiline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = graft.core.ScratchDirs.cleanupOnExit(
-      sys.props("java.io.tmpdir") + "/graft_csv_multiline_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        s.sparkContext.applicationId)
+    val path = graft.core.ScratchDirs.path(s, "graft_csv_multiline", dir)
     t(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         regexp_replace(col("text"), " ", "\n").as("text"))

@@ -162,10 +162,7 @@ object Analytics25 {
     * driver-side text (bounded metadata, exactly like a real log);
     * data moves only through executor parquet writes. */
   def scanTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(graft.core.ScratchDirs.cleanupOnExit(
-      new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_txnlog_" + java.lang.Integer.toHexString(dir.hashCode) +
-          "_" + s.sparkContext.applicationId).getAbsolutePath))
+    val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_txnlog", dir))
     val logDir = new java.io.File(base, "_log")
     logDir.mkdirs()
     val orders = t(s, dir, "orders")

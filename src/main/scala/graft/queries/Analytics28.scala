@@ -42,10 +42,7 @@ object Analytics28 {
     * scan). */
   def scanCsvPermissive(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = graft.core.ScratchDirs.cleanupOnExit(
-      sys.props("java.io.tmpdir") + "/graft_csv_permissive_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        s.sparkContext.applicationId)
+    val path = graft.core.ScratchDirs.path(s, "graft_csv_permissive", dir)
     t(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         // decimal → string renders plain "12345.67" (no grouping

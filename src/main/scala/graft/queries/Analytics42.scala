@@ -96,10 +96,7 @@ object Analytics42 {
     * partition is bit-identical to the source (which is exactly what
     * the oracle computes directly from orders). */
   def etlDynamicPartitionOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(graft.core.ScratchDirs.cleanupOnExit(
-      new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_dpo_" + java.lang.Integer.toHexString(dir.hashCode) +
-          "_" + s.sparkContext.applicationId).getAbsolutePath))
+    val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_dpo", dir))
     val orders = t(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
@@ -148,10 +145,7 @@ object Analytics42 {
     * touched dead files. File counts are deterministic: each slice is
     * written `repartition(2)` over a non-empty slice. */
   def etlVacuumRetention(s: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(graft.core.ScratchDirs.cleanupOnExit(
-      new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_vac_" + java.lang.Integer.toHexString(dir.hashCode) +
-          "_" + s.sparkContext.applicationId).getAbsolutePath))
+    val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_vac", dir))
     val logDir = new java.io.File(base, "_log")
     logDir.mkdirs()
     val orders = t(s, dir, "orders")

@@ -34,22 +34,6 @@ object LlmText {
   private def fanout(s: SparkSession): Int =
     s.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-  /** doc_id + exploded shingle per row — duplicates RETAINED (the
-    * MinHash min-aggregation is duplicate-insensitive; set-semantics
-    * consumers go through [[hashedShingleSet]]). Repartitions the doc
-    * table before the generate: a compact corpus file scans as ONE task
-    * while explode amplifies ~50×, so the fan-out must happen before
-    * the amplification or the whole shingle pipeline runs single-
-    * threaded. The repartition shuffle moves only the narrow doc rows. */
-  private def rawShingles(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
-      .repartition(fanout(s))
-      // token array staged behind a projection boundary, so the split
-      // runs once per doc (PlanShapeSpec pins the single-split shape)
-      .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
-      .select(col("doc_id"), col("source"),
-        explode(shingles(col("t"))).as("sh"))
-
   /** DISTINCT (doc_id, source, shingle-hash): shingles as xxhash64
     * int64s, so the distinct and every downstream join shuffle 8-byte
     * keys instead of ~20-char strings. Collisions are ~n²/2⁶⁴ —
@@ -1228,9 +1212,9 @@ object LlmText {
   private[graft] def shinglePositionsBuildPlan(s: SparkSession,
       dir: String): DataFrame =
     docs(s, dir).repartition(fanout(s))
-      // token array staged behind a projection boundary, like
-      // rawShingles, so the split runs once per doc; the
-      // `word_shingles` kernel keeps the whole stage in codegen.
+      // token array staged behind a projection boundary, so the split
+      // runs once per doc; the `word_shingles` kernel keeps the whole
+      // stage in codegen.
       //
       // Carries `source` (r16) so the sigs and shingleset memos can
       // derive from THIS staged stream instead of re-tokenizing the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.core.Tables
+import graft.core.{ScratchDirs, SessionScoped, Tables}
 import graft.core.CkptTap._
 
 /** Scale-layout operators: bucketed co-located joins, banded range
@@ -53,20 +53,19 @@ object ScaleOps {
     * funneling the whole table (the 100 TB difference between a
     * layout job and a stalled pipeline). */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
     t(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .repartition(buckets, col("o_orderkey"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$tmp/graft_bkt_orders")
+      .option("path", ScratchDirs.path(s, "graft_bkt_orders", dir))
       .saveAsTable("graft_bkt_orders")
     t(s, dir, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount", "l_quantity")
       .repartition(buckets, col("l_orderkey"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$tmp/graft_bkt_lineitem")
+      .option("path", ScratchDirs.path(s, "graft_bkt_lineitem", dir))
       .saveAsTable("graft_bkt_lineitem")
     val o = s.table("graft_bkt_orders")
     val l = s.table("graft_bkt_lineitem")
@@ -115,7 +114,7 @@ object ScaleOps {
     * events to ORC, read it back, aggregate. The oracle aggregates the
     * original parquet, so any loss in the round-trip fails the hash. */
   def scanOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = sys.props("java.io.tmpdir") + "/graft_orc_roundtrip"
+    val path = ScratchDirs.path(s, "graft_orc_roundtrip", dir)
     t(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
@@ -136,7 +135,7 @@ object ScaleOps {
     * Integer microseconds (not timestamps) cross the text format, so
     * the round-trip is value-exact. */
   def scanXmlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = sys.props("java.io.tmpdir") + "/graft_xml_roundtrip"
+    val path = ScratchDirs.path(s, "graft_xml_roundtrip", dir)
     // The events fixture is a single parquet row group, so without a
     // repartition ONE task would serialize the whole table to XML and
     // one task would parse it back — 23.5 s at sf0.1, the slowest
@@ -237,9 +236,8 @@ object ScaleOps {
     * (exactly 4 distinct files read back) and content (count + decimal
     * sum must match the original table). */
   def etlCompact(s: SparkSession, dir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
-    val small = s"$tmp/graft_compact_small"
-    val big = s"$tmp/graft_compact_big"
+    val small = ScratchDirs.path(s, "graft_compact_small", dir)
+    val big = ScratchDirs.path(s, "graft_compact_big", dir)
     t(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
       .repartition(64).write.mode("overwrite").parquet(small)
@@ -287,7 +285,7 @@ object ScaleOps {
     * oracle filters the unsorted original, so the layout rewrite must
     * be content-preserving. */
   def scanZorder(s: SparkSession, dir: String): DataFrame = {
-    val path = sys.props("java.io.tmpdir") + "/graft_zorder"
+    val path = ScratchDirs.path(s, "graft_zorder", dir)
     t(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
         "l_quantity", "l_extendedprice")
@@ -311,13 +309,12 @@ object ScaleOps {
     * At 100 TB with 4096 buckets that's a 1000× read reduction for
     * key lookups, with no index structure to maintain. */
   def scanBucketPruned(s: SparkSession, dir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
     t(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .repartition(buckets, col("o_orderkey")) // distributed one-file-per-bucket (see joinBucketed)
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$tmp/graft_bkt_probe")
+      .option("path", ScratchDirs.path(s, "graft_bkt_probe", dir))
       .saveAsTable("graft_bkt_probe")
     s.table("graft_bkt_probe")
       .filter(col("o_orderkey").isin(1, 2, 3))
@@ -339,7 +336,6 @@ object ScaleOps {
     * catalog tables" note concrete beyond join_bucketed's single-axis
     * ad-hoc layout; ScaleQueriesSpec pins both prunings in one plan. */
   def scanCatalogBucketed(s: SparkSession, dir: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir")
     t(s, dir, "orders")
       .select("o_orderkey", "o_totalprice", "o_orderpriority")
       // distributed layout write: each of the `buckets` tasks holds one
@@ -349,7 +345,7 @@ object ScaleOps {
       .write.mode("overwrite").format("parquet")
       .partitionBy("o_orderpriority")
       .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$tmp/graft_cat_orders")
+      .option("path", ScratchDirs.path(s, "graft_cat_orders", dir))
       .saveAsTable("graft_cat_orders")
     s.table("graft_cat_orders")
       .filter(col("o_orderpriority") === "1-URGENT" &&
@@ -391,7 +387,7 @@ object ScaleOps {
     * (ScaleQueriesSpec pins the dynamicpruning plan shape.) */
   def joinDpp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = sys.props("java.io.tmpdir") + "/graft_dpp_lineitem"
+    val path = ScratchDirs.path(s, "graft_dpp_lineitem", dir)
     t(s, dir, "lineitem")
       .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
@@ -399,7 +395,7 @@ object ScaleOps {
     // an in-memory dim's Filter is constant-folded into the
     // LocalRelation before the PartitionPruning rule looks for it, and
     // Not(=) predicates don't count as selective.
-    val dimPath = sys.props("java.io.tmpdir") + "/graft_dpp_dim"
+    val dimPath = ScratchDirs.path(s, "graft_dpp_dim", dir)
     Seq(("A", "returned"), ("N", "kept"), ("R", "refunded"))
       .toDF("flag", "label")
       .write.mode("overwrite").parquet(dimPath)
@@ -443,31 +439,22 @@ object ScaleOps {
     * (InMemoryTableScan, spec-pinned). The 100 TB form of "reuse a
     * partitioning/materialization across stages" — pay the scan once,
     * amortize across every consumer. */
-  // One persisted base per (app, dir): a fresh persist() per invocation
-  // would accumulate cached blocks across a 170+-query verify/bench
-  // session with nothing ever releasing them. Keyed by applicationId so
-  // a stopped context's entry is never reused by a new app.
-  private val cachedReuseBase =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+  // One persisted base per (session, dir): a fresh persist() per
+  // invocation would accumulate cached blocks across a 170+-query
+  // verify/bench session with nothing ever releasing them. Dropped with
+  // the session's context, so a new app never reuses a stopped one's.
+  private val cachedReuseBase = new SessionScoped(
+    () => new java.util.concurrent.ConcurrentHashMap[String, DataFrame])
 
-  /** Unpersist and forget this app's cached reuse bases — end-of-run
+  /** Unpersist and forget this session's cached reuse bases — end-of-run
     * hook for long sessions (see [[graft.core.CacheRelease]]). The
     * base keeps full lineage, so a later call just re-persists. */
-  def releaseCache(s: SparkSession): Unit = {
-    val prefix = s"${s.sparkContext.applicationId}:"
-    val it = cachedReuseBase.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) {
-        e.getValue.unpersist(blocking = true)
-        it.remove()
-      }
-    }
-  }
+  def releaseCache(s: SparkSession): Unit =
+    cachedReuseBase.remove(s)
+      .foreach(_.values.forEach(_.unpersist(blocking = true)))
 
   def scanCachedReuse(s: SparkSession, dir: String): DataFrame = {
-    val base = cachedReuseBase.computeIfAbsent(
-      s"${s.sparkContext.applicationId}:$dir",
+    val base = cachedReuseBase(s).computeIfAbsent(dir,
       _ => t(s, dir, "lineitem")
         .filter(col("l_quantity") > 10)
         .select("l_returnflag", "l_quantity", "l_extendedprice")
@@ -558,7 +545,7 @@ object ScaleOps {
     * sets survive — at 100 TB you migrate schemas by writing the new
     * shape next to the old, never by rewriting history. */
   def etlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val root = sys.props("java.io.tmpdir") + "/graft_schema_evo"
+    val root = ScratchDirs.path(s, "graft_schema_evo", dir)
     val e = t(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), dayofmonth(col("ts")).as("d"))

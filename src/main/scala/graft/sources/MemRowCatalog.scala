@@ -122,7 +122,6 @@ private[sources] class MemRowTable(tableName: String, schema0: StructType,
     with SupportsRowLevelOperations {
 
   @volatile private var rows: Vector[UnsafeRow] = Vector.empty
-  private[sources] def currentRows: Vector[UnsafeRow] = rows
 
   override def name(): String = tableName
   override def schema(): StructType = schema0

@@ -355,8 +355,8 @@ object StreamingOps {
     // Unique per INVOCATION, not per app: reusing a checkpoint across
     // calls would see "no new files", drain zero batches, and leave
     // the freshly-recreated table empty on a second run in one JVM.
-    val base = sys.props("java.io.tmpdir") + "/graft_stream_upsert_" +
-      java.util.UUID.randomUUID().toString
+    val base = graft.core.ScratchDirs.path(s, "graft_stream_upsert", dir) +
+      "/" + java.util.UUID.randomUUID().toString
     val raw = s.read.parquet(s"$dir/events.parquet")
     raw.repartition(4).write.mode("overwrite").parquet(s"$base/in")
     val q = s.readStream.schema(raw.schema)
@@ -390,11 +390,7 @@ object StreamingOps {
     try q.awaitTermination() finally q.stop()
     // merged state lives in the catalog; the per-invocation staging +
     // checkpoint files are garbage once the stream finishes
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(base))
+    graft.core.ScratchDirs.rm(new java.io.File(base))
     s.sql("""SELECT event_type, n, CAST(total AS DOUBLE) AS total
             |FROM graft_mem.db.stream_upsert""".stripMargin)
   }

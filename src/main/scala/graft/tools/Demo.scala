@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables}
+import graft.core.{GraftSession, ScratchDirs, Tables}
 import graft.etl.StockEtl
 import graft.queries.LlmText
 
@@ -18,7 +18,7 @@ object Demo {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
     // 1. The reference pipeline (dump_bigq.py / run_pipeline), one lazy plan.
-    val warehouse = sys.props("java.io.tmpdir") + "/graft_demo_stock"
+    val warehouse = ScratchDirs.path(spark, "graft_demo_stock", dir)
     val table = StockEtl.runPipeline(spark, StockEtl.goldenCsv, warehouse)
     println(s"[demo] stock warehouse loaded: ${table.count()} rows")
 

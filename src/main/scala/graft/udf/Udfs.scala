@@ -75,9 +75,11 @@ object Udfs {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Scalar UDF registered into SQL text and invoked from spark.sql. */
+  /** Scalar UDF registered into SQL text (once per session) and invoked
+    * from spark.sql. */
   def udfMagnitudeSql(s: SparkSession, dir: String): DataFrame = {
-    s.udf.register("parse_magnitude", (x: String) => parseMagnitudeScala(x))
+    if (!s.catalog.functionExists("parse_magnitude"))
+      s.udf.register("parse_magnitude", (x: String) => parseMagnitudeScala(x))
     Tables.load(s, dir, "lineitem").createOrReplaceTempView("graft_udf_lineitem")
     s.sql(
       """SELECT l_orderkey, l_linenumber,
@@ -100,12 +102,15 @@ object Udfs {
     * query plans/codegens exactly as if the expression were written
     * in place (no serialization boundary, full pushdown — the form to
     * recommend whenever the logic is expressible in SQL). Decimal
-    * accumulation matches the engine's sum_disc determinism rule. */
+    * accumulation matches the engine's sum_disc determinism rule.
+    * The function is created once per session (OR REPLACE only settles
+    * two threads that both found it missing). */
   def udfSqlFunction(s: SparkSession, dir: String): DataFrame = {
-    s.sql(
-      """CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(p DOUBLE, d DOUBLE)
-        |RETURNS DECIMAL(27,8)
-        |RETURN CAST(p AS DECIMAL(18,4)) * CAST(1 - d AS DECIMAL(8,4))""".stripMargin)
+    if (!s.catalog.functionExists("graft_disc_price"))
+      s.sql(
+        """CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(p DOUBLE, d DOUBLE)
+          |RETURNS DECIMAL(27,8)
+          |RETURN CAST(p AS DECIMAL(18,4)) * CAST(1 - d AS DECIMAL(8,4))""".stripMargin)
     Tables.load(s, dir, "lineitem")
       .createOrReplaceTempView("graft_sqlf_lineitem")
     s.sql(

@@ -122,8 +122,7 @@ class Analytics10Spec extends SparkTestBase {
 
   test("scan_zorder_scaled: the layout prunes files on BOTH axes") {
     q("scan_zorder_scaled").collect() // materialize the layout
-    val path = sys.props("java.io.tmpdir") + "/graft_zorder_orders_" +
-      java.lang.Integer.toHexString(sf.hashCode)
+    val path = core.ScratchDirs.path(spark, "graft_zorder_orders", sf)
     // Per-file min/max stats, as parquet footers would expose them.
     val stats = spark.read.parquet(path)
       .withColumn("f", input_file_name())

@@ -82,12 +82,14 @@ class SelfJoinCensusSpec extends SparkTestBase {
     }
   }
 
-  /** Both scales of one query, SEQUENTIALLY: side-effecting registry
-    * entries (compaction, sink roundtrips) write fixture-independent
-    * scratch paths during DataFrame construction, so evaluating the
-    * same query at two scales concurrently clobbers its own
-    * `_temporary` dirs. Cross-QUERY parallelism stays safe — scratch
-    * paths embed the query identity. */
+  /** Both scales of one query, SEQUENTIALLY. Scratch files do not need
+    * it: `ScratchDirs.path` keys each by application and input dir, so
+    * the two scales of a query write apart (`ScratchDirsSpec`). The
+    * catalog tables do: `join_bucketed`, `scan_bucket_pruned` and
+    * `scan_catalog_bucketed` save `graft_bkt_*`/`graft_cat_orders`
+    * under one name per application, which two scales at once would
+    * overwrite under each other. Cross-QUERY parallelism stays safe —
+    * scratch paths and table names embed the query identity. */
   private def measure(name: String)(
       implicit ec: ExecutionContext): Future[(Map[String, Cell], Map[String, Cell])] =
     Future { (measureOne(name, sfA), measureOne(name, sfB)) }
