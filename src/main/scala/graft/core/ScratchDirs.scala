@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * Some graded queries stage real files to exercise a storage layout
   * (format round-trips, bucketed and z-ordered layouts, compaction, a
   * transaction log, a blob landing zone) and return a lazy frame that
-  * reads them again. [[path]] is the one place such a path is decided:
+  * reads them again; streaming queries keep their checkpoints under
+  * [[perRun]]. [[path]] is the one place such a path is decided:
   * `<java.io.tmpdir>/graft-<applicationId>/<name>-<digest of dir>`.
   *
   *  - The application id keeps two runs on one host (two JVMs, or two
@@ -32,6 +33,14 @@ object ScratchDirs {
     * Nothing is created; callers write there as they see fit. */
   def path(s: SparkSession, name: String, dir: String): String =
     new File(root(s), s"$name-${digest(dir)}").getPath
+
+  /** A fresh directory under [[path]] for one run of a streaming query,
+    * for its checkpoint and staged input. Fresh per run: a checkpoint an
+    * earlier `AvailableNow` run drained makes the next run drain nothing
+    * and return an empty answer. The caller removes it with [[rm]] once
+    * the query has stopped. */
+  def perRun(s: SparkSession, name: String, dir: String): String =
+    new File(path(s, name, dir), java.util.UUID.randomUUID().toString).getPath
 
   /** This application's root, removed at JVM exit. */
   private def root(s: SparkSession): File =

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.functions.CleanFns
 
 /** The reference's end-to-end ETL re-expressed Spark-first:
@@ -126,24 +127,30 @@ object StockEtl {
       .toString
   }
 
-  /** A file in `dir` holding `bytes`, named by their hash. A file an
-    * earlier run left under that name is reused only if it holds
-    * exactly these bytes; otherwise it is replaced by an atomic move.
-    * The copy outlives the JVM on purpose: the DuckDB compare reads
-    * `oracle_sql.json`'s path after Verify has exited. */
+  /** A file in `dir` holding `bytes`, named by their hash and readable
+    * by every user. A file an earlier run left under that name is
+    * reused only if it holds exactly these bytes and others may read
+    * it; otherwise it is replaced by an atomic move. The copy outlives
+    * the JVM on purpose: the DuckDB compare reads `oracle_sql.json`'s
+    * path after Verify has exited, possibly as another user. */
   private[graft] def fixtureCopy(bytes: Array[Byte],
       dir: java.nio.file.Path): java.nio.file.Path = {
     import java.nio.file.{Files, LinkOption, StandardCopyOption}
+    import java.nio.file.attribute.{PosixFilePermission, PosixFilePermissions}
     val hash = java.security.MessageDigest.getInstance("SHA-256")
       .digest(bytes).take(8).map("%02x".format(_)).mkString
     val out = dir.resolve(s"graft-stock-fixture-$hash.csv")
     val intact = Files.isRegularFile(out, LinkOption.NOFOLLOW_LINKS) &&
       Files.size(out) == bytes.length &&
-      java.util.Arrays.equals(Files.readAllBytes(out), bytes)
+      java.util.Arrays.equals(Files.readAllBytes(out), bytes) &&
+      Files.getPosixFilePermissions(out, LinkOption.NOFOLLOW_LINKS)
+        .contains(PosixFilePermission.OTHERS_READ)
     if (!intact) {
       val part = Files.createTempFile(dir, "graft-stock-fixture", ".part")
       try {
         Files.write(part, bytes)
+        Files.setPosixFilePermissions(part,
+          PosixFilePermissions.fromString("rw-r--r--"))
         Files.move(part, out, StandardCopyOption.ATOMIC_MOVE)
       } finally Files.deleteIfExists(part)
     }
@@ -362,16 +369,6 @@ object StockEtl {
        |SELECT stock_name, date, tr, atr14
        |FROM a WHERE rn >= 14""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_stock_clean" -> (etlStockClean _),
-    "etl_stock_pipeline" -> (etlStockPipeline _),
-    "etl_gapfill" -> (etlGapfill _),
-    "etl_profile" -> (etlProfile _),
-    "etl_stock_obv" -> (etlStockObv _),
-    "etl_stock_macd" -> (etlStockMacd _),
-    "etl_stock_stochastic" -> (etlStockStochastic _),
-    "etl_stock_atr" -> (etlStockAtr _))
-
   // The oracle re-runs the cleaning rules in DuckDB over the same CSV.
   private def nullish(c: String) = s"lower(trim($c)) IN ('', 'nan')"
   private val etlSql =
@@ -395,20 +392,41 @@ object StockEtl {
        |       ELSE TRY_CAST(rtrim(trim("Change %"), '%') AS DOUBLE) END AS change
        |FROM raw""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "etl_stock_clean" -> etlSql,
-    "etl_stock_obv" ->
-      (s"""WITH cleaned AS ($etlSql),
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("etl_stock_clean", etlStockClean, etlSql),
+    QueryDef("etl_stock_pipeline", etlStockPipeline, etlSql),
+    QueryDef("etl_gapfill", etlGapfill,
+      s"""WITH cleaned AS ($etlSql),
+         |bars AS (SELECT stock_name, date, price FROM cleaned),
+         |span AS (SELECT stock_name, MIN(date) AS d0, MAX(date) AS d1
+         |         FROM bars GROUP BY 1),
+         |spine AS (SELECT stock_name,
+         |            CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
+         |                 CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS date
+         |          FROM span),
+         |j AS (SELECT s.stock_name, s.date, b.price
+         |      FROM spine s LEFT JOIN bars b
+         |        ON s.stock_name = b.stock_name AND s.date = b.date)
+         |SELECT stock_name, strftime(date, '%Y-%m-%d') AS d,
+         |  last_value(price IGNORE NULLS) OVER (PARTITION BY stock_name
+         |    ORDER BY date, price NULLS FIRST ROWS UNBOUNDED PRECEDING) AS price_ff,
+         |  price IS NULL AS is_gap
+         |FROM j""".stripMargin),
+    QueryDef("etl_profile", etlProfile,
+      s"""WITH cleaned AS ($etlSql)
+         |SELECT stock_name, COUNT(*) AS n_rows,
+         |  CAST(SUM(CASE WHEN price IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_price,
+         |  CAST(SUM(CASE WHEN vol IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_vol,
+         |  CAST(SUM(CASE WHEN change IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_change,
+         |  strftime(MIN(date), '%Y-%m-%d') AS d_min,
+         |  strftime(MAX(date), '%Y-%m-%d') AS d_max,
+         |  MIN(price) AS price_min,
+         |  MAX(price) AS price_max
+         |FROM cleaned GROUP BY stock_name""".stripMargin),
+    QueryDef("etl_stock_obv", etlStockObv,
+      s"""WITH cleaned AS ($etlSql),
           |""".stripMargin + obvCensus("cleaned")),
-    "etl_stock_stochastic" ->
-      (s"""WITH cleaned AS ($etlSql),
-          |""".stripMargin +
-        stochasticCensus("cleaned").replaceFirst("WITH ", "")),
-    "etl_stock_atr" ->
-      (s"""WITH cleaned AS ($etlSql),
-          |""".stripMargin +
-        atrCensus("cleaned").replaceFirst("WITH ", "")),
-    "etl_stock_macd" ->
+    QueryDef("etl_stock_macd", etlStockMacd,
       s"""WITH RECURSIVE cleaned AS ($etlSql),
          |${barsCte("cleaned")},
          |v AS (SELECT stock_name, price,
@@ -432,36 +450,15 @@ object StockEtl {
          |SELECT f.stock_name, CAST(n.n AS BIGINT) AS n_bars,
          |  f.e12 - f.e26 AS macd, f.sig AS signal,
          |  (f.e12 - f.e26) - f.sig AS histogram
-         |FROM f JOIN n ON n.stock_name = f.stock_name WHERE f.i = n.n""".stripMargin,
-    "etl_stock_pipeline" -> etlSql,
-    "etl_profile" ->
-      s"""WITH cleaned AS ($etlSql)
-         |SELECT stock_name, COUNT(*) AS n_rows,
-         |  CAST(SUM(CASE WHEN price IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_price,
-         |  CAST(SUM(CASE WHEN vol IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_vol,
-         |  CAST(SUM(CASE WHEN change IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_change,
-         |  strftime(MIN(date), '%Y-%m-%d') AS d_min,
-         |  strftime(MAX(date), '%Y-%m-%d') AS d_max,
-         |  MIN(price) AS price_min,
-         |  MAX(price) AS price_max
-         |FROM cleaned GROUP BY stock_name""".stripMargin,
-    "etl_gapfill" ->
+         |FROM f JOIN n ON n.stock_name = f.stock_name WHERE f.i = n.n""".stripMargin),
+    QueryDef("etl_stock_stochastic", etlStockStochastic,
       s"""WITH cleaned AS ($etlSql),
-         |bars AS (SELECT stock_name, date, price FROM cleaned),
-         |span AS (SELECT stock_name, MIN(date) AS d0, MAX(date) AS d1
-         |         FROM bars GROUP BY 1),
-         |spine AS (SELECT stock_name,
-         |            CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-         |                 CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS date
-         |          FROM span),
-         |j AS (SELECT s.stock_name, s.date, b.price
-         |      FROM spine s LEFT JOIN bars b
-         |        ON s.stock_name = b.stock_name AND s.date = b.date)
-         |SELECT stock_name, strftime(date, '%Y-%m-%d') AS d,
-         |  last_value(price IGNORE NULLS) OVER (PARTITION BY stock_name
-         |    ORDER BY date, price NULLS FIRST ROWS UNBOUNDED PRECEDING) AS price_ff,
-         |  price IS NULL AS is_gap
-         |FROM j""".stripMargin)
+          |""".stripMargin +
+        stochasticCensus("cleaned").replaceFirst("WITH ", "")),
+    QueryDef("etl_stock_atr", etlStockAtr,
+      s"""WITH cleaned AS ($etlSql),
+          |""".stripMargin +
+        atrCensus("cleaned").replaceFirst("WITH ", "")))
 
   /** Register the lowercased cleaned stock-fixture table under `name` —
     * the entry point derived queries (e.g. Black–Scholes in

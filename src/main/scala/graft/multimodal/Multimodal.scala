@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Multimodal column handling: media as opaque `binary` columns with
@@ -893,26 +894,9 @@ object Multimodal {
       |       FROM bd),
       |""".stripMargin + dftAggSql("cf")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_dft_energy" -> (mmDftEnergy _),
-    "mm_pixel_dedup" -> (mmPixelDedup _),
-    "mm_patchify" -> (mmPatchify _),
-    "mm_scene_cuts" -> (mmSceneCuts _),
-    "mm_audio_fingerprint" -> (mmAudioFingerprint _),
-    "mm_vad_segments" -> (mmVadSegments _),
-    "mm_binary_ingest" -> (mmBinaryIngest _),
-    "mm_decode_png" -> (mmDecodePng _),
-    "mm_decode_jpeg" -> (mmDecodeJpeg _),
-    "mm_features" -> (mmFeatures _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_resize" -> (mmResize _),
-    "mm_blob_dedup" -> (mmBlobDedup _),
-    "mm_phash" -> (mmPhash _),
-    "mm_phash_neardup" -> (mmPhashNeardup _))
-
-  val oracle: Map[String, String] = Map(
-    "mm_dft_energy" -> dftOracleSql,
-    "mm_pixel_dedup" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("mm_dft_energy", mmDftEnergy, dftOracleSql),
+    QueryDef("mm_pixel_dedup", mmPixelDedup,
       """WITH imgs AS (SELECT doc_id AS media_id,
         |                substr(text, 1, 32 * least(len(text) // 32, 8)) AS pix
         |              FROM documents WHERE len(text) >= 32),
@@ -926,8 +910,8 @@ object Multimodal {
         |       - COUNT(DISTINCT md5(pix)) AS BIGINT) AS n_reencoded_groups,
         |  CAST(COUNT(*) - COUNT(DISTINCT md5(pix)) AS BIGINT)
         |    AS n_dup_pixel_blobs
-        |FROM allb""".stripMargin,
-    "mm_patchify" ->
+        |FROM allb""".stripMargin),
+    QueryDef("mm_patchify", mmPatchify,
       """WITH m AS (SELECT doc_id AS media_id, text,
         |             least(len(text) // 32, 8) AS h
         |           FROM documents WHERE len(text) >= 32),
@@ -943,8 +927,8 @@ object Multimodal {
         |SELECT media_id, CAST(pr AS BIGINT) AS patch_row,
         |  CAST(pc AS BIGINT) AS patch_col,
         |  CAST(32 AS BIGINT) AS n_px, CAST(px_sum AS BIGINT) AS px_sum
-        |FROM p""".stripMargin,
-    "mm_scene_cuts" ->
+        |FROM p""".stripMargin),
+    QueryDef("mm_scene_cuts", mmSceneCuts,
       """WITH m AS (SELECT doc_id AS media_id, text, len(text) // 32 AS nf
         |           FROM documents WHERE len(text) >= 64),
         |d AS (SELECT m.media_id, g,
@@ -958,8 +942,8 @@ object Multimodal {
         |    AS n_cuts,
         |  CAST(max(diff) AS BIGINT) AS max_diff
         |FROM d JOIN m ON m.media_id = d.media_id
-        |GROUP BY 1, 2""".stripMargin,
-    "mm_audio_fingerprint" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("mm_audio_fingerprint", mmAudioFingerprint,
       """WITH b AS (SELECT doc_id,
         |             list_transform(range(1, length(text) + 1),
         |               i -> ord(text[i])) AS bs
@@ -986,10 +970,10 @@ object Multimodal {
         |  CAST(f2 - frame_no AS BIGINT) AS dt,
         |  CAST(((energy % 251) * 251 + e2 % 251) * 64
         |       + least(f2 - frame_no, 63) AS BIGINT) AS fp
-        |FROM pairs WHERE f2 IS NOT NULL""".stripMargin,
+        |FROM pairs WHERE f2 IS NOT NULL""".stripMargin),
     // ASCII ⇒ ord(char) == byte value, so the oracle rebuilds each
     // frame's energy from the document text itself.
-    "mm_vad_segments" ->
+    QueryDef("mm_vad_segments", mmVadSegments,
       """WITH b AS (SELECT doc_id,
         |             list_transform(range(1, length(text) + 1),
         |               i -> ord(text[i])) AS bs
@@ -1009,9 +993,9 @@ object Multimodal {
         |  CAST(MAX(frame_no) AS BIGINT) AS seg_end,
         |  CAST(COUNT(*) AS BIGINT) AS n_frames,
         |  CAST(SUM(energy) AS BIGINT) AS energy
-        |FROM v GROUP BY doc_id, isl""".stripMargin,
+        |FROM v GROUP BY doc_id, isl""".stripMargin),
     // ASCII ⇒ md5(chars) == md5(blob bytes), LENGTH(chars) == file size
-    "mm_binary_ingest" ->
+    QueryDef("mm_binary_ingest", mmBinaryIngest,
       """WITH blobs AS (SELECT LENGTH(text) AS length, md5(text) AS h
         |               FROM documents WHERE doc_id < 50),
         |d AS (SELECT source, md5(text) AS dh FROM documents)
@@ -1019,11 +1003,11 @@ object Multimodal {
         |  COUNT(DISTINCT h) AS n_unique_blobs,
         |  CAST(SUM(length) AS BIGINT) AS bytes
         |FROM blobs JOIN d ON h = dh
-        |GROUP BY source""".stripMargin,
+        |GROUP BY source""".stripMargin),
     // Lossless PNG round-trip ⇒ decoded geometry and pixel sum are
     // recomputable from the text chars that became the pixels
     // (ASCII ⇒ ord(char) == byte == gray sample).
-    "mm_decode_png" ->
+    QueryDef("mm_decode_png", mmDecodePng,
       """SELECT doc_id AS media_id,
         |  CAST(32 AS BIGINT) AS width,
         |  CAST(LEAST(length(text) // 32, 8) AS BIGINT) AS height,
@@ -1032,22 +1016,22 @@ object Multimodal {
         |    range(32 * LEAST(length(text) // 32, 8)),
         |    i -> ord(substr(text, CAST(i AS INT) + 1, 1)))) AS BIGINT)
         |    AS pixel_sum
-        |FROM documents WHERE length(text) >= 32""".stripMargin,
+        |FROM documents WHERE length(text) >= 32""".stripMargin),
     // Lossy JPEG: geometry is exact (recomputable from text length),
     // pixel values are not — the oracle asserts the codec stayed
     // inside the documented error budget (within_tol) instead of
     // recomputing a DCT in SQL.
-    "mm_decode_jpeg" ->
+    QueryDef("mm_decode_jpeg", mmDecodeJpeg,
       """SELECT doc_id AS media_id,
         |  CAST(32 AS BIGINT) AS width,
         |  CAST(LEAST(length(text) // 32, 8) AS BIGINT) AS height,
         |  CAST(1 AS BIGINT) AS n_channels,
         |  true AS within_tol
-        |FROM documents WHERE length(text) >= 32""".stripMargin,
+        |FROM documents WHERE length(text) >= 32""".stripMargin),
     // ASCII text ⇒ byte value == char code; histogram bin b counts
     // chars with ord/16 == b. Bin 4 = space..'/' (0x20-0x2f), bins 6/7
     // cover a-z ranges.
-    "mm_features" ->
+    QueryDef("mm_features", mmFeatures,
       """SELECT doc_id AS media_id, length(text) AS n_bytes,
         |  len(list_filter(range(length(text)),
         |    i -> ord(substr(text, CAST(i AS INT) + 1, 1)) // 16 = 4))
@@ -1058,9 +1042,14 @@ object Multimodal {
         |  len(list_filter(range(length(text)),
         |    i -> ord(substr(text, CAST(i AS INT) + 1, 1)) // 16 = 7))
         |    / CAST(length(text) AS DOUBLE) AS bin7
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
+    QueryDef("mm_frame_sample", mmFrameSample,
+      """SELECT doc_id AS media_id,
+        |  CAST(ceil((length(text) // 32) / 4.0) AS BIGINT) AS n_sampled,
+        |  CAST(ceil((length(text) // 32) / 4.0) AS BIGINT) * 32 AS bytes_sampled
+        |FROM documents WHERE length(text) >= 32""".stripMargin),
     // ASCII ⇒ byte i == char code at position i; every 4th char kept
-    "mm_resize" ->
+    QueryDef("mm_resize", mmResize,
       """SELECT doc_id AS media_id,
         |  length(text) AS n_bytes_in,
         |  CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_bytes_out,
@@ -1068,25 +1057,20 @@ object Multimodal {
         |    list_filter(range(length(text)), i -> i % 4 = 0),
         |    i -> ord(substr(text, CAST(i AS INT) + 1, 1)))) AS BIGINT)
         |    AS byte_sum
-        |FROM documents""".stripMargin,
-    "mm_frame_sample" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(ceil((length(text) // 32) / 4.0) AS BIGINT) AS n_sampled,
-        |  CAST(ceil((length(text) // 32) / 4.0) AS BIGINT) * 32 AS bytes_sampled
-        |FROM documents WHERE length(text) >= 32""".stripMargin,
+        |FROM documents""".stripMargin),
     // ASCII text ⇒ md5 over chars == md5 over the UTF-8 blob bytes and
     // LENGTH(chars) == byte length.
-    "mm_blob_dedup" ->
+    QueryDef("mm_blob_dedup", mmBlobDedup,
       """WITH b AS (SELECT md5(text) AS h, COUNT(*) AS c,
         |             MIN(LENGTH(text)) AS len
         |           FROM documents GROUP BY 1)
         |SELECT COUNT(*) AS n_unique, CAST(SUM(c) AS BIGINT) AS n_total,
         |  CAST(SUM(len) AS BIGINT) AS bytes_unique,
         |  CAST(SUM(len * c) AS BIGINT) AS bytes_total
-        |FROM b""".stripMargin,
+        |FROM b""".stripMargin),
     // ASCII ⇒ pixel(p) == ascii(char p); the PNG round-trip is
     // lossless, so the oracle rebuilds every cell sum from the text.
-    "mm_phash" ->
+    QueryDef("mm_phash", mmPhash,
       """WITH m AS (SELECT doc_id, text, least(length(text) // 32, 8) AS h
         |           FROM documents WHERE length(text) >= 32),
         |px AS (SELECT doc_id, h, g.p, ascii(substr(text, g.p + 1, 1)) AS v
@@ -1106,14 +1090,14 @@ object Multimodal {
         |  CAST(r.row_sum AS BIGINT) AS row_sum,
         |  CAST(b.row_hash AS BIGINT) AS row_hash
         |FROM bits b JOIN rsum r ON b.doc_id = r.doc_id AND b.y = r.y"""
-        .stripMargin,
+        .stripMargin),
     // Full-height (h=8) images only; band values, fine bits and
     // Hamming terms are small exact integers in both engines. The
     // fine-bit ladder (q = +4 blocking bits per corpus doubling past
     // 1k, drawn from the band's 64 pixels in stride-23 order) is the
     // same integer CASE ladder the Spark side computes, so both
     // engines block identically at every scale.
-    "mm_phash_neardup" ->
+    QueryDef("mm_phash_neardup", mmPhashNeardup,
       s"""WITH m AS (SELECT doc_id, text FROM documents
         |           WHERE length(text) >= 256),
         |dial AS (SELECT LEAST(46, 4 * (${graft.queries.LlmVectors
@@ -1172,5 +1156,5 @@ object Multimodal {
         |        GROUP BY 1, 2)
         |SELECT doc_a, doc_b, hamming,
         |  CAST(hamming <= 6 AS INTEGER) AS is_near
-        |FROM ham""".stripMargin)
+        |FROM ham""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.QueryDef
+import graft.core.{ScratchDirs, Tables}
 
 /** Round-7 surface, part 2: the Spark-4 SQL/connector features a user
   * migrating a warehouse workload expects to keep — recursive CTEs
@@ -161,15 +162,18 @@ object Advanced {
       case null => ()
       case prev => s.catalog.dropTempView(prev): Unit
     }
+    val ckpt = ScratchDirs.perRun(s, "graft_stream_dsv2", dir)
     val q = s.readStream.format("graft.sources.TickSource")
       .option("rows", "100000").option("parts", "8")
       .option("batchRows", "30000").load()
       .groupBy("sym")
       .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
       .writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .format("memory").queryName(name).start()
-    try q.awaitTermination() finally q.stop()
+    try q.awaitTermination()
+    finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
     s.table(name)
   }
 
@@ -202,16 +206,8 @@ object Advanced {
 
   // ---------------------------------------------------------------- maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_recursive_walk" -> (sqlRecursiveWalk _),
-    "scan_dsv2" -> (scanDsv2 _),
-    "scan_dsv2_agg" -> (scanDsv2Agg _),
-    "sql_scripting" -> (sqlScripting _),
-    "stream_dsv2" -> (streamDsv2 _),
-    "etl_observe" -> (etlObserve _))
-
-  val oracle: Map[String, String] = Map(
-    "sql_recursive_walk" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("sql_recursive_walk", sqlRecursiveWalk,
       """WITH RECURSIVE
         |e AS (SELECT user_id, event_type,
         |             epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
@@ -231,8 +227,8 @@ object Advanced {
         |SELECT node, depth, CAST(SUM(score) AS BIGINT) AS walk_score,
         |       COUNT(*) AS n_walks
         |FROM walk WHERE depth > 0
-        |GROUP BY node, depth""".stripMargin,
-    "scan_dsv2" ->
+        |GROUP BY node, depth""".stripMargin),
+    QueryDef("scan_dsv2", scanDsv2,
       """WITH t AS (
         |  SELECT i AS tick_id,
         |         ['ALPHA','BETA','GAMMA','DELTA','EPS','ZETA','ETA','THETA']
@@ -242,8 +238,8 @@ object Advanced {
         |  FROM generate_series(0, 199999) AS g(i))
         |SELECT day, COUNT(*) AS n, CAST(SUM(price_cents) AS BIGINT) AS sum_cents
         |FROM t WHERE tick_id < 120000 AND sym = 'GAMMA'
-        |GROUP BY day""".stripMargin,
-    "scan_dsv2_agg" ->
+        |GROUP BY day""".stripMargin),
+    QueryDef("scan_dsv2_agg", scanDsv2Agg,
       """WITH t AS (
         |  SELECT i AS tick_id,
         |         ['ALPHA','BETA','GAMMA','DELTA','EPS','ZETA','ETA','THETA']
@@ -255,24 +251,24 @@ object Advanced {
         |       CAST(SUM(price_cents) AS BIGINT) AS sum_cents,
         |       MIN(day) AS min_day, MAX(day) AS max_day
         |FROM t WHERE tick_id < 150000
-        |GROUP BY sym""".stripMargin,
-    "stream_dsv2" ->
-      """WITH t AS (
-        |  SELECT ['ALPHA','BETA','GAMMA','DELTA','EPS','ZETA','ETA','THETA']
-        |           [CAST(i % 8 AS INT) + 1] AS sym,
-        |         1000 + (i * 37) % 9000 AS price_cents
-        |  FROM generate_series(0, 99999) AS g(i))
-        |SELECT sym, COUNT(*) AS n, CAST(SUM(price_cents) AS BIGINT) AS sum_cents
-        |FROM t GROUP BY sym""".stripMargin,
-    "sql_scripting" ->
+        |GROUP BY sym""".stripMargin),
+    QueryDef("sql_scripting", sqlScripting,
       """WITH a AS (SELECT CAST(ROUND(AVG(CAST(o_totalprice AS DECIMAL(18,2))), 2)
         |                  AS DOUBLE) AS ap FROM orders)
         |SELECT o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CASE WHEN o_totalprice > ap THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_above,
         |  ap AS threshold
-        |FROM orders, a GROUP BY o_orderpriority, ap""".stripMargin,
-    "etl_observe" ->
+        |FROM orders, a GROUP BY o_orderpriority, ap""".stripMargin),
+    QueryDef("stream_dsv2", streamDsv2,
+      """WITH t AS (
+        |  SELECT ['ALPHA','BETA','GAMMA','DELTA','EPS','ZETA','ETA','THETA']
+        |           [CAST(i % 8 AS INT) + 1] AS sym,
+        |         1000 + (i * 37) % 9000 AS price_cents
+        |  FROM generate_series(0, 99999) AS g(i))
+        |SELECT sym, COUNT(*) AS n, CAST(SUM(price_cents) AS BIGINT) AS sum_cents
+        |FROM t GROUP BY sym""".stripMargin),
+    QueryDef("etl_observe", etlObserve,
       """SELECT COUNT(*) AS n_rows,
         |  CAST(SUM(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_nonpos_qty,
@@ -281,5 +277,5 @@ object Advanced {
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
         |    AS sum_price,
         |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty
-        |FROM lineitem""".stripMargin)
+        |FROM lineitem""".stripMargin))
 }

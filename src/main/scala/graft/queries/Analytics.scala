@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-5 analytics surface: batch sessionization, last-touch
@@ -426,41 +427,25 @@ object Analytics {
 
   // ---------------------------------------------------------------- maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_partitioned_roundtrip" -> (scanPartitionedRoundtrip _),
-    "scan_csv_roundtrip" -> (scanCsvRoundtrip _),
-    "scan_jsonl_roundtrip" -> (scanJsonlRoundtrip _),
-    "events_sessionize" -> (eventsSessionize _),
-    "events_attribution" -> (eventsAttribution _),
-    "llm_chunk" -> (llmChunk _),
-    "text_collocations" -> (textCollocations _),
-    "agg_zscore" -> (aggZscore _),
-    "etl_scd2" -> (etlScd2 _),
-    "join_scd2_pit" -> (joinScd2Pit _),
-    "q3_shipping" -> (q3Shipping _),
-    "q5_local_supplier" -> (q5LocalSupplier _),
-    "q10_returns" -> (q10Returns _),
-    "etl_dq_rules" -> (etlDqRules _))
-
-  val oracle: Map[String, String] = Map(
-    "scan_partitioned_roundtrip" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("scan_partitioned_roundtrip", scanPartitionedRoundtrip,
       """SELECT o_orderpriority, COUNT(*) AS n,
         |       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS tot
         |FROM orders WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |GROUP BY o_orderpriority""".stripMargin,
-    "scan_csv_roundtrip" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("scan_csv_roundtrip", scanCsvRoundtrip,
       """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
         |       MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
         |       MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "scan_jsonl_roundtrip" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("scan_jsonl_roundtrip", scanJsonlRoundtrip,
       """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
         |       MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
         |       MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "events_sessionize" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("events_sessionize", eventsSessionize,
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, value, event_id FROM events),
         |f AS (SELECT *, CASE WHEN us - LAG(us) OVER w > 1800000000 OR LAG(us) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
@@ -469,8 +454,8 @@ object Analytics {
         |SELECT user_id, CAST(sess AS BIGINT) AS session_seq, COUNT(*) AS n_events,
         |       MIN(us) AS start_us, MAX(us) AS end_us, MAX(us)-MIN(us) AS dur_us,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sess""".stripMargin,
-    "events_attribution" ->
+        |FROM s GROUP BY user_id, sess""".stripMargin),
+    QueryDef("events_attribution", eventsAttribution,
       """WITH e AS (SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type FROM events),
         |lt AS (SELECT *,
         |         LAST_VALUE(CASE WHEN event_type IN ('click','view') THEN us END IGNORE NULLS)
@@ -480,15 +465,15 @@ object Analytics {
         |SELECT event_id, user_id, us AS purchase_us,
         |       COALESCE(touch, -1) AS touch_us,
         |       CASE WHEN touch IS NULL THEN -1 ELSE us - touch END AS latency_us
-        |FROM lt WHERE event_type = 'purchase'""".stripMargin,
-    "llm_chunk" ->
+        |FROM lt WHERE event_type = 'purchase'""".stripMargin),
+    QueryDef("llm_chunk", llmChunk,
       """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |st AS (SELECT doc_id, toks, unnest(generate_series(0, greatest(len(toks)-1, 0), 32)) AS start FROM tok)
         |SELECT doc_id, CAST(start // 32 AS BIGINT) AS chunk_id,
         |       array_to_string(list_slice(toks, start+1, start+48), ' ') AS chunk_text,
         |       CAST(least(48, len(toks)-start) AS BIGINT) AS chunk_len
-        |FROM st""".stripMargin,
-    "text_collocations" ->
+        |FROM st""".stripMargin),
+    QueryDef("text_collocations", textCollocations,
       """WITH tok AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
         |pos AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks,1) AS p FROM tok),
         |bi AS (SELECT a.tok AS w1, b.tok AS w2 FROM pos a JOIN pos b ON a.doc_id=b.doc_id AND b.p=a.p+1),
@@ -499,8 +484,8 @@ object Analytics {
         |FROM cnt, tot, tu
         |JOIN uni u1 ON u1.tok = cnt.w1
         |JOIN uni u2 ON u2.tok = cnt.w2
-        |ORDER BY n DESC, w1, w2 LIMIT 20""".stripMargin,
-    "agg_zscore" ->
+        |ORDER BY n DESC, w1, w2 LIMIT 20""".stripMargin),
+    QueryDef("agg_zscore", aggZscore,
       """WITH m AS (SELECT l_suppkey, COUNT(l_extendedprice) AS n,
         |             CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sx,
         |             -- DECIMAL(19,4): >18 digits forces DuckDB's int128
@@ -515,8 +500,8 @@ object Analytics {
         |SELECT l.l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
         |       (l_extendedprice - mu) / sd AS z
         |FROM lineitem l JOIN st ON l.l_suppkey = st.l_suppkey
-        |WHERE ABS((l_extendedprice - mu) / sd) > 1.5""".stripMargin,
-    "etl_scd2" ->
+        |WHERE ABS((l_extendedprice - mu) / sd) > 1.5""".stripMargin),
+    QueryDef("etl_scd2", etlScd2,
       """WITH daily AS (SELECT l_partkey, CAST(l_shipdate AS DATE) AS d,
         |                      CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price
         |               FROM lineitem GROUP BY 1, 2)
@@ -524,46 +509,8 @@ object Analytics {
         |       CAST(COALESCE(LEAD(d) OVER w - INTERVAL 1 DAY, DATE '9999-12-31') AS DATE) AS valid_to,
         |       price,
         |       CAST(CASE WHEN LEAD(d) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-        |FROM daily WINDOW w AS (PARTITION BY l_partkey ORDER BY d)""".stripMargin,
-    "q10_returns" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
-        |    AS revenue
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q3_shipping" ->
-      """SELECT l_orderkey,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
-        |    AS revenue,
-        |  strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d') AS o_orderdate
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
-      """SELECT n_name, COUNT(*) AS n,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
-        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
-        |    AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name""".stripMargin,
-    "join_scd2_pit" ->
+        |FROM daily WINDOW w AS (PARTITION BY l_partkey ORDER BY d)""".stripMargin),
+    QueryDef("join_scd2_pit", joinScd2Pit,
       """WITH daily AS (SELECT l_partkey, CAST(l_shipdate AS DATE) AS d,
         |                      CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price
         |               FROM lineitem GROUP BY 1, 2),
@@ -579,12 +526,50 @@ object Analytics {
         |         AS sum_version_price
         |FROM f JOIN dim ON f.l_partkey = dim.d_partkey
         |  AND f.qd >= dim.valid_from AND f.qd <= dim.valid_to
-        |GROUP BY l_returnflag""".stripMargin,
-    "etl_dq_rules" ->
+        |GROUP BY l_returnflag""".stripMargin),
+    QueryDef("q3_shipping", q3Shipping,
+      """SELECT l_orderkey,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
+        |    AS revenue,
+        |  strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m-%d') AS o_orderdate
+        |FROM customer, orders, lineitem
+        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
+        |  AND l_orderkey = o_orderkey
+        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    QueryDef("q5_local_supplier", q5LocalSupplier,
+      """SELECT n_name, COUNT(*) AS n,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
+        |    AS revenue
+        |FROM customer, orders, lineitem, supplier, nation, region
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY n_name""".stripMargin),
+    QueryDef("q10_returns", q10Returns,
+      """SELECT c_custkey, c_name, n_name,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+        |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE)
+        |    AS revenue
+        |FROM customer, orders, lineitem, nation
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    QueryDef("etl_dq_rules", etlDqRules,
       """SELECT 'lineitem_nonpos_qty' AS rule_id, CAST(COUNT(*) FILTER (WHERE l_quantity <= 0) AS BIGINT) AS violations FROM lineitem
         |UNION ALL SELECT 'lineitem_discount_range', CAST(COUNT(*) FILTER (WHERE l_discount < 0 OR l_discount > 0.1) AS BIGINT) FROM lineitem
         |UNION ALL SELECT 'lineitem_tax_range', CAST(COUNT(*) FILTER (WHERE l_tax < 0 OR l_tax > 0.08) AS BIGINT) FROM lineitem
         |UNION ALL SELECT 'lineitem_null_partkey', CAST(COUNT(*) FILTER (WHERE l_partkey IS NULL) AS BIGINT) FROM lineitem
         |UNION ALL SELECT 'orders_nonpos_total', CAST(COUNT(*) FILTER (WHERE o_totalprice <= 0) AS BIGINT) FROM orders
-        |UNION ALL SELECT 'orders_null_custkey', CAST(COUNT(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT) FROM orders""".stripMargin)
+        |UNION ALL SELECT 'orders_null_custkey', CAST(COUNT(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT) FROM orders""".stripMargin))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -262,12 +263,6 @@ object Analytics10 {
         col("o_totalprice"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_gopher_rules" -> (textGopherRules _),
-    "graph_label_prop" -> (graphLabelProp _),
-    "llm_ccnet_buckets" -> (llmCcnetBuckets _),
-    "scan_zorder_scaled" -> (scanZorder _))
-
   /** The trade graph + 4-round LPA recursion as a reusable CTE list
     * (ends with `lp(iter, nk, label)`); `graph_label_prop` grades its
     * fixpoint directly and `graph_modularity` ([[Analytics24]]) scores
@@ -301,8 +296,8 @@ object Analytics10 {
       |              GROUP BY 1, 2, 3) c) x
       |  WHERE cnt = mx GROUP BY iter, src)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "text_gopher_rules" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("text_gopher_rules", textGopherRules,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ts
         |           FROM documents),
         |f AS (SELECT doc_id, len(ts) AS n_words,
@@ -324,12 +319,12 @@ object Analytics10 {
         |    * CAST(mwl >= 3.0 AND mwl <= 10.0 AS INTEGER)
         |    * CAST(alpha_frac > 0.8 AS INTEGER)
         |    * CAST(n_stop >= 2 AS INTEGER) AS pass_all
-        |FROM f""".stripMargin,
-    "graph_label_prop" ->
+        |FROM f""".stripMargin),
+    QueryDef("graph_label_prop", graphLabelProp,
       s"""WITH RECURSIVE $lpaOracleCtes
         |SELECT CAST(nk AS BIGINT) AS nk, CAST(label AS BIGINT) AS label
-        |FROM lp WHERE iter = 4""".stripMargin,
-    "llm_ccnet_buckets" ->
+        |FROM lp WHERE iter = 4""".stripMargin),
+    QueryDef("llm_ccnet_buckets", llmCcnetBuckets,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |             FROM documents),
         |uni AS (SELECT t, COUNT(*) AS n FROM tok GROUP BY 1),
@@ -343,12 +338,12 @@ object Analytics10 {
         |                      ORDER BY s.score, d.doc_id)
         |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
         |  END AS bucket
-        |FROM documents d JOIN score s ON d.doc_id = s.doc_id""".stripMargin,
-    "scan_zorder_scaled" ->
+        |FROM documents d JOIN score s ON d.doc_id = s.doc_id""".stripMargin),
+    QueryDef("scan_zorder_scaled", scanZorder,
       """SELECT o_orderkey, o_custkey,
         |  strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_totalprice
         |FROM orders
         |WHERE o_custkey >= 100 AND o_custkey < 200
         |  AND o_orderdate >= TIMESTAMP '1997-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-07-01'""".stripMargin)
+        |  AND o_orderdate < TIMESTAMP '1997-07-01'""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -560,19 +561,6 @@ object Analytics11 {
        |       THEN rev - trend - se.seasonal END AS resid
        |FROM tr JOIN se ON tr.dow = se.dow""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_seasonal_decompose" -> (winSeasonalDecompose _),
-    "win_garch" -> (winGarch _),
-    "agg_hurst" -> (aggHurst _),
-    "agg_poisson_bootstrap" -> (aggPoissonBootstrap _),
-    "graph_closeness" -> (graphCloseness _),
-    "agg_kaplan_meier" -> (aggKaplanMeier _),
-    "llm_lang_temperature" -> (llmLangTemperature _),
-    "text_ttr" -> (textTtr _),
-    "agg_heaps_law" -> (aggHeapsLaw _),
-    "graph_hits" -> (graphHits _),
-    "graph_kcore" -> (graphKcore _))
-
   /** Shared star-join + threshold + symmetrize text for the nation
     * graph oracles (identical to the graph_triangles family). */
   private[queries] val symCte: String =
@@ -593,15 +581,15 @@ object Analytics11 {
       |sym AS (SELECT a AS src, b AS dst FROM edges
       |        UNION ALL SELECT b, a FROM edges)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "win_seasonal_decompose" ->
-      ("""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_seasonal_decompose", winSeasonalDecompose,
+      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
          |                 dayofweek(CAST(o_orderdate AS DATE)) AS dow,
          |                 SUM(CAST(o_totalprice AS DECIMAL(18, 2))) AS rev_d
          |               FROM orders GROUP BY 1, 2),
          |""".stripMargin +
         decomposeCensus("daily", "strftime(d, '%Y-%m-%d')")),
-    "win_garch" ->
+    QueryDef("win_garch", winGarch,
       """WITH RECURSIVE
         |v AS (SELECT user_id,
         |        row_number() OVER (PARTITION BY user_id
@@ -616,9 +604,9 @@ object Analytics11 {
         |  FROM f JOIN v ON v.user_id = f.user_id AND v.i = f.i + 1)
         |SELECT f.user_id, CAST(n.n AS BIGINT) AS n_events,
         |       f.s2 AS garch_var, SQRT(f.s2) AS garch_vol
-        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin,
-    "agg_hurst" -> ("WITH " + hurstCensus("orders", "//")),
-    "agg_poisson_bootstrap" ->
+        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin),
+    QueryDef("agg_hurst", aggHurst, "WITH " + hurstCensus("orders", "//")),
+    QueryDef("agg_poisson_bootstrap", aggPoissonBootstrap,
       """WITH rep AS (
         |  SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) AS price,
         |    unnest(range(0, 4)) AS g
@@ -652,8 +640,8 @@ object Analytics11 {
         |  (SELECT m FROM ranked WHERE rn = 2) AS ci_lo,
         |  (SELECT m FROM ranked WHERE rn = 31) AS ci_hi,
         |  CAST(32 AS BIGINT) AS n_replicates
-        |FROM est""".stripMargin,
-    "graph_closeness" ->
+        |FROM est""".stripMargin),
+    QueryDef("graph_closeness", graphCloseness,
       s"""WITH RECURSIVE
         |$symCte,
         |bfs(src, v, d) AS (
@@ -674,8 +662,8 @@ object Analytics11 {
         |  CAST(c3 AS BIGINT) AS c3, CAST(c4 AS BIGINT) AS c4,
         |  c1 + c2 * 0.5 + CAST(c3 AS DOUBLE) / 3.0 + c4 * 0.25
         |    AS harmonic
-        |FROM c""".stripMargin,
-    "agg_kaplan_meier" ->
+        |FROM c""".stripMargin),
+    QueryDef("agg_kaplan_meier", aggKaplanMeier,
       """WITH u AS (SELECT user_id, MIN(ts) AS f FROM events GROUP BY 1),
         |p AS (SELECT user_id, MIN(ts) AS fp FROM events
         |      WHERE event_type = 'purchase' GROUP BY 1),
@@ -698,8 +686,8 @@ object Analytics11 {
         |  CAST(d_events AS BIGINT) AS d_events,
         |  EXP(SUM(LN(1.0 - CAST(d_events AS DOUBLE) / n_risk))
         |      OVER (ORDER BY dur)) AS s
-        |FROM r WHERE d_events > 0""".stripMargin,
-    "llm_lang_temperature" ->
+        |FROM r WHERE d_events > 0""".stripMargin),
+    QueryDef("llm_lang_temperature", llmLangTemperature,
       """WITH pl AS (SELECT lang, SUM(len(string_split(text, ' ')))
         |              AS n_tokens
         |            FROM documents GROUP BY 1),
@@ -711,8 +699,8 @@ object Analytics11 {
         |sq AS (SELECT SUM(qraw) AS sq FROM s)
         |SELECT lang, n_tokens, p, qraw / sq AS q,
         |  (qraw / sq) / p AS boost
-        |FROM s CROSS JOIN sq""".stripMargin,
-    "text_ttr" ->
+        |FROM s CROSS JOIN sq""".stripMargin),
+    QueryDef("text_ttr", textTtr,
       """WITH tok AS (SELECT doc_id,
         |               unnest(string_split(text, ' ')) AS tok
         |             FROM documents),
@@ -725,8 +713,8 @@ object Analytics11 {
         |  CAST(n_hapax AS BIGINT) AS n_hapax,
         |  CAST(n_types AS DOUBLE) / n_tokens AS ttr,
         |  CAST(n_hapax AS DOUBLE) / n_types AS hapax_frac
-        |FROM a""".stripMargin,
-    "agg_heaps_law" ->
+        |FROM a""".stripMargin),
+    QueryDef("agg_heaps_law", aggHeapsLaw,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ts
         |           FROM documents),
         |tri AS (SELECT doc_id,
@@ -750,8 +738,8 @@ object Analytics11 {
         |         LN(CAST(nn AS DOUBLE)))) AS k,
         |       CAST(MAX(nn) AS BIGINT) AS n_total,
         |       CAST(MAX(vv) AS BIGINT) AS v_total
-        |FROM pts""".stripMargin,
-    "graph_hits" ->
+        |FROM pts""".stripMargin),
+    QueryDef("graph_hits", graphHits,
       """WITH e AS (SELECT DISTINCT l_suppkey AS s, l_partkey AS p
         |           FROM lineitem),
         |a1 AS (SELECT p, COUNT(*) AS a FROM e GROUP BY 1),
@@ -761,8 +749,8 @@ object Analytics11 {
         |       GROUP BY 1)
         |SELECT CAST(p AS BIGINT) AS p_partkey,
         |  CAST(a AS BIGINT) AS authority
-        |FROM a2 ORDER BY a DESC, p LIMIT 15""".stripMargin,
-    "graph_kcore" ->
+        |FROM a2 ORDER BY a DESC, p LIMIT 15""".stripMargin),
+    QueryDef("graph_kcore", graphKcore,
       s"""WITH RECURSIVE
         |$symCte,
         |kc(iter, ns) AS (
@@ -780,5 +768,5 @@ object Analytics11 {
         |FROM sym e, (SELECT ns FROM kc WHERE iter = 8) f
         |WHERE list_contains(f.ns, e.src)
         |  AND list_contains(f.ns, e.dst)
-        |GROUP BY 1""".stripMargin)
+        |GROUP BY 1""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -616,53 +617,42 @@ object Analytics12 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_rolling_beta" -> (winRollingBeta _),
-    "agg_vol_estimators" -> (aggVolEstimators _),
-    "agg_cointegration" -> (aggCointegration _),
-    "agg_pacf" -> (aggPacf _),
-    "agg_ljung_box" -> (aggLjungBox _),
-    "llm_bpe_train" -> (llmBpeTrain _),
-    "llm_dp_histogram" -> (llmDpHistogram _),
-    "graph_adamic_adar" -> (graphAdamicAdar _),
-    "sql_pipe_syntax" -> (sqlPipeSyntax _),
-    "scan_metadata_cols" -> (scanMetadataCols _))
-
-  val oracle: Map[String, String] = Map(
-    "win_rolling_beta" ->
-      (s"WITH monthly AS (${monthlySql("orders")}),\n" +
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_rolling_beta", winRollingBeta,
+      s"WITH monthly AS (${monthlySql("orders")}),\n" +
         rollingBetaRestSql("monthly").replaceFirst("^WITH ", "")),
-    "agg_vol_estimators" -> volEstimatorsSql("events"),
-    "agg_cointegration" ->
-      (s"WITH daily AS (${cointDailySql("orders")}),\n" +
+    QueryDef("agg_vol_estimators", aggVolEstimators,
+      volEstimatorsSql("events")),
+    QueryDef("agg_cointegration", aggCointegration,
+      s"WITH daily AS (${cointDailySql("orders")}),\n" +
         cointRestSql("daily").replaceFirst("^WITH ", "")),
-    "agg_pacf" ->
-      (s"WITH daily AS (${acfDailySql("events")}),\n" +
+    QueryDef("agg_pacf", aggPacf,
+      s"WITH daily AS (${acfDailySql("events")}),\n" +
         pacfSql("daily", "a.d - CAST(l.lag AS INTEGER)")
           .replaceFirst("^WITH ", "")),
-    "agg_ljung_box" ->
-      (s"WITH daily AS (${acfDailySql("events")}),\n" +
+    QueryDef("agg_ljung_box", aggLjungBox,
+      s"WITH daily AS (${acfDailySql("events")}),\n" +
         ljungBoxSql("daily", "a.d - CAST(l.lag AS INTEGER)")
           .replaceFirst("^WITH ", "")),
-    "llm_bpe_train" -> bpeOracleSql,
-    "llm_dp_histogram" -> dpHistogramSql("documents"),
+    QueryDef("llm_bpe_train", llmBpeTrain, bpeOracleSql),
+    QueryDef("llm_dp_histogram", llmDpHistogram, dpHistogramSql("documents")),
     // The edges subquery keeps its own WITH clause nested inside the
     // outer CTE body (both engines allow a full statement there).
-    "graph_adamic_adar" ->
-      (s"WITH edges AS MATERIALIZED (\n${aaEdgesSql("lineitem", "orders",
+    QueryDef("graph_adamic_adar", graphAdamicAdar,
+      s"WITH edges AS MATERIALIZED (\n${aaEdgesSql("lineitem", "orders",
           "customer", "supplier", "MATERIALIZED ")}\n),\n" +
         aaScoreSql("edges", "nation", "MATERIALIZED ")
           .replaceFirst("^WITH ", "")),
-    "sql_pipe_syntax" ->
+    QueryDef("sql_pipe_syntax", sqlPipeSyntax,
       """SELECT o_orderpriority AS priority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |GROUP BY o_orderpriority""".stripMargin,
-    "scan_metadata_cols" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("scan_metadata_cols", scanMetadataCols,
       """SELECT CAST(o_orderkey % 4 AS INT) AS bkt,
         |  COUNT(*) AS n_rows, CAST(1 AS BIGINT) AS n_files,
         |  MIN(o_orderkey) AS min_key,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders GROUP BY 1""".stripMargin)
+        |FROM orders GROUP BY 1""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -237,20 +238,13 @@ object Analytics13 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_frac_diff" -> (winFracDiff _),
-    "agg_hill_tail" -> (aggHillTail _),
-    "agg_kendall_tau" -> (aggKendallTau _),
-    "llm_bpe_apply" -> (llmBpeApply _),
-    "agg_mutual_info" -> (aggMutualInfo _))
-
-  val oracle: Map[String, String] = Map(
-    "win_frac_diff" ->
-      (s"WITH daily AS (${dailyDollarsSql("orders")}),\n" +
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_frac_diff", winFracDiff,
+      s"WITH daily AS (${dailyDollarsSql("orders")}),\n" +
         fracDiffSql("daily").replaceFirst("^WITH ", "")),
-    "agg_hill_tail" -> hillSql("orders"),
-    "agg_kendall_tau" ->
-      (s"""WITH daily AS (
+    QueryDef("agg_hill_tail", aggHillTail, hillSql("orders")),
+    QueryDef("agg_kendall_tau", aggKendallTau,
+      s"""WITH daily AS (
           |  SELECT CAST(o_orderdate AS DATE) AS d, o_orderpriority AS p,
           |         CAST(floor(sum(CAST(o_totalprice AS DECIMAL(18,2))))
           |              AS DECIMAL(19,0)) AS rev
@@ -259,6 +253,6 @@ object Analytics13 {
           |joined AS (${tauJoinedSql("daily")}),
           |""".stripMargin +
         tauRestSql("joined").replaceFirst("^WITH ", "")),
-    "llm_bpe_apply" -> Analytics12.bpeApplyOracleSql,
-    "agg_mutual_info" -> miSql("documents"))
+    QueryDef("llm_bpe_apply", llmBpeApply, Analytics12.bpeApplyOracleSql),
+    QueryDef("agg_mutual_info", aggMutualInfo, miSql("documents")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-10 session-4 batch C: survival hazard, risk curves,
@@ -265,15 +266,8 @@ object Analytics14 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_nelson_aalen" -> (aggNelsonAalen _),
-    "win_ulcer_index" -> (winUlcerIndex _),
-    "text_burrows_delta" -> (textBurrowsDelta _),
-    "llm_rouge_decontam" -> (llmRougeDecontam _),
-    "sql_named_params" -> (sqlNamedParams _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_nelson_aalen" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_nelson_aalen", aggNelsonAalen,
       """WITH u AS (SELECT user_id, MIN(ts) AS f FROM events GROUP BY 1),
         |p AS (SELECT user_id, MIN(ts) AS fp FROM events
         |      WHERE event_type = 'purchase' GROUP BY 1),
@@ -297,18 +291,18 @@ object Analytics14 {
         |  SUM(CAST(d_events AS DOUBLE) / n_risk) OVER (ORDER BY dur) AS h_cum,
         |  SUM(CAST(d_events AS DOUBLE) / (n_risk * n_risk))
         |    OVER (ORDER BY dur) AS h_var
-        |FROM r WHERE d_events > 0""".stripMargin,
-    "win_ulcer_index" -> ulcerSql("events"),
-    "text_burrows_delta" -> burrowsSql(
+        |FROM r WHERE d_events > 0""".stripMargin),
+    QueryDef("win_ulcer_index", winUlcerIndex, ulcerSql("events")),
+    QueryDef("text_burrows_delta", textBurrowsDelta, burrowsSql(
       """SELECT source, w FROM (
         |  SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents) t WHERE regexp_matches(w, '^[a-z]+$')""".stripMargin),
-    "llm_rouge_decontam" -> rougeOracleSql,
-    "sql_named_params" ->
+        |  FROM documents) t WHERE regexp_matches(w, '^[a-z]+$')""".stripMargin)),
+    QueryDef("llm_rouge_decontam", llmRougeDecontam, rougeOracleSql),
+    QueryDef("sql_named_params", sqlNamedParams,
       """SELECT o_orderpriority AS priority, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders
         |WHERE o_totalprice >= 50000
         |  AND o_orderdate < CAST('1999-01-01' AS TIMESTAMP)
-        |GROUP BY o_orderpriority""".stripMargin)
+        |GROUP BY o_orderpriority""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -308,31 +309,24 @@ object Analytics15 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_pca_power" -> (aggPcaPower _),
-    "graph_random_walk" -> (graphRandomWalk _),
-    "win_donchian" -> (winDonchian _),
-    "text_rake" -> (textRake _),
-    "etl_cdc_apply" -> (etlCdcApply _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_pca_power" -> pcaOracleSql(
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_pca_power", aggPcaPower, pcaOracleSql(
       """SELECT vec_id, g AS i, CAST(embedding[g] AS DOUBLE) AS x
-        |FROM embeddings, UNNEST(generate_series(1, 16)) t(g)""".stripMargin),
-    "graph_random_walk" ->
-      (s"""WITH edges AS (${walkEdgesSql("events",
+        |FROM embeddings, UNNEST(generate_series(1, 16)) t(g)""".stripMargin)),
+    QueryDef("graph_random_walk", graphRandomWalk,
+      s"""WITH edges AS (${walkEdgesSql("events",
             "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)")
           .replaceFirst("^SELECT", "SELECT")}),
           |""".stripMargin +
         walkSql("edges").replaceFirst("^WITH ", "")
           .replace("CAST(walk_id AS STRING)", "CAST(walk_id AS VARCHAR)")),
-    "win_donchian" -> donchianSql("events"),
-    "text_rake" -> rakeSql(
+    QueryDef("win_donchian", winDonchian, donchianSql("events")),
+    QueryDef("text_rake", textRake, rakeSql(
       """SELECT doc_id, g AS pos, d.ts[g] AS w
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
         |      FROM documents) d,
         |  UNNEST(generate_series(1, len(d.ts))) AS t(g)
         |WHERE regexp_matches(d.ts[g], '^[a-z]+$')""".stripMargin,
-      "string_agg(isl.w, ' ' ORDER BY isl.pos)"),
-    "etl_cdc_apply" -> cdcSql("orders"))
+      "string_agg(isl.w, ' ' ORDER BY isl.pos)")),
+    QueryDef("etl_cdc_apply", etlCdcApply, cdcSql("orders")))
 }

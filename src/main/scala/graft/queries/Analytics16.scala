@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -186,22 +187,16 @@ object Analytics16 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_ichimoku" -> (winIchimoku _),
-    "agg_var_es" -> (aggVarEs _),
-    "llm_cooccurrence" -> (llmCooccurrence _),
-    "agg_binseg_split" -> (aggBinsegSplit _))
-
-  val oracle: Map[String, String] = Map(
-    "win_ichimoku" -> ichimokuSql("events"),
-    "agg_var_es" -> varEsSql("events"),
-    "llm_cooccurrence" -> cooccurSql(
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_ichimoku", winIchimoku, ichimokuSql("events")),
+    QueryDef("agg_var_es", aggVarEs, varEsSql("events")),
+    QueryDef("llm_cooccurrence", llmCooccurrence, cooccurSql(
       """SELECT doc_id, g AS pos, d.ts[g] AS w
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
         |      FROM documents) d,
         |  UNNEST(generate_series(1, len(d.ts))) AS t(g)
-        |WHERE regexp_matches(d.ts[g], '^[a-z]+$')""".stripMargin),
-    "agg_binseg_split" ->
-      (s"WITH daily AS (${binsegDailySql("orders")}),\n" +
+        |WHERE regexp_matches(d.ts[g], '^[a-z]+$')""".stripMargin)),
+    QueryDef("agg_binseg_split", aggBinsegSplit,
+      s"WITH daily AS (${binsegDailySql("orders")}),\n" +
         binsegSql("daily").replaceFirst("^WITH ", "")))
 }

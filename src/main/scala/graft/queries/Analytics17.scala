@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -139,19 +140,14 @@ object Analytics17 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_mann_kendall" -> (aggMannKendall _),
-    "etl_freshness_sla" -> (etlFreshnessSla _),
-    "llm_hard_negatives" -> (llmHardNegatives _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_mann_kendall" ->
-      (s"WITH daily AS (${mkDailySql("orders")}),\n" +
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_mann_kendall", aggMannKendall,
+      s"WITH daily AS (${mkDailySql("orders")}),\n" +
         mkRestSql("daily").replaceFirst("^WITH ", "")),
-    "etl_freshness_sla" -> freshnessSql("events",
-      "date_diff('second', s.max_ts, g.gmax) // 3600"),
-    "llm_hard_negatives" ->
-      (s"WITH documents2 AS (SELECT * FROM documents),\n" +
+    QueryDef("etl_freshness_sla", etlFreshnessSla, freshnessSql("events",
+      "date_diff('second', s.max_ts, g.gmax) // 3600")),
+    QueryDef("llm_hard_negatives", llmHardNegatives,
+      s"WITH documents2 AS (SELECT * FROM documents),\n" +
         hardNegSql(Analytics14.rougeCtes(
             Analytics14.rougeDuckUni, Analytics14.rougeDuckBi))
           .replaceFirst("^WITH ", "")))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-10 session-4 batch G: pretraining masking, market
@@ -139,17 +140,12 @@ object Analytics18 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_span_corruption" -> (llmSpanCorruption _),
-    "agg_hhi" -> (aggHhi _),
-    "win_pivot_points" -> (winPivotPoints _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_span_corruption" -> spanCorruptionSql(
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_span_corruption", llmSpanCorruption, spanCorruptionSql(
       """SELECT doc_id, g AS pos
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
         |      FROM documents) d,
-        |  UNNEST(generate_series(1, len(d.ts))) AS t(g)""".stripMargin),
-    "agg_hhi" -> hhiSql("orders"),
-    "win_pivot_points" -> pivotSql("events"))
+        |  UNNEST(generate_series(1, len(d.ts))) AS t(g)""".stripMargin)),
+    QueryDef("agg_hhi", aggHhi, hhiSql("orders")),
+    QueryDef("win_pivot_points", winPivotPoints, pivotSql("events")))
 }

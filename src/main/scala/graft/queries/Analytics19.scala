@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-10 session-4 batch H: corpus novelty, effect sizes, and a
@@ -121,21 +122,16 @@ object Analytics19 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_novelty" -> (textNovelty _),
-    "agg_effect_size" -> (aggEffectSize _),
-    "sql_execute_immediate" -> (sqlExecuteImmediate _))
-
-  val oracle: Map[String, String] = Map(
-    "text_novelty" -> noveltySql(
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("text_novelty", textNovelty, noveltySql(
       """SELECT doc_id, d.ts[g] || ' ' || d.ts[g + 1] || ' ' || d.ts[g + 2] AS tg
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
         |      FROM documents) d,
-        |  UNNEST(generate_series(1, len(d.ts) - 2)) AS t(g)""".stripMargin),
-    "agg_effect_size" -> effectSizeSql("events"),
-    "sql_execute_immediate" ->
+        |  UNNEST(generate_series(1, len(d.ts) - 2)) AS t(g)""".stripMargin)),
+    QueryDef("agg_effect_size", aggEffectSize, effectSizeSql("events")),
+    QueryDef("sql_execute_immediate", sqlExecuteImmediate,
       """SELECT o_orderstatus AS status, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders WHERE o_totalprice >= 100000
-        |GROUP BY o_orderstatus""".stripMargin)
+        |GROUP BY o_orderstatus""".stripMargin))
 }

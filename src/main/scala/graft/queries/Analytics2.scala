@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-5 surface, part 2: gaps-and-islands streaks, robust (MAD)
@@ -479,41 +480,17 @@ object Analytics2 {
 
   // ---------------------------------------------------------------- maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_surrogate_key" -> (etlSurrogateKey _),
-    "agg_hll_rollup" -> (aggHllRollup _),
-    "llm_winsorize" -> (llmWinsorize _),
-    "events_path_top3" -> (eventsPathTop3 _),
-    "agg_mode_det" -> (aggModeDet _),
-    "llm_logprob" -> (llmLogprob _),
-    "win_ratio_to_report" -> (winRatioToReport _),
-    "events_dau_wau" -> (eventsDauWau _),
-    "agg_skew_kurt" -> (aggSkewKurt _),
-    "events_rfm" -> (eventsRfm _),
-    "agg_entropy" -> (aggEntropy _),
-    "agg_gini" -> (aggGini _),
-    "events_cohort_ltv" -> (eventsCohortLtv _),
-    "win_topk_heap" -> (winTopkHeap _),
-    "agg_regression" -> (aggRegression _),
-    "events_transitions" -> (eventsTransitions _),
-    "agg_grouping_id" -> (aggGroupingId _),
-    "events_streaks" -> (eventsStreaks _),
-    "agg_mad_outliers" -> (aggMadOutliers _),
-    "llm_dedup_priority" -> (llmDedupPriority _),
-    "etl_snapshot_diff" -> (etlSnapshotDiff _),
-    "etl_ohlc_resample" -> (etlOhlcResample _))
-
-  val oracle: Map[String, String] = Map(
-    "etl_surrogate_key" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("etl_surrogate_key", etlSurrogateKey,
       """SELECT n_name, r_name,
         |  CAST(DENSE_RANK() OVER (ORDER BY r_name, n_name) AS BIGINT) AS dim_key
-        |FROM nation JOIN region ON n_regionkey = r_regionkey""".stripMargin,
-    "agg_hll_rollup" ->
+        |FROM nation JOIN region ON n_regionkey = r_regionkey""".stripMargin),
+    QueryDef("agg_hll_rollup", aggHllRollup,
       """SELECT COALESCE(CAST(CAST(ts AS DATE) AS VARCHAR), 'ALL') AS day,
         |  COUNT(DISTINCT user_id) AS exact_users,
         |  TRUE AS hll_ok
-        |FROM events GROUP BY ROLLUP(CAST(ts AS DATE))""".stripMargin,
-    "llm_winsorize" ->
+        |FROM events GROUP BY ROLLUP(CAST(ts AS DATE))""".stripMargin),
+    QueryDef("llm_winsorize", llmWinsorize,
       """WITH b AS (SELECT event_type,
         |             ROUND(quantile_cont(value, 0.01), 4) AS lo,
         |             ROUND(quantile_cont(value, 0.99), 4) AS hi
@@ -525,43 +502,43 @@ object Analytics2 {
         |       CAST(SUM(CAST(least(greatest(e.value, b.lo), b.hi)
         |         AS DECIMAL(18,6))) AS DOUBLE) AS winsorized_sum
         |FROM events e JOIN b ON e.event_type = b.event_type
-        |GROUP BY e.event_type""".stripMargin,
-    "events_path_top3" ->
+        |GROUP BY e.event_type""".stripMargin),
+    QueryDef("events_path_top3", eventsPathTop3,
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id, event_type FROM events),
         |p AS (SELECT event_type AS e1,
         |        LEAD(event_type, 1) OVER w AS e2, LEAD(event_type, 2) OVER w AS e3
         |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
         |SELECT e1, e2, e3, COUNT(*) AS n
         |FROM p WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-        |GROUP BY 1,2,3 ORDER BY n DESC, e1, e2, e3 LIMIT 20""".stripMargin,
-    "agg_mode_det" ->
+        |GROUP BY 1,2,3 ORDER BY n DESC, e1, e2, e3 LIMIT 20""".stripMargin),
+    QueryDef("agg_mode_det", aggModeDet,
       """WITH cnt AS (SELECT l_returnflag, l_quantity, COUNT(*) AS n FROM lineitem GROUP BY 1,2),
         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
         |        ORDER BY n DESC, l_quantity) AS rk FROM cnt)
         |SELECT l_returnflag, l_quantity AS mode_qty, n AS mode_count
-        |FROM r WHERE rk = 1""".stripMargin,
-    "llm_logprob" ->
+        |FROM r WHERE rk = 1""".stripMargin),
+    QueryDef("llm_logprob", llmLogprob,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text,' ')) AS t FROM documents),
         |uni AS (SELECT t, COUNT(*) AS n FROM tok GROUP BY 1),
         |tot AS (SELECT SUM(n) AS nt FROM uni)
         |SELECT doc_id, COUNT(*) AS n_toks,
         |       ROUND(-SUM(LN(uni.n / tot.nt)) / COUNT(*), 4) AS avg_neg_logprob
         |FROM tok JOIN uni ON tok.t = uni.t CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-    "win_ratio_to_report" ->
+        |GROUP BY doc_id""".stripMargin),
+    QueryDef("win_ratio_to_report", winRatioToReport,
       """SELECT o_orderkey, o_custkey, o_totalprice,
         |       o_totalprice / CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
         |         OVER (PARTITION BY o_custkey) AS DOUBLE) AS share
-        |FROM orders""".stripMargin,
-    "events_dau_wau" ->
+        |FROM orders""".stripMargin),
+    QueryDef("events_dau_wau", eventsDauWau,
       """WITH d AS (SELECT CAST(ts AS DATE) AS day, COUNT(DISTINCT user_id) AS dau
         |           FROM events GROUP BY 1),
         |w AS (SELECT CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS wk,
         |        COUNT(DISTINCT user_id) AS wau
         |      FROM events GROUP BY 1)
         |SELECT d.day, d.dau, w.wau, d.dau / CAST(w.wau AS DOUBLE) AS stickiness
-        |FROM d JOIN w ON CAST(date_trunc('week', d.day) AS DATE) = w.wk""".stripMargin,
-    "agg_skew_kurt" ->
+        |FROM d JOIN w ON CAST(date_trunc('week', d.day) AS DATE) = w.wk""".stripMargin),
+    QueryDef("agg_skew_kurt", aggSkewKurt,
       """WITH s AS (SELECT l_returnflag, COUNT(*) AS n,
         |             SUM(l_quantity) AS s1, SUM(l_quantity*l_quantity) AS s2,
         |             SUM(l_quantity*l_quantity*l_quantity) AS s3,
@@ -574,8 +551,8 @@ object Analytics2 {
         |  CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
         |    (s4/n - 4*(s1/n)*(s3/n) + 6*(s1/n)*(s1/n)*(s2/n) - 3*(s1/n)*(s1/n)*(s1/n)*(s1/n))
         |      / POWER(s2/n - (s1/n)*(s1/n), 2) - 3 END AS ex_kurt
-        |FROM s""".stripMargin,
-    "events_rfm" ->
+        |FROM s""".stripMargin),
+    QueryDef("events_rfm", eventsRfm,
       """WITH p AS (SELECT user_id, MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |             COUNT(*) AS freq,
         |             CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS monetary
@@ -585,15 +562,26 @@ object Analytics2 {
         |  CAST(NTILE(5) OVER (ORDER BY freq DESC, user_id) AS BIGINT) AS f_quintile,
         |  CAST(NTILE(5) OVER (ORDER BY monetary DESC, user_id) AS BIGINT) AS m_quintile,
         |  freq, monetary
-        |FROM p""".stripMargin,
-    "agg_entropy" ->
+        |FROM p""".stripMargin),
+    QueryDef("agg_entropy", aggEntropy,
       """WITH cnt AS (SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY 1,2),
         |tot AS (SELECT user_id, SUM(n) AS tn FROM cnt GROUP BY 1)
         |SELECT c.user_id, CAST(t.tn AS BIGINT) AS n_events,
         |       ROUND(-SUM((c.n / t.tn) * LN(c.n / t.tn)), 4) AS entropy
         |FROM cnt c JOIN tot t ON c.user_id = t.user_id
-        |GROUP BY c.user_id, t.tn""".stripMargin,
-    "events_cohort_ltv" ->
+        |GROUP BY c.user_id, t.tn""".stripMargin),
+    QueryDef("agg_gini", aggGini,
+      """WITH x AS (SELECT c_mktsegment, o_orderkey,
+        |             CAST(o_totalprice AS DECIMAL(18,2)) AS x,
+        |             ROW_NUMBER() OVER (PARTITION BY c_mktsegment
+        |               ORDER BY o_totalprice, o_orderkey) AS rk
+        |           FROM orders JOIN customer ON o_custkey = c_custkey)
+        |SELECT c_mktsegment, COUNT(*) AS n,
+        |  (2 * CAST(SUM(x * rk) AS DOUBLE)
+        |   - (COUNT(*) + 1) * CAST(SUM(x) AS DOUBLE))
+        |  / (COUNT(*) * CAST(SUM(x) AS DOUBLE)) AS gini
+        |FROM x GROUP BY c_mktsegment""".stripMargin),
+    QueryDef("events_cohort_ltv", eventsCohortLtv,
       """WITH e AS (SELECT user_id, value,
         |             (CAST(ts AS DATE) - DATE '1970-01-01') // 7 AS wk
         |           FROM events),
@@ -608,33 +596,22 @@ object Analytics2 {
         |  age_weeks, n_users,
         |  CAST(ROUND(SUM(rev) OVER (PARTITION BY c0 ORDER BY age_weeks
         |    ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS cum_value
-        |FROM pa""".stripMargin,
-    "agg_gini" ->
-      """WITH x AS (SELECT c_mktsegment, o_orderkey,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS x,
-        |             ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-        |               ORDER BY o_totalprice, o_orderkey) AS rk
-        |           FROM orders JOIN customer ON o_custkey = c_custkey)
-        |SELECT c_mktsegment, COUNT(*) AS n,
-        |  (2 * CAST(SUM(x * rk) AS DOUBLE)
-        |   - (COUNT(*) + 1) * CAST(SUM(x) AS DOUBLE))
-        |  / (COUNT(*) * CAST(SUM(x) AS DOUBLE)) AS gini
-        |FROM x GROUP BY c_mktsegment""".stripMargin,
-    "win_topk_heap" ->
+        |FROM pa""".stripMargin),
+    QueryDef("win_topk_heap", winTopkHeap,
       """SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice
         |FROM (SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
         |        ROW_NUMBER() OVER (PARTITION BY l_suppkey
         |          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
         |      FROM lineitem)
-        |WHERE rn <= 5""".stripMargin,
-    "agg_regression" ->
+        |WHERE rn <= 5""".stripMargin),
+    QueryDef("agg_regression", aggRegression,
       """SELECT l_returnflag,
         |  ROUND(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
         |  ROUND(regr_intercept(l_extendedprice, l_quantity), 4) AS icept,
         |  ROUND(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
         |  CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "events_transitions" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("events_transitions", eventsTransitions,
       """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id, event_type FROM events),
         |p AS (SELECT event_type AS to_type,
         |        LAG(event_type) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_type
@@ -642,21 +619,21 @@ object Analytics2 {
         |cnt AS (SELECT from_type, to_type, COUNT(*) AS n FROM p WHERE from_type IS NOT NULL GROUP BY 1,2),
         |tot AS (SELECT from_type, SUM(n) AS tn FROM cnt GROUP BY 1)
         |SELECT c.from_type, c.to_type, c.n, c.n / t.tn AS p
-        |FROM cnt c JOIN tot t ON c.from_type = t.from_type""".stripMargin,
-    "agg_grouping_id" ->
+        |FROM cnt c JOIN tot t ON c.from_type = t.from_type""".stripMargin),
+    QueryDef("agg_grouping_id", aggGroupingId,
       """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
         |  COALESCE(l_linestatus, 'ALL') AS ls,
         |  CAST(GROUPING(l_returnflag)*2 + GROUPING(l_linestatus) AS BIGINT) AS gid,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
-    "events_streaks" ->
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
+    QueryDef("events_streaks", eventsStreaks,
       """WITH d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |r AS (SELECT user_id, day,
         |        CAST(day - INTERVAL (ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day)) DAY AS DATE) AS grp
         |      FROM d)
         |SELECT user_id, MIN(day) AS streak_start, MAX(day) AS streak_end, COUNT(*) AS streak_days
-        |FROM r GROUP BY user_id, grp""".stripMargin,
-    "agg_mad_outliers" ->
+        |FROM r GROUP BY user_id, grp""".stripMargin),
+    QueryDef("agg_mad_outliers", aggMadOutliers,
       """WITH med AS (SELECT event_type, median(value) AS med FROM events GROUP BY 1),
         |dev AS (SELECT e.event_type, e.event_id, e.value, ABS(e.value - m.med) AS adev, m.med
         |        FROM events e JOIN med m ON e.event_type = m.event_type),
@@ -665,8 +642,8 @@ object Analytics2 {
         |       (d.value - d.med) / (1.4826 * m.mad) AS robust_z
         |FROM dev d JOIN mad m ON d.event_type = m.event_type
         |WHERE m.mad > 0
-        |  AND ABS((d.value - d.med) / (1.4826 * m.mad)) > 3.0""".stripMargin,
-    "llm_dedup_priority" ->
+        |  AND ABS((d.value - d.med) / (1.4826 * m.mad)) > 3.0""".stripMargin),
+    QueryDef("llm_dedup_priority", llmDedupPriority,
       """WITH h AS (SELECT doc_id, source,
         |             md5(array_to_string(list_slice(string_split(lower(text), ' '), 1, 5), ' ')) AS th
         |           FROM documents),
@@ -674,8 +651,8 @@ object Analytics2 {
         |        COUNT(*) OVER (PARTITION BY th) AS dupes
         |      FROM h)
         |SELECT doc_id, source, th, CAST(dupes AS BIGINT) AS n_copies
-        |FROM r WHERE rk = 1""".stripMargin,
-    "etl_snapshot_diff" ->
+        |FROM r WHERE rk = 1""".stripMargin),
+    QueryDef("etl_snapshot_diff", etlSnapshotDiff,
       """WITH a AS (SELECT o_custkey, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS tot
         |           FROM orders WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1995-01-01' AND DATE '1995-12-31' GROUP BY 1),
         |b AS (SELECT o_custkey, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS tot
@@ -686,8 +663,8 @@ object Analytics2 {
         |            WHEN a.n = b.n AND a.tot = b.tot THEN 'unchanged' ELSE 'changed' END AS status,
         |       COALESCE(a.n, 0) AS n_old, COALESCE(b.n, 0) AS n_new,
         |       COALESCE(a.tot, 0) AS tot_old, COALESCE(b.tot, 0) AS tot_new
-        |FROM a FULL JOIN b ON a.o_custkey = b.o_custkey""".stripMargin,
-    "etl_ohlc_resample" ->
+        |FROM a FULL JOIN b ON a.o_custkey = b.o_custkey""".stripMargin),
+    QueryDef("etl_ohlc_resample", etlOhlcResample,
       """WITH e AS (SELECT event_type, date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hr,
         |                  epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id, value FROM events),
         |w AS (SELECT *, FIRST_VALUE(value) OVER (PARTITION BY event_type, hr ORDER BY us, event_id) AS o,
@@ -696,5 +673,5 @@ object Analytics2 {
         |      FROM e)
         |SELECT event_type, CAST(hr AS TIMESTAMP) AS hr, MIN(o) AS open, MAX(value) AS high,
         |       MIN(value) AS low, MIN(c) AS close, COUNT(*) AS n_ticks
-        |FROM w GROUP BY event_type, hr""".stripMargin)
+        |FROM w GROUP BY event_type, hr""".stripMargin))
 }

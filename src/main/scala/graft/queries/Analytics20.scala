@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-10 session-4 batch I: classifier evaluation, bi-temporal
@@ -183,13 +184,8 @@ object Analytics20 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_langid_eval" -> (llmLangidEval _),
-    "etl_bitemporal" -> (etlBitemporal _),
-    "agg_two_proportion" -> (aggTwoProportion _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_langid_eval" -> langidEvalOracle,
-    "etl_bitemporal" -> bitemporalSql("orders"),
-    "agg_two_proportion" -> twoPropSql("events"))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_langid_eval", llmLangidEval, langidEvalOracle),
+    QueryDef("etl_bitemporal", etlBitemporal, bitemporalSql("orders")),
+    QueryDef("agg_two_proportion", aggTwoProportion, twoPropSql("events")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -297,16 +298,11 @@ object Analytics21 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_heikin_ashi" -> (winHeikinAshi _),
-    "graph_hitting_prob" -> (graphHittingProb _),
-    "agg_randomization_test" -> (aggRandomizationTest _),
-    "agg_chow_test" -> (aggChowTest _))
-
-  val oracle: Map[String, String] = Map(
-    "win_heikin_ashi" -> haOracleSql,
-    "graph_hitting_prob" -> hitOracleSql,
-    "agg_randomization_test" -> randTestSql("events"),
-    "agg_chow_test" -> chowSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))"))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_heikin_ashi", winHeikinAshi, haOracleSql),
+    QueryDef("graph_hitting_prob", graphHittingProb, hitOracleSql),
+    QueryDef("agg_randomization_test", aggRandomizationTest,
+      randTestSql("events")),
+    QueryDef("agg_chow_test", aggChowTest, chowSql("orders",
+      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))
 }

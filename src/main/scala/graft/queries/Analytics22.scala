@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch A: the SQL row-level statement surface —
@@ -153,18 +154,13 @@ object Analytics22 {
     s.sql(statusCensusSql("orders_del"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_merge_into" -> (sqlMergeInto _),
-    "sql_update" -> (sqlUpdate _),
-    "sql_delete" -> (sqlDelete _))
-
   /** DuckDB has no MERGE at the pinned oracle version, so the twin is
     * the clause-by-clause relational expansion: matched-update via
     * inner join + condition, matched-delete by omission, not-matched
     * insert via anti join, not-matched-by-source via anti join from
     * the target side with the stale-mark CASE. */
-  val oracle: Map[String, String] = Map(
-    "sql_merge_into" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("sql_merge_into", sqlMergeInto,
       """WITH tgt AS (SELECT o_orderkey AS k, o_orderstatus AS status,
         |               CAST(o_totalprice AS DECIMAL(18,4)) AS price,
         |               1 AS version
@@ -191,8 +187,8 @@ object Analytics22 {
         |SELECT status, COUNT(*) AS n,
         |  CAST(SUM(price) AS DOUBLE) AS total,
         |  CAST(SUM(version) AS BIGINT) AS sum_version
-        |FROM kept GROUP BY status""".stripMargin,
-    "sql_update" ->
+        |FROM kept GROUP BY status""".stripMargin),
+    QueryDef("sql_update", sqlUpdate,
       """WITH tgt AS (SELECT o_orderkey AS k, o_orderstatus AS status,
         |               CAST(o_totalprice AS DECIMAL(18,4)) AS price,
         |               1 AS version
@@ -209,8 +205,8 @@ object Analytics22 {
         |SELECT status, COUNT(*) AS n,
         |  CAST(SUM(price) AS DOUBLE) AS total,
         |  CAST(SUM(version) AS BIGINT) AS sum_version
-        |FROM upd GROUP BY status""".stripMargin,
-    "sql_delete" ->
+        |FROM upd GROUP BY status""".stripMargin),
+    QueryDef("sql_delete", sqlDelete,
       """WITH tgt AS (SELECT o_orderkey AS k, o_orderstatus AS status,
         |               CAST(o_totalprice AS DECIMAL(18,4)) AS price,
         |               1 AS version
@@ -219,5 +215,5 @@ object Analytics22 {
         |  CAST(SUM(price) AS DOUBLE) AS total,
         |  CAST(SUM(version) AS BIGINT) AS sum_version
         |FROM tgt WHERE NOT (k % 5 = 0 OR price > 300000)
-        |GROUP BY status""".stripMargin)
+        |GROUP BY status""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch B: scan/statistics/curation widening.
@@ -222,21 +223,13 @@ object Analytics23 {
       "size(split(trim(s), ' '))"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_csv_multiline" -> (scanCsvMultiline _),
-    "text_entropy" -> (textEntropy _),
-    "agg_tukey" -> (aggTukey _),
-    "agg_power_law" -> (aggPowerLaw _),
-    "llm_curriculum_order" -> (llmCurriculumOrder _),
-    "llm_tokenizer_fertility" -> (llmTokenizerFertility _))
-
-  val oracle: Map[String, String] = Map(
-    "scan_csv_multiline" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("scan_csv_multiline", scanCsvMultiline,
       """SELECT lang, COUNT(*) AS n_docs,
         |  CAST(SUM(length(text)) AS BIGINT) AS sum_chars,
         |  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_lines
-        |FROM documents GROUP BY lang""".stripMargin,
-    "text_entropy" ->
+        |FROM documents GROUP BY lang""".stripMargin),
+    QueryDef("text_entropy", textEntropy,
       """WITH tc AS (SELECT doc_id, t, COUNT(*) AS c FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |    FROM documents) x GROUP BY doc_id, t)
@@ -246,8 +239,8 @@ object Analytics23 {
         |  ROUND(CASE WHEN COUNT(*) > 1
         |    THEN (log2(SUM(c)) - SUM(c * log2(c)) / SUM(c)) / log2(COUNT(*))
         |    ELSE 0.0 END, 6) AS norm_entropy
-        |FROM tc GROUP BY doc_id""".stripMargin,
-    "agg_tukey" ->
+        |FROM tc GROUP BY doc_id""".stripMargin),
+    QueryDef("agg_tukey", aggTukey,
       """WITH q AS (SELECT l_returnflag,
         |             ROUND(quantile_cont(l_extendedprice, 0.25), 4) AS q1,
         |             ROUND(quantile_cont(l_extendedprice, 0.75), 4) AS q3
@@ -261,16 +254,16 @@ object Analytics23 {
         |  CAST(SUM(CASE WHEN l.l_extendedprice > f.hi THEN 1 ELSE 0 END)
         |       AS BIGINT) AS n_above
         |FROM lineitem l JOIN f ON l.l_returnflag = f.l_returnflag
-        |GROUP BY l.l_returnflag, f.q1, f.q3""".stripMargin,
-    "agg_power_law" ->
+        |GROUP BY l.l_returnflag, f.q1, f.q3""".stripMargin),
+    QueryDef("agg_power_law", aggPowerLaw,
       """WITH top AS (SELECT o_totalprice AS x FROM orders
         |             ORDER BY o_totalprice DESC, o_orderkey LIMIT 1000),
         |m AS (SELECT MIN(x) AS x_min, CAST(COUNT(*) AS BIGINT) AS k
         |      FROM top)
         |SELECT m.k, m.x_min,
         |  ROUND(1.0 + m.k / SUM(LN(top.x / m.x_min)), 6) AS alpha
-        |FROM top CROSS JOIN m GROUP BY m.k, m.x_min""".stripMargin,
-    "llm_curriculum_order" ->
+        |FROM top CROSS JOIN m GROUP BY m.k, m.x_min""".stripMargin),
+    QueryDef("llm_curriculum_order", llmCurriculumOrder,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
         |             FROM documents),
         |df AS (SELECT t, COUNT(*) AS df FROM (
@@ -292,6 +285,7 @@ object Analytics23 {
         |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
         |  MIN(difficulty) AS min_difficulty,
         |  MAX(difficulty) AS max_difficulty
-        |FROM ph GROUP BY phase""".stripMargin,
-    "llm_tokenizer_fertility" -> Analytics12.bpeFertilityOracleSql)
+        |FROM ph GROUP BY phase""".stripMargin),
+    QueryDef("llm_tokenizer_fertility", llmTokenizerFertility,
+      Analytics12.bpeFertilityOracleSql))
 }

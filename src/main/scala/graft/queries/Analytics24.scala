@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch C: community scoring, robust statistics, and the
@@ -136,13 +137,8 @@ object Analytics24 {
         sum("inferred").as("n_inferred"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_modularity" -> (graphModularity _),
-    "agg_winsorized_mean" -> (aggWinsorizedMean _),
-    "etl_late_arriving_dim" -> (etlLateArrivingDim _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_modularity" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("graph_modularity", graphModularity,
       s"""WITH RECURSIVE ${Analytics10.lpaOracleCtes},
         |labels AS (SELECT nk, label FROM lp WHERE iter = 4),
         |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m2 FROM sym),
@@ -160,8 +156,8 @@ object Analytics24 {
         |  ROUND(COALESCE(intra.e_in, 0) / m.m2
         |        - (dc.d_c / m.m2) * (dc.d_c / m.m2), 6) AS q_contrib
         |FROM dc LEFT JOIN intra ON intra.label = dc.label
-        |CROSS JOIN m""".stripMargin,
-    "agg_winsorized_mean" ->
+        |CROSS JOIN m""".stripMargin),
+    QueryDef("agg_winsorized_mean", aggWinsorizedMean,
       """WITH q AS (SELECT l_returnflag,
         |             ROUND(quantile_cont(l_extendedprice, 0.05), 4) AS p05,
         |             ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95
@@ -176,8 +172,8 @@ object Analytics24 {
         |    / SUM(CASE WHEN l.l_extendedprice BETWEEN q.p05 AND q.p95
         |           THEN 1 ELSE 0 END) AS trimmed_mean
         |FROM lineitem l JOIN q ON l.l_returnflag = q.l_returnflag
-        |GROUP BY l.l_returnflag, q.p05, q.p95""".stripMargin,
-    "etl_late_arriving_dim" ->
+        |GROUP BY l.l_returnflag, q.p05, q.p95""".stripMargin),
+    QueryDef("etl_late_arriving_dim", etlLateArrivingDim,
       """WITH f AS (SELECT o.o_custkey,
         |             CAST(o.o_totalprice AS DECIMAL(18,2)) AS price,
         |             ot.c_mktsegment AS seg_ontime,
@@ -196,5 +192,5 @@ object Analytics24 {
         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_resolved_late,
         |  CAST(SUM(CASE WHEN seg_ontime IS NULL AND seg_late IS NULL
         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_inferred
-        |FROM f GROUP BY COALESCE(seg_ontime, seg_late, 'UNKNOWN')""".stripMargin)
+        |FROM f GROUP BY COALESCE(seg_ontime, seg_late, 'UNKNOWN')""".stripMargin))
 }

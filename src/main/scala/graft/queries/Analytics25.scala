@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -271,15 +272,10 @@ object Analytics25 {
         |FROM f LATERAL VIEW explode(f.res) t AS x""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_huber_mean" -> (aggHuberMean _),
-    "scan_time_travel" -> (scanTimeTravel _),
-    "win_hmm_filter" -> (winHmmFilter _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_huber_mean" -> huberSql("events",
-      e => s"quantile_cont($e, 0.5)"),
-    "scan_time_travel" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_huber_mean", aggHuberMean, huberSql("events",
+      e => s"quantile_cont($e, 0.5)")),
+    QueryDef("scan_time_travel", scanTimeTravel,
       """WITH a AS (SELECT o_orderkey AS k,
         |             CAST(o_totalprice AS DECIMAL(18,2)) AS price
         |           FROM orders WHERE o_orderkey % 3 = 0),
@@ -293,8 +289,8 @@ object Analytics25 {
         |UNION ALL
         |SELECT CAST(2 AS BIGINT), COUNT(*),
         |  CAST(SUM(price) AS DOUBLE)
-        |FROM (SELECT * FROM c UNION ALL SELECT * FROM b)""".stripMargin,
-    "win_hmm_filter" ->
+        |FROM (SELECT * FROM c UNION ALL SELECT * FROM b)""".stripMargin),
+    QueryDef("win_hmm_filter", winHmmFilter,
       """WITH RECURSIVE
         |thr AS (SELECT CAST(ROUND(quantile_cont(value, 0.5), 4) AS DOUBLE)
         |          AS thr FROM events),
@@ -320,5 +316,5 @@ object Analytics25 {
         |  FROM f JOIN obs o ON o.user_id = f.user_id AND o.rn = f.rn + 1)
         |SELECT user_id, rn, ROUND(ph, 6) AS p_high,
         |  CASE WHEN ph >= 0.5 THEN 'H' ELSE 'L' END AS state
-        |FROM f""".stripMargin)
+        |FROM f""".stripMargin))
 }

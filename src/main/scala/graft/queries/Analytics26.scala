@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -118,15 +119,11 @@ object Analytics26 {
     s.sql("WITH " + haarSql("graft_haar_orders", "DIV"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_betweenness" -> (graphBetweenness _),
-    "win_haar" -> (winHaar _))
-
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[QueryDef] = Seq(
     // sym and every multi-referenced walk CTE are MATERIALIZED: DuckDB
     // otherwise re-inlines the 4-table star join once per reference
     // (the r9 triangles-oracle OOM, same cure).
-    "graph_betweenness" ->
+    QueryDef("graph_betweenness", graphBetweenness,
       s"""WITH ${Analytics11.symCte
              .replace("sym AS (", "sym AS MATERIALIZED (")},
         |w1 AS MATERIALIZED (SELECT src AS s, dst AS t, 1 AS len,
@@ -157,6 +154,6 @@ object Analytics26 {
         |SELECT CAST(v AS BIGINT) AS nk,
         |  ROUND(CAST(SUM(c) AS DOUBLE) / 2, 6) AS betweenness,
         |  COUNT(*) AS n_pairs
-        |FROM contrib GROUP BY v""".stripMargin,
-    "win_haar" -> ("WITH " + haarSql("orders", "//")))
+        |FROM contrib GROUP BY v""".stripMargin),
+    QueryDef("win_haar", winHaar, "WITH " + haarSql("orders", "//")))
 }

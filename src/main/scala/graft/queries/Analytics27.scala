@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch G: time-series decomposition and data-constrained
@@ -138,16 +139,12 @@ object Analytics27 {
     s.sql("WITH " + mixtureSql("graft_mix_docs"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_stl_decompose" -> (winStlDecompose _),
-    "win_stl_anomaly" -> (winStlAnomaly _),
-    "llm_data_mixture_epochs" -> (llmDataMixtureEpochs _))
-
-  val oracle: Map[String, String] = Map(
-    "win_stl_decompose" -> ("WITH " + stlSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_stl_decompose", winStlDecompose, "WITH " + stlSql("orders",
       d => s"datediff('day', DATE '1970-01-01', $d)")),
-    "win_stl_anomaly" -> ("WITH " + stlAnomalySql("orders",
+    QueryDef("win_stl_anomaly", winStlAnomaly, "WITH " + stlAnomalySql("orders",
       d => s"datediff('day', DATE '1970-01-01', $d)",
       e => s"quantile_cont($e, 0.5)")),
-    "llm_data_mixture_epochs" -> ("WITH " + mixtureSql("documents")))
+    QueryDef("llm_data_mixture_epochs", llmDataMixtureEpochs,
+      "WITH " + mixtureSql("documents")))
 }

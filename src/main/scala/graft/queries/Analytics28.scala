@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -125,12 +126,8 @@ object Analytics28 {
       "graft_dq_lineitem"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_csv_permissive" -> (scanCsvPermissive _),
-    "etl_dq_expectations" -> (etlDqExpectations _))
-
-  val oracle: Map[String, String] = Map(
-    "scan_csv_permissive" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("scan_csv_permissive", scanCsvPermissive,
       """SELECT
         |  CAST(SUM(CASE WHEN o_orderkey % 13 <> 0 AND o_orderkey % 17 <> 0
         |            THEN 1 ELSE 0 END) AS BIGINT) AS n_good,
@@ -139,7 +136,7 @@ object Analytics28 {
         |  CAST(SUM(CASE WHEN o_orderkey % 13 <> 0 AND o_orderkey % 17 <> 0
         |            THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
         |       AS DOUBLE) AS good_total
-        |FROM orders""".stripMargin,
-    "etl_dq_expectations" ->
-      ("WITH " + dqSql("orders", "customer", "lineitem")))
+        |FROM orders""".stripMargin),
+    QueryDef("etl_dq_expectations", etlDqExpectations,
+      "WITH " + dqSql("orders", "customer", "lineitem")))
 }

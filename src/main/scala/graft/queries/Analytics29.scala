@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch I: causal-inference and corpus-composition tail.
@@ -100,13 +101,10 @@ object Analytics29 {
       cls => s"REGEXP_REPLACE(text, '$cls', '')"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_did" -> (eventsDid _),
-    "text_code_detect" -> (textCodeDetect _))
-
-  val oracle: Map[String, String] = Map(
-    "events_did" -> ("WITH " + didSql("events",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("events_did", eventsDid, "WITH " + didSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    "text_code_detect" -> ("WITH " + codeDetectSql("documents",
-      cls => s"REGEXP_REPLACE(text, '$cls', '', 'g')")))
+    QueryDef("text_code_detect", textCodeDetect,
+      "WITH " + codeDetectSql("documents",
+        cls => s"REGEXP_REPLACE(text, '$cls', '', 'g')")))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -222,27 +223,17 @@ object Analytics3 {
           .as("signup_at"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_cross" -> (joinCross _),
-    "win_ewma" -> (winEwma _),
-    "graph_pagerank" -> (graphPagerank _),
-    "llm_edit_distance" -> (llmEditDistance _),
-    "llm_zipf" -> (llmZipf _),
-    "agg_ttest_welch" -> (aggTtestWelch _),
-    "agg_chi2" -> (aggChi2 _),
-    "join_asof_tolerance" -> (joinAsOfTolerance _))
-
-  val oracle: Map[String, String] = Map(
-    "join_cross" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("join_cross", joinCross,
       """SELECT n_name, r_name,
         |  CAST(n_regionkey = r_regionkey AS INTEGER) AS is_home
-        |FROM nation CROSS JOIN region""".stripMargin,
-    "win_ewma" ->
+        |FROM nation CROSS JOIN region""".stripMargin),
+    QueryDef("win_ewma", winEwma,
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  list_reduce(list(CAST(value AS DOUBLE) ORDER BY ts, event_id),
         |              (acc, x) -> 0.3 * x + 0.7 * acc) AS ewma
-        |FROM events GROUP BY user_id""".stripMargin,
-    "graph_pagerank" ->
+        |FROM events GROUP BY user_id""".stripMargin),
+    QueryDef("graph_pagerank", graphPagerank,
       """WITH RECURSIVE
         |eo AS (SELECT event_type,
         |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
@@ -263,8 +254,8 @@ object Analytics3 {
         |  FROM pr JOIN w ON w.src = pr.node
         |  WHERE pr.iter < 10
         |  GROUP BY pr.iter, w.dst)
-        |SELECT node, CAST(rank AS DOUBLE) AS rank FROM pr WHERE iter = 10""".stripMargin,
-    "llm_edit_distance" ->
+        |SELECT node, CAST(rank AS DOUBLE) AS rank FROM pr WHERE iter = 10""".stripMargin),
+    QueryDef("llm_edit_distance", llmEditDistance,
       """WITH d0 AS (SELECT doc_id, text, lang, n_chars
         |            FROM documents WHERE n_chars < 120),
         |mh AS (SELECT doc_id, MIN(md5(tok)) AS band
@@ -278,8 +269,8 @@ object Analytics3 {
         |  CAST(levenshtein(a.text, b.text) AS DOUBLE) / a.n_chars AS rel
         |FROM d a JOIN d b
         |  ON a.lang = b.lang AND a.n_chars = b.n_chars AND a.band = b.band
-        |   AND a.doc_id < b.doc_id""".stripMargin,
-    "llm_zipf" ->
+        |   AND a.doc_id < b.doc_id""".stripMargin),
+    QueryDef("llm_zipf", llmZipf,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
         |tf AS (SELECT term, CAST(count(*) AS DOUBLE) AS tf FROM tok GROUP BY term),
         |top AS (SELECT term, tf FROM tf ORDER BY tf DESC, term LIMIT 100),
@@ -288,8 +279,8 @@ object Analytics3 {
         |       regr_intercept(ln(tf), ln(rank)) AS zipf_icept,
         |       regr_r2(ln(tf), ln(rank)) AS zipf_r2,
         |       CAST(count(*) AS BIGINT) AS n_terms
-        |FROM r""".stripMargin,
-    "agg_ttest_welch" ->
+        |FROM r""".stripMargin),
+    QueryDef("agg_ttest_welch", aggTtestWelch,
       """WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |             avg(value) AS m, var_samp(value) AS v
         |           FROM events
@@ -302,9 +293,9 @@ object Analytics3 {
         |  pow(a.v / a.n + b.v / b.n, 2)
         |    / (pow(a.v / a.n, 2) / (a.n - 1) + pow(b.v / b.n, 2) / (b.n - 1))
         |    AS df_welch
-        |FROM a CROSS JOIN b""".stripMargin,
-    "agg_chi2" -> chi2Sql("documents"),
-    "join_asof_tolerance" ->
+        |FROM a CROSS JOIN b""".stripMargin),
+    QueryDef("agg_chi2", aggChi2, chi2Sql("documents")),
+    QueryDef("join_asof_tolerance", joinAsOfTolerance,
       """WITH err AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |             FROM events WHERE event_type = 'error'),
         |     sig AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -314,5 +305,5 @@ object Analytics3 {
         |  CASE WHEN sig.ts >= err.ts - INTERVAL 2 HOUR
         |       THEN strftime(sig.ts, '%Y-%m-%d %H:%M:%S') END AS signup_at
         |FROM err ASOF LEFT JOIN sig
-        |  ON err.user_id = sig.user_id AND err.ts >= sig.ts""".stripMargin)
+        |  ON err.user_id = sig.user_id AND err.ts >= sig.ts""".stripMargin))
 }

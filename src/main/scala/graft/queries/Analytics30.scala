@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch J: entity resolution, privacy auditing, and the
@@ -296,22 +297,16 @@ object Analytics30 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_record_linkage" -> (etlRecordLinkage _),
-    "etl_k_anonymity" -> (etlKAnonymity _),
-    "agg_bh_fdr" -> (aggBhFdr _),
-    "agg_cramers_v" -> (aggCramersV _),
-    "agg_durbin_watson" -> (aggDurbinWatson _),
-    "agg_adf_test" -> (aggAdfTest _))
-
   private val duckDay =
     "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))"
 
-  val oracle: Map[String, String] = Map(
-    "etl_record_linkage" -> ("WITH " + linkageSql("customer", "supplier")),
-    "etl_k_anonymity" -> ("WITH " + kAnonSql("customer")),
-    "agg_bh_fdr" -> ("WITH " + bhFdrSql("orders", "customer")),
-    "agg_cramers_v" -> ("WITH " + cramersSql("orders")),
-    "agg_durbin_watson" -> ("WITH " + dwSql("orders", duckDay)),
-    "agg_adf_test" -> ("WITH " + adfSql("orders", duckDay)))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("etl_record_linkage", etlRecordLinkage,
+      "WITH " + linkageSql("customer", "supplier")),
+    QueryDef("etl_k_anonymity", etlKAnonymity, "WITH " + kAnonSql("customer")),
+    QueryDef("agg_bh_fdr", aggBhFdr, "WITH " + bhFdrSql("orders", "customer")),
+    QueryDef("agg_cramers_v", aggCramersV, "WITH " + cramersSql("orders")),
+    QueryDef("agg_durbin_watson", aggDurbinWatson,
+      "WITH " + dwSql("orders", duckDay)),
+    QueryDef("agg_adf_test", aggAdfTest, "WITH " + adfSql("orders", duckDay)))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch K: the stateful technical-indicator tail (folds) and
@@ -341,18 +342,11 @@ object Analytics31 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_adx" -> (winAdx _),
-    "win_cci" -> (winCci _),
-    "win_parabolic_sar" -> (winParabolicSar _),
-    "win_renko" -> (winRenko _),
-    "agg_croston" -> (aggCroston _))
-
-  val oracle: Map[String, String] = Map(
-    "win_adx" -> ("WITH " + adxSql("events")),
-    "win_cci" -> ("WITH " + cciSql("events")),
-    "win_parabolic_sar" -> sarOracleSql,
-    "win_renko" -> renkoOracleSql,
-    "agg_croston" -> crostonOracleSql(
-      "datediff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE))"))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_adx", winAdx, "WITH " + adxSql("events")),
+    QueryDef("win_cci", winCci, "WITH " + cciSql("events")),
+    QueryDef("win_parabolic_sar", winParabolicSar, sarOracleSql),
+    QueryDef("win_renko", winRenko, renkoOracleSql),
+    QueryDef("agg_croston", aggCroston, crostonOracleSql(
+      "datediff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE))")))
 }

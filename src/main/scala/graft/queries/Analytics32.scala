@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.plans.GraftFunctions
 import graft.core.CkptTap._
@@ -277,15 +278,12 @@ object Analytics32 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_mrl_recall" -> (llmMrlRecall _),
-    "llm_bradley_terry" -> (llmBradleyTerry _),
-    "sql_group_by_all" -> (sqlGroupByAll _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_mrl_recall" -> mrlOracleSql,
-    "llm_bradley_terry" -> ("WITH " + btCensusCtes("documents", "//",
-        e => s"(CAST(1 AS BIGINT) << CAST($e AS INT))")
-      + ",\nm0 AS (" + btCensusSelect + "),\n" + btFitSql("m0")),
-    "sql_group_by_all" -> groupByAllSql.format("lineitem"))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_mrl_recall", llmMrlRecall, mrlOracleSql),
+    QueryDef("llm_bradley_terry", llmBradleyTerry,
+      "WITH " + btCensusCtes("documents", "//",
+          e => s"(CAST(1 AS BIGINT) << CAST($e AS INT))")
+        + ",\nm0 AS (" + btCensusSelect + "),\n" + btFitSql("m0")),
+    QueryDef("sql_group_by_all", sqlGroupByAll,
+      groupByAllSql.format("lineitem")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -313,16 +314,12 @@ object Analytics33 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_scc" -> (graphScc _),
-    "events_propensity_strata" -> (eventsPropensityStrata _),
-    "llm_wordpiece_apply" -> (llmWordpieceApply _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_scc" -> sccOracleSql,
-    "events_propensity_strata" -> ("WITH " + strataSql("events",
-      ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    "llm_wordpiece_apply" -> {
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("graph_scc", graphScc, sccOracleSql),
+    QueryDef("events_propensity_strata", eventsPropensityStrata,
+      "WITH " + strataSql("events",
+        ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
+    QueryDef("llm_wordpiece_apply", llmWordpieceApply, {
       val duckLat: (String, String, String) => String =
         (rel, c, a) => s", LATERAL (SELECT CAST(unnest(" +
           s"range(1, len($rel.$c) + 1)) AS INT) AS p) $a"
@@ -332,5 +329,5 @@ object Analytics33 {
         wpVocabCtes("words", duckLat) + ",\n" +
         "vocab AS (" + wpVocabSelect + "),\n" +
         wpFitSql("words", "vocab", duckLat)
-    })
+    }))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.plans.GraftFunctions
 import graft.core.CkptTap._
@@ -282,24 +283,18 @@ object Analytics34 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_psi_drift" -> (etlPsiDrift _),
-    "etl_write_audit_publish" -> (etlWriteAuditPublish _),
-    "llm_mmr_rerank" -> (llmMmrRerank _),
-    "win_sax" -> (winSax _))
-
-  val oracle: Map[String, String] = Map(
-    "etl_psi_drift" -> ("WITH " + psiSql("events",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("etl_psi_drift", etlPsiDrift, "WITH " + psiSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    "etl_write_audit_publish" ->
+    QueryDef("etl_write_audit_publish", etlWriteAuditPublish,
       """SELECT CAST(c.c_nationkey AS BIGINT) AS c_nationkey,
         |  CAST(count(*) AS BIGINT) AS n_orders,
         |  CAST(CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,4)))
         |       AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
         |  true AS audit_passed
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-    "llm_mmr_rerank" -> mmrOracleSql,
-    "win_sax" -> ("WITH " + saxSql("events", "//",
+        |GROUP BY 1""".stripMargin),
+    QueryDef("llm_mmr_rerank", llmMmrRerank, mmrOracleSql),
+    QueryDef("win_sax", winSax, "WITH " + saxSql("events", "//",
       "string_agg(chr(CAST(97 + sym AS INT)), '' ORDER BY seg)")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch O: paired-outcome, agreement, and inequality
@@ -208,16 +209,11 @@ object Analytics35 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_mcnemar" -> (aggMcnemar _),
-    "agg_cohens_kappa" -> (aggCohensKappa _),
-    "agg_partial_corr" -> (aggPartialCorr _),
-    "agg_lorenz_curve" -> (aggLorenzCurve _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_mcnemar" -> ("WITH " + mcnemarSql("events",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_mcnemar", aggMcnemar, "WITH " + mcnemarSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    "agg_cohens_kappa" -> ("WITH " + kappaSql("orders")),
-    "agg_partial_corr" -> ("WITH " + partialSql("lineitem")),
-    "agg_lorenz_curve" -> ("WITH " + lorenzSql("orders")))
+    QueryDef("agg_cohens_kappa", aggCohensKappa, "WITH " + kappaSql("orders")),
+    QueryDef("agg_partial_corr", aggPartialCorr,
+      "WITH " + partialSql("lineitem")),
+    QueryDef("agg_lorenz_curve", aggLorenzCurve, "WITH " + lorenzSql("orders")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -259,17 +260,13 @@ object Analytics36 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_hodges_lehmann" -> (aggHodgesLehmann _),
-    "agg_trimmed_mean" -> (aggTrimmedMean _),
-    "text_textrank" -> (textTextrank _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_hodges_lehmann" -> ("WITH " + hlSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_hodges_lehmann", aggHodgesLehmann, "WITH " + hlSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))",
       "//")),
-    "agg_trimmed_mean" -> ("WITH " + trimSql("orders", "//")),
-    "text_textrank" -> ("WITH " + textrankEdgeCtes(
+    QueryDef("agg_trimmed_mean", aggTrimmedMean,
+      "WITH " + trimSql("orders", "//")),
+    QueryDef("text_textrank", textTextrank, "WITH " + textrankEdgeCtes(
       """SELECT doc_id, CAST(generate_subscripts(string_split(text, ' '), 1)
         |  AS BIGINT) - 1 AS pos,
         |  unnest(string_split(text, ' ')) AS w FROM documents""".stripMargin)

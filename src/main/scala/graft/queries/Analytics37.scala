@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch Q: empirical-Bayes estimation, population
@@ -162,17 +163,15 @@ object Analytics37 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_beta_binomial_eb" -> (aggBetaBinomialEb _),
-    "agg_capture_recapture" -> (aggCaptureRecapture _),
-    "llm_subsample_frequent" -> (llmSubsampleFrequent _),
-    "etl_dedup_survivorship" -> (etlDedupSurvivorship _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_beta_binomial_eb" -> ("WITH " + ebSql("orders", "customer")),
-    "agg_capture_recapture" -> ("WITH " + crSql("events",
-      ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    "llm_subsample_frequent" -> ("WITH " + subsampleSql(
-      "SELECT unnest(string_split(text, ' ')) AS w FROM documents")),
-    "etl_dedup_survivorship" -> ("WITH " + survivorshipSql("customer")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_beta_binomial_eb", aggBetaBinomialEb,
+      "WITH " + ebSql("orders", "customer")),
+    QueryDef("agg_capture_recapture", aggCaptureRecapture,
+      "WITH " + crSql("events",
+        ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
+    QueryDef("llm_subsample_frequent", llmSubsampleFrequent,
+      "WITH " + subsampleSql(
+        "SELECT unnest(string_split(text, ' ')) AS w FROM documents")),
+    QueryDef("etl_dedup_survivorship", etlDedupSurvivorship,
+      "WITH " + survivorshipSql("customer")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch R: model-evaluation metrics and sequential testing.
@@ -212,13 +213,9 @@ object Analytics38 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_auc_roc" -> (aggAucRoc _),
-    "agg_brier_calibration" -> (aggBrierCalibration _),
-    "events_sprt" -> (eventsSprt _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_auc_roc" -> ("WITH " + aucSql("events")),
-    "agg_brier_calibration" -> ("WITH " + brierSql("events")),
-    "events_sprt" -> sprtOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_auc_roc", aggAucRoc, "WITH " + aucSql("events")),
+    QueryDef("agg_brier_calibration", aggBrierCalibration,
+      "WITH " + brierSql("events")),
+    QueryDef("events_sprt", eventsSprt, sprtOracleSql))
 }

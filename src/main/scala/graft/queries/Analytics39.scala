@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch S: heteroskedasticity-robust inference, engagement
@@ -204,15 +205,11 @@ object Analytics39 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_newey_west" -> (aggNeweyWest _),
-    "events_decay_score" -> (eventsDecayScore _),
-    "win_holt_winters" -> (winHoltWinters _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_newey_west" -> ("WITH " + nwSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_newey_west", aggNeweyWest, "WITH " + nwSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "events_decay_score" -> ("WITH " + decaySql("events",
-      ts => s"epoch_us(CAST($ts AS TIMESTAMP))")),
-    "win_holt_winters" -> hwOracleSql)
+    QueryDef("events_decay_score", eventsDecayScore,
+      "WITH " + decaySql("events",
+        ts => s"epoch_us(CAST($ts AS TIMESTAMP))")),
+    QueryDef("win_holt_winters", winHoltWinters, hwOracleSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -282,18 +283,8 @@ object Analytics4 {
         col("h.l").as("holt_level"), col("h.b").as("holt_trend"),
         (col("h.l") + col("h.b")).as("holt_fcst"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_winnowing" -> (textWinnowing _),
-    "agg_ks_test" -> (aggKsTest _),
-    "agg_mannwhitney" -> (aggMannWhitney _),
-    "agg_spearman" -> (aggSpearman _),
-    "events_acf" -> (eventsAcf _),
-    "graph_best_path" -> (graphBestPath _),
-    "graph_triangles" -> (graphTriangles _),
-    "win_holt" -> (winHolt _))
-
-  val oracle: Map[String, String] = Map(
-    "text_winnowing" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("text_winnowing", textWinnowing,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
         |k AS (SELECT doc_id, len(ts) - 2 AS ng,
         |        list_transform(range(1, len(ts) - 1),
@@ -307,10 +298,10 @@ object Analytics4 {
         |SELECT doc_id, CAST(ng AS BIGINT) AS n_grams,
         |       CAST(len(fp) AS BIGINT) AS n_fp,
         |       CAST(list_sum(fp) AS BIGINT) AS fp_sum
-        |FROM s""".stripMargin,
-    "agg_ks_test" -> ksSql("events"),
-    "agg_mannwhitney" -> mwSql("events"),
-    "agg_spearman" ->
+        |FROM s""".stripMargin),
+    QueryDef("agg_ks_test", aggKsTest, ksSql("events")),
+    QueryDef("agg_mannwhitney", aggMannWhitney, mwSql("events")),
+    QueryDef("agg_spearman", aggSpearman,
       """WITH d AS (SELECT n_chars AS x, len(string_split(text, ' ')) AS y
         |           FROM documents),
         |r AS (SELECT
@@ -318,8 +309,8 @@ object Analytics4 {
         |  rank() OVER (ORDER BY y) + (count(*) OVER (PARTITION BY y) - 1) / 2.0 AS ry
         |FROM d)
         |SELECT corr(rx, ry) AS rho, CAST(count(*) AS BIGINT) AS n
-        |FROM r""".stripMargin,
-    "events_acf" ->
+        |FROM r""".stripMargin),
+    QueryDef("events_acf", eventsAcf,
       """WITH daily AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
         |                 CAST(sum(CAST(value AS DECIMAL(38, 18))) AS DOUBLE) AS s
         |               FROM events GROUP BY 1),
@@ -329,8 +320,8 @@ object Analytics4 {
         |        JOIN daily b ON b.d = a.d - CAST(l.lag AS INTEGER))
         |SELECT CAST(lag AS INTEGER) AS lag, corr(sa, sb) AS acf,
         |       CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM j GROUP BY lag""".stripMargin,
-    "graph_best_path" ->
+        |FROM j GROUP BY lag""".stripMargin),
+    QueryDef("graph_best_path", graphBestPath,
       """WITH RECURSIVE
         |eo AS (SELECT event_type,
         |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
@@ -346,8 +337,8 @@ object Analytics4 {
         |  SELECT p.src, w.dst, p.cost - ln(w.wt), p.depth + 1
         |  FROM p JOIN w ON w.src = p.dst WHERE p.depth < 4)
         |SELECT src, dst, min(cost) AS cost, exp(-min(cost)) AS prob
-        |FROM p GROUP BY 1, 2""".stripMargin,
-    "graph_triangles" ->
+        |FROM p GROUP BY 1, 2""".stripMargin),
+    QueryDef("graph_triangles", graphTriangles,
       """WITH pairs AS MATERIALIZED (
         |  SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -368,13 +359,13 @@ object Analytics4 {
         |            UNION ALL SELECT c FROM tri)
         |SELECT n.n_name, CAST(count(*) AS BIGINT) AS n_tri
         |FROM corners JOIN nation n ON n.n_nationkey = corners.nk
-        |GROUP BY n.n_name""".stripMargin,
+        |GROUP BY n.n_name""".stripMargin),
     // NOTE: not list_reduce — DuckDB 1.0 mutates a STRUCT accumulator
     // field-by-field during lambda evaluation, so the 'b' expression
     // would see the already-updated 'l' (verified numerically). The
     // recursive CTE replays the identical IEEE fold without a struct
     // accumulator.
-    "win_holt" ->
+    QueryDef("win_holt", winHolt,
       """WITH RECURSIVE
         |v AS (SELECT user_id,
         |        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS i,
@@ -388,5 +379,5 @@ object Analytics4 {
         |  FROM f JOIN v ON v.user_id = f.user_id AND v.i = f.i + 1)
         |SELECT f.user_id, CAST(n.n AS BIGINT) AS n_events, f.l AS holt_level,
         |       f.b AS holt_trend, f.l + f.b AS holt_fcst
-        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin)
+        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin))
 }

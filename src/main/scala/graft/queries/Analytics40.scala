@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch T: the remaining classic technical-indicator
@@ -214,15 +215,9 @@ object Analytics40 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_aroon" -> (winAroon _),
-    "win_williams_r" -> (winWilliamsR _),
-    "win_mfi" -> (winMfi _),
-    "win_trix" -> (winTrix _))
-
-  val oracle: Map[String, String] = Map(
-    "win_aroon" -> ("WITH " + aroonSql("events")),
-    "win_williams_r" -> ("WITH " + williamsSql("events")),
-    "win_mfi" -> ("WITH " + mfiSql("events")),
-    "win_trix" -> trixOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_aroon", winAroon, "WITH " + aroonSql("events")),
+    QueryDef("win_williams_r", winWilliamsR, "WITH " + williamsSql("events")),
+    QueryDef("win_mfi", winMfi, "WITH " + mfiSql("events")),
+    QueryDef("win_trix", winTrix, trixOracleSql))
 }

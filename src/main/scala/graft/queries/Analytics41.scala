@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch U: the nonparametric / categorical inference tail.
@@ -221,15 +222,9 @@ object Analytics41 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_kruskal_wallis" -> (aggKruskalWallis _),
-    "agg_g_test" -> (aggGTest _),
-    "agg_odds_ratio" -> (aggOddsRatio _),
-    "agg_fisher_exact" -> (aggFisherExact _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_kruskal_wallis" -> ("WITH " + kwSql("events")),
-    "agg_g_test" -> ("WITH " + gTestSql("documents")),
-    "agg_odds_ratio" -> ("WITH " + oddsSql("lineitem")),
-    "agg_fisher_exact" -> fisherOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_kruskal_wallis", aggKruskalWallis, "WITH " + kwSql("events")),
+    QueryDef("agg_g_test", aggGTest, "WITH " + gTestSql("documents")),
+    QueryDef("agg_odds_ratio", aggOddsRatio, "WITH " + oddsSql("lineitem")),
+    QueryDef("agg_fisher_exact", aggFisherExact, fisherOracleSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch V: the remaining warehouse-statement surface.
@@ -218,15 +219,10 @@ object Analytics42 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_pivot" -> (sqlPivot _),
-    "sql_unpivot" -> (sqlUnpivot _),
-    "etl_dynamic_partition_overwrite" -> (etlDynamicPartitionOverwrite _),
-    "etl_vacuum_retention" -> (etlVacuumRetention _))
-
-  val oracle: Map[String, String] = Map(
-    "sql_pivot" -> pivotOracleSql,
-    "sql_unpivot" -> unpivotOracleSql,
-    "etl_dynamic_partition_overwrite" -> dpoOracleSql,
-    "etl_vacuum_retention" -> vacuumOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("sql_pivot", sqlPivot, pivotOracleSql),
+    QueryDef("sql_unpivot", sqlUnpivot, unpivotOracleSql),
+    QueryDef("etl_dynamic_partition_overwrite", etlDynamicPartitionOverwrite,
+      dpoOracleSql),
+    QueryDef("etl_vacuum_retention", etlVacuumRetention, vacuumOracleSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -152,11 +153,7 @@ object Analytics43 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_isotonic" -> (aggIsotonic _),
-    "agg_periodogram" -> (aggPeriodogram _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_isotonic" -> isotonicOracleSql,
-    "agg_periodogram" -> periodogramOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_isotonic", aggIsotonic, isotonicOracleSql),
+    QueryDef("agg_periodogram", aggPeriodogram, periodogramOracleSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch Y: two-regressor OLS econometrics and the KW
@@ -203,15 +204,11 @@ object Analytics44 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_granger" -> (aggGranger _),
-    "events_bass_diffusion" -> (eventsBassDiffusion _),
-    "agg_dunn_posthoc" -> (aggDunnPosthoc _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_granger" -> ("WITH " + grangerSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_granger", aggGranger, "WITH " + grangerSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "events_bass_diffusion" -> ("WITH " + bassSql("events",
-      "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))")),
-    "agg_dunn_posthoc" -> ("WITH " + dunnSql("events")))
+    QueryDef("events_bass_diffusion", eventsBassDiffusion,
+      "WITH " + bassSql("events",
+        "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))")),
+    QueryDef("agg_dunn_posthoc", aggDunnPosthoc, "WITH " + dunnSql("events")))
 }

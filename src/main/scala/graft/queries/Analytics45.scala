@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch Z: the experimentation-platform daily checks.
@@ -146,14 +147,9 @@ object Analytics45 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_cuped" -> (eventsCuped _),
-    "events_srm_check" -> (eventsSrmCheck _),
-    "agg_cpk" -> (aggCpk _))
-
-  val oracle: Map[String, String] = Map(
-    "events_cuped" -> ("WITH " + cupedSql("events",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("events_cuped", eventsCuped, "WITH " + cupedSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))")),
-    "events_srm_check" -> ("WITH " + srmSql("events")),
-    "agg_cpk" -> ("WITH " + cpkSql("events")))
+    QueryDef("events_srm_check", eventsSrmCheck, "WITH " + srmSql("events")),
+    QueryDef("agg_cpk", aggCpk, "WITH " + cpkSql("events")))
 }

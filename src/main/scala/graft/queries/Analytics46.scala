@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AA: the two user-facing API families not yet on the
@@ -98,11 +99,7 @@ object Analytics46 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "typed_user_stats" -> (typedUserStats _),
-    "stat_crosstab" -> (statCrosstab _))
-
-  val oracle: Map[String, String] = Map(
-    "typed_user_stats" -> typedOracleSql,
-    "stat_crosstab" -> crosstabOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("typed_user_stats", typedUserStats, typedOracleSql),
+    QueryDef("stat_crosstab", statCrosstab, crosstabOracleSql))
 }

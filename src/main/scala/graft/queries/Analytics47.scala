@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AB: ML-primitive splits, corpus divergence, and the
@@ -193,15 +194,11 @@ object Analytics47 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_decision_stump" -> (aggDecisionStump _),
-    "text_jsd" -> (textJsd _),
-    "agg_logrank" -> (aggLogrank _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_decision_stump" -> ("WITH " + stumpSql("events")),
-    "text_jsd" -> jsdOracleSql,
-    "agg_logrank" -> ("WITH " + logrankSql("events",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_decision_stump", aggDecisionStump,
+      "WITH " + stumpSql("events")),
+    QueryDef("text_jsd", textJsd, jsdOracleSql),
+    QueryDef("agg_logrank", aggLogrank, "WITH " + logrankSql("events",
       // DuckDB epoch() keeps fractional microseconds; Spark's
       // unix_timestamp truncates — floor to the same second boundary
       ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AC: outlier/threshold primitives for curation and
@@ -171,13 +172,8 @@ object Analytics48 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_embed_outlier" -> (llmEmbedOutlier _),
-    "agg_mahalanobis" -> (aggMahalanobis _),
-    "agg_youden" -> (aggYouden _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_embed_outlier" -> embedOutlierOracleSql,
-    "agg_mahalanobis" -> ("WITH " + mahaSql("lineitem")),
-    "agg_youden" -> ("WITH " + youdenSql("events")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_embed_outlier", llmEmbedOutlier, embedOutlierOracleSql),
+    QueryDef("agg_mahalanobis", aggMahalanobis, "WITH " + mahaSql("lineitem")),
+    QueryDef("agg_youden", aggYouden, "WITH " + youdenSql("events")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AD: distribution fitting without erf, and the
@@ -193,15 +194,12 @@ object Analytics49 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_probit_qq" -> (aggProbitQq _),
-    "events_weibull_fit" -> (eventsWeibullFit _),
-    "graph_reciprocity" -> (graphReciprocity _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_probit_qq" -> ("WITH " + probitQqSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_probit_qq", aggProbitQq, "WITH " + probitQqSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "events_weibull_fit" -> ("WITH " + weibullSql("events",
-      ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")),
-    "graph_reciprocity" -> ("WITH " + reciprocitySql("events")))
+    QueryDef("events_weibull_fit", eventsWeibullFit,
+      "WITH " + weibullSql("events",
+        ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")),
+    QueryDef("graph_reciprocity", graphReciprocity,
+      "WITH " + reciprocitySql("events")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -295,22 +296,13 @@ object Analytics5 {
         |FROM w""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_market_basket" -> (aggMarketBasket _),
-    "graph_degree_dist" -> (graphDegreeDist _),
-    "agg_theil_sen" -> (aggTheilSen _),
-    "win_cusum" -> (winCusum _),
-    "text_readability" -> (textReadability _),
-    "agg_anova" -> (aggAnova _),
-    "agg_benford" -> (aggBenford _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_market_basket" ->
-      (s"""WITH baskets AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_market_basket", aggMarketBasket,
+      s"""WITH baskets AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
           |                 FROM lineitem JOIN part ON l_partkey = p_partkey),
           |""".stripMargin + mbCensus("baskets")),
-    "graph_degree_dist" -> degreeSql("lineitem"),
-    "agg_theil_sen" ->
+    QueryDef("graph_degree_dist", graphDegreeDist, degreeSql("lineitem")),
+    QueryDef("agg_theil_sen", aggTheilSen,
       """WITH daily AS MATERIALIZED (SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS x,
         |                 CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y
         |               FROM orders GROUP BY 1),
@@ -328,8 +320,8 @@ object Analytics5 {
         |days AS (SELECT count(*) AS n_days FROM daily)
         |SELECT CAST(days.n_days AS BIGINT) AS n_days,
         |       CAST(med.n_pairs AS BIGINT) AS n_pairs, med.ts_slope, im.ts_intercept
-        |FROM med CROSS JOIN im CROSS JOIN days""".stripMargin,
-    "win_cusum" ->
+        |FROM med CROSS JOIN im CROSS JOIN days""".stripMargin),
+    QueryDef("win_cusum", winCusum,
       """WITH RECURSIVE
         |v AS (SELECT user_id,
         |        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS i,
@@ -346,8 +338,8 @@ object Analytics5 {
         |  FROM f JOIN v ON v.user_id = f.user_id AND v.i = f.i + 1)
         |SELECT f.user_id, CAST(n.n AS BIGINT) AS n_events, f.s AS cusum_final,
         |       f.m AS cusum_max, CAST(f.a AS BIGINT) AS n_alarms
-        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin,
-    "text_readability" ->
+        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin),
+    QueryDef("text_readability", textReadability,
       """WITH c AS (SELECT doc_id,
         |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
         |             greatest(CAST(1 AS BIGINT),
@@ -360,11 +352,11 @@ object Analytics5 {
         |         - 84.6 * (n_syll / n_words) AS flesch,
         |       0.39 * (n_words / n_sents)
         |         + 11.8 * (n_syll / n_words) - 15.59 AS fk_grade
-        |FROM c""".stripMargin,
-    "agg_anova" ->
-      (s"""WITH g AS (${anovaGroups("orders")}),
+        |FROM c""".stripMargin),
+    QueryDef("agg_anova", aggAnova,
+      s"""WITH g AS (${anovaGroups("orders")}),
           |""".stripMargin + anovaCensus("g")),
-    "agg_benford" ->
+    QueryDef("agg_benford", aggBenford,
       """WITH d AS (SELECT CAST(substring(CAST(l_extendedprice AS VARCHAR), 1, 1) AS INT) AS digit
         |           FROM lineitem),
         |c AS (SELECT digit, count(*) AS n_obs FROM d GROUP BY digit),
@@ -375,5 +367,5 @@ object Analytics5 {
         |       (n_obs - n * log10(1.0 + 1.0 / digit))
         |         * (n_obs - n * log10(1.0 + 1.0 / digit))
         |         / (n * log10(1.0 + 1.0 / digit)) AS chi2_term
-        |FROM w""".stripMargin)
+        |FROM w""".stripMargin))
 }

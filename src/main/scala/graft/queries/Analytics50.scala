@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AE: the normal-CDF pair — goodness-of-fit and
@@ -144,14 +145,11 @@ object Analytics50 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_anderson_darling" -> (aggAndersonDarling _),
-    "etl_stock_black_scholes" -> (etlStockBlackScholes _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_anderson_darling" -> ("WITH " + adSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "etl_stock_black_scholes" ->
-      ("WITH cleaned AS (" + graft.etl.StockEtl.duckdbEtlSql + "),\n" +
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_anderson_darling", aggAndersonDarling,
+      "WITH " + adSql("orders",
+        "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
+    QueryDef("etl_stock_black_scholes", etlStockBlackScholes,
+      "WITH cleaned AS (" + graft.etl.StockEtl.duckdbEtlSql + "),\n" +
         graft.etl.StockEtl.barsCteFor("cleaned") + ",\n" + bsBody))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AF: behavioral predictability, experiment design,
@@ -180,13 +181,11 @@ object Analytics51 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_markov_entropy" -> (eventsMarkovEntropy _),
-    "agg_power_twoprop" -> (aggPowerTwoprop _),
-    "agg_energy_distance" -> (aggEnergyDistance _))
-
-  val oracle: Map[String, String] = Map(
-    "events_markov_entropy" -> ("WITH " + markovEntropySql("events")),
-    "agg_power_twoprop" -> ("WITH " + powerSql("events")),
-    "agg_energy_distance" -> ("WITH " + energySql("events")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("events_markov_entropy", eventsMarkovEntropy,
+      "WITH " + markovEntropySql("events")),
+    QueryDef("agg_power_twoprop", aggPowerTwoprop,
+      "WITH " + powerSql("events")),
+    QueryDef("agg_energy_distance", aggEnergyDistance,
+      "WITH " + energySql("events")))
 }

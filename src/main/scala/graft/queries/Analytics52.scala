@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AG: distribution-free prediction intervals and the
@@ -140,14 +141,11 @@ object Analytics52 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_conformal_interval" -> (aggConformalInterval _),
-    "etl_stock_pairs_spread" -> (etlStockPairsSpread _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_conformal_interval" -> ("WITH " + conformalSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "etl_stock_pairs_spread" ->
-      ("WITH cleaned AS (" + graft.etl.StockEtl.duckdbEtlSql + "),\n" +
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_conformal_interval", aggConformalInterval,
+      "WITH " + conformalSql("orders",
+        "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
+    QueryDef("etl_stock_pairs_spread", etlStockPairsSpread,
+      "WITH cleaned AS (" + graft.etl.StockEtl.duckdbEtlSql + "),\n" +
         graft.etl.StockEtl.barsCteFor("cleaned") + ",\n" + pairsBody))
 }

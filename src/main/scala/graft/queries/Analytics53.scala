@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AH: resampling-without-randomness and lead/lag
@@ -129,12 +130,9 @@ object Analytics53 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_jackknife_ratio" -> (aggJackknifeRatio _),
-    "events_ccf" -> (eventsCcf _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_jackknife_ratio" -> ("WITH " + jackknifeSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "events_ccf" -> ccfOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_jackknife_ratio", aggJackknifeRatio,
+      "WITH " + jackknifeSql("orders",
+        "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
+    QueryDef("events_ccf", eventsCcf, ccfOracleSql))
 }

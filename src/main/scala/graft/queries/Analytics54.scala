@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AI: the PAIRED-test family, on week-over-week daily
@@ -145,15 +146,11 @@ object Analytics54 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_ttest_paired" -> (aggTtestPaired _),
-    "agg_wilcoxon_signed_rank" -> (aggWilcoxonSignedRank _),
-    "agg_sign_test" -> (aggSignTest _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_ttest_paired" -> ("WITH " + pairedTSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_ttest_paired", aggTtestPaired, "WITH " + pairedTSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "agg_wilcoxon_signed_rank" -> ("WITH " + wilcoxonSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "agg_sign_test" -> signOracleSql)
+    QueryDef("agg_wilcoxon_signed_rank", aggWilcoxonSignedRank,
+      "WITH " + wilcoxonSql("orders",
+        "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
+    QueryDef("agg_sign_test", aggSignTest, signOracleSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AJ: measurement-reliability statistics over the
@@ -106,11 +107,8 @@ object Analytics55 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_cronbach_alpha" -> (aggCronbachAlpha _),
-    "agg_icc" -> (aggIcc _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_cronbach_alpha" -> ("WITH " + cronbachSql("events")),
-    "agg_icc" -> ("WITH " + iccSql("events")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_cronbach_alpha", aggCronbachAlpha,
+      "WITH " + cronbachSql("events")),
+    QueryDef("agg_icc", aggIcc, "WITH " + iccSql("events")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AK: the regression-diagnostics suite around the
@@ -158,16 +159,12 @@ object Analytics56 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_breusch_pagan" -> (aggBreuschPagan _),
-    "agg_cooks_distance" -> (aggCooksDistance _),
-    "agg_vif" -> (aggVif _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_breusch_pagan" -> ("WITH " + bpSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_breusch_pagan", aggBreuschPagan, "WITH " + bpSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "agg_cooks_distance" -> ("WITH " + cooksSql("orders",
-      "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
-    "agg_vif" -> ("WITH " + vifSql("orders",
+    QueryDef("agg_cooks_distance", aggCooksDistance,
+      "WITH " + cooksSql("orders",
+        "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")),
+    QueryDef("agg_vif", aggVif, "WITH " + vifSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AL: two corpus-curation censuses.
@@ -88,11 +89,8 @@ object Analytics57 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_domain_cap" -> (llmDomainCap _),
-    "llm_vocab_coverage" -> (llmVocabCoverage _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_domain_cap" -> ("WITH " + domainCapSql("documents")),
-    "llm_vocab_coverage" -> vocabCoverageOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_domain_cap", llmDomainCap,
+      "WITH " + domainCapSql("documents")),
+    QueryDef("llm_vocab_coverage", llmVocabCoverage, vocabCoverageOracleSql))
 }

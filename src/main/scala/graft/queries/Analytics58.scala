@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AM: distributional EDA and classic SPC.
@@ -108,12 +109,8 @@ object Analytics58 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_qq_two_sample" -> (aggQqTwoSample _),
-    "agg_xbar_r_chart" -> (aggXbarRChart _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_qq_two_sample" -> qqOracleSql,
-    "agg_xbar_r_chart" -> ("WITH " + xbarSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_qq_two_sample", aggQqTwoSample, qqOracleSql),
+    QueryDef("agg_xbar_r_chart", aggXbarRChart, "WITH " + xbarSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))
 }

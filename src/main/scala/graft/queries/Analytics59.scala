@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AN: the density/distribution curve pair over daily
@@ -101,11 +102,7 @@ object Analytics59 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_kde" -> (aggKde _),
-    "agg_ecdf" -> (aggEcdf _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_kde" -> kdeOracleSql,
-    "agg_ecdf" -> ecdfOracleSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_kde", aggKde, kdeOracleSql),
+    QueryDef("agg_ecdf", aggEcdf, ecdfOracleSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -209,16 +210,8 @@ object Analytics6 {
        |       CAST(s.max_us AS DOUBLE) / 1000000.0 AS max_gap_s
        |FROM s JOIN med ON s.event_type = med.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_kalman" -> (winKalman _),
-    "agg_levene" -> (aggLevene _),
-    "graph_assortativity" -> (graphAssortativity _),
-    "text_sentiment" -> (textSentiment _),
-    "agg_gumbel_fit" -> (aggGumbelFit _),
-    "events_interarrival" -> (eventsInterarrival _))
-
-  val oracle: Map[String, String] = Map(
-    "win_kalman" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_kalman", winKalman,
       """WITH RECURSIVE
         |v AS (SELECT user_id,
         |        row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS i,
@@ -235,20 +228,20 @@ object Analytics6 {
         |  FROM f JOIN v ON v.user_id = f.user_id AND v.i = f.i + 1)
         |SELECT f.user_id, CAST(n.n AS BIGINT) AS n_events, f.x AS kf_level,
         |       f.p AS kf_var, f.k AS kf_gain
-        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin,
-    "agg_levene" ->
-      ("""WITH r AS (SELECT o_orderpriority AS grp, o_totalprice / 100000.0 AS x,
+        |FROM f JOIN n ON n.user_id = f.user_id WHERE f.i = n.n""".stripMargin),
+    QueryDef("agg_levene", aggLevene,
+      """WITH r AS (SELECT o_orderpriority AS grp, o_totalprice / 100000.0 AS x,
          |             row_number() OVER (PARTITION BY o_orderpriority
          |                                ORDER BY o_totalprice / 100000.0) AS rn,
          |             count(*) OVER (PARTITION BY o_orderpriority) AS n
          |           FROM orders),
          |""".stripMargin + leveneCensus("r", "//")),
-    "graph_assortativity" ->
-      ("""WITH e AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
+    QueryDef("graph_assortativity", graphAssortativity,
+      """WITH e AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
          |           FROM lineitem),
          |""".stripMargin +
         assortCensus("e").replaceFirst("WITH ", "")),
-    "text_sentiment" ->
+    QueryDef("text_sentiment", textSentiment,
       s"""WITH c AS (SELECT doc_id,
          |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
          |             CAST(list_sum(list_transform(string_split(text, ' '),
@@ -258,10 +251,10 @@ object Analytics6 {
          |       CAST(sent_sum AS DOUBLE) / n_tokens AS sent_mean,
          |       CASE WHEN sent_sum > 0 THEN 'pos' WHEN sent_sum < 0 THEN 'neg'
          |            ELSE 'neu' END AS sent_label
-         |FROM c""".stripMargin,
-    "agg_gumbel_fit" -> gumbelSql("events"),
-    "events_interarrival" ->
-      ("""WITH gaps0 AS (SELECT event_type,
+         |FROM c""".stripMargin),
+    QueryDef("agg_gumbel_fit", aggGumbelFit, gumbelSql("events")),
+    QueryDef("events_interarrival", eventsInterarrival,
+      """WITH gaps0 AS (SELECT event_type,
          |         epoch_us(ts) - lag(epoch_us(ts))
          |           OVER (PARTITION BY user_id, event_type
          |                 ORDER BY epoch_us(ts), event_id) AS gap

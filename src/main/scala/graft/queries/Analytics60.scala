@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AO: decomposable inequality and retention decay.
@@ -118,12 +119,10 @@ object Analytics60 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_theil_decomposition" -> (aggTheilDecomposition _),
-    "events_retention_halflife" -> (eventsRetentionHalflife _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_theil_decomposition" -> ("WITH " + theilSql("orders")),
-    "events_retention_halflife" -> ("WITH " + halflifeSql("events",
-      ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_theil_decomposition", aggTheilDecomposition,
+      "WITH " + theilSql("orders")),
+    QueryDef("events_retention_halflife", eventsRetentionHalflife,
+      "WITH " + halflifeSql("events",
+        ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")))
 }

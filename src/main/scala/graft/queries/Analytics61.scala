@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AP: repeated-measures tests over the user ×
@@ -109,11 +110,7 @@ object Analytics61 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_friedman" -> (aggFriedman _),
-    "agg_cochran_q" -> (aggCochranQ _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_friedman" -> ("WITH " + friedmanSql("events")),
-    "agg_cochran_q" -> ("WITH " + cochranSql("events")))
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_friedman", aggFriedman, "WITH " + friedmanSql("events")),
+    QueryDef("agg_cochran_q", aggCochranQ, "WITH " + cochranSql("events")))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Round-11 batch AQ: method-of-moments distribution fitting — the
@@ -80,12 +81,8 @@ object Analytics62 {
 
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_beta_fit" -> (aggBetaFit _),
-    "agg_negbin_fit" -> (aggNegbinFit _))
-
-  val oracle: Map[String, String] = Map(
-    "agg_beta_fit" -> ("WITH " + betaSql("lineitem")),
-    "agg_negbin_fit" -> ("WITH " + negbinSql("orders",
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_beta_fit", aggBetaFit, "WITH " + betaSql("lineitem")),
+    QueryDef("agg_negbin_fit", aggNegbinFit, "WITH " + negbinSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))
 }

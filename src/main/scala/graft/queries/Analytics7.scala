@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -186,23 +187,16 @@ object Analytics7 {
       .filter(col("rnk") <= 20)
       .select(col("rnk"), col("pair"), col("cnt"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_rsi" -> (winRsi _),
-    "win_bollinger" -> (winBollinger _),
-    "win_drawdown" -> (winDrawdown _),
-    "agg_runs_test" -> (aggRunsTest _),
-    "llm_bpe_pairs" -> (llmBpePairs _))
-
-  val oracle: Map[String, String] = Map(
-    "win_rsi" -> rsiSql("events"),
-    "win_bollinger" -> bollingerSql("events"),
-    "win_drawdown" -> drawdownSql("events"),
-    "agg_runs_test" ->
-      ("""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("win_rsi", winRsi, rsiSql("events")),
+    QueryDef("win_bollinger", winBollinger, bollingerSql("events")),
+    QueryDef("win_drawdown", winDrawdown, drawdownSql("events")),
+    QueryDef("agg_runs_test", aggRunsTest,
+      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
          |                 CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y
          |               FROM orders GROUP BY 1),
          |""".stripMargin + runsCensus("daily", "//")),
-    "llm_bpe_pairs" ->
+    QueryDef("llm_bpe_pairs", llmBpePairs,
       """WITH t AS (SELECT string_split(text, ' ') AS ts FROM documents
         |           WHERE len(string_split(text, ' ')) >= 2),
         |p AS (SELECT unnest(list_transform(range(1, len(ts)),
@@ -211,5 +205,5 @@ object Analytics7 {
         |r AS (SELECT row_number() OVER (ORDER BY cnt DESC, pair) AS rnk,
         |             pair, cnt FROM c)
         |SELECT CAST(rnk AS BIGINT) AS rnk, pair, CAST(cnt AS BIGINT) AS cnt
-        |FROM r WHERE rnk <= 20""".stripMargin)
+        |FROM r WHERE rnk <= 20""".stripMargin))
 }

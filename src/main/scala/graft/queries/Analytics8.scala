@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -153,14 +154,8 @@ object Analytics8 {
        |         / (CAST(t.st AS DOUBLE) / t.nt) AS seasonality_idx
        |FROM g CROSS JOIN t""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_quality_logit" -> (llmQualityLogit _),
-    "llm_dsir_weights" -> (llmDsirWeights _),
-    "win_sharpe" -> (winSharpe _),
-    "agg_seasonality" -> (aggSeasonality _))
-
-  val oracle: Map[String, String] = Map(
-    "llm_quality_logit" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_quality_logit", llmQualityLogit,
       """WITH d AS (SELECT doc_id, n_chars, string_split(text, ' ') AS ts
         |           FROM documents),
         |f AS (SELECT doc_id,
@@ -181,15 +176,15 @@ object Analytics8 {
         |         - 2.5 * stop_ratio - 0.1 * mean_word_len))) AS quality_score,
         |       1.0 / (1.0 + exp(-(-1.5 + 0.02 * n_words + 1.8 * uniq_ratio
         |         - 2.5 * stop_ratio - 0.1 * mean_word_len))) >= 0.5 AS keep
-        |FROM z""".stripMargin,
-    "llm_dsir_weights" ->
-      ("""WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
+        |FROM z""".stripMargin),
+    QueryDef("llm_dsir_weights", llmDsirWeights,
+      """WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
          |              FROM documents),
          |""".stripMargin +
         dsirCensus("toks").replaceFirst("WITH ", "")),
-    "win_sharpe" -> sharpeSql("events"),
-    "agg_seasonality" ->
-      ("""WITH daily AS (SELECT dayofweek(CAST(o_orderdate AS DATE)) AS dow,
+    QueryDef("win_sharpe", winSharpe, sharpeSql("events")),
+    QueryDef("agg_seasonality", aggSeasonality,
+      """WITH daily AS (SELECT dayofweek(CAST(o_orderdate AS DATE)) AS dow,
          |                 sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS y
          |               FROM orders GROUP BY CAST(o_orderdate AS DATE)),
          |""".stripMargin +

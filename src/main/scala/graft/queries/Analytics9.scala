@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -135,14 +136,9 @@ object Analytics9 {
        |       (std_s - mean_s) / (std_s + mean_s) AS burstiness
        |FROM d""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_clustering" -> (graphClustering _),
-    "agg_jarque_bera" -> (aggJarqueBera _),
-    "events_burstiness" -> (eventsBurstiness _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_clustering" ->
-      ("""WITH pairs AS MATERIALIZED (
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("graph_clustering", graphClustering,
+      """WITH pairs AS MATERIALIZED (
          |  SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
          |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
          |    JOIN customer c ON o.o_custkey = c.c_custkey
@@ -155,6 +151,7 @@ object Analytics9 {
          |""".stripMargin +
         clusteringCensus("und")
           .replaceFirst("edges AS \\(", "edges AS MATERIALIZED (")),
-    "agg_jarque_bera" -> jbSql("orders"),
-    "events_burstiness" -> burstSql("events", "epoch_us(ts)"))
+    QueryDef("agg_jarque_bera", aggJarqueBera, jbSql("orders")),
+    QueryDef("events_burstiness", eventsBurstiness,
+      burstSql("events", "epoch_us(ts)")))
 }

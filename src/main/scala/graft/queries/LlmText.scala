@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.core.CkptTap._
 
@@ -1603,52 +1604,6 @@ object LlmText {
         nDistinct("doc_b").as("n_docs_right"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_threshold_sweep" -> (dedupThresholdSweep _),
-    "llm_dataset_card" -> (datasetCard _),
-    "llm_stage_index" -> (stageIndex _),
-    "llm_inverted_index" -> (invertedIndex _),
-    "llm_minhash_recall" -> (minhashRecall _),
-    "llm_minhash_recall_sampled" -> (minhashRecallSampled _),
-    "llm_substring_runs" -> (substringRuns _),
-    "llm_substring_dedup" -> (substringDedupApply _),
-    "llm_substring_exact" -> (substringExact _),
-    "text_containment" -> (textContainment _),
-    "llm_exact_dedup" -> (exactDedup _),
-    "llm_minhash_sigs" -> (minhashSignatures _),
-    "llm_minhash_neardup" -> (minhashNearDup _),
-    "llm_ngram_jaccard" -> (ngramJaccard _),
-    "llm_simhash" -> (simhash _),
-    "llm_simhash_neardup" -> (simhashNearDup _),
-    "llm_dedup_clusters" -> (dedupClusters _),
-    "llm_dedup_apply" -> (dedupApply _),
-    "llm_cc_altstar" -> (dedupClusters _),
-    "llm_tfidf" -> (tfidf _),
-    "llm_bm25" -> (bm25 _),
-    "llm_ngram_lm" -> (ngramLm _),
-    "llm_feature_hashing" -> (featureHashing _),
-    "text_pii_mask" -> (piiMask _),
-    "llm_stratified_split" -> (stratifiedSplit _),
-    "llm_vocab" -> (vocab _),
-    "llm_decontaminate" -> (decontaminate _),
-    "llm_length_filter" -> (lengthFilter _),
-    "llm_dedup_stats" -> (dedupStats _),
-    "llm_pipeline_e2e" -> (pipelineE2e _),
-    "text_repetition" -> (textRepetition _),
-    "llm_segment_dedup" -> (segmentDedup _),
-    "llm_oov_rate" -> (oovRate _),
-    "llm_incremental_dedup" -> (incrementalDedup _),
-    "llm_train_shards" -> (trainShards _),
-    "llm_seq_pack" -> (seqPack _),
-    "llm_weighted_sample" -> (weightedSample _),
-    "llm_corpus_mix" -> (corpusMix _),
-    "text_tokens" -> (textTokens _),
-    "text_quality" -> (textQuality _),
-    "text_langid" -> (textLangid _),
-    "text_fingerprint" -> (textFingerprint _),
-    "llm_cross_source_overlap" -> (crossSourceOverlap _),
-    "llm_contrastive_pairs" -> (contrastivePairs _))
-
   // Shared oracle CTE fragments (DuckDB dialect).
   private val shingleCte =
     """d AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
@@ -1759,8 +1714,8 @@ object LlmText {
       |    + instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
       |    + instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) / 65536.0""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "llm_dedup_threshold_sweep" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_dedup_threshold_sweep", dedupThresholdSweep,
       s"""WITH $shingleCte,
          |$minhashPairCtes,
          |thr AS (SELECT i / 10.0 AS thr FROM (
@@ -1769,49 +1724,20 @@ object LlmText {
          |  COUNT(DISTINCT p.doc_a) AS n_docs_left,
          |  COUNT(DISTINCT p.doc_b) AS n_docs_right
          |FROM thr JOIN pairs p ON p.jaccard >= thr.thr
-         |GROUP BY thr.thr""".stripMargin,
-    "llm_cross_source_overlap" ->
-      s"""WITH $shingleCte,
-         |$minhashPairCtes,
-         |j AS (SELECT least(da.source, db.source) AS source_a,
-         |        greatest(da.source, db.source) AS source_b, p.jaccard
-         |      FROM pairs p
-         |      JOIN documents da ON da.doc_id = p.doc_a
-         |      JOIN documents db ON db.doc_id = p.doc_b)
-         |SELECT source_a, source_b, COUNT(*) AS n_pairs,
-         |  ROUND(AVG(jaccard), 6) AS mean_jaccard
-         |FROM j GROUP BY source_a, source_b""".stripMargin,
-    "llm_contrastive_pairs" ->
-      s"""WITH $shingleCte,
-         |$minhashPairCtes,
-         |bo AS (SELECT doc_a AS anchor, doc_b AS partner, jaccard
-         |       FROM pairs
-         |       UNION ALL
-         |       SELECT doc_b, doc_a, jaccard FROM pairs),
-         |pos AS (SELECT anchor, partner AS positive, jaccard AS jaccard_pos,
-         |          row_number() OVER (PARTITION BY anchor
-         |            ORDER BY jaccard DESC, partner) AS rn
-         |        FROM bo),
-         |p1 AS (SELECT anchor, positive, jaccard_pos FROM pos WHERE rn = 1),
-         |cand AS (SELECT doc_id AS cand FROM documents WHERE doc_id < 64),
-         |negc AS (SELECT p.anchor, c.cand,
-         |           md5(CAST(p.anchor AS VARCHAR) || ':' ||
-         |               CAST(c.cand AS VARCHAR)) AS h
-         |         FROM p1 p CROSS JOIN cand c
-         |         WHERE c.cand <> p.anchor
-         |           AND NOT EXISTS (SELECT 1 FROM bo b
-         |             WHERE b.anchor = p.anchor AND b.partner = c.cand)),
-         |neg AS (SELECT anchor, cand AS negative,
-         |          row_number() OVER (PARTITION BY anchor
-         |            ORDER BY h, cand) AS rn
-         |        FROM negc)
-         |SELECT p1.anchor, p1.positive, n.negative, p1.jaccard_pos
-         |FROM p1 JOIN neg n ON n.anchor = p1.anchor AND n.rn = 1""".stripMargin,
+         |GROUP BY thr.thr""".stripMargin),
+    QueryDef("llm_dataset_card", datasetCard,
+      """SELECT source, COUNT(*) AS n_docs,
+        |  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
+        |  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
+        |  COUNT(DISTINCT lang) AS n_langs,
+        |  1.0 - COUNT(DISTINCT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))))
+        |        * 1.0 / COUNT(*) AS dup_ratio
+        |FROM documents GROUP BY source""".stripMargin),
     // Staging cardinalities: the clusters/pairs counts reuse the full
     // near-dup pipeline CTEs (flattened single WITH RECURSIVE list —
     // DuckDB rejects a WITH inside a derived-table subquery); the
     // shingle counts fall straight out of the d/sh CTEs.
-    "llm_stage_index" -> {
+    QueryDef("llm_stage_index", stageIndex, {
       val prefix = dedupClustersSql.substring(0,
         dedupClustersSql.indexOf("SELECT node AS doc_id"))
       prefix.trim + ",\n" +
@@ -1828,352 +1754,8 @@ object LlmText {
           |               AS BIGINT) FROM d)
           |UNION ALL SELECT 'shingle_set',
           |       (SELECT COUNT(*) FROM sh)""".stripMargin
-    },
-    "llm_dedup_clusters" -> dedupClustersSql,
-    // identical clustering through a different distributed algorithm —
-    // the oracle is the same recursive-reachability SQL
-    "llm_cc_altstar" -> dedupClustersSql,
-    "llm_dedup_apply" -> dedupApplySql,
-    "llm_dedup_stats" -> {
-      val prefix = dedupClustersSql.substring(0,
-        dedupClustersSql.indexOf("SELECT node AS doc_id"))
-      prefix.trim + ",\n" +
-        """dropped AS MATERIALIZED (SELECT node FROM reach GROUP BY node HAVING MIN(r) <> node)
-          |SELECT d.source, COUNT(*) AS n_docs,
-          |  CAST(SUM(CASE WHEN d.doc_id IN (SELECT node FROM dropped)
-          |           THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-          |  CAST(SUM(CASE WHEN d.doc_id IN (SELECT node FROM dropped)
-          |           THEN 0 ELSE 1 END) AS BIGINT) AS n_kept
-          |FROM documents d GROUP BY d.source""".stripMargin
-    },
-    "llm_pipeline_e2e" -> {
-      val prefix = dedupClustersSql.substring(0,
-        dedupClustersSql.indexOf("SELECT node AS doc_id"))
-      prefix.trim + ",\n" +
-        s"""dropped AS MATERIALIZED (SELECT node FROM reach GROUP BY node HAVING MIN(r) <> node),
-           |b AS (SELECT quantile_cont(n_chars, 0.05) AS lo,
-           |        quantile_cont(n_chars, 0.95) AS hi FROM documents),
-           |kept AS (SELECT doc_id, source,
-           |           len(string_split(text, ' ')) AS n_tokens,
-           |           CASE WHEN $uSql < 0.8 THEN 'train'
-           |                WHEN $uSql < 0.9 THEN 'val'
-           |                ELSE 'test' END AS split
-           |         FROM documents CROSS JOIN b
-           |         WHERE n_chars >= lo AND n_chars <= hi
-           |           AND doc_id NOT IN (SELECT node FROM dropped))
-           |SELECT source, split, COUNT(*) AS n_docs,
-           |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-           |FROM kept GROUP BY source, split""".stripMargin
-    },
-    "llm_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
-        |       WHERE doc_id < 20 GROUP BY 1, 2),
-        |dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |sc AS (SELECT doc_id, tf.term AS term, tf,
-        |         tf * LN((n_docs + 1.0) / (df + 1.0)) AS tfidf_raw
-        |       FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
-        |r AS (SELECT doc_id, term, tf, tfidf_raw,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-        |             ORDER BY tfidf_raw DESC, term) AS BIGINT) AS rnk
-        |      FROM sc)
-        |SELECT doc_id, rnk, term, tf, ROUND(tfidf_raw, 4) AS tfidf
-        |FROM r WHERE rnk <= 3""".stripMargin,
-    "llm_bm25" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
-        |       WHERE doc_id < 20 GROUP BY 1, 2),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1),
-        |avgd AS (SELECT CAST(SUM(dl) AS DOUBLE)/COUNT(*) AS avgdl FROM dl),
-        |dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |sc AS (SELECT tf.doc_id, tf.term AS term, tf,
-        |         LN(1.0 + (n_docs - df + 0.5)/(df + 0.5))
-        |           * (tf * (1.2 + 1.0))
-        |           / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl)) AS score_raw
-        |       FROM tf JOIN dfreq ON tf.term = dfreq.term
-        |       JOIN dl ON tf.doc_id = dl.doc_id
-        |       CROSS JOIN n CROSS JOIN avgd),
-        |r AS (SELECT doc_id, term, tf, score_raw,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-        |             ORDER BY score_raw DESC, term) AS BIGINT) AS rnk
-        |      FROM sc)
-        |SELECT doc_id, rnk, term, tf, ROUND(score_raw, 4) AS bm25
-        |FROM r WHERE rnk <= 3""".stripMargin,
-    "llm_feature_hashing" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |             FROM documents WHERE doc_id < 30)
-        |SELECT doc_id,
-        |  CAST('0x' || substr(md5(term), 1, 4) AS BIGINT) % 32 AS bucket,
-        |  COUNT(*) AS cnt
-        |FROM tok GROUP BY 1, 2""".stripMargin,
-    "llm_ngram_lm" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_transform(range(len(t)-1),
-        |         i -> struct_pack(w1 := t[i+1], w2 := t[i+2]))) AS b
-        |       FROM d WHERE len(t) >= 2),
-        |bi AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
-        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM bi GROUP BY 1, 2),
-        |tok AS (SELECT unnest(t) AS term FROM d),
-        |c1 AS (SELECT term, COUNT(*) AS c1 FROM tok GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT term) AS v FROM tok)
-        |SELECT bi.doc_id, COUNT(*) AS n_bigrams,
-        |  ROUND(AVG(LN((c2 + 0.5)/(c1 + 0.5*v))), 6) AS score
-        |FROM bi JOIN c2 USING (w1, w2) JOIN c1 ON bi.w1 = c1.term
-        |CROSS JOIN v
-        |WHERE bi.doc_id < 50 GROUP BY bi.doc_id""".stripMargin,
-    "llm_train_shards" ->
-      """WITH d AS (SELECT CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
-        |                  AS BIGINT) % 16 AS shard,
-        |             len(string_split(text, ' ')) AS n_tokens
-        |           FROM documents),
-        |ps AS (SELECT shard, COUNT(*) AS n_docs,
-        |         CAST(SUM(n_tokens) AS BIGINT) AS shard_tokens
-        |       FROM d GROUP BY shard),
-        |m AS (SELECT SUM(shard_tokens) / CAST(COUNT(*) AS DOUBLE) AS mean_tokens
-        |      FROM ps)
-        |SELECT shard, n_docs, shard_tokens,
-        |  shard_tokens / mean_tokens AS skew
-        |FROM ps CROSS JOIN m""".stripMargin,
-    "llm_incremental_dedup" ->
-      s"""WITH $shingleCte,
-         |side AS (SELECT doc_id, CAST(SUBSTR(source, 4) AS INT) < 10 AS ex
-         |         FROM documents),
-         |norm AS (SELECT doc_id,
-         |           md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
-         |         FROM documents),
-         |exdrop AS (SELECT n.doc_id FROM norm n JOIN side s USING (doc_id)
-         |           WHERE NOT s.ex AND n.h IN
-         |             (SELECT h FROM norm JOIN side USING (doc_id) WHERE ex)),
-         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh),
-         |sigs AS (SELECT doc_id, band,
-         |           MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
-         |                      CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
-         |         FROM bands GROUP BY doc_id, band),
-         |insigs AS (SELECT g.doc_id, band, sig FROM sigs g JOIN side s USING (doc_id)
-         |           WHERE NOT s.ex
-         |             AND g.doc_id NOT IN (SELECT doc_id FROM exdrop)),
-         |exsigs AS (SELECT g.doc_id, band, sig FROM sigs g JOIN side s USING (doc_id)
-         |           WHERE s.ex),
-         |cands AS (SELECT DISTINCT i.doc_id AS doc_a, e.doc_id AS doc_b
-         |          FROM insigs i JOIN exsigs e
-         |            ON i.band = e.band AND i.sig = e.sig),
-         |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-         |          FROM cands c
-         |          JOIN sh a ON a.doc_id = c.doc_a
-         |          JOIN sh b ON b.doc_id = c.doc_b AND a.sh = b.sh
-         |          GROUP BY c.doc_a, c.doc_b),
-         |near AS (SELECT DISTINCT i.doc_a AS doc_id
-         |         FROM inter i JOIN sizes za ON i.doc_a = za.doc_id
-         |         JOIN sizes zb ON i.doc_b = zb.doc_id
-         |         WHERE i.n_inter
-         |           / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.5)
-         |SELECT source, COUNT(*) AS n_in,
-         |  CAST(SUM(CASE WHEN doc_id IN (SELECT doc_id FROM exdrop)
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_dup,
-         |  CAST(SUM(CASE WHEN doc_id IN (SELECT doc_id FROM near)
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_near_dup,
-         |  CAST(SUM(CASE WHEN doc_id NOT IN (SELECT doc_id FROM exdrop)
-         |                 AND doc_id NOT IN (SELECT doc_id FROM near)
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-         |FROM documents JOIN side USING (doc_id)
-         |WHERE NOT ex GROUP BY source""".stripMargin,
-    "llm_segment_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |b AS (SELECT doc_id, t, CAST(len(t) // 10 AS INT) AS n_full
-        |      FROM d WHERE len(t) // 10 >= 1),
-        |segs AS (SELECT doc_id,
-        |           unnest(list_transform(range(n_full),
-        |             i -> md5(array_to_string(t[i*10+1 : i*10+10], ' ')))) AS h
-        |         FROM b),
-        |freq AS (SELECT h, COUNT(DISTINCT doc_id) AS n_docs
-        |         FROM segs GROUP BY h)
-        |SELECT s.doc_id, COUNT(*) AS n_segments,
-        |  CAST(SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_boilerplate,
-        |  CAST((COUNT(*) - SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END))
-        |       * 10 AS BIGINT) AS tokens_kept
-        |FROM segs s JOIN freq f USING (h)
-        |GROUP BY s.doc_id""".stripMargin,
-    "llm_oov_rate" ->
-      """WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |bst AS (SELECT source, term, COUNT(*) AS c
-        |        FROM tok GROUP BY source, term),
-        |top AS (SELECT term FROM (
-        |          SELECT term, SUM(c) AS tot,
-        |            ROW_NUMBER() OVER (ORDER BY SUM(c) DESC, term) AS rk
-        |          FROM bst GROUP BY term)
-        |        WHERE rk <= 20)
-        |SELECT source,
-        |  CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN term IN (SELECT term FROM top) THEN c
-        |           ELSE 0 END) AS BIGINT) AS n_covered,
-        |  1.0 - SUM(CASE WHEN term IN (SELECT term FROM top) THEN c
-        |            ELSE 0 END) / CAST(SUM(c) AS DOUBLE) AS oov_rate
-        |FROM bst
-        |GROUP BY source""".stripMargin,
-    "text_repetition" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id,
-        |         list_transform(range(greatest(len(t) - 2, 0)),
-        |           i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]) AS s
-        |       FROM d)
-        |SELECT doc_id, len(s) AS n_shingles,
-        |  len(list_distinct(s)) AS n_distinct,
-        |  CASE WHEN len(s) > 0
-        |       THEN 1.0 - len(list_distinct(s)) / CAST(len(s) AS DOUBLE)
-        |       ELSE 0.0 END AS rep_ratio
-        |FROM sh""".stripMargin,
-    "llm_seq_pack" ->
-      """WITH d AS (SELECT doc_id, source,
-        |             len(string_split(text, ' ')) AS n_tokens FROM documents),
-        |c AS (SELECT doc_id, source, n_tokens,
-        |        COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-        |          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS tokens_before
-        |      FROM d)
-        |SELECT source, CAST(FLOOR(tokens_before / 2048) AS BIGINT) AS pack_id,
-        |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
-        |FROM c GROUP BY 1, 2""".stripMargin,
-    "llm_stratified_split" ->
-      s"""WITH d AS (SELECT source, n_chars, $uSql AS u FROM documents)
-         |SELECT source,
-         |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-         |       ELSE 'test' END AS split,
-         |  COUNT(*) AS n_docs,
-         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-         |FROM d GROUP BY 1, 2""".stripMargin,
-    // the oracle joins on the shingle STRINGS; the engine joins on their
-    // xxhash64 — equivalent counts absent 2^-64 collisions
-    "llm_decontaminate" ->
-      s"""WITH d AS (SELECT doc_id, text, $uSql AS u FROM documents),
-         |sp AS (SELECT doc_id,
-         |         CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-         |              ELSE 'test' END AS split,
-         |         string_split(text, ' ') AS t
-         |       FROM d),
-         |sh AS (SELECT DISTINCT doc_id, split,
-         |         unnest(list_transform(range(greatest(len(t) - 2, 0)),
-         |                i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-         |       FROM sp),
-         |tr AS (SELECT DISTINCT sh FROM sh WHERE split = 'train')
-         |SELECT s.doc_id, COUNT(*) AS n_overlap
-         |FROM sh s JOIN tr ON s.sh = tr.sh
-         |WHERE s.split = 'test'
-         |GROUP BY s.doc_id""".stripMargin,
-    "llm_length_filter" ->
-      """WITH b AS (SELECT quantile_cont(n_chars, 0.05) AS lo,
-        |             quantile_cont(n_chars, 0.95) AS hi FROM documents)
-        |SELECT source, (n_chars >= lo AND n_chars <= hi) AS keep,
-        |  COUNT(*) AS n_docs
-        |FROM documents CROSS JOIN b
-        |GROUP BY 1, 2""".stripMargin,
-    "llm_vocab" ->
-      """WITH tok AS (SELECT DISTINCT doc_id,
-        |               unnest(string_split(text, ' ')) AS term
-        |             FROM documents),
-        |df AS (SELECT term, COUNT(*) AS df FROM tok GROUP BY 1),
-        |r AS (SELECT term, df,
-        |        CAST(ROW_NUMBER() OVER (ORDER BY df DESC, term) AS BIGINT) AS rank
-        |      FROM df)
-        |SELECT term, df, rank FROM r WHERE rank <= 40""".stripMargin,
-    "text_pii_mask" ->
-      """SELECT event_id,
-        |  regexp_replace(
-        |    regexp_replace(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+',
-        |                   '<email>', 'g'),
-        |    '[0-9]+', '<num>', 'g') AS masked_props,
-        |  len(regexp_extract_all(props, '[0-9]+')) AS n_redacted
-        |FROM events""".stripMargin,
-    "llm_weighted_sample" ->
-      s"""WITH u AS (SELECT doc_id, source, n_chars, $uSql AS u FROM documents),
-         |k AS (SELECT source, doc_id, pow(u, 1.0 / n_chars) AS skey,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY source
-         |          ORDER BY pow(u, 1.0 / n_chars) DESC, doc_id) AS BIGINT) AS rnk
-         |      FROM u)
-         |SELECT source, rnk, doc_id, ROUND(skey, 6) AS skey
-         |FROM k WHERE rnk <= 5""".stripMargin,
-    "llm_corpus_mix" ->
-      """WITH tw AS (SELECT SUM(CASE WHEN source = 'src0' THEN 2.0 ELSE 1.0 END) AS total_w
-        |            FROM (SELECT DISTINCT source FROM documents)),
-        |d AS (SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
-        |      FROM documents),
-        |c AS (SELECT doc_id, source, n_tokens,
-        |        SUM(n_tokens) OVER (PARTITION BY source
-        |          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-        |          ROWS UNBOUNDED PRECEDING) AS cum_tokens
-        |      FROM d)
-        |SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS tokens_used
-        |FROM c CROSS JOIN tw
-        |WHERE cum_tokens <= 20000.0 * (CASE WHEN source = 'src0' THEN 2.0 ELSE 1.0 END) / total_w
-        |GROUP BY source""".stripMargin,
-    "text_containment" ->
-      s"""WITH $shingleCte,
-         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |          FROM sh a JOIN sh b
-         |            ON a.source = b.source AND a.sh = b.sh
-         |           AND a.doc_id < b.doc_id),
-         |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-         |inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-         |          FROM cands c
-         |          JOIN sh sa ON sa.doc_id = c.doc_a
-         |          JOIN sh sb ON sb.doc_id = c.doc_b AND sa.sh = sb.sh
-         |          GROUP BY c.doc_a, c.doc_b)
-         |SELECT i.doc_a, i.doc_b, i.n_inter,
-         |       i.n_inter / za.n_sh AS cont_a,
-         |       i.n_inter / zb.n_sh AS cont_b
-         |FROM inter i JOIN sizes za ON i.doc_a = za.doc_id
-         |             JOIN sizes zb ON i.doc_b = zb.doc_id
-         |WHERE greatest(i.n_inter / za.n_sh, i.n_inter / zb.n_sh) >= 0.5""".stripMargin,
-    "llm_exact_dedup" ->
-      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS norm_md5,
-        |  MIN(doc_id) AS keeper_doc_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-    "llm_minhash_sigs" ->
-      s"""WITH $shingleCte,
-         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh)
-         |SELECT doc_id, CAST(band AS INT) AS band,
-         |  MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
-         |             CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
-         |FROM bands GROUP BY doc_id, band""".stripMargin,
-    "llm_minhash_neardup" ->
-      s"""WITH $shingleCte,
-         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh),
-         |sigs0 AS (SELECT doc_id, band,
-         |           MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
-         |                      CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
-         |         FROM bands GROUP BY doc_id, band),
-         |sigs AS (SELECT doc_id, band, sig FROM
-         |          (SELECT doc_id, band, sig,
-         |             COUNT(*) OVER (PARTITION BY band, sig) AS bucket_n
-         |           FROM sigs0) WHERE bucket_n <= $HotBucketCap),
-         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |          FROM sigs a JOIN sigs b
-         |            ON a.band = b.band AND a.sig = b.sig
-         |           AND a.doc_id < b.doc_id),
-         |$jaccardTail""".stripMargin,
-    "llm_ngram_jaccard" ->
-      s"""WITH $shingleCte,
-         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |          FROM sh a JOIN sh b
-         |            ON a.source = b.source AND a.sh = b.sh
-         |           AND a.doc_id < b.doc_id),
-         |$jaccardTail""".stripMargin,
-    "llm_dataset_card" ->
-      """SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-        |  COUNT(DISTINCT lang) AS n_langs,
-        |  1.0 - COUNT(DISTINCT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))))
-        |        * 1.0 / COUNT(*) AS dup_ratio
-        |FROM documents GROUP BY source""".stripMargin,
-    "llm_inverted_index" ->
+    }),
+    QueryDef("llm_inverted_index", invertedIndex,
       """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
         |             FROM documents),
         |tf AS (SELECT term, doc_id, COUNT(*) AS tf
@@ -2181,95 +1763,8 @@ object LlmText {
         |SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS total_tf,
         |       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
         |         AS postings
-        |FROM tf GROUP BY term""".stripMargin,
-    "llm_substring_runs" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |px AS (SELECT doc_id, t,
-        |         CAST(unnest(range(greatest(len(t) - 2, 0))) AS BIGINT) AS pos
-        |       FROM d),
-        |p AS (SELECT doc_id, pos,
-        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] AS sh
-        |      FROM px),
-        |dup AS (SELECT sh FROM (
-        |          SELECT sh, COUNT(DISTINCT doc_id) AS nd FROM p GROUP BY sh)
-        |        WHERE nd > 1),
-        |r AS (SELECT doc_id, pos,
-        |        pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |      FROM p JOIN dup USING (sh))
-        |SELECT doc_id, MIN(pos) AS run_start,
-        |  MAX(pos) - MIN(pos) + 3 AS run_tokens,
-        |  COUNT(*) AS n_shingles
-        |FROM r GROUP BY doc_id, grp
-        |HAVING MAX(pos) - MIN(pos) + 3 >= 5""".stripMargin,
-    "llm_substring_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |px AS (SELECT doc_id, t,
-        |         CAST(unnest(range(greatest(len(t) - 2, 0))) AS BIGINT) AS pos
-        |       FROM d),
-        |p AS (SELECT doc_id, pos,
-        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] AS sh
-        |      FROM px),
-        |dup AS (SELECT sh FROM (
-        |          SELECT sh, COUNT(DISTINCT doc_id) AS nd FROM p GROUP BY sh)
-        |        WHERE nd > 1),
-        |r AS (SELECT doc_id, pos,
-        |        pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-        |      FROM p JOIN dup USING (sh)),
-        |runs AS (SELECT doc_id, MIN(pos) AS run_start,
-        |           MAX(pos) - MIN(pos) + 3 AS run_tokens
-        |         FROM r GROUP BY doc_id, grp
-        |         HAVING MAX(pos) - MIN(pos) + 3 >= 5),
-        |dl AS (SELECT doc_id, list(dp) AS dps FROM (
-        |         SELECT doc_id, CAST(unnest(range(run_start,
-        |           run_start + run_tokens)) AS BIGINT) AS dp FROM runs)
-        |       GROUP BY doc_id),
-        |k AS (SELECT d.doc_id, d.t,
-        |        COALESCE(dl.dps, CAST([] AS BIGINT[])) AS dps
-        |      FROM d LEFT JOIN dl USING (doc_id)),
-        |kept AS (SELECT doc_id, len(t) AS n_before,
-        |           list_filter(list_transform(range(len(t)),
-        |             i -> CASE WHEN NOT list_contains(dps, i)
-        |                       THEN t[i+1] END),
-        |             x -> x IS NOT NULL) AS kt
-        |         FROM k)
-        |SELECT doc_id, n_before AS n_tokens_before,
-        |  len(kt) AS n_tokens_after,
-        |  -- array_to_string([]) is NULL in DuckDB but '' under Spark's
-        |  -- concat_ws — pin the fully-deduplicated-doc case
-        |  md5(COALESCE(array_to_string(kt, ' '), '')) AS cleaned_md5
-        |FROM kept""".stripMargin,
-    // Exact window-coverage cut: duplicated L=5 windows by TOTAL
-    // occurrence count (within-doc repeats count), each dup start
-    // covering its 5 positions; rebuild mirrors llm_substring_dedup.
-    "llm_substring_exact" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |px AS (SELECT doc_id, t,
-        |         CAST(unnest(range(greatest(len(t) - 4, 0))) AS BIGINT) AS pos
-        |       FROM d),
-        |g AS (SELECT doc_id, pos,
-        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] || ' ' ||
-        |        t[pos+4] || ' ' || t[pos+5] AS w
-        |      FROM px),
-        |dup AS (SELECT w FROM (SELECT w, COUNT(*) AS c FROM g GROUP BY w)
-        |        WHERE c > 1),
-        |cut AS (SELECT DISTINCT doc_id, g.pos + o.off AS cpos
-        |        FROM g JOIN dup USING (w)
-        |        CROSS JOIN (SELECT CAST(unnest(range(5)) AS BIGINT) AS off) o),
-        |dl AS (SELECT doc_id, list(cpos) AS dps FROM cut GROUP BY doc_id),
-        |k AS (SELECT d.doc_id, d.t,
-        |        COALESCE(dl.dps, CAST([] AS BIGINT[])) AS dps
-        |      FROM d LEFT JOIN dl USING (doc_id)),
-        |kept AS (SELECT doc_id, len(t) AS n_before,
-        |           list_filter(list_transform(range(len(t)),
-        |             i -> CASE WHEN NOT list_contains(dps, i)
-        |                       THEN t[i+1] END),
-        |             x -> x IS NOT NULL) AS kt
-        |         FROM k)
-        |SELECT doc_id, n_before AS n_tokens_before,
-        |  len(kt) AS n_tokens_after,
-        |  md5(COALESCE(array_to_string(kt, ' '), '')) AS cleaned_md5
-        |FROM kept""".stripMargin,
-    "llm_minhash_recall" ->
+        |FROM tf GROUP BY term""".stripMargin),
+    QueryDef("llm_minhash_recall", minhashRecall,
       s"""WITH $shingleCte,
          |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
          |-- n_inter in ONE streamed join+aggregate: the truth side must
@@ -2312,8 +1807,8 @@ object LlmText {
          |       (SELECT COUNT(*) FROM lsh) AS n_lsh,
          |       (SELECT COUNT(*) FROM hit) AS n_hit,
          |       (SELECT COUNT(*) FROM hit) * 1.0
-         |         / (SELECT COUNT(*) FROM truth) AS recall""".stripMargin,
-    "llm_minhash_recall_sampled" ->
+         |         / (SELECT COUNT(*) FROM truth) AS recall""".stripMargin),
+    QueryDef("llm_minhash_recall_sampled", minhashRecallSampled,
       s"""WITH $shingleCte,
          |$minhashPairCtes,
          |probes AS (SELECT doc_id FROM documents
@@ -2337,8 +1832,147 @@ object LlmText {
          |       (SELECT COUNT(*) FROM truth) AS n_truth,
          |       (SELECT COUNT(*) FROM hit) AS n_hit,
          |       (SELECT COUNT(*) FROM hit) * 1.0
-         |         / (SELECT COUNT(*) FROM truth) AS recall""".stripMargin,
-    "llm_simhash" ->
+         |         / (SELECT COUNT(*) FROM truth) AS recall""".stripMargin),
+    QueryDef("llm_substring_runs", substringRuns,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |px AS (SELECT doc_id, t,
+        |         CAST(unnest(range(greatest(len(t) - 2, 0))) AS BIGINT) AS pos
+        |       FROM d),
+        |p AS (SELECT doc_id, pos,
+        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] AS sh
+        |      FROM px),
+        |dup AS (SELECT sh FROM (
+        |          SELECT sh, COUNT(DISTINCT doc_id) AS nd FROM p GROUP BY sh)
+        |        WHERE nd > 1),
+        |r AS (SELECT doc_id, pos,
+        |        pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+        |      FROM p JOIN dup USING (sh))
+        |SELECT doc_id, MIN(pos) AS run_start,
+        |  MAX(pos) - MIN(pos) + 3 AS run_tokens,
+        |  COUNT(*) AS n_shingles
+        |FROM r GROUP BY doc_id, grp
+        |HAVING MAX(pos) - MIN(pos) + 3 >= 5""".stripMargin),
+    QueryDef("llm_substring_dedup", substringDedupApply,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |px AS (SELECT doc_id, t,
+        |         CAST(unnest(range(greatest(len(t) - 2, 0))) AS BIGINT) AS pos
+        |       FROM d),
+        |p AS (SELECT doc_id, pos,
+        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] AS sh
+        |      FROM px),
+        |dup AS (SELECT sh FROM (
+        |          SELECT sh, COUNT(DISTINCT doc_id) AS nd FROM p GROUP BY sh)
+        |        WHERE nd > 1),
+        |r AS (SELECT doc_id, pos,
+        |        pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+        |      FROM p JOIN dup USING (sh)),
+        |runs AS (SELECT doc_id, MIN(pos) AS run_start,
+        |           MAX(pos) - MIN(pos) + 3 AS run_tokens
+        |         FROM r GROUP BY doc_id, grp
+        |         HAVING MAX(pos) - MIN(pos) + 3 >= 5),
+        |dl AS (SELECT doc_id, list(dp) AS dps FROM (
+        |         SELECT doc_id, CAST(unnest(range(run_start,
+        |           run_start + run_tokens)) AS BIGINT) AS dp FROM runs)
+        |       GROUP BY doc_id),
+        |k AS (SELECT d.doc_id, d.t,
+        |        COALESCE(dl.dps, CAST([] AS BIGINT[])) AS dps
+        |      FROM d LEFT JOIN dl USING (doc_id)),
+        |kept AS (SELECT doc_id, len(t) AS n_before,
+        |           list_filter(list_transform(range(len(t)),
+        |             i -> CASE WHEN NOT list_contains(dps, i)
+        |                       THEN t[i+1] END),
+        |             x -> x IS NOT NULL) AS kt
+        |         FROM k)
+        |SELECT doc_id, n_before AS n_tokens_before,
+        |  len(kt) AS n_tokens_after,
+        |  -- array_to_string([]) is NULL in DuckDB but '' under Spark's
+        |  -- concat_ws — pin the fully-deduplicated-doc case
+        |  md5(COALESCE(array_to_string(kt, ' '), '')) AS cleaned_md5
+        |FROM kept""".stripMargin),
+    // Exact window-coverage cut: duplicated L=5 windows by TOTAL
+    // occurrence count (within-doc repeats count), each dup start
+    // covering its 5 positions; rebuild mirrors llm_substring_dedup.
+    QueryDef("llm_substring_exact", substringExact,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |px AS (SELECT doc_id, t,
+        |         CAST(unnest(range(greatest(len(t) - 4, 0))) AS BIGINT) AS pos
+        |       FROM d),
+        |g AS (SELECT doc_id, pos,
+        |        t[pos+1] || ' ' || t[pos+2] || ' ' || t[pos+3] || ' ' ||
+        |        t[pos+4] || ' ' || t[pos+5] AS w
+        |      FROM px),
+        |dup AS (SELECT w FROM (SELECT w, COUNT(*) AS c FROM g GROUP BY w)
+        |        WHERE c > 1),
+        |cut AS (SELECT DISTINCT doc_id, g.pos + o.off AS cpos
+        |        FROM g JOIN dup USING (w)
+        |        CROSS JOIN (SELECT CAST(unnest(range(5)) AS BIGINT) AS off) o),
+        |dl AS (SELECT doc_id, list(cpos) AS dps FROM cut GROUP BY doc_id),
+        |k AS (SELECT d.doc_id, d.t,
+        |        COALESCE(dl.dps, CAST([] AS BIGINT[])) AS dps
+        |      FROM d LEFT JOIN dl USING (doc_id)),
+        |kept AS (SELECT doc_id, len(t) AS n_before,
+        |           list_filter(list_transform(range(len(t)),
+        |             i -> CASE WHEN NOT list_contains(dps, i)
+        |                       THEN t[i+1] END),
+        |             x -> x IS NOT NULL) AS kt
+        |         FROM k)
+        |SELECT doc_id, n_before AS n_tokens_before,
+        |  len(kt) AS n_tokens_after,
+        |  md5(COALESCE(array_to_string(kt, ' '), '')) AS cleaned_md5
+        |FROM kept""".stripMargin),
+    QueryDef("text_containment", textContainment,
+      s"""WITH $shingleCte,
+         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |          FROM sh a JOIN sh b
+         |            ON a.source = b.source AND a.sh = b.sh
+         |           AND a.doc_id < b.doc_id),
+         |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+         |inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+         |          FROM cands c
+         |          JOIN sh sa ON sa.doc_id = c.doc_a
+         |          JOIN sh sb ON sb.doc_id = c.doc_b AND sa.sh = sb.sh
+         |          GROUP BY c.doc_a, c.doc_b)
+         |SELECT i.doc_a, i.doc_b, i.n_inter,
+         |       i.n_inter / za.n_sh AS cont_a,
+         |       i.n_inter / zb.n_sh AS cont_b
+         |FROM inter i JOIN sizes za ON i.doc_a = za.doc_id
+         |             JOIN sizes zb ON i.doc_b = zb.doc_id
+         |WHERE greatest(i.n_inter / za.n_sh, i.n_inter / zb.n_sh) >= 0.5""".stripMargin),
+    QueryDef("llm_exact_dedup", exactDedup,
+      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS norm_md5,
+        |  MIN(doc_id) AS keeper_doc_id, COUNT(*) AS n_copies
+        |FROM documents GROUP BY 1""".stripMargin),
+    QueryDef("llm_minhash_sigs", minhashSignatures,
+      s"""WITH $shingleCte,
+         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh)
+         |SELECT doc_id, CAST(band AS INT) AS band,
+         |  MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
+         |             CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
+         |FROM bands GROUP BY doc_id, band""".stripMargin),
+    QueryDef("llm_minhash_neardup", minhashNearDup,
+      s"""WITH $shingleCte,
+         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh),
+         |sigs0 AS (SELECT doc_id, band,
+         |           MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
+         |                      CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
+         |         FROM bands GROUP BY doc_id, band),
+         |sigs AS (SELECT doc_id, band, sig FROM
+         |          (SELECT doc_id, band, sig,
+         |             COUNT(*) OVER (PARTITION BY band, sig) AS bucket_n
+         |           FROM sigs0) WHERE bucket_n <= $HotBucketCap),
+         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |          FROM sigs a JOIN sigs b
+         |            ON a.band = b.band AND a.sig = b.sig
+         |           AND a.doc_id < b.doc_id),
+         |$jaccardTail""".stripMargin),
+    QueryDef("llm_ngram_jaccard", ngramJaccard,
+      s"""WITH $shingleCte,
+         |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |          FROM sh a JOIN sh b
+         |            ON a.source = b.source AND a.sh = b.sh
+         |           AND a.doc_id < b.doc_id),
+         |$jaccardTail""".stripMargin),
+    QueryDef("llm_simhash", simhash,
       """WITH tok AS (SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h
         |             FROM documents),
         |bits AS (SELECT doc_id, unnest(range(32)) AS pos, h FROM tok),
@@ -2350,8 +1984,8 @@ object LlmText {
         |  CAST(SUM(CASE WHEN votes > 0
         |           THEN (CAST(1 AS BIGINT) << CAST(pos AS INT))
         |           ELSE 0 END) AS BIGINT) AS simhash
-        |FROM votes GROUP BY doc_id""".stripMargin,
-    "llm_simhash_neardup" ->
+        |FROM votes GROUP BY doc_id""".stripMargin),
+    QueryDef("llm_simhash_neardup", simhashNearDup,
       s"""WITH dial AS (SELECT w, CASE WHEN 4 * w <= 60 THEN 4 * w ELSE 2 * w END AS lo_bits
          |              FROM (SELECT LEAST(31, 8 + ${LlmVectors.ladderSql("n", 512L, 23)}) AS w
          |                    FROM (SELECT COUNT(*) AS n FROM documents))),
@@ -2388,8 +2022,292 @@ object LlmText {
          |          FROM b2 a JOIN b2 b
          |            ON a.band = b.band AND a.band_bits = b.band_bits
          |           AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, hamming FROM cands WHERE hamming <= 3""".stripMargin,
-    "text_tokens" ->
+         |SELECT doc_a, doc_b, hamming FROM cands WHERE hamming <= 3""".stripMargin),
+    QueryDef("llm_dedup_clusters", dedupClusters, dedupClustersSql),
+    QueryDef("llm_dedup_apply", dedupApply, dedupApplySql),
+    // identical clustering through a different distributed algorithm —
+    // the oracle is the same recursive-reachability SQL
+    QueryDef("llm_cc_altstar", dedupClusters, dedupClustersSql),
+    QueryDef("llm_tfidf", tfidf,
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |             FROM documents),
+        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
+        |       WHERE doc_id < 20 GROUP BY 1, 2),
+        |dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
+        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+        |sc AS (SELECT doc_id, tf.term AS term, tf,
+        |         tf * LN((n_docs + 1.0) / (df + 1.0)) AS tfidf_raw
+        |       FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
+        |r AS (SELECT doc_id, term, tf, tfidf_raw,
+        |        CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
+        |             ORDER BY tfidf_raw DESC, term) AS BIGINT) AS rnk
+        |      FROM sc)
+        |SELECT doc_id, rnk, term, tf, ROUND(tfidf_raw, 4) AS tfidf
+        |FROM r WHERE rnk <= 3""".stripMargin),
+    QueryDef("llm_bm25", bm25,
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |             FROM documents),
+        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
+        |       WHERE doc_id < 20 GROUP BY 1, 2),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1),
+        |avgd AS (SELECT CAST(SUM(dl) AS DOUBLE)/COUNT(*) AS avgdl FROM dl),
+        |dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
+        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+        |sc AS (SELECT tf.doc_id, tf.term AS term, tf,
+        |         LN(1.0 + (n_docs - df + 0.5)/(df + 0.5))
+        |           * (tf * (1.2 + 1.0))
+        |           / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl)) AS score_raw
+        |       FROM tf JOIN dfreq ON tf.term = dfreq.term
+        |       JOIN dl ON tf.doc_id = dl.doc_id
+        |       CROSS JOIN n CROSS JOIN avgd),
+        |r AS (SELECT doc_id, term, tf, score_raw,
+        |        CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
+        |             ORDER BY score_raw DESC, term) AS BIGINT) AS rnk
+        |      FROM sc)
+        |SELECT doc_id, rnk, term, tf, ROUND(score_raw, 4) AS bm25
+        |FROM r WHERE rnk <= 3""".stripMargin),
+    QueryDef("llm_ngram_lm", ngramLm,
+      """WITH d AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
+        |bg AS (SELECT doc_id, unnest(list_transform(range(len(t)-1),
+        |         i -> struct_pack(w1 := t[i+1], w2 := t[i+2]))) AS b
+        |       FROM d WHERE len(t) >= 2),
+        |bi AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
+        |c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM bi GROUP BY 1, 2),
+        |tok AS (SELECT unnest(t) AS term FROM d),
+        |c1 AS (SELECT term, COUNT(*) AS c1 FROM tok GROUP BY 1),
+        |v AS (SELECT COUNT(DISTINCT term) AS v FROM tok)
+        |SELECT bi.doc_id, COUNT(*) AS n_bigrams,
+        |  ROUND(AVG(LN((c2 + 0.5)/(c1 + 0.5*v))), 6) AS score
+        |FROM bi JOIN c2 USING (w1, w2) JOIN c1 ON bi.w1 = c1.term
+        |CROSS JOIN v
+        |WHERE bi.doc_id < 50 GROUP BY bi.doc_id""".stripMargin),
+    QueryDef("llm_feature_hashing", featureHashing,
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |             FROM documents WHERE doc_id < 30)
+        |SELECT doc_id,
+        |  CAST('0x' || substr(md5(term), 1, 4) AS BIGINT) % 32 AS bucket,
+        |  COUNT(*) AS cnt
+        |FROM tok GROUP BY 1, 2""".stripMargin),
+    QueryDef("text_pii_mask", piiMask,
+      """SELECT event_id,
+        |  regexp_replace(
+        |    regexp_replace(props, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+',
+        |                   '<email>', 'g'),
+        |    '[0-9]+', '<num>', 'g') AS masked_props,
+        |  len(regexp_extract_all(props, '[0-9]+')) AS n_redacted
+        |FROM events""".stripMargin),
+    QueryDef("llm_stratified_split", stratifiedSplit,
+      s"""WITH d AS (SELECT source, n_chars, $uSql AS u FROM documents)
+         |SELECT source,
+         |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
+         |       ELSE 'test' END AS split,
+         |  COUNT(*) AS n_docs,
+         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
+         |FROM d GROUP BY 1, 2""".stripMargin),
+    QueryDef("llm_vocab", vocab,
+      """WITH tok AS (SELECT DISTINCT doc_id,
+        |               unnest(string_split(text, ' ')) AS term
+        |             FROM documents),
+        |df AS (SELECT term, COUNT(*) AS df FROM tok GROUP BY 1),
+        |r AS (SELECT term, df,
+        |        CAST(ROW_NUMBER() OVER (ORDER BY df DESC, term) AS BIGINT) AS rank
+        |      FROM df)
+        |SELECT term, df, rank FROM r WHERE rank <= 40""".stripMargin),
+    // the oracle joins on the shingle STRINGS; the engine joins on their
+    // xxhash64 — equivalent counts absent 2^-64 collisions
+    QueryDef("llm_decontaminate", decontaminate,
+      s"""WITH d AS (SELECT doc_id, text, $uSql AS u FROM documents),
+         |sp AS (SELECT doc_id,
+         |         CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
+         |              ELSE 'test' END AS split,
+         |         string_split(text, ' ') AS t
+         |       FROM d),
+         |sh AS (SELECT DISTINCT doc_id, split,
+         |         unnest(list_transform(range(greatest(len(t) - 2, 0)),
+         |                i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
+         |       FROM sp),
+         |tr AS (SELECT DISTINCT sh FROM sh WHERE split = 'train')
+         |SELECT s.doc_id, COUNT(*) AS n_overlap
+         |FROM sh s JOIN tr ON s.sh = tr.sh
+         |WHERE s.split = 'test'
+         |GROUP BY s.doc_id""".stripMargin),
+    QueryDef("llm_length_filter", lengthFilter,
+      """WITH b AS (SELECT quantile_cont(n_chars, 0.05) AS lo,
+        |             quantile_cont(n_chars, 0.95) AS hi FROM documents)
+        |SELECT source, (n_chars >= lo AND n_chars <= hi) AS keep,
+        |  COUNT(*) AS n_docs
+        |FROM documents CROSS JOIN b
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("llm_dedup_stats", dedupStats, {
+      val prefix = dedupClustersSql.substring(0,
+        dedupClustersSql.indexOf("SELECT node AS doc_id"))
+      prefix.trim + ",\n" +
+        """dropped AS MATERIALIZED (SELECT node FROM reach GROUP BY node HAVING MIN(r) <> node)
+          |SELECT d.source, COUNT(*) AS n_docs,
+          |  CAST(SUM(CASE WHEN d.doc_id IN (SELECT node FROM dropped)
+          |           THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
+          |  CAST(SUM(CASE WHEN d.doc_id IN (SELECT node FROM dropped)
+          |           THEN 0 ELSE 1 END) AS BIGINT) AS n_kept
+          |FROM documents d GROUP BY d.source""".stripMargin
+    }),
+    QueryDef("llm_pipeline_e2e", pipelineE2e, {
+      val prefix = dedupClustersSql.substring(0,
+        dedupClustersSql.indexOf("SELECT node AS doc_id"))
+      prefix.trim + ",\n" +
+        s"""dropped AS MATERIALIZED (SELECT node FROM reach GROUP BY node HAVING MIN(r) <> node),
+           |b AS (SELECT quantile_cont(n_chars, 0.05) AS lo,
+           |        quantile_cont(n_chars, 0.95) AS hi FROM documents),
+           |kept AS (SELECT doc_id, source,
+           |           len(string_split(text, ' ')) AS n_tokens,
+           |           CASE WHEN $uSql < 0.8 THEN 'train'
+           |                WHEN $uSql < 0.9 THEN 'val'
+           |                ELSE 'test' END AS split
+           |         FROM documents CROSS JOIN b
+           |         WHERE n_chars >= lo AND n_chars <= hi
+           |           AND doc_id NOT IN (SELECT node FROM dropped))
+           |SELECT source, split, COUNT(*) AS n_docs,
+           |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
+           |FROM kept GROUP BY source, split""".stripMargin
+    }),
+    QueryDef("text_repetition", textRepetition,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |sh AS (SELECT doc_id,
+        |         list_transform(range(greatest(len(t) - 2, 0)),
+        |           i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]) AS s
+        |       FROM d)
+        |SELECT doc_id, len(s) AS n_shingles,
+        |  len(list_distinct(s)) AS n_distinct,
+        |  CASE WHEN len(s) > 0
+        |       THEN 1.0 - len(list_distinct(s)) / CAST(len(s) AS DOUBLE)
+        |       ELSE 0.0 END AS rep_ratio
+        |FROM sh""".stripMargin),
+    QueryDef("llm_segment_dedup", segmentDedup,
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |b AS (SELECT doc_id, t, CAST(len(t) // 10 AS INT) AS n_full
+        |      FROM d WHERE len(t) // 10 >= 1),
+        |segs AS (SELECT doc_id,
+        |           unnest(list_transform(range(n_full),
+        |             i -> md5(array_to_string(t[i*10+1 : i*10+10], ' ')))) AS h
+        |         FROM b),
+        |freq AS (SELECT h, COUNT(DISTINCT doc_id) AS n_docs
+        |         FROM segs GROUP BY h)
+        |SELECT s.doc_id, COUNT(*) AS n_segments,
+        |  CAST(SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_boilerplate,
+        |  CAST((COUNT(*) - SUM(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END))
+        |       * 10 AS BIGINT) AS tokens_kept
+        |FROM segs s JOIN freq f USING (h)
+        |GROUP BY s.doc_id""".stripMargin),
+    QueryDef("llm_oov_rate", oovRate,
+      """WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS term
+        |             FROM documents),
+        |bst AS (SELECT source, term, COUNT(*) AS c
+        |        FROM tok GROUP BY source, term),
+        |top AS (SELECT term FROM (
+        |          SELECT term, SUM(c) AS tot,
+        |            ROW_NUMBER() OVER (ORDER BY SUM(c) DESC, term) AS rk
+        |          FROM bst GROUP BY term)
+        |        WHERE rk <= 20)
+        |SELECT source,
+        |  CAST(SUM(c) AS BIGINT) AS n_tokens,
+        |  CAST(SUM(CASE WHEN term IN (SELECT term FROM top) THEN c
+        |           ELSE 0 END) AS BIGINT) AS n_covered,
+        |  1.0 - SUM(CASE WHEN term IN (SELECT term FROM top) THEN c
+        |            ELSE 0 END) / CAST(SUM(c) AS DOUBLE) AS oov_rate
+        |FROM bst
+        |GROUP BY source""".stripMargin),
+    QueryDef("llm_incremental_dedup", incrementalDedup,
+      s"""WITH $shingleCte,
+         |side AS (SELECT doc_id, CAST(SUBSTR(source, 4) AS INT) < 10 AS ex
+         |         FROM documents),
+         |norm AS (SELECT doc_id,
+         |           md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+         |         FROM documents),
+         |exdrop AS (SELECT n.doc_id FROM norm n JOIN side s USING (doc_id)
+         |           WHERE NOT s.ex AND n.h IN
+         |             (SELECT h FROM norm JOIN side USING (doc_id) WHERE ex)),
+         |bands AS (SELECT doc_id, unnest(range(8)) AS band, sh FROM sh),
+         |sigs AS (SELECT doc_id, band,
+         |           MIN(substr(CASE WHEN band < 4 THEN md5(sh) ELSE md5(sh || '#') END,
+         |                      CAST((band % 4) * 8 + 1 AS INT), 8)) AS sig
+         |         FROM bands GROUP BY doc_id, band),
+         |insigs AS (SELECT g.doc_id, band, sig FROM sigs g JOIN side s USING (doc_id)
+         |           WHERE NOT s.ex
+         |             AND g.doc_id NOT IN (SELECT doc_id FROM exdrop)),
+         |exsigs AS (SELECT g.doc_id, band, sig FROM sigs g JOIN side s USING (doc_id)
+         |           WHERE s.ex),
+         |cands AS (SELECT DISTINCT i.doc_id AS doc_a, e.doc_id AS doc_b
+         |          FROM insigs i JOIN exsigs e
+         |            ON i.band = e.band AND i.sig = e.sig),
+         |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+         |inter AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+         |          FROM cands c
+         |          JOIN sh a ON a.doc_id = c.doc_a
+         |          JOIN sh b ON b.doc_id = c.doc_b AND a.sh = b.sh
+         |          GROUP BY c.doc_a, c.doc_b),
+         |near AS (SELECT DISTINCT i.doc_a AS doc_id
+         |         FROM inter i JOIN sizes za ON i.doc_a = za.doc_id
+         |         JOIN sizes zb ON i.doc_b = zb.doc_id
+         |         WHERE i.n_inter
+         |           / CAST(za.n_sh + zb.n_sh - i.n_inter AS DOUBLE) >= 0.5)
+         |SELECT source, COUNT(*) AS n_in,
+         |  CAST(SUM(CASE WHEN doc_id IN (SELECT doc_id FROM exdrop)
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_dup,
+         |  CAST(SUM(CASE WHEN doc_id IN (SELECT doc_id FROM near)
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_near_dup,
+         |  CAST(SUM(CASE WHEN doc_id NOT IN (SELECT doc_id FROM exdrop)
+         |                 AND doc_id NOT IN (SELECT doc_id FROM near)
+         |           THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+         |FROM documents JOIN side USING (doc_id)
+         |WHERE NOT ex GROUP BY source""".stripMargin),
+    QueryDef("llm_train_shards", trainShards,
+      """WITH d AS (SELECT CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
+        |                  AS BIGINT) % 16 AS shard,
+        |             len(string_split(text, ' ')) AS n_tokens
+        |           FROM documents),
+        |ps AS (SELECT shard, COUNT(*) AS n_docs,
+        |         CAST(SUM(n_tokens) AS BIGINT) AS shard_tokens
+        |       FROM d GROUP BY shard),
+        |m AS (SELECT SUM(shard_tokens) / CAST(COUNT(*) AS DOUBLE) AS mean_tokens
+        |      FROM ps)
+        |SELECT shard, n_docs, shard_tokens,
+        |  shard_tokens / mean_tokens AS skew
+        |FROM ps CROSS JOIN m""".stripMargin),
+    QueryDef("llm_seq_pack", seqPack,
+      """WITH d AS (SELECT doc_id, source,
+        |             len(string_split(text, ' ')) AS n_tokens FROM documents),
+        |c AS (SELECT doc_id, source, n_tokens,
+        |        COALESCE(SUM(n_tokens) OVER (PARTITION BY source
+        |          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |          AS tokens_before
+        |      FROM d)
+        |SELECT source, CAST(FLOOR(tokens_before / 2048) AS BIGINT) AS pack_id,
+        |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
+        |FROM c GROUP BY 1, 2""".stripMargin),
+    QueryDef("llm_weighted_sample", weightedSample,
+      s"""WITH u AS (SELECT doc_id, source, n_chars, $uSql AS u FROM documents),
+         |k AS (SELECT source, doc_id, pow(u, 1.0 / n_chars) AS skey,
+         |        CAST(ROW_NUMBER() OVER (PARTITION BY source
+         |          ORDER BY pow(u, 1.0 / n_chars) DESC, doc_id) AS BIGINT) AS rnk
+         |      FROM u)
+         |SELECT source, rnk, doc_id, ROUND(skey, 6) AS skey
+         |FROM k WHERE rnk <= 5""".stripMargin),
+    QueryDef("llm_corpus_mix", corpusMix,
+      """WITH tw AS (SELECT SUM(CASE WHEN source = 'src0' THEN 2.0 ELSE 1.0 END) AS total_w
+        |            FROM (SELECT DISTINCT source FROM documents)),
+        |d AS (SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
+        |      FROM documents),
+        |c AS (SELECT doc_id, source, n_tokens,
+        |        SUM(n_tokens) OVER (PARTITION BY source
+        |          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+        |          ROWS UNBOUNDED PRECEDING) AS cum_tokens
+        |      FROM d)
+        |SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS tokens_used
+        |FROM c CROSS JOIN tw
+        |WHERE cum_tokens <= 20000.0 * (CASE WHEN source = 'src0' THEN 2.0 ELSE 1.0 END) / total_w
+        |GROUP BY source""".stripMargin),
+    QueryDef("text_tokens", textTokens,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(list_distinct(string_split(text, ' '))) AS n_distinct,
@@ -2397,8 +2315,8 @@ object LlmText {
         |  length(text) AS n_chars,
         |  (length(text) - len(string_split(text, ' ')) + 1)
         |    / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_token_len
-        |FROM documents""".stripMargin,
-    "text_quality" ->
+        |FROM documents""".stripMargin),
+    QueryDef("text_quality", textQuality,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(list_distinct(string_split(text, ' ')))
@@ -2410,8 +2328,8 @@ object LlmText {
         |       / CAST(len(string_split(text, ' ')) AS DOUBLE)) * 0.5
         |    - (length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
         |       / CAST(length(text) AS DOUBLE)) * 0.25 AS quality
-        |FROM documents""".stripMargin,
-    "text_langid" -> {
+        |FROM documents""".stripMargin),
+    QueryDef("text_langid", textLangid, {
       def inList(xs: Seq[String]) = xs.map("'" + _ + "'").mkString(", ")
       s"""WITH d AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
          |h AS (SELECT doc_id, lang,
@@ -2425,8 +2343,8 @@ object LlmText {
          |       WHEN es_hits >= de_hits THEN 'es'
          |       ELSE 'de' END AS pred_lang
          |FROM h""".stripMargin
-    },
-    "text_fingerprint" ->
+    }),
+    QueryDef("text_fingerprint", textFingerprint,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
         |SELECT doc_id,
         |  md5(array_to_string(list_sort(list_distinct(t)), ' ')) AS content_md5,
@@ -2434,5 +2352,42 @@ object LlmText {
         |    list_transform(range(greatest(len(t) - 2, 0)),
         |                   i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]),
         |    sh -> md5(sh))) AS min_shingle_md5
-        |FROM d""".stripMargin)
+        |FROM d""".stripMargin),
+    QueryDef("llm_cross_source_overlap", crossSourceOverlap,
+      s"""WITH $shingleCte,
+         |$minhashPairCtes,
+         |j AS (SELECT least(da.source, db.source) AS source_a,
+         |        greatest(da.source, db.source) AS source_b, p.jaccard
+         |      FROM pairs p
+         |      JOIN documents da ON da.doc_id = p.doc_a
+         |      JOIN documents db ON db.doc_id = p.doc_b)
+         |SELECT source_a, source_b, COUNT(*) AS n_pairs,
+         |  ROUND(AVG(jaccard), 6) AS mean_jaccard
+         |FROM j GROUP BY source_a, source_b""".stripMargin),
+    QueryDef("llm_contrastive_pairs", contrastivePairs,
+      s"""WITH $shingleCte,
+         |$minhashPairCtes,
+         |bo AS (SELECT doc_a AS anchor, doc_b AS partner, jaccard
+         |       FROM pairs
+         |       UNION ALL
+         |       SELECT doc_b, doc_a, jaccard FROM pairs),
+         |pos AS (SELECT anchor, partner AS positive, jaccard AS jaccard_pos,
+         |          row_number() OVER (PARTITION BY anchor
+         |            ORDER BY jaccard DESC, partner) AS rn
+         |        FROM bo),
+         |p1 AS (SELECT anchor, positive, jaccard_pos FROM pos WHERE rn = 1),
+         |cand AS (SELECT doc_id AS cand FROM documents WHERE doc_id < 64),
+         |negc AS (SELECT p.anchor, c.cand,
+         |           md5(CAST(p.anchor AS VARCHAR) || ':' ||
+         |               CAST(c.cand AS VARCHAR)) AS h
+         |         FROM p1 p CROSS JOIN cand c
+         |         WHERE c.cand <> p.anchor
+         |           AND NOT EXISTS (SELECT 1 FROM bo b
+         |             WHERE b.anchor = p.anchor AND b.partner = c.cand)),
+         |neg AS (SELECT anchor, cand AS negative,
+         |          row_number() OVER (PARTITION BY anchor
+         |            ORDER BY h, cand) AS rn
+         |        FROM negc)
+         |SELECT p1.anchor, p1.positive, n.negative, p1.jaccard_pos
+         |FROM p1 JOIN neg n ON n.anchor = p1.anchor AND n.rn = 1""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 import graft.plans.GraftFunctions
 import graft.core.CkptTap._
@@ -487,21 +488,6 @@ object LlmVectors {
         lit(0.0))).as("std"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_feature_standardize" -> (featureStandardize _),
-    "llm_semdedup" -> (semDedup _),
-    "llm_ann_recall" -> (annRecall _),
-    "llm_ann_ndcg" -> (annNdcg _),
-    "llm_rank_fusion" -> (annRankFusion _),
-    "llm_kmeans_train" -> (kmeansTrain _),
-    "llm_vector_norms" -> (vectorNorms _),
-    "llm_ann_ivf" -> (annIvf _),
-    "llm_ann_ivf2" -> (annIvf2 _),
-    "llm_ann_pq" -> (annPq _),
-    "llm_cosine_topk" -> (cosineTopk _),
-    "llm_ann_lsh" -> (annLsh _),
-    "llm_embed_neardup" -> (embedNearDup _))
-
   // DuckDB twins compute cosine over DOUBLE[] casts so both engines
   // accumulate float inputs in double precision, in the same order.
   private val eCte =
@@ -552,8 +538,8 @@ object LlmVectors {
   private val l2Sql =
     "list_inner_product(%s, %s) - 2 * list_inner_product(%s, %s) + list_inner_product(%s, %s)"
 
-  val oracle: Map[String, String] = Map(
-    "llm_feature_standardize" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("llm_feature_standardize", featureStandardize,
       """WITH p AS (SELECT label, pos, CAST(embedding[pos + 1] AS DOUBLE) AS x
         |           FROM embeddings,
         |                (SELECT CAST(unnest(range(8)) AS BIGINT) AS pos)),
@@ -563,8 +549,8 @@ object LlmVectors {
         |       FROM p GROUP BY 1, 2)
         |SELECT label, pos, n, sx/n AS mean,
         |  sqrt(GREATEST(sxx/n - (sx/n)*(sx/n), 0.0)) AS std
-        |FROM st""".stripMargin,
-    "llm_semdedup" ->
+        |FROM st""".stripMargin),
+    QueryDef("llm_semdedup", semDedup,
       s"""WITH dial AS (SELECT ${ladderSql("COUNT(*)", 1000L, 24)} AS cb
          |              FROM embeddings),
          |e0 AS (SELECT vec_id, label, embedding,
@@ -590,34 +576,10 @@ object LlmVectors {
          |       COALESCE(pc.pair_cnt, 0) AS n_dup_pairs,
          |       COALESCE(pr.pruned_cnt, 0) AS n_pruned
          |FROM m LEFT JOIN pc ON m.label = pc.label
-         |       LEFT JOIN pr ON m.label = pr.label""".stripMargin,
-    "llm_kmeans_train" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS c FROM e WHERE vec_id < 8),
-         |a1 AS (SELECT vec_id, v, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |         ORDER BY ${l2Sql.format("v", "v", "v", "c", "c", "c")} ASC, cid ASC) AS rn
-         |       FROM e CROSS JOIN c0),
-         |s1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
-         |f1 AS (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM s1),
-         |m1 AS (SELECT cid, pos,
-         |         CAST(SUM(CAST(x AS DECIMAL(20,8))) AS DOUBLE) / COUNT(*) AS c
-         |       FROM f1 GROUP BY cid, pos),
-         |c1 AS (SELECT cid, list(c ORDER BY pos) AS c FROM m1 GROUP BY cid),
-         |a2 AS (SELECT vec_id, v, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |         ORDER BY ${l2Sql.format("v", "v", "v", "c", "c", "c")} ASC, cid ASC) AS rn
-         |       FROM e CROSS JOIN c1),
-         |s2 AS (SELECT vec_id, v, cid FROM a2 WHERE rn = 1),
-         |f2 AS (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM s2),
-         |m2 AS (SELECT cid, pos,
-         |         CAST(SUM(CAST(x AS DECIMAL(20,8))) AS DOUBLE) / COUNT(*) AS c
-         |       FROM f2 GROUP BY cid, pos),
-         |c2 AS (SELECT cid, list(c ORDER BY pos) AS c FROM m2 GROUP BY cid),
-         |n AS (SELECT cid, COUNT(*) AS n_members FROM s2 GROUP BY cid)
-         |SELECT n.cid, n.n_members, c2.c[1] AS c0
-         |FROM n JOIN c2 ON n.cid = c2.cid""".stripMargin,
+         |       LEFT JOIN pr ON m.label = pr.label""".stripMargin),
     // flattened single WITH list (DuckDB 1.0 rejects nested WITH in a
     // derived table); exact/lsh/ivf pipelines share the e and q CTEs
-    "llm_ann_recall" ->
+    QueryDef("llm_ann_recall", annRecall,
       s"""WITH $eCte,
          |q AS (SELECT vec_id AS q_id, v AS qv, bkt AS q_bkt FROM e WHERE vec_id < 10),
          |xs AS (SELECT q_id, vec_id,
@@ -671,8 +633,8 @@ object LlmVectors {
          |  (SELECT COUNT(*) FROM exact JOIN ivf
          |     ON exact.q_id = ivf.q_id AND exact.vec_id = ivf.vec_id)
          |    / CAST(n_exact AS DOUBLE)
-         |FROM ne""".stripMargin,
-    "llm_ann_ndcg" ->
+         |FROM ne""".stripMargin),
+    QueryDef("llm_ann_ndcg", annNdcg,
       s"""WITH $eCte,
          |q AS (SELECT vec_id AS q_id, v AS qv, bkt AS q_bkt FROM e WHERE vec_id < 10),
          |xs AS (SELECT q_id, vec_id,
@@ -693,8 +655,8 @@ object LlmVectors {
          |  3.0 / log2(2.0) + 2.0 / log2(3.0) + 1.0 / log2(4.0) AS idcg,
          |  COALESCE(hit.dcg_raw, 0.0)
          |    / (3.0 / log2(2.0) + 2.0 / log2(3.0) + 1.0 / log2(4.0)) AS ndcg
-         |FROM q LEFT JOIN hit ON hit.q_id = q.q_id""".stripMargin,
-    "llm_rank_fusion" ->
+         |FROM q LEFT JOIN hit ON hit.q_id = q.q_id""".stripMargin),
+    QueryDef("llm_rank_fusion", annRankFusion,
       s"""WITH $eCte,
          |q AS (SELECT vec_id AS q_id, v AS qv, bkt AS q_bkt FROM e WHERE vec_id < 10),
          |ls AS (SELECT q_id, vec_id,
@@ -735,10 +697,41 @@ object LlmVectors {
          |         ROW_NUMBER() OVER (PARTITION BY q_id
          |           ORDER BY rrf_score DESC, vec_id) AS rnk FROM f)
          |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id, rrf_score
-         |FROM rr WHERE rnk <= 3""".stripMargin,
-    "llm_ann_ivf" -> ivfSql(1),
-    "llm_ann_ivf2" -> ivfSql(2),
-    "llm_ann_pq" ->
+         |FROM rr WHERE rnk <= 3""".stripMargin),
+    QueryDef("llm_kmeans_train", kmeansTrain,
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS c FROM e WHERE vec_id < 8),
+         |a1 AS (SELECT vec_id, v, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
+         |         ORDER BY ${l2Sql.format("v", "v", "v", "c", "c", "c")} ASC, cid ASC) AS rn
+         |       FROM e CROSS JOIN c0),
+         |s1 AS (SELECT vec_id, v, cid FROM a1 WHERE rn = 1),
+         |f1 AS (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM s1),
+         |m1 AS (SELECT cid, pos,
+         |         CAST(SUM(CAST(x AS DECIMAL(20,8))) AS DOUBLE) / COUNT(*) AS c
+         |       FROM f1 GROUP BY cid, pos),
+         |c1 AS (SELECT cid, list(c ORDER BY pos) AS c FROM m1 GROUP BY cid),
+         |a2 AS (SELECT vec_id, v, cid, ROW_NUMBER() OVER (PARTITION BY vec_id
+         |         ORDER BY ${l2Sql.format("v", "v", "v", "c", "c", "c")} ASC, cid ASC) AS rn
+         |       FROM e CROSS JOIN c1),
+         |s2 AS (SELECT vec_id, v, cid FROM a2 WHERE rn = 1),
+         |f2 AS (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM s2),
+         |m2 AS (SELECT cid, pos,
+         |         CAST(SUM(CAST(x AS DECIMAL(20,8))) AS DOUBLE) / COUNT(*) AS c
+         |       FROM f2 GROUP BY cid, pos),
+         |c2 AS (SELECT cid, list(c ORDER BY pos) AS c FROM m2 GROUP BY cid),
+         |n AS (SELECT cid, COUNT(*) AS n_members FROM s2 GROUP BY cid)
+         |SELECT n.cid, n.n_members, c2.c[1] AS c0
+         |FROM n JOIN c2 ON n.cid = c2.cid""".stripMargin),
+    QueryDef("llm_vector_norms", vectorNorms,
+      """SELECT vec_id,
+        |  ROUND(list_inner_product(CAST(embedding AS DOUBLE[]),
+        |                           CAST(embedding AS DOUBLE[])), 6) AS norm2_native,
+        |  ROUND(list_inner_product(CAST(embedding AS DOUBLE[]),
+        |                           CAST(embedding AS DOUBLE[])), 6) AS norm2_hof
+        |FROM embeddings""".stripMargin),
+    QueryDef("llm_ann_ivf", annIvf, ivfSql(1)),
+    QueryDef("llm_ann_ivf2", annIvf2, ivfSql(2)),
+    QueryDef("llm_ann_pq", annPq,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |subs AS (SELECT vec_id, m, v[m*16+1 : m*16+16] AS sub
          |         FROM e, (SELECT unnest(range(4)) AS m)),
@@ -771,15 +764,8 @@ object LlmVectors {
          |        PARTITION BY q_id ORDER BY adist ASC, vec_id) AS BIGINT) AS rnk
          |      FROM sc)
          |SELECT q_id, rnk, vec_id, adist
-         |FROM r WHERE rnk <= 3""".stripMargin,
-    "llm_vector_norms" ->
-      """SELECT vec_id,
-        |  ROUND(list_inner_product(CAST(embedding AS DOUBLE[]),
-        |                           CAST(embedding AS DOUBLE[])), 6) AS norm2_native,
-        |  ROUND(list_inner_product(CAST(embedding AS DOUBLE[]),
-        |                           CAST(embedding AS DOUBLE[])), 6) AS norm2_hof
-        |FROM embeddings""".stripMargin,
-    "llm_cosine_topk" ->
+         |FROM r WHERE rnk <= 3""".stripMargin),
+    QueryDef("llm_cosine_topk", cosineTopk,
       s"""WITH $eCte,
          |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
          |s AS (SELECT q_id, vec_id,
@@ -790,8 +776,8 @@ object LlmVectors {
          |             ORDER BY sim_raw DESC, vec_id) AS BIGINT) AS rnk
          |      FROM s)
          |SELECT q_id, rnk, vec_id, ROUND(sim_raw, 4) AS sim
-         |FROM r WHERE rnk <= 5""".stripMargin,
-    "llm_ann_lsh" ->
+         |FROM r WHERE rnk <= 5""".stripMargin),
+    QueryDef("llm_ann_lsh", annLsh,
       s"""WITH $eCte,
          |q AS (SELECT vec_id AS q_id, v AS qv, bkt AS q_bkt FROM e WHERE vec_id < 10),
          |s AS (SELECT q_id, vec_id,
@@ -802,8 +788,8 @@ object LlmVectors {
          |             ORDER BY sim_raw DESC, vec_id) AS BIGINT) AS rnk
          |      FROM s)
          |SELECT q_id, rnk, vec_id, ROUND(sim_raw, 4) AS sim
-         |FROM r WHERE rnk <= 3""".stripMargin,
-    "llm_embed_neardup" ->
+         |FROM r WHERE rnk <= 3""".stripMargin),
+    QueryDef("llm_embed_neardup", embedNearDup,
       s"""WITH dial AS (SELECT LEAST(16, 4 + ${ladderSql("COUNT(*)", 512L, 12)}) AS w
          |              FROM embeddings),
          |e AS (SELECT vec_id, embedding,
@@ -825,5 +811,5 @@ object LlmVectors {
          |FROM cand c
          |  JOIN e ea ON ea.vec_id = c.vec_a
          |  JOIN e eb ON eb.vec_id = c.vec_b
-         |WHERE ${cosSql.format("ea.v", "eb.v", "ea.v", "ea.v", "eb.v", "eb.v")} >= 0.42""".stripMargin)
+         |WHERE ${cosSql.format("ea.v", "eb.v", "ea.v", "ea.v", "eb.v", "eb.v")} >= 0.42""".stripMargin))
 }

@@ -5,11 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Relational query surface: aggregations, joins, windows, sorts, set ops
-  * (SURVEY.md §2B). Each query has a DuckDB oracle twin in [[Relational.oracle]]
-  * with identical column names and value canonicalization.
+  * (SURVEY.md §2B). Each query has a DuckDB oracle twin, declared next to
+  * it in [[Relational.queries]], with identical column names and value
+  * canonicalization.
   *
   * Determinism rules shared with the oracle SQL:
   *  - Whole-table double sums go through DECIMAL(18,4) so accumulation
@@ -136,7 +138,6 @@ object Relational {
     * instead; sf1 exposed exactly this when a 2²⁰−1 literal silently
     * undercounted). */
   def aggBitmapDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     t(s, dir, "lineitem").createOrReplaceTempView("graft_bmd_lineitem")
     s.sql(
       """SELECT l_returnflag, l_linestatus,
@@ -621,7 +622,6 @@ object Relational {
     * Similarities are emitted RAW — both engines produce bit-identical
     * doubles, and engine-side rounding reintroduces midpoint skew. */
   def fuzzyMatch(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
     val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
     c.join(sup, col("c_custkey") === col("s_suppkey"))
@@ -953,7 +953,6 @@ object Relational {
     * collision mass, far above the e^-depth tail). Oracle emits the
     * exact counts plus literal TRUE. */
   def aggCms(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     t(s, dir, "lineitem").createOrReplaceTempView("graft_cms_lineitem")
     s.sql(
       """SELECT l_returnflag,
@@ -973,68 +972,6 @@ object Relational {
 
   // ---------------------------------------------------------------- maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_cms" -> (aggCms _),
-    "agg_histogram" -> (aggHistogram _),
-    "join_interval" -> (joinInterval _),
-    "win_misc" -> (winMisc _),
-    "win_distinct_window" -> (winDistinctWindow _),
-    "agg_bool_misc" -> (aggBoolMisc _),
-    "join_existence" -> (joinExistence _),
-    "join_null_safe" -> (joinNullSafe _),
-    "etl_mask_pseudonym" -> (etlMaskPseudonym _),
-    "win_rolling_zscore" -> (winRollingZscore _),
-    "agg_listagg" -> (aggListagg _),
-    "join_lateral" -> (joinLateral _),
-    "setop_multiset" -> (setopMultiset _),
-    "events_funnel" -> (eventsFunnel _),
-    "events_retention" -> (eventsRetention _),
-    "etl_integrity" -> (etlIntegrity _),
-    "llm_fuzzy_match" -> (fuzzyMatch _),
-    "agg_stats" -> (aggStats _),
-    "etl_upsert" -> (etlUpsert _),
-    "join_salted" -> (joinSalted _),
-    "agg_median" -> (aggMedian _),
-    "win_percent_rank" -> (winPercentRank _),
-    "agg_collect_list" -> (aggCollectList _),
-    "q1_agg" -> (q1Agg _),
-    "agg_count_distinct" -> (aggCountDistinct _),
-    "agg_approx_cd" -> (aggApproxCd _),
-    "agg_having" -> (aggHaving _),
-    "agg_approx_quantile" -> (aggApproxQuantile _),
-    "agg_bitmap_distinct" -> (aggBitmapDistinct _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_cube" -> (aggCube _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "join_inner_star" -> (joinInnerStar _),
-    "join_left_agg" -> (joinLeftAgg _),
-    "join_right_agg" -> (joinRightAgg _),
-    "join_full" -> (joinFull _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "join_range" -> (joinRange _),
-    "join_asof" -> (joinAsOf _),
-    "join_asof_forward" -> (joinAsOfForward _),
-    "join_asof_nearest" -> (joinAsOfNearest _),
-    "join_theta" -> (joinTheta _),
-    "agg_pivot" -> (aggPivot _),
-    "reshape_unpivot" -> (reshapeUnpivot _),
-    "win_range_frame" -> (winRangeFrame _),
-    "subq_correlated" -> (subqCorrelated _),
-    "win_topk_per_group" -> (winTopkPerGroup _),
-    "win_lag_lead" -> (winLagLead _),
-    "win_moving_avg" -> (winMovingAvg _),
-    "win_first_last" -> (winFirstLast _),
-    "win_cumsum" -> (winCumSum _),
-    "win_rank" -> (winRank _),
-    "win_ntile" -> (winNtile _),
-    "sort_topn" -> (sortTopN _),
-    "sort_within_parts" -> (sortWithinParts _),
-    "setop_union_all" -> (setopUnionAll _),
-    "setop_union_distinct" -> (setopUnionDistinct _),
-    "setop_intersect" -> (setopIntersect _),
-    "setop_except" -> (setopExcept _))
-
   // DuckDB oracle twins. Column names and value canonicalization match
   // the Spark side exactly (decimal-exact sums, round(…,4), string-
   // formatted timestamps).
@@ -1053,14 +990,75 @@ object Relational {
   private val sumCharge =
     "CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4)) * CAST(1 + l_tax AS DECIMAL(8,4))), 2) AS DOUBLE)"
 
-  val oracle: Map[String, String] = Map(
-    "agg_listagg" ->
-      """SELECT o_orderpriority,
-        |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
-        |    AS statuses,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("agg_cms", aggCms,
+      """SELECT l_returnflag,
+        |  CAST(SUM(CASE WHEN l_quantity = 1 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q1,
+        |  CAST(SUM(CASE WHEN l_quantity = 25 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q25,
+        |  TRUE AS cms_ok
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("agg_histogram", aggHistogram,
+      """SELECT CAST(FLOOR(l_extendedprice / 10000) AS BIGINT) AS bucket,
         |  COUNT(*) AS n
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "win_rolling_zscore" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    QueryDef("join_interval", joinInterval,
+      """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
+        |           FROM events),
+        |w AS (SELECT ts AS lo, ts + INTERVAL 15 MINUTE AS hi
+        |      FROM e WHERE event_type = 'error')
+        |SELECT e.event_type, COUNT(*) AS n_hits,
+        |  COUNT(DISTINCT e.event_id) AS n_events
+        |FROM e JOIN w ON e.ts >= w.lo AND e.ts < w.hi
+        |GROUP BY 1""".stripMargin),
+    QueryDef("win_misc", winMisc,
+      """SELECT o_orderkey, o_orderpriority,
+        |  nth_value(o_totalprice, 3) OVER (PARTITION BY o_orderpriority
+        |    ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS nth3,
+        |  lag(o_totalprice, 2, -1.0) OVER (PARTITION BY o_orderpriority
+        |    ORDER BY o_orderkey) AS lag2_dflt,
+        |  lead(o_totalprice, 2, -1.0) OVER (PARTITION BY o_orderpriority
+        |    ORDER BY o_orderkey) AS lead2_dflt
+        |FROM orders""".stripMargin),
+    QueryDef("win_distinct_window", winDistinctWindow,
+      """SELECT event_id, user_id,
+        |  COUNT(DISTINCT event_type) OVER (PARTITION BY user_id
+        |    ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
+        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS n_distinct_5
+        |FROM events""".stripMargin),
+    QueryDef("agg_bool_misc", aggBoolMisc,
+      """SELECT l_returnflag,
+        |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_high,
+        |  bool_and(l_quantity > 0) AS all_pos,
+        |  bool_or(l_discount > 0.09) AS any_deep_disc,
+        |  COUNT(*) FILTER (WHERE l_tax > 0.05) AS n_taxed,
+        |  CAST(ROUND(SUM(CASE WHEN l_quantity > 25
+        |    THEN CAST(l_extendedprice AS DECIMAL(18,4)) END), 2) AS DOUBLE)
+        |    AS high_qty_price
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("join_existence", joinExistence,
+      """SELECT o_orderpriority, COUNT(*) AS n,
+        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
+        |    AS sum_price
+        |FROM orders
+        |WHERE o_totalprice > 300000
+        |   OR o_orderkey IN (SELECT l_orderkey FROM lineitem
+        |                     WHERE l_quantity > 49)
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("join_null_safe", joinNullSafe,
+      """WITH a AS (SELECT nullif(c_nationkey, 5) AS k, COUNT(*) AS n_cust
+        |           FROM customer GROUP BY 1),
+        |b AS (SELECT nullif(s_nationkey, 5) AS bk, COUNT(*) AS n_supp
+        |      FROM supplier GROUP BY 1)
+        |SELECT k, n_cust, n_supp
+        |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.bk""".stripMargin),
+    QueryDef("etl_mask_pseudonym", etlMaskPseudonym,
+      """SELECT COUNT(DISTINCT user_id) AS n_users,
+        |  COUNT(DISTINCT sha256(CAST(user_id AS VARCHAR) || ':pepper')) AS n_tokens,
+        |  COUNT(DISTINCT user_id) = COUNT(DISTINCT sha256(CAST(user_id AS VARCHAR) || ':pepper'))
+        |    AS cardinality_preserved,
+        |  MIN(sha256(CAST(user_id AS VARCHAR) || ':pepper')) AS min_token
+        |FROM events""".stripMargin),
+    QueryDef("win_rolling_zscore", winRollingZscore,
       """WITH b AS (SELECT event_id, user_id, value,
         |    COUNT(value) OVER w AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS sx,
@@ -1076,15 +1074,14 @@ object Relational {
         |       THEN (value - sx/n)
         |            / SQRT((n*sxx - sx*sx) / (n*(n-1.0)))
         |  END AS z
-        |FROM b""".stripMargin,
-    "etl_mask_pseudonym" ->
-      """SELECT COUNT(DISTINCT user_id) AS n_users,
-        |  COUNT(DISTINCT sha256(CAST(user_id AS VARCHAR) || ':pepper')) AS n_tokens,
-        |  COUNT(DISTINCT user_id) = COUNT(DISTINCT sha256(CAST(user_id AS VARCHAR) || ':pepper'))
-        |    AS cardinality_preserved,
-        |  MIN(sha256(CAST(user_id AS VARCHAR) || ':pepper')) AS min_token
-        |FROM events""".stripMargin,
-    "join_lateral" ->
+        |FROM b""".stripMargin),
+    QueryDef("agg_listagg", aggListagg,
+      """SELECT o_orderpriority,
+        |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
+        |    AS statuses,
+        |  COUNT(*) AS n
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("join_lateral", joinLateral,
       """SELECT o_orderpriority,
         |  CAST(SUM(CASE WHEN mq >= 45 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_big_max,
@@ -1093,55 +1090,8 @@ object Relational {
         |  LATERAL (SELECT MAX(l_quantity) AS mq FROM lineitem
         |           WHERE l_orderkey = o.o_orderkey)
         |WHERE mq IS NOT NULL
-        |GROUP BY o_orderpriority""".stripMargin,
-    "join_null_safe" ->
-      """WITH a AS (SELECT nullif(c_nationkey, 5) AS k, COUNT(*) AS n_cust
-        |           FROM customer GROUP BY 1),
-        |b AS (SELECT nullif(s_nationkey, 5) AS bk, COUNT(*) AS n_supp
-        |      FROM supplier GROUP BY 1)
-        |SELECT k, n_cust, n_supp
-        |FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.bk""".stripMargin,
-    "join_existence" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE o_totalprice > 300000
-        |   OR o_orderkey IN (SELECT l_orderkey FROM lineitem
-        |                     WHERE l_quantity > 49)
-        |GROUP BY o_orderpriority""".stripMargin,
-    "agg_bool_misc" ->
-      """SELECT l_returnflag,
-        |  COUNT(*) FILTER (WHERE l_quantity > 25) AS n_high,
-        |  bool_and(l_quantity > 0) AS all_pos,
-        |  bool_or(l_discount > 0.09) AS any_deep_disc,
-        |  COUNT(*) FILTER (WHERE l_tax > 0.05) AS n_taxed,
-        |  CAST(ROUND(SUM(CASE WHEN l_quantity > 25
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,4)) END), 2) AS DOUBLE)
-        |    AS high_qty_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "win_distinct_window" ->
-      """SELECT event_id, user_id,
-        |  COUNT(DISTINCT event_type) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id
-        |    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS n_distinct_5
-        |FROM events""".stripMargin,
-    "agg_cms" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CASE WHEN l_quantity = 1 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q1,
-        |  CAST(SUM(CASE WHEN l_quantity = 25 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q25,
-        |  TRUE AS cms_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "win_misc" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  nth_value(o_totalprice, 3) OVER (PARTITION BY o_orderpriority
-        |    ORDER BY o_orderkey ROWS UNBOUNDED PRECEDING) AS nth3,
-        |  lag(o_totalprice, 2, -1.0) OVER (PARTITION BY o_orderpriority
-        |    ORDER BY o_orderkey) AS lag2_dflt,
-        |  lead(o_totalprice, 2, -1.0) OVER (PARTITION BY o_orderpriority
-        |    ORDER BY o_orderkey) AS lead2_dflt
-        |FROM orders""".stripMargin,
-    "setop_multiset" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("setop_multiset", setopMultiset,
       """WITH a AS (SELECT l_suppkey, l_returnflag FROM lineitem),
         |b AS (SELECT l_suppkey, l_returnflag FROM lineitem
         |      WHERE l_quantity > 25),
@@ -1153,21 +1103,8 @@ object Relational {
         |       GROUP BY 1)
         |SELECT COALESCE(ex.l_returnflag, ix.l_returnflag) AS l_returnflag,
         |  n_except_all, n_intersect_all
-        |FROM ex FULL JOIN ix ON ex.l_returnflag = ix.l_returnflag""".stripMargin,
-    "join_interval" ->
-      """WITH e AS (SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-        |           FROM events),
-        |w AS (SELECT ts AS lo, ts + INTERVAL 15 MINUTE AS hi
-        |      FROM e WHERE event_type = 'error')
-        |SELECT e.event_type, COUNT(*) AS n_hits,
-        |  COUNT(DISTINCT e.event_id) AS n_events
-        |FROM e JOIN w ON e.ts >= w.lo AND e.ts < w.hi
-        |GROUP BY 1""".stripMargin,
-    "agg_histogram" ->
-      """SELECT CAST(FLOOR(l_extendedprice / 10000) AS BIGINT) AS bucket,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "events_funnel" ->
+        |FROM ex FULL JOIN ix ON ex.l_returnflag = ix.l_returnflag""".stripMargin),
+    QueryDef("events_funnel", eventsFunnel,
       """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events),
         |v AS (SELECT user_id, MIN(ts) AS v_ts FROM e
@@ -1183,14 +1120,18 @@ object Relational {
         |  strftime(c_ts, '%Y-%m-%d %H:%M:%S') AS first_click,
         |  strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS first_purchase
         |FROM v LEFT JOIN c ON v.user_id = c.user_id
-        |LEFT JOIN p ON v.user_id = p.user_id""".stripMargin,
-    "llm_fuzzy_match" ->
-      """SELECT c_custkey,
-        |  jaro_winkler_similarity(c_name, s_name) AS jw_name,
-        |  jaro_winkler_similarity(reverse(c_name), s_name) AS jw_rev,
-        |  levenshtein(c_name, s_name) AS lev
-        |FROM customer JOIN supplier ON c_custkey = s_suppkey""".stripMargin,
-    "etl_integrity" ->
+        |LEFT JOIN p ON v.user_id = p.user_id""".stripMargin),
+    QueryDef("events_retention", eventsRetention,
+      """WITH e AS (SELECT DISTINCT user_id,
+        |             date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk
+        |           FROM events),
+        |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM e GROUP BY 1)
+        |SELECT strftime(cohort_wk, '%Y-%m-%d') AS cohort_week,
+        |  CAST(date_diff('day', cohort_wk, wk) // 7 AS BIGINT) AS week_offset,
+        |  COUNT(DISTINCT e.user_id) AS n_users
+        |FROM e JOIN f ON e.user_id = f.user_id
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("etl_integrity", etlIntegrity,
       """SELECT 'lineitem->orders' AS fk_edge, COUNT(*) AS n_orphans
         |FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)
         |UNION ALL
@@ -1201,25 +1142,21 @@ object Relational {
         |FROM customer WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation)
         |UNION ALL
         |SELECT 'supplier->nation', COUNT(*)
-        |FROM supplier WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation)""".stripMargin,
-    "events_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id,
-        |             date_trunc('week', CAST(ts AS TIMESTAMP)) AS wk
-        |           FROM events),
-        |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM e GROUP BY 1)
-        |SELECT strftime(cohort_wk, '%Y-%m-%d') AS cohort_week,
-        |  CAST(date_diff('day', cohort_wk, wk) // 7 AS BIGINT) AS week_offset,
-        |  COUNT(DISTINCT e.user_id) AS n_users
-        |FROM e JOIN f ON e.user_id = f.user_id
-        |GROUP BY 1, 2""".stripMargin,
-    "agg_stats" ->
+        |FROM supplier WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation)""".stripMargin),
+    QueryDef("llm_fuzzy_match", fuzzyMatch,
+      """SELECT c_custkey,
+        |  jaro_winkler_similarity(c_name, s_name) AS jw_name,
+        |  jaro_winkler_similarity(reverse(c_name), s_name) AS jw_rev,
+        |  levenshtein(c_name, s_name) AS lev
+        |FROM customer JOIN supplier ON c_custkey = s_suppkey""".stripMargin),
+    QueryDef("agg_stats", aggStats,
       """SELECT l_returnflag,
         |  ROUND(stddev_samp(l_extendedprice), 4) AS sd_price,
         |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
         |  ROUND(covar_samp(l_quantity, l_discount), 6) AS cov_qty_disc,
         |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "etl_upsert" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("etl_upsert", etlUpsert,
       """WITH base AS (SELECT o_orderkey, o_orderstatus,
         |                CAST(o_totalprice AS DECIMAL(18,4)) AS price,
         |                1 AS version
@@ -1234,32 +1171,32 @@ object Relational {
         |           FROM (SELECT * FROM base UNION ALL SELECT * FROM updates))
         |SELECT o_orderstatus, COUNT(*) AS n,
         |  CAST(SUM(price) AS DOUBLE) AS total
-        |FROM merged WHERE rn = 1 GROUP BY o_orderstatus""".stripMargin,
-    "join_salted" ->
+        |FROM merged WHERE rn = 1 GROUP BY o_orderstatus""".stripMargin),
+    QueryDef("join_salted", joinSalted,
       """SELECT s_nationkey,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS n_items
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
-    "agg_median" ->
+        |GROUP BY s_nationkey""".stripMargin),
+    QueryDef("agg_median", aggMedian,
       """SELECT l_returnflag,
         |  ROUND(quantile_cont(l_extendedprice, 0.25), 4) AS p25_price,
         |  ROUND(median(l_extendedprice), 4) AS med_price,
         |  ROUND(quantile_cont(l_extendedprice, 0.75), 4) AS p75_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "win_percent_rank" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("win_percent_rank", winPercentRank,
       """SELECT o_orderkey, o_orderpriority,
         |  percent_rank() OVER (PARTITION BY o_orderpriority
         |                       ORDER BY o_totalprice) AS pct_rank,
         |  cume_dist() OVER (PARTITION BY o_orderpriority
         |                    ORDER BY o_totalprice) AS cume
-        |FROM orders""".stripMargin,
-    "agg_collect_list" ->
+        |FROM orders""".stripMargin),
+    QueryDef("agg_collect_list", aggCollectList,
       """SELECT c_nationkey, COUNT(*) AS n,
         |  array_to_string(list(c_custkey ORDER BY c_custkey), ',') AS custkeys
         |FROM customer WHERE c_acctbal > 9000
-        |GROUP BY c_nationkey""".stripMargin,
-    "q1_agg" ->
+        |GROUP BY c_nationkey""".stripMargin),
+    QueryDef("q1_agg", q1Agg,
       s"""SELECT l_returnflag, l_linestatus,
          |  $sumQty AS sum_qty,
          |  $sumPrice AS sum_base_price,
@@ -1270,111 +1207,80 @@ object Relational {
          |  CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_disc,
          |  COUNT(*) AS count_order
          |FROM lineitem WHERE l_shipdate < TIMESTAMP '2001-01-01'
-         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_count_distinct" ->
+         |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("agg_count_distinct", aggCountDistinct,
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
         |  COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "agg_approx_cd" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("agg_approx_cd", aggApproxCd,
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_exact, TRUE AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "agg_having" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("agg_having", aggHaving,
       s"""SELECT l_suppkey, $sumQty AS total_qty, COUNT(*) AS n_items
          |FROM lineitem GROUP BY l_suppkey
-         |HAVING $sumQty > 14000""".stripMargin,
-    "agg_bitmap_distinct" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  COUNT(DISTINCT l_partkey) AS n_parts,
-        |  COUNT(DISTINCT l_suppkey) AS n_supps
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_approx_quantile" ->
+         |HAVING $sumQty > 14000""".stripMargin),
+    QueryDef("agg_approx_quantile", aggApproxQuantile,
       """SELECT l_returnflag,
         |  ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_exact,
         |  ROUND(quantile_cont(l_extendedprice, 0.9), 4) AS p90_exact,
         |  TRUE AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "agg_rollup" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("agg_bitmap_distinct", aggBitmapDistinct,
+      """SELECT l_returnflag, l_linestatus,
+        |  COUNT(DISTINCT l_partkey) AS n_parts,
+        |  COUNT(DISTINCT l_suppkey) AS n_supps
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("agg_rollup", aggRollup,
       """SELECT r_name, n_name, COUNT(*) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_bal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
-    "agg_cube" ->
+        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin),
+    QueryDef("agg_cube", aggCube,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin,
-    "agg_grouping_sets" ->
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)""".stripMargin),
+    QueryDef("agg_grouping_sets", aggGroupingSets,
       s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows, $sumQty AS sum_qty
          |FROM lineitem
-         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-    "join_inner_star" ->
+         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin),
+    QueryDef("join_inner_star", joinInnerStar,
       s"""SELECT r_name, $sumDisc AS revenue, COUNT(*) AS n_items
          |FROM lineitem
          |JOIN orders ON l_orderkey = o_orderkey
          |JOIN customer ON o_custkey = c_custkey
          |JOIN nation ON c_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name""".stripMargin,
-    "join_left_agg" ->
+         |GROUP BY r_name""".stripMargin),
+    QueryDef("join_left_agg", joinLeftAgg,
       """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
         |  CAST(COALESCE(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 0) AS DOUBLE) AS total_spent
         |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey""".stripMargin,
-    "join_right_agg" ->
+        |GROUP BY c_custkey""".stripMargin),
+    QueryDef("join_right_agg", joinRightAgg,
       """SELECT p_partkey, p_brand, COUNT(l_orderkey) AS n_li
         |FROM lineitem RIGHT JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_partkey, p_brand""".stripMargin,
-    "join_full" ->
+        |GROUP BY p_partkey, p_brand""".stripMargin),
+    QueryDef("join_full", joinFull,
       """WITH c AS (SELECT c_nationkey AS ck, COUNT(*) AS n_customers FROM customer GROUP BY 1),
         |     s AS (SELECT s_nationkey AS sk, COUNT(*) AS n_suppliers FROM supplier GROUP BY 1)
         |SELECT COALESCE(ck, sk) AS nationkey, n_customers, n_suppliers
-        |FROM c FULL OUTER JOIN s ON ck = sk""".stripMargin,
-    "join_semi" ->
+        |FROM c FULL OUTER JOIN s ON ck = sk""".stripMargin),
+    QueryDef("join_semi", joinSemi,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-    "join_anti" ->
+        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin),
+    QueryDef("join_anti", joinAnti,
       """SELECT c_custkey, c_name, c_nationkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-    "agg_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS F,
-        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS O,
-        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS P
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "reshape_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_extendedprice' AS metric, l_extendedprice AS value FROM lineitem""".stripMargin,
-    "win_range_frame" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |             CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS epoch,
-        |             value
-        |           FROM events)
-        |SELECT event_id, user_id,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
-        |    PARTITION BY user_id ORDER BY epoch
-        |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |    AS rolling_1h
-        |FROM e""".stripMargin,
-    "subq_correlated" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE o_totalprice > 1.5 * (SELECT AVG(o2.o_totalprice)
-        |                            FROM orders o2
-        |                            WHERE o2.o_custkey = o.o_custkey)""".stripMargin,
-    "join_theta" ->
-      """SELECT r_name, COUNT(*) AS n_nations_below
-        |FROM nation JOIN region ON n_regionkey < r_regionkey
-        |GROUP BY r_name""".stripMargin,
-    "join_range" ->
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin),
+    QueryDef("join_range", joinRange,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS n_pairs
         |FROM e a JOIN e b ON a.user_id = b.user_id
         |  AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 10 MINUTE
-        |GROUP BY 1, 2""".stripMargin,
-    "join_asof" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("join_asof", joinAsOf,
       """WITH err AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |             FROM events WHERE event_type = 'error'),
         |     sig AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -1383,11 +1289,11 @@ object Relational {
         |  strftime(err.ts, '%Y-%m-%d %H:%M:%S') AS error_at,
         |  strftime(sig.ts, '%Y-%m-%d %H:%M:%S') AS signup_at
         |FROM err ASOF LEFT JOIN sig
-        |  ON err.user_id = sig.user_id AND err.ts >= sig.ts""".stripMargin,
+        |  ON err.user_id = sig.user_id AND err.ts >= sig.ts""".stripMargin),
     // Forward/nearest oracles avoid DuckDB's ASOF direction support and
     // recompute from conditional min/max aggregates per error row —
     // quadratic in the oracle only; the engine side stays linear.
-    "join_asof_forward" ->
+    QueryDef("join_asof_forward", joinAsOfForward,
       """WITH err AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |             FROM events WHERE event_type = 'error'),
         |     sig AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -1397,8 +1303,8 @@ object Relational {
         |  strftime(MIN(CASE WHEN s.ts >= e.ts THEN s.ts END),
         |           '%Y-%m-%d %H:%M:%S') AS next_signup_at
         |FROM err e LEFT JOIN sig s ON e.user_id = s.user_id
-        |GROUP BY e.event_id, e.user_id, e.ts""".stripMargin,
-    "join_asof_nearest" ->
+        |GROUP BY e.event_id, e.user_id, e.ts""".stripMargin),
+    QueryDef("join_asof_nearest", joinAsOfNearest,
       """WITH err AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |             FROM events WHERE event_type = 'error'),
         |     sig AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts
@@ -1415,72 +1321,103 @@ object Relational {
         |    WHEN fwd IS NULL THEN back
         |    WHEN epoch_us(ts) - epoch_us(back) <= epoch_us(fwd) - epoch_us(ts)
         |      THEN back ELSE fwd END, '%Y-%m-%d %H:%M:%S') AS nearest_signup_at
-        |FROM bt""".stripMargin,
-    "win_topk_per_group" ->
+        |FROM bt""".stripMargin),
+    QueryDef("join_theta", joinTheta,
+      """SELECT r_name, COUNT(*) AS n_nations_below
+        |FROM nation JOIN region ON n_regionkey < r_regionkey
+        |GROUP BY r_name""".stripMargin),
+    QueryDef("agg_pivot", aggPivot,
+      """SELECT o_orderpriority,
+        |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS F,
+        |  COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS O,
+        |  COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS P
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("reshape_unpivot", reshapeUnpivot,
+      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, 'l_extendedprice' AS metric, l_extendedprice AS value FROM lineitem""".stripMargin),
+    QueryDef("win_range_frame", winRangeFrame,
+      """WITH e AS (SELECT event_id, user_id,
+        |             CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS epoch,
+        |             value
+        |           FROM events)
+        |SELECT event_id, user_id,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
+        |    PARTITION BY user_id ORDER BY epoch
+        |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS DOUBLE)
+        |    AS rolling_1h
+        |FROM e""".stripMargin),
+    QueryDef("subq_correlated", subqCorrelated,
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders o
+        |WHERE o_totalprice > 1.5 * (SELECT AVG(o2.o_totalprice)
+        |                            FROM orders o2
+        |                            WHERE o2.o_custkey = o.o_custkey)""".stripMargin),
+    QueryDef("win_topk_per_group", winTopkPerGroup,
       """SELECT o_orderpriority, rn, o_orderkey, o_totalprice FROM (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |    ROW_NUMBER() OVER (PARTITION BY o_orderpriority
         |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "win_lag_lead" ->
+        |  FROM orders) WHERE rn <= 3""".stripMargin),
+    QueryDef("win_lag_lead", winLagLead,
       """SELECT event_id, user_id,
         |  value - LAG(value, 1) OVER w AS delta_prev,
         |  LEAD(value, 1) OVER w - value AS delta_next
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""".stripMargin,
-    "win_moving_avg" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""".stripMargin),
+    QueryDef("win_moving_avg", winMovingAvg,
       """SELECT o_orderkey, o_custkey,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)
         |    / COUNT(*) OVER w AS ma7
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey
         |  ORDER BY o_orderdate, o_orderkey
-        |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "win_first_last" ->
+        |  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin),
+    QueryDef("win_first_last", winFirstLast,
       """SELECT DISTINCT l_suppkey,
         |  FIRST_VALUE(l_extendedprice) OVER w AS first_price,
         |  LAST_VALUE(l_extendedprice) OVER w AS last_price
         |FROM lineitem
         |WINDOW w AS (PARTITION BY l_suppkey
         |  ORDER BY l_shipdate, l_orderkey, l_linenumber
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-    "win_cumsum" ->
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin),
+    QueryDef("win_cumsum", winCumSum,
       """SELECT l_orderkey, l_linenumber, l_suppkey,
         |  ROUND(SUM(l_quantity) OVER (PARTITION BY l_suppkey
         |    ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
         |    ROWS UNBOUNDED PRECEDING), 4) AS cum_qty
-        |FROM lineitem""".stripMargin,
-    "win_rank" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("win_rank", winRank,
       """SELECT c_mktsegment, rnk, drnk, c_custkey, c_acctbal FROM (
         |  SELECT c_mktsegment, c_custkey, c_acctbal,
         |    RANK() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC) AS rnk,
         |    DENSE_RANK() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC) AS drnk
-        |  FROM customer) WHERE rnk <= 10""".stripMargin,
-    "win_ntile" ->
+        |  FROM customer) WHERE rnk <= 10""".stripMargin),
+    QueryDef("win_ntile", winNtile,
       """SELECT o_orderpriority,
         |  NTILE(4) OVER (PARTITION BY o_orderpriority
         |                 ORDER BY o_totalprice, o_orderkey) AS quartile,
         |  o_orderkey
-        |FROM orders""".stripMargin,
-    "sort_topn" ->
+        |FROM orders""".stripMargin),
+    QueryDef("sort_topn", sortTopN,
       """SELECT o_orderkey, o_totalprice, CAST(o_orderdate AS DATE) AS o_date
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "sort_within_parts" ->
-      "SELECT l_orderkey, l_linenumber, l_suppkey, l_quantity FROM lineitem",
-    "setop_union_all" ->
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
+    QueryDef("sort_within_parts", sortWithinParts,
+      "SELECT l_orderkey, l_linenumber, l_suppkey, l_quantity FROM lineitem"),
+    QueryDef("setop_union_all", setopUnionAll,
       """SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_totalprice > 200000
         |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-    "setop_union_distinct" ->
+        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin),
+    QueryDef("setop_union_distinct", setopUnionDistinct,
       """SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_totalprice > 200000
         |UNION
-        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-    "setop_intersect" ->
+        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin),
+    QueryDef("setop_intersect", setopIntersect,
       """SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_totalprice > 200000
         |INTERSECT
-        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
-    "setop_except" ->
+        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin),
+    QueryDef("setop_except", setopExcept,
       """SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_totalprice > 200000
         |EXCEPT
-        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin)
+        |SELECT o_orderkey, o_orderstatus, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin))
 }

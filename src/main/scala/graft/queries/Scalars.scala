@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** Scalar-function query surface (SURVEY §2B): string, date, math,
@@ -182,50 +183,38 @@ object Scalars {
       .orderBy(col("n").desc, col("token"))
       .limit(20)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "filter_predicates" -> (filterPredicates _),
-    "scalar_string" -> (scalarString _),
-    "scalar_date" -> (scalarDate _),
-    "scalar_math" -> (scalarMath _),
-    "scalar_misc" -> (scalarMisc _),
-    "scalar_conditional" -> (scalarConditional _),
-    "json_extract" -> (jsonExtract _),
-    "json_variant" -> (jsonVariant _),
-    "array_ops" -> (arrayOps _),
-    "scalar_map" -> (scalarMap _),
-    "scalar_struct" -> (scalarStruct _),
-    "scalar_bitwise" -> (scalarBitwise _),
-    "explode_tokens" -> (explodeTokens _))
-
-  val oracle: Map[String, String] = Map(
-    "scalar_bitwise" ->
-      """SELECT p_partkey,
-        |  p_partkey & 170 AS band, p_partkey | 85 AS bor,
-        |  xor(p_partkey, 204) AS bxor, ~p_partkey AS bnot,
-        |  p_partkey << 2 AS shl, p_partkey >> 1 AS shr,
-        |  CAST(bit_count(p_partkey) AS INTEGER) AS bcnt
-        |FROM part WHERE p_partkey < 512""".stripMargin,
-    "filter_predicates" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("filter_predicates", filterPredicates,
       """SELECT p_partkey, p_name, p_type, p_size FROM part
         |WHERE p_type LIKE 'P%' AND p_size IN (5, 10, 15, 20, 25)
-        |  AND p_retailprice BETWEEN 900 AND 1500 AND p_name IS NOT NULL""".stripMargin,
-    "scalar_string" ->
+        |  AND p_retailprice BETWEEN 900 AND 1500 AND p_name IS NOT NULL""".stripMargin),
+    QueryDef("scalar_string", scalarString,
       """SELECT c_custkey, UPPER(c_name) AS uname, SUBSTRING(c_name, 1, 8) AS pre,
         |  LENGTH(c_name) AS len,
         |  CONCAT(c_mktsegment, '-', CAST(c_nationkey AS VARCHAR)) AS tag,
         |  SPLIT_PART(c_name, '#', 2) AS numpart,
         |  TRIM(LOWER(c_mktsegment)) AS seg,
         |  REGEXP_REPLACE(c_name, '0+', '0', 'g') AS squeezed
-        |FROM customer""".stripMargin,
-    "scalar_date" ->
+        |FROM customer""".stripMargin),
+    QueryDef("scalar_date", scalarDate,
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate,
         |  YEAR(o_orderdate) AS yr, MONTH(o_orderdate) AS mo,
         |  DAYOFMONTH(o_orderdate) AS dom, DAYOFWEEK(o_orderdate) + 1 AS dow,
         |  CAST(DATE_TRUNC('month', o_orderdate) AS DATE) AS month_start,
         |  LAST_DAY(CAST(o_orderdate AS DATE)) AS month_end,
         |  DATE_DIFF('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS days_to_2002
-        |FROM orders""".stripMargin,
-    "scalar_misc" ->
+        |FROM orders""".stripMargin),
+    QueryDef("scalar_math", scalarMath,
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4)) AS DOUBLE) AS net,
+        |  ROUND(ABS(l_discount - l_tax), 4) AS absdiff,
+        |  ROUND(LN(l_extendedprice), 4) AS ln_price,
+        |  ROUND(SQRT(l_quantity), 4) AS sqrt_qty,
+        |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS floor_price,
+        |  CAST(CEIL(l_quantity) AS BIGINT) AS ceil_qty,
+        |  ROUND(POW(l_quantity, 2), 4) AS qty_sq
+        |FROM lineitem""".stripMargin),
+    QueryDef("scalar_misc", scalarMisc,
       """SELECT l_orderkey, l_linenumber,
         |  l_orderkey & 255 AS key_and,
         |  l_orderkey | l_linenumber AS key_or,
@@ -237,37 +226,27 @@ object Scalars {
         |  CAST(SIGN(l_discount - l_tax) AS BIGINT) AS sign_dt,
         |  GREATEST(l_quantity, CAST(l_linenumber AS DOUBLE)) AS g_ql,
         |  LEAST(l_discount, l_tax) AS l_dt
-        |FROM lineitem""".stripMargin,
-    "scalar_math" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4)) AS DOUBLE) AS net,
-        |  ROUND(ABS(l_discount - l_tax), 4) AS absdiff,
-        |  ROUND(LN(l_extendedprice), 4) AS ln_price,
-        |  ROUND(SQRT(l_quantity), 4) AS sqrt_qty,
-        |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS floor_price,
-        |  CAST(CEIL(l_quantity) AS BIGINT) AS ceil_qty,
-        |  ROUND(POW(l_quantity, 2), 4) AS qty_sq
-        |FROM lineitem""".stripMargin,
-    "scalar_conditional" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("scalar_conditional", scalarConditional,
       """SELECT o_orderkey,
         |  CASE WHEN o_totalprice > 300000 THEN 'high'
         |       WHEN o_totalprice > 150000 THEN 'mid' ELSE 'low' END AS bucket,
         |  COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status2,
         |  o_orderpriority = '1-URGENT' AS is_urgent
-        |FROM orders""".stripMargin,
-    "json_extract" ->
+        |FROM orders""".stripMargin),
+    QueryDef("json_extract", jsonExtract,
       """SELECT event_id,
         |  json_extract_string(props, '$.k') AS k_str,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_struct
-        |FROM events""".stripMargin,
-    "json_variant" ->
+        |FROM events""".stripMargin),
+    QueryDef("json_variant", jsonVariant,
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_long,
         |  CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_double,
         |  CAST(json_extract_string(props, '$.missing') AS BIGINT) AS k_missing
-        |FROM events""".stripMargin,
-    "array_ops" ->
+        |FROM events""".stripMargin),
+    QueryDef("array_ops", arrayOps,
       """SELECT vec_id, len(embedding) AS dim,
         |  ROUND(CAST(embedding[1] AS DOUBLE), 6) AS e1,
         |  ROUND(CAST(embedding[-1] AS DOUBLE), 6) AS e_last,
@@ -275,24 +254,31 @@ object Scalars {
         |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6) AS norm2,
         |  ROUND(list_sum(list_transform(embedding,
         |    x -> CAST(x AS DOUBLE))), 6) AS sum_e
-        |FROM embeddings""".stripMargin,
-    "scalar_struct" ->
+        |FROM embeddings""".stripMargin),
+    QueryDef("scalar_map", scalarMap,
+      """SELECT l_orderkey, l_linenumber,
+        |  CAST((MAP(['qty','disc'], [l_quantity, l_discount])['qty'])[1] AS DOUBLE) AS qty_val,
+        |  CAST((MAP(['qty','disc'], [l_quantity, l_discount])['disc'])[1] AS DOUBLE) AS disc_val,
+        |  (MAP(['qty','disc'], [l_quantity, l_discount])['missing'])[1] IS NULL AS missing_is_null,
+        |  CAST(cardinality(MAP(['qty','disc'], [l_quantity, l_discount])) AS BIGINT) AS n_keys
+        |FROM lineitem""".stripMargin),
+    QueryDef("scalar_struct", scalarStruct,
       """SELECT l_orderkey, l_linenumber,
         |  ({'price': l_extendedprice, 'disc': l_discount}).price AS price_out,
         |  ({'pricing': {'price': l_extendedprice, 'disc': l_discount},
         |    'flag': l_returnflag}).pricing.disc AS disc_out,
         |  ({'pricing': {'price': l_extendedprice, 'disc': l_discount},
         |    'flag': l_returnflag}).flag AS flag_out
-        |FROM lineitem""".stripMargin,
-    "scalar_map" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST((MAP(['qty','disc'], [l_quantity, l_discount])['qty'])[1] AS DOUBLE) AS qty_val,
-        |  CAST((MAP(['qty','disc'], [l_quantity, l_discount])['disc'])[1] AS DOUBLE) AS disc_val,
-        |  (MAP(['qty','disc'], [l_quantity, l_discount])['missing'])[1] IS NULL AS missing_is_null,
-        |  CAST(cardinality(MAP(['qty','disc'], [l_quantity, l_discount])) AS BIGINT) AS n_keys
-        |FROM lineitem""".stripMargin,
-    "explode_tokens" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("scalar_bitwise", scalarBitwise,
+      """SELECT p_partkey,
+        |  p_partkey & 170 AS band, p_partkey | 85 AS bor,
+        |  xor(p_partkey, 204) AS bxor, ~p_partkey AS bnot,
+        |  p_partkey << 2 AS shl, p_partkey >> 1 AS shr,
+        |  CAST(bit_count(p_partkey) AS INTEGER) AS bcnt
+        |FROM part WHERE p_partkey < 512""".stripMargin),
+    QueryDef("explode_tokens", explodeTokens,
       """SELECT token, COUNT(*) AS n FROM (
         |  SELECT UNNEST(string_split(text, ' ')) AS token FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin)
+        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin))
 }

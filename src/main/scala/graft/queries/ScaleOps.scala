@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
+import graft.QueryDef
 import graft.core.{ScratchDirs, SessionScoped, Tables}
 import graft.core.CkptTap._
 
@@ -564,59 +565,34 @@ object ScaleOps {
 
   // ---------------------------------------------------------------- maps
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_bucketed" -> (joinBucketed _),
-    "join_band" -> (joinBand _),
-    "scan_orc_roundtrip" -> (scanOrcRoundtrip _),
-    "scan_xml_roundtrip" -> (scanXmlRoundtrip _),
-    "llm_quantize_int8" -> (llmQuantizeInt8 _),
-    "agg_heavy_hitters" -> (aggHeavyHitters _),
-    "etl_compact" -> (etlCompact _),
-    "scan_zorder" -> (scanZorder _),
-    "scan_bucket_pruned" -> (scanBucketPruned _),
-    "scan_catalog_bucketed" -> (scanCatalogBucketed _),
-    "etl_incremental_rollup" -> (etlIncrementalRollup _),
-    "join_dpp" -> (joinDpp _),
-    "etl_table_checksum" -> (etlTableChecksum _),
-    "scan_cached_reuse" -> (scanCachedReuse _),
-    "join_shuffle_hash" -> (joinShuffleHash _),
-    "join_bloom" -> (joinBloom _),
-    "etl_schema_evolution" -> (etlSchemaEvolution _))
-
-  val oracle: Map[String, String] = Map(
-    "join_bucketed" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("join_bucketed", joinBucketed,
       """SELECT o_orderpriority, COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE) AS revenue,
         |  CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "join_bloom" ->
-      """SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY l_returnflag""".stripMargin,
-    "join_band" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("join_band", joinBand,
       """WITH e AS (SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us, value FROM events),
         |a AS (SELECT * FROM e WHERE value > 320)
         |SELECT a.event_id, COUNT(b.event_id) AS n_nearby,
         |  CAST(SUM(CAST(b.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_nearby
         |FROM a LEFT JOIN e b
         |  ON b.event_id <> a.event_id AND abs(b.us - a.us) <= 300000000
-        |GROUP BY a.event_id""".stripMargin,
-    "scan_orc_roundtrip" ->
+        |GROUP BY a.event_id""".stripMargin),
+    QueryDef("scan_orc_roundtrip", scanOrcRoundtrip,
       """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
         |       MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
         |       MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "scan_xml_roundtrip" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("scan_xml_roundtrip", scanXmlRoundtrip,
       """SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS n_users,
         |       MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
         |       MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us,
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "llm_quantize_int8" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("llm_quantize_int8", llmQuantizeInt8,
       """WITH b AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb FROM embeddings),
         |s AS (SELECT vec_id, emb, list_max(list_transform(emb, x -> abs(x)))/127.0 AS scale FROM b),
         |q AS (SELECT vec_id, scale, emb,
@@ -630,52 +606,52 @@ object ScaleOps {
         |  list_sum(list_transform(emb, x -> x*x))
         |    - 2*scale*list_sum(list_transform(list_zip(emb, qv), p -> p[1]*p[2]))
         |    + scale*scale*list_sum(list_transform(qv, v -> v*v)) AS err
-        |FROM q""".stripMargin,
-    "agg_heavy_hitters" ->
+        |FROM q""".stripMargin),
+    QueryDef("agg_heavy_hitters", aggHeavyHitters,
       """WITH tot AS (SELECT COUNT(*) AS total FROM events),
         |c AS (SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY 1)
         |SELECT event_type, cnt, TRUE AS in_sketch
-        |FROM c, tot WHERE cnt > total/8.0""".stripMargin,
-    "etl_compact" ->
+        |FROM c, tot WHERE cnt > total/8.0""".stripMargin),
+    QueryDef("etl_compact", etlCompact,
       """SELECT CAST(4 AS BIGINT) AS n_files, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events""".stripMargin,
-    "scan_zorder" ->
+        |FROM events""".stripMargin),
+    QueryDef("scan_zorder", scanZorder,
       """SELECT COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_price
         |FROM lineitem
-        |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 40""".stripMargin,
-    "scan_bucket_pruned" ->
+        |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 40""".stripMargin),
+    QueryDef("scan_bucket_pruned", scanBucketPruned,
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
-        |FROM orders WHERE o_orderkey IN (1, 2, 3)""".stripMargin,
-    "scan_catalog_bucketed" ->
+        |FROM orders WHERE o_orderkey IN (1, 2, 3)""".stripMargin),
+    QueryDef("scan_catalog_bucketed", scanCatalogBucketed,
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_totalprice
         |FROM orders
         |WHERE o_orderpriority = '1-URGENT'
-        |  AND o_orderkey IN (3, 4, 5, 6)""".stripMargin,
-    "etl_incremental_rollup" ->
+        |  AND o_orderkey IN (3, 4, 5, 6)""".stripMargin),
+    QueryDef("etl_incremental_rollup", etlIncrementalRollup,
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "join_dpp" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("join_dpp", joinDpp,
       """WITH dim(flag, label) AS (VALUES ('A', 'returned'), ('R', 'refunded'))
         |SELECT l_returnflag, label, COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_qty,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_price
         |FROM lineitem JOIN dim ON l_returnflag = flag
-        |GROUP BY l_returnflag, label""".stripMargin,
-    "etl_table_checksum" ->
+        |GROUP BY l_returnflag, label""".stripMargin),
+    QueryDef("etl_table_checksum", etlTableChecksum,
       """SELECT COUNT(*) AS n_rows,
         |  CAST(CAST(SUM(CAST(CAST('0x' || substr(md5(
         |    o_orderkey || '|' || o_custkey || '|' || o_orderstatus || '|' ||
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) || '|' ||
         |    strftime(o_orderdate, '%Y-%m-%d') || '|' || o_orderpriority
         |  ), 1, 12) AS BIGINT) AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS VARCHAR) AS checksum
-        |FROM orders""".stripMargin,
-    "scan_cached_reuse" ->
+        |FROM orders""".stripMargin),
+    QueryDef("scan_cached_reuse", scanCachedReuse,
       """WITH f AS (SELECT l_returnflag, l_quantity, l_extendedprice
         |           FROM lineitem WHERE l_quantity > 10),
         |tot AS (SELECT COUNT(*) AS n_total,
@@ -685,13 +661,19 @@ object ScaleOps {
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))), 2) AS DOUBLE) AS sum_price,
         |  n_total, qty_total
         |FROM f CROSS JOIN tot
-        |GROUP BY l_returnflag, n_total, qty_total""".stripMargin,
-    "join_shuffle_hash" ->
+        |GROUP BY l_returnflag, n_total, qty_total""".stripMargin),
+    QueryDef("join_shuffle_hash", joinShuffleHash,
       """SELECT o_orderpriority, COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "etl_schema_evolution" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("join_bloom", joinBloom,
+      """SELECT l_returnflag, COUNT(*) AS n,
+        |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * CAST(1 - l_discount AS DECIMAL(8,4))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY l_returnflag""".stripMargin),
+    QueryDef("etl_schema_evolution", etlSchemaEvolution,
       """WITH e AS (SELECT event_id, user_id, event_type, value,
         |             CASE WHEN dayofmonth(CAST(ts AS TIMESTAMP)) <= 15
         |                  THEN 1 ELSE 2 END AS gen
@@ -701,5 +683,5 @@ object ScaleOps {
         |  COUNT(CASE WHEN gen = 2 THEN event_type END) AS n_type,
         |  CAST(SUM(CASE WHEN gen = 1
         |       THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_value
-        |FROM e GROUP BY gen""".stripMargin)
+        |FROM e GROUP BY gen""".stripMargin))
 }

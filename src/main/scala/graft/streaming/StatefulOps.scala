@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-import graft.core.Tables
+import graft.QueryDef
+import graft.core.{ScratchDirs, Tables}
 
 /** Custom keyed state beyond what session_window expresses
   * (SURVEY §2B streaming note): per-user running statistics with
@@ -310,10 +311,13 @@ object StatefulOps {
       val src = graft.streaming.StreamingOps.eventsStream(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
+      val ckpt = ScratchDirs.perRun(s, name, dir)
       val q = timerSessions(src).toDF()
         .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
         .format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable()
+      finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
       s.table(name)
     } finally {
       prev match {
@@ -478,36 +482,16 @@ object StatefulOps {
   /** Graded batch query. The oracle reproduces the running mean with an
     * exact DECIMAL(18,2) prefix sum cast to double and divided by the
     * prefix count — bit-identical to the integer-cent state above. */
-  def queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    "stream_tws_new_highs" -> ((s, d) => newHighs(eventsTyped(s, d)).toDF()),
-    "stream_tws_capped_sum" -> ((s, d) =>
-      cappedBalance(eventsTyped(s, d)).toDF()),
-    "stream_tws_cusum" -> ((s, d) => cusum(eventsTyped(s, d)).toDF()),
-    "stream_tws_topk" -> ((s, d) => topK(eventsTyped(s, d)).toDF()),
-    "stream_tws_typecounts" -> ((s, d) =>
-      typeCounts(eventsWithType(s, d)).toDF()),
-    "stream_anti_dedup_state" -> ((s, d) =>
-      antiDedupStateful(eventsDigested(s, d)).toDF()
-        .groupBy("event_type")
-        .agg((sum("n_dropped") + sum("n_kept")).as("n_in"),
-          sum("n_dropped").as("n_dropped"),
-          sum("n_kept").as("n_kept"))),
-    "stream_timer_sessions" -> (timerSessionsRun _),
-    "stream_stateful_anomaly" -> ((s, d) => {
-      // mean_before is emitted RAW: both engines produce bit-identical
-      // doubles (integer-cent sum, one division), and an engine-side
-      // round(4) re-introduces midpoint divergence — the true mean
-      // cents/(100·n) lands exactly on .xxxx5 midpoints, where Spark
-      // (HALF_UP on the shortest decimal string) and DuckDB (half-up on
-      // the binary value) disagree. The comparator's canonicalization
-      // rounds both sides in one process, which is midpoint-safe.
-      anomalies(eventsTyped(s, d)).toDF()
-        .select(col("user_id"), col("event_id"), col("value"),
-          col("mean_before"))
-    }))
-
-  def oracle: Map[String, String] = Map(
-    "stream_tws_capped_sum" ->
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("stream_tws_new_highs", (s, d) => newHighs(eventsTyped(s, d)).toDF(),
+      """WITH w AS (SELECT user_id, event_id, value,
+        |  MAX(value) OVER (PARTITION BY user_id ORDER BY event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_before
+        |  FROM events)
+        |SELECT user_id, event_id, value, max_before AS prev_max
+        |FROM w WHERE max_before IS NOT NULL AND value > max_before""".stripMargin),
+    QueryDef("stream_tws_capped_sum", (s, d) =>
+      cappedBalance(eventsTyped(s, d)).toDF(),
       """WITH RECURSIVE
         |e AS (SELECT user_id, event_id,
         |        CAST(ROUND(value * 100) AS BIGINT) - 10000 AS delta,
@@ -525,8 +509,8 @@ object StatefulOps {
         |SELECT user_id, bal AS balance_cents, hits AS n_floor_hits
         |FROM (SELECT user_id, rn, bal, hits,
         |        MAX(rn) OVER (PARTITION BY user_id) AS mx FROM r)
-        |WHERE rn = mx""".stripMargin,
-    "stream_tws_cusum" ->
+        |WHERE rn = mx""".stripMargin),
+    QueryDef("stream_tws_cusum", (s, d) => cusum(eventsTyped(s, d)).toDF(),
       """WITH RECURSIVE
         |e AS (SELECT user_id,
         |        CAST(ROUND(value * 100) AS BIGINT) - 5500 AS delta,
@@ -549,13 +533,32 @@ object StatefulOps {
         |       m AS peak_cents, a AS n_alarms
         |FROM (SELECT user_id, rn, s, m, a,
         |        MAX(rn) OVER (PARTITION BY user_id) AS mx FROM r)
-        |WHERE rn = mx""".stripMargin,
-    "stream_tws_typecounts" ->
+        |WHERE rn = mx""".stripMargin),
+    QueryDef("stream_tws_topk", (s, d) => topK(eventsTyped(s, d)).toDF(),
+      """WITH e AS (SELECT user_id, event_id,
+        |        CAST(ROUND(value * 100) AS BIGINT) AS cents
+        |      FROM events),
+        |r AS (SELECT user_id, cents,
+        |        ROW_NUMBER() OVER (PARTITION BY user_id
+        |                           ORDER BY cents DESC, event_id) AS rn
+        |      FROM e)
+        |SELECT user_id, COUNT(*) AS n_events,
+        |  MAX(CASE WHEN rn = 1 THEN cents END) AS top1_cents,
+        |  MAX(CASE WHEN rn = 2 THEN cents END) AS top2_cents,
+        |  MAX(CASE WHEN rn = 3 THEN cents END) AS top3_cents
+        |FROM r GROUP BY user_id""".stripMargin),
+    QueryDef("stream_tws_typecounts", (s, d) =>
+      typeCounts(eventsWithType(s, d)).toDF(),
       """SELECT user_id, event_type, COUNT(*) AS n_events
-        |FROM events GROUP BY user_id, event_type""".stripMargin,
+        |FROM events GROUP BY user_id, event_type""".stripMargin),
     // Identical answer to stream_anti_dedup's join shape — the state
     // store changes the PLAN, never the verdicts.
-    "stream_anti_dedup_state" ->
+    QueryDef("stream_anti_dedup_state", (s, d) =>
+      antiDedupStateful(eventsDigested(s, d)).toDF()
+        .groupBy("event_type")
+        .agg((sum("n_dropped") + sum("n_kept")).as("n_in"),
+          sum("n_dropped").as("n_dropped"),
+          sum("n_kept").as("n_kept")),
       """WITH e AS (SELECT event_id, event_type,
         |             md5(concat_ws('|', user_id, event_type, props)) AS dg
         |           FROM events),
@@ -566,8 +569,8 @@ object StatefulOps {
         |  CAST(SUM(CASE WHEN dg IN (SELECT dg FROM seen)
         |           THEN 0 ELSE 1 END) AS BIGINT) AS n_kept
         |FROM e WHERE event_id % 5 <> 0
-        |GROUP BY event_type""".stripMargin,
-    "stream_timer_sessions" ->
+        |GROUP BY event_type""".stripMargin),
+    QueryDef("stream_timer_sessions", timerSessionsRun,
       """WITH e AS (SELECT user_id, event_id,
         |        epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events),
         |o AS (SELECT user_id, us, event_id,
@@ -590,28 +593,19 @@ object StatefulOps {
         |  CASE WHEN g.sid = m.mx THEN 'timer' ELSE 'gap' END AS closed_by
         |FROM g JOIN m ON m.user_id = g.user_id CROSS JOIN wm
         |WHERE g.sid <> m.mx
-        |   OR (g.sess_end_us + 1800000000) // 1000 + 1 < wm.w_ms""".stripMargin,
-    "stream_tws_topk" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |        CAST(ROUND(value * 100) AS BIGINT) AS cents
-        |      FROM events),
-        |r AS (SELECT user_id, cents,
-        |        ROW_NUMBER() OVER (PARTITION BY user_id
-        |                           ORDER BY cents DESC, event_id) AS rn
-        |      FROM e)
-        |SELECT user_id, COUNT(*) AS n_events,
-        |  MAX(CASE WHEN rn = 1 THEN cents END) AS top1_cents,
-        |  MAX(CASE WHEN rn = 2 THEN cents END) AS top2_cents,
-        |  MAX(CASE WHEN rn = 3 THEN cents END) AS top3_cents
-        |FROM r GROUP BY user_id""".stripMargin,
-    "stream_tws_new_highs" ->
-      """WITH w AS (SELECT user_id, event_id, value,
-        |  MAX(value) OVER (PARTITION BY user_id ORDER BY event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_before
-        |  FROM events)
-        |SELECT user_id, event_id, value, max_before AS prev_max
-        |FROM w WHERE max_before IS NOT NULL AND value > max_before""".stripMargin,
-    "stream_stateful_anomaly" ->
+        |   OR (g.sess_end_us + 1800000000) // 1000 + 1 < wm.w_ms""".stripMargin),
+    QueryDef("stream_stateful_anomaly", (s, d) => {
+      // mean_before is emitted RAW: both engines produce bit-identical
+      // doubles (integer-cent sum, one division), and an engine-side
+      // round(4) re-introduces midpoint divergence — the true mean
+      // cents/(100·n) lands exactly on .xxxx5 midpoints, where Spark
+      // (HALF_UP on the shortest decimal string) and DuckDB (half-up on
+      // the binary value) disagree. The comparator's canonicalization
+      // rounds both sides in one process, which is midpoint-safe.
+      anomalies(eventsTyped(s, d)).toDF()
+        .select(col("user_id"), col("event_id"), col("value"),
+          col("mean_before"))
+    },
       s"""WITH w AS (SELECT user_id, event_id, value,
          |  COUNT(*) OVER (PARTITION BY user_id ORDER BY event_id
          |                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS n_before,
@@ -622,5 +616,5 @@ object StatefulOps {
          |SELECT user_id, event_id, value,
          |  sum_before / n_before AS mean_before
          |FROM w WHERE n_before > 0
-         |  AND value > (sum_before / n_before) * $threshold""".stripMargin)
+         |  AND value > (sum_before / n_before) * $threshold""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.QueryDef
+import graft.core.{ScratchDirs, Tables}
 
 /** Streaming surface over `events` (SURVEY §2B [EXTENSION]): tumbling /
   * sliding / session windows with a watermark, keyed dedup, late-data
@@ -263,15 +264,18 @@ object StreamingOps {
   def availableNowRun(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.DecimalType
+    val ckpt = ScratchDirs.perRun(s, "graft_avail_now", dir)
     val q = eventsStream(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast("double")
           .as("sum_value"))
       .writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .format("memory").queryName("graft_avail_now").start()
-    try q.awaitTermination() finally q.stop()
+    try q.awaitTermination()
+    finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
     s.table("graft_avail_now")
   }
 
@@ -355,8 +359,7 @@ object StreamingOps {
     // Unique per INVOCATION, not per app: reusing a checkpoint across
     // calls would see "no new files", drain zero batches, and leave
     // the freshly-recreated table empty on a second run in one JVM.
-    val base = graft.core.ScratchDirs.path(s, "graft_stream_upsert", dir) +
-      "/" + java.util.UUID.randomUUID().toString
+    val base = ScratchDirs.perRun(s, "graft_stream_upsert", dir)
     val raw = s.read.parquet(s"$dir/events.parquet")
     raw.repartition(4).write.mode("overwrite").parquet(s"$base/in")
     val q = s.readStream.schema(raw.schema)
@@ -387,40 +390,26 @@ object StreamingOps {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination() finally q.stop()
     // merged state lives in the catalog; the per-invocation staging +
     // checkpoint files are garbage once the stream finishes
-    graft.core.ScratchDirs.rm(new java.io.File(base))
+    try q.awaitTermination()
+    finally { q.stop(); ScratchDirs.rm(new java.io.File(base)) }
     s.sql("""SELECT event_type, n, CAST(total AS DOUBLE) AS total
             |FROM graft_mem.db.stream_upsert""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_merge_upsert" -> (streamMergeUpsert _),
-    "stream_available_now" -> (availableNowRun _),
-    "stream_lateness_profile" -> ((s, d) => latenessProfile(ev(s, d))),
-    "stream_tumbling" -> ((s, d) => tumbling(ev(s, d))),
-    "stream_sliding" -> ((s, d) => sliding(ev(s, d))),
-    "stream_hll_window" -> ((s, d) => hllWindow(ev(s, d))),
-    "stream_session" -> ((s, d) => sessionized(ev(s, d))),
-    "stream_dedup_first" -> ((s, d) => dedupFirstPerKey(ev(s, d))),
-    "stream_late_drop" -> ((s, d) => lateDrop(ev(s, d))),
-    "stream_stream_join" -> ((s, d) => streamStreamJoin(ev(s, d))),
-    "stream_left_outer_join" -> ((s, d) => streamLeftOuterJoin(ev(s, d))),
-    "stream_full_outer_join" -> ((s, d) => streamFullOuterJoin(ev(s, d))),
-    "stream_static_join" -> ((s, d) =>
-      streamStaticJoin(ev(s, d), Tables.load(s, d, "customer"))),
-    "stream_anti_dedup" -> ((s, d) =>
-      streamAntiDedup(ev(s, d), ev(s, d))))
-
   // DuckDB twins over CAST(ts AS TIMESTAMP) (micros, matching Spark's
   // nanos→micros read).
-  val oracle: Map[String, String] = Map(
-    "stream_merge_upsert" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("stream_merge_upsert", streamMergeUpsert,
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM events GROUP BY event_type""".stripMargin,
-    "stream_lateness_profile" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("stream_available_now", availableNowRun,
+      """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("stream_lateness_profile", (s, d) => latenessProfile(ev(s, d)),
       """WITH e AS (SELECT user_id, event_id,
         |             epoch_us(CAST(ts AS TIMESTAMP)) AS us,
         |             md5(CAST(event_id AS VARCHAR)) AS arrival
@@ -436,23 +425,14 @@ object StreamingOps {
         |            WHEN (hwm - us) // 1000000 < 10000 THEN 4
         |            ELSE 5 END AS late_bucket,
         |  COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
-        |FROM h GROUP BY 1""".stripMargin,
-    "stream_available_now" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "stream_tumbling" ->
+        |FROM h GROUP BY 1""".stripMargin),
+    QueryDef("stream_tumbling", (s, d) => tumbling(ev(s, d)),
       """SELECT strftime(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)),
         |                '%Y-%m-%d %H:%M:%S') AS win_start,
         |  event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "stream_hll_window" ->
-      """SELECT strftime(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)),
-        |                '%Y-%m-%d %H:%M:%S') AS win_start,
-        |  COUNT(DISTINCT user_id) AS n_exact, TRUE AS approx_ok
-        |FROM events GROUP BY 1""".stripMargin,
-    "stream_sliding" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    QueryDef("stream_sliding", (s, d) => sliding(ev(s, d)),
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
         |w AS (SELECT event_type,
         |        time_bucket(INTERVAL 30 MINUTE, ts)
@@ -462,8 +442,13 @@ object StreamingOps {
         |SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS win_start,
         |  event_type, COUNT(*) AS n
         |FROM w WHERE ts >= win_start AND ts < win_start + INTERVAL 1 HOUR
-        |GROUP BY 1, 2""".stripMargin,
-    "stream_session" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("stream_hll_window", (s, d) => hllWindow(ev(s, d)),
+      """SELECT strftime(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)),
+        |                '%Y-%m-%d %H:%M:%S') AS win_start,
+        |  COUNT(DISTINCT user_id) AS n_exact, TRUE AS approx_ok
+        |FROM events GROUP BY 1""".stripMargin),
+    QueryDef("stream_session", (s, d) => sessionized(ev(s, d)),
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |flagged AS (SELECT user_id, ts,
         |  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -478,14 +463,14 @@ object StreamingOps {
         |SELECT user_id,
         |  strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS sess_start,
         |  COUNT(*) AS n_events
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-    "stream_dedup_first" ->
+        |FROM sess GROUP BY user_id, sid""".stripMargin),
+    QueryDef("stream_dedup_first", (s, d) => dedupFirstPerKey(ev(s, d)),
       """SELECT user_id, event_type, event_id AS first_event_id FROM (
         |  SELECT user_id, event_type, event_id,
         |    ROW_NUMBER() OVER (PARTITION BY user_id, event_type
         |                       ORDER BY event_id) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-    "stream_late_drop" ->
+        |  FROM events) WHERE rn = 1""".stripMargin),
+    QueryDef("stream_late_drop", (s, d) => lateDrop(ev(s, d)),
       """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |           FROM events),
         |h AS (SELECT event_id, user_id, ts,
@@ -494,36 +479,8 @@ object StreamingOps {
         |SELECT event_id, user_id,
         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
         |  strftime(hwm, '%Y-%m-%d %H:%M:%S') AS hwm_str
-        |FROM h WHERE ts < hwm - INTERVAL 10 MINUTE""".stripMargin,
-    "stream_full_outer_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |             CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |      FROM e WHERE event_type = 'click'),
-        |x AS (SELECT user_id AS err_user, event_id AS error_id,
-        |        ts AS error_ts
-        |      FROM e WHERE event_type = 'error')
-        |SELECT coalesce(c.user_id, x.err_user) AS uid,
-        |  c.click_id, x.error_id,
-        |  c.click_id IS NOT NULL AND x.error_id IS NOT NULL AS matched
-        |FROM c FULL JOIN x ON c.user_id = x.err_user
-        | AND x.error_ts >= c.click_ts
-        | AND x.error_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin,
-    "stream_left_outer_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-        |             CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
-        |      FROM e WHERE event_type = 'click'),
-        |x AS (SELECT user_id AS err_user, event_id AS error_id,
-        |        ts AS error_ts
-        |      FROM e WHERE event_type = 'error')
-        |SELECT c.user_id, c.click_id, x.error_id,
-        |  strftime(c.click_ts, '%Y-%m-%d %H:%M:%S') AS click_time,
-        |  x.error_id IS NOT NULL AS matched
-        |FROM c LEFT JOIN x ON c.user_id = x.err_user
-        | AND x.error_ts >= c.click_ts
-        | AND x.error_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin,
-    "stream_stream_join" ->
+        |FROM h WHERE ts < hwm - INTERVAL 10 MINUTE""".stripMargin),
+    QueryDef("stream_stream_join", (s, d) => streamStreamJoin(ev(s, d)),
       """WITH e AS (SELECT event_id, user_id, event_type,
         |             CAST(ts AS TIMESTAMP) AS ts FROM events),
         |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
@@ -536,13 +493,43 @@ object StreamingOps {
         |  strftime(error_ts, '%Y-%m-%d %H:%M:%S') AS error_time
         |FROM c JOIN x ON user_id = err_user
         | AND error_ts >= click_ts
-        | AND error_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin,
-    "stream_static_join" ->
+        | AND error_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin),
+    QueryDef("stream_left_outer_join", (s, d) => streamLeftOuterJoin(ev(s, d)),
+      """WITH e AS (SELECT event_id, user_id, event_type,
+        |             CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+        |      FROM e WHERE event_type = 'click'),
+        |x AS (SELECT user_id AS err_user, event_id AS error_id,
+        |        ts AS error_ts
+        |      FROM e WHERE event_type = 'error')
+        |SELECT c.user_id, c.click_id, x.error_id,
+        |  strftime(c.click_ts, '%Y-%m-%d %H:%M:%S') AS click_time,
+        |  x.error_id IS NOT NULL AS matched
+        |FROM c LEFT JOIN x ON c.user_id = x.err_user
+        | AND x.error_ts >= c.click_ts
+        | AND x.error_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin),
+    QueryDef("stream_full_outer_join", (s, d) => streamFullOuterJoin(ev(s, d)),
+      """WITH e AS (SELECT event_id, user_id, event_type,
+        |             CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+        |      FROM e WHERE event_type = 'click'),
+        |x AS (SELECT user_id AS err_user, event_id AS error_id,
+        |        ts AS error_ts
+        |      FROM e WHERE event_type = 'error')
+        |SELECT coalesce(c.user_id, x.err_user) AS uid,
+        |  c.click_id, x.error_id,
+        |  c.click_id IS NOT NULL AND x.error_id IS NOT NULL AS matched
+        |FROM c FULL JOIN x ON c.user_id = x.err_user
+        | AND x.error_ts >= c.click_ts
+        | AND x.error_ts <= c.click_ts + INTERVAL 1 HOUR""".stripMargin),
+    QueryDef("stream_static_join", (s, d) =>
+      streamStaticJoin(ev(s, d), Tables.load(s, d, "customer")),
       """SELECT c_nationkey, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_nationkey""".stripMargin,
-    "stream_anti_dedup" ->
+        |GROUP BY c_nationkey""".stripMargin),
+    QueryDef("stream_anti_dedup", (s, d) =>
+      streamAntiDedup(ev(s, d), ev(s, d)),
       """WITH e AS (SELECT event_id, event_type,
         |             md5(concat_ws('|', user_id, event_type, props)) AS dg
         |           FROM events),
@@ -553,5 +540,5 @@ object StreamingOps {
         |  CAST(SUM(CASE WHEN dg IN (SELECT dg FROM seen)
         |           THEN 0 ELSE 1 END) AS BIGINT) AS n_kept
         |FROM e WHERE event_id % 5 <> 0
-        |GROUP BY event_type""".stripMargin)
+        |GROUP BY event_type""".stripMargin))
 }

@@ -2,13 +2,20 @@ package graft.tools
 
 import graft.core.{GraftSession, Tables}
 
-/** Dev utility: print schema + a sample for each fixture table, or the
-  * formatted physical plan of one registered query.
+/** Dev utility: one subcommand per job — fixture schemas, a query's
+  * static or executed plan, noop-sink timings, the codegen census, the
+  * staging-build sizer, and ad-hoc SQL over the fixture tables. For a
+  * correctness dump of some queries, give `graft.Verify <sfDir> <out>`
+  * a third argument: comma-separated substrings of their names.
   *
   *   runMain graft.tools.Probe schemas <sfDir>
   *   runMain graft.tools.Probe explain <sfDir> <queryName>
+  *   runMain graft.tools.Probe explainMany <sfDir> <outDir> <q1,q2,...>
+  *   runMain graft.tools.Probe explainExec <sfDir> <queryName>
+  *   runMain graft.tools.Probe timeMany <sfDir> <q1,q2,...> [reps]
   *   runMain graft.tools.Probe codegen <sfDir> <q1,q2,...> [cycles]
   *   runMain graft.tools.Probe stage <sfDir> [cycles] [q1,q2,...]
+  *   runMain graft.tools.Probe sql <sfDir> <sqlFile>
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -21,27 +28,6 @@ object Probe {
           df.printSchema()
           df.show(3, truncate = 60)
         }
-      // Subset correctness dump: like graft.Verify but only for the
-      // named queries (comma-separated) — pair with
-      // `tools/oracle_check.py <dir> <out> <only>` for fast iteration.
-      case "dump" :: dir :: out :: names :: Nil =>
-        new java.io.File(out).mkdirs()
-        val wanted = names.split(',').toSet
-        wanted.foreach { n =>
-          graft.SparkEntry.queries(n)(spark, dir)
-            .coalesce(1).write.mode("overwrite").parquet(s"$out/$n")
-        }
-        def q(s: String): String = "\"" + s.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
-        val json = graft.SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-          .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/oracle_sql.json"), json)
       case "explain" :: dir :: name :: Nil =>
         graft.SparkEntry.queries(name)(spark, dir).explain("formatted")
       // Batch plan capture: one JVM, many formatted plans, one file per
@@ -171,29 +157,6 @@ object Probe {
         val df = graft.SparkEntry.queries(name)(spark, dir)
         df.collect()
         println(df.queryExecution.executedPlan.toString)
-      case "time" :: dir :: name :: reps =>
-        val n = reps.headOption.map(_.toInt).getOrElse(3)
-        // win_topk_window: the row_number twin of win_topk_heap, kept
-        // here (not graded — same results as win_topk_heap) purely for
-        // heap-vs-sort A/B timing.
-        val fn = if (name == "win_topk_window") {
-          import org.apache.spark.sql.expressions.Window
-          import org.apache.spark.sql.functions._
-          (s: org.apache.spark.sql.SparkSession, d: String) =>
-            Tables.load(s, d, "lineitem")
-              .select("l_suppkey", "l_orderkey", "l_linenumber",
-                "l_extendedprice")
-              .withColumn("rn", row_number().over(
-                Window.partitionBy("l_suppkey")
-                  .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
-                    col("l_linenumber"))))
-              .filter(col("rn") <= 5).drop("rn")
-        } else graft.SparkEntry.queries(name)
-        (1 to n).foreach { i =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-          println(f"[time] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        }
       // Ad-hoc SQL over the fixture tables (each registered as a temp
       // view by name), statement read from the file at <path>. Full
       // 17-digit doubles so cross-engine ulp diffs are visible.
@@ -212,7 +175,9 @@ object Probe {
         }
       case other =>
         System.err.println("usage: schemas <dir> | explain <dir> <query> | " +
-          s"codegen <dir> <queries> [cycles] | stage <dir> [cycles] [queries]; got $other")
+          "explainMany <dir> <out> <queries> | explainExec <dir> <query> | " +
+          "timeMany <dir> <queries> [reps] | codegen <dir> <queries> [cycles] | " +
+          s"stage <dir> [cycles] [queries] | sql <dir> <file>; got $other")
     }
     spark.stop()
   }

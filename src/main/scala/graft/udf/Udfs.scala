@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.core.Tables
 
 /** UDF surface (SURVEY §2B UDF row): a scalar function callable from SQL
@@ -129,31 +130,25 @@ object Udfs {
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
         col("token"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "udf_magnitude_sql" -> (udfMagnitudeSql _),
-    "udf_sql_function" -> (udfSqlFunction _),
-    "udaf_vwap" -> (udafVwap _),
-    "udtf_posexplode" -> (udtfPosexplode _))
-
-  val oracle: Map[String, String] = Map(
-    "udf_magnitude_sql" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("udf_magnitude_sql", udfMagnitudeSql,
       """SELECT l_orderkey, l_linenumber,
         |  ROUND(l_quantity * 1000, 4) AS qty_k,
         |  CAST(NULL AS DOUBLE) AS bad
-        |FROM lineitem""".stripMargin,
-    "udf_sql_function" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("udf_sql_function", udfSqlFunction,
       """SELECT l_returnflag, COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
         |                 * CAST(1 - l_discount AS DECIMAL(8,4))), 2)
         |       AS DOUBLE) AS sum_disc
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "udaf_vwap" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("udaf_vwap", udafVwap,
       """SELECT l_suppkey,
         |  ROUND(SUM(l_extendedprice * l_quantity) / SUM(l_quantity), 4) AS vwap
-        |FROM lineitem GROUP BY l_suppkey""".stripMargin,
-    "udtf_posexplode" ->
+        |FROM lineitem GROUP BY l_suppkey""".stripMargin),
+    QueryDef("udtf_posexplode", udtfPosexplode,
       """SELECT doc_id, CAST(generate_subscripts(arr, 1) AS BIGINT) AS pos,
         |  UNNEST(arr) AS token
         |FROM (SELECT doc_id, string_split(text, ' ') AS arr
-        |      FROM documents WHERE doc_id < 50)""".stripMargin)
+        |      FROM documents WHERE doc_id < 50)""".stripMargin))
 }

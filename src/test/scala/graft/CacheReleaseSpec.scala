@@ -10,7 +10,7 @@ class CacheReleaseSpec extends SparkTestBase {
     // Populate all three storage sources: the LlmText memo (shingle
     // set + near-dup pairs, localCheckpoints), the ScaleOps cached
     // reuse base (persist), and the clusters table.
-    val before = queries.LlmText.queries("llm_dedup_clusters")(spark, sf)
+    val before = SparkEntry.queries("llm_dedup_clusters")(spark, sf)
       .collect().toSet
     queries.ScaleOps.scanCachedReuse(spark, sf).collect()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
@@ -24,7 +24,7 @@ class CacheReleaseSpec extends SparkTestBase {
 
     // The released singletons must rebuild from source, not reference
     // dropped checkpoint blocks — and produce the same answer.
-    val after = queries.LlmText.queries("llm_dedup_clusters")(spark, sf)
+    val after = SparkEntry.queries("llm_dedup_clusters")(spark, sf)
       .collect().toSet
     assert(after == before)
     queries.ScaleOps.scanCachedReuse(spark, sf).collect()

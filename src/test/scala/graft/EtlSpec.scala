@@ -62,7 +62,7 @@ class EtlSpec extends SparkTestBase {
 
   test("etl_stock_obv matches a driver-side walk over consolidated bars") {
     import java.math.{BigDecimal => JBD, RoundingMode}
-    val cleaned = StockEtl.queries("etl_stock_clean")(spark, "unused")
+    val cleaned = SparkEntry.queries("etl_stock_clean")(spark, "unused")
       .select("stock_name", "date", "price", "vol").collect()
       .filter(!_.isNullAt(1))
     val bars = cleaned.groupBy(r => (r.getString(0), r.getDate(1)))
@@ -88,7 +88,7 @@ class EtlSpec extends SparkTestBase {
         (s, d.toString) -> obv.doubleValue
       }
     }
-    val got = StockEtl.queries("etl_stock_obv")(spark, "unused").collect()
+    val got = SparkEntry.queries("etl_stock_obv")(spark, "unused").collect()
     assert(got.length == bars.length)
     got.foreach { r =>
       val key = (r.getString(0), r.getDate(1).toString)
@@ -98,7 +98,7 @@ class EtlSpec extends SparkTestBase {
   }
 
   test("etl_stock_macd matches a driver-side three-smoother fold") {
-    val bars = StockEtl.queries("etl_stock_clean")(spark, "unused")
+    val bars = SparkEntry.queries("etl_stock_clean")(spark, "unused")
       .select("stock_name", "date", "price").collect()
       .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
       .groupBy(r => (r.getString(0), r.getDate(1)))
@@ -116,7 +116,7 @@ class EtlSpec extends SparkTestBase {
       }
       s -> ((ps.length.toLong, e12 - e26, sig))
     }
-    val got = StockEtl.queries("etl_stock_macd")(spark, "unused").collect()
+    val got = SparkEntry.queries("etl_stock_macd")(spark, "unused").collect()
     assert(got.length == expected.size)
     got.foreach { r =>
       val (n, macd, sig) = expected(r.getString(0))
@@ -128,12 +128,12 @@ class EtlSpec extends SparkTestBase {
   }
 
   test("etl_gapfill carries a twice-scraped day's larger price over the gap after it") {
-    val twice = StockEtl.queries("etl_stock_clean")(spark, "unused")
+    val twice = SparkEntry.queries("etl_stock_clean")(spark, "unused")
       .filter(col("date").isNotNull && col("price").isNotNull)
       .groupBy("stock_name", "date")
       .agg(count(lit(1)).as("n"), max("price").as("p"))
       .filter(col("n") > 1).collect()
-    val fill = StockEtl.queries("etl_gapfill")(spark, "unused")
+    val fill = SparkEntry.queries("etl_gapfill")(spark, "unused")
     val carried = twice.flatMap { r =>
       val next = r.getDate(1).toLocalDate.plusDays(1).toString
       fill.filter(col("stock_name") === r.getString(0) && col("d") === next
@@ -156,11 +156,20 @@ class EtlSpec extends SparkTestBase {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_fixture_copy")
     val bytes = "Date,Price\n\"Mar 07, 2025\",\"42,801.72\"\n".getBytes("UTF-8")
+    def othersRead(p: java.nio.file.Path) = Files.getPosixFilePermissions(p)
+      .contains(java.nio.file.attribute.PosixFilePermission.OTHERS_READ)
     val out = StockEtl.fixtureCopy(bytes, dir)
     assert(java.util.Arrays.equals(Files.readAllBytes(out), bytes))
+    assert(othersRead(out), "a DuckDB compare run as another user reads the copy")
+    // a copy with these bytes that others cannot read is replaced
+    Files.setPosixFilePermissions(out,
+      java.nio.file.attribute.PosixFilePermissions.fromString("rw-------"))
+    assert(StockEtl.fixtureCopy(bytes, dir) == out)
+    assert(othersRead(out))
     Files.write(out, "Date,Price\n\"Mar 07, 2025\",1.00\n".getBytes("UTF-8"))
     assert(StockEtl.fixtureCopy(bytes, dir) == out)
     assert(java.util.Arrays.equals(Files.readAllBytes(out), bytes))
+    assert(othersRead(out))
     Files.delete(out)
     // a link is replaced even when what it points at holds the bytes
     Files.createSymbolicLink(out,

@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.core.GraftSession
 import graft.plans.{GraftExtensions, GraftFunctions}
 
-/** `GraftFunctions.register` runs on every `GraftSession.get()` (and in
-  * three `Relational` queries), over functions `GraftExtensions` already
-  * injected. It must register only the names the session lacks: each
+/** `GraftFunctions.register` runs on every `GraftSession.get()`, over
+  * functions `GraftExtensions` already injected. It must register only the names the session lacks: each
   * replacement is a registry write and a Spark WARN line. The same
   * holds for the UDF queries' own functions, and a session configured
   * only through `spark.sql.extensions` must get every graft function. */

@@ -43,7 +43,7 @@ class ImageCodecSpec extends SparkTestBase {
   }
 
   test("mm_decode_png matches an independent from-text reconstruction") {
-    val got = Multimodal.queries("mm_decode_png")(spark, sf)
+    val got = SparkEntry.queries("mm_decode_png")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
@@ -80,7 +80,7 @@ class ImageCodecSpec extends SparkTestBase {
     assert(rt.exists(_.mean_abs_err > 0.0),
       "all-zero error: JPEG encode was lossless — plugin dispatch suspect")
     // the graded projection agrees with the oracle's expectation shape
-    val graded = Multimodal.queries("mm_decode_jpeg")(spark, sf).collect()
+    val graded = SparkEntry.queries("mm_decode_jpeg")(spark, sf).collect()
     assert(graded.length == rt.length)
     assert(graded.forall(_.getAs[Boolean]("within_tol")))
   }
@@ -104,7 +104,7 @@ class ImageCodecSpec extends SparkTestBase {
   }
 
   test("mm_phash matches a from-text aHash replica through the codec") {
-    val out = Multimodal.queries("mm_phash")(spark, sf).collect()
+    val out = SparkEntry.queries("mm_phash")(spark, sf).collect()
       .map(r => (r.getAs[Long]("media_id"), r.getAs[Long]("y")) ->
         (r.getAs[Long]("row_sum"), r.getAs[Long]("row_hash"))).toMap
     assert(out.nonEmpty)

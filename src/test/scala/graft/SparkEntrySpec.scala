@@ -1,8 +1,8 @@
 package graft
 
-/** `SparkEntry` merges every family's query and oracle maps; a name two
-  * families define must fail the merge, not silently keep the later
-  * entry. */
+/** `SparkEntry` merges every family's `QueryDef`s into its query and
+  * oracle maps; a name defined twice must fail the merge, not silently
+  * keep the later entry. */
 class SparkEntrySpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("a name defined twice fails the merge, naming it") {

@@ -168,7 +168,7 @@ class StreamingSpec extends SparkTestBase {
         (r.getAs[Number]("c_nationkey").longValue,
           r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))
       val got = spark.table("graft_ss_static").collect().map(key).toSet
-      val want = StreamingOps.queries("stream_static_join")(spark, sf)
+      val want = SparkEntry.queries("stream_static_join")(spark, sf)
         .collect().map(key).toSet
       assert(got == want && got.nonEmpty)
     } finally q.stop()
@@ -187,7 +187,7 @@ class StreamingSpec extends SparkTestBase {
         (r.getAs[String]("event_type"), r.getAs[Long]("n_in"),
           r.getAs[Long]("n_dropped"), r.getAs[Long]("n_kept"))
       val got = spark.table("graft_anti_dedup").collect().map(key).toSet
-      val want = StreamingOps.queries("stream_anti_dedup")(spark, sf)
+      val want = SparkEntry.queries("stream_anti_dedup")(spark, sf)
         .collect().map(key).toSet
       assert(got == want && got.nonEmpty)
       // the fixture carries real duplicate deliveries
@@ -227,7 +227,7 @@ class StreamingSpec extends SparkTestBase {
           .collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).toSet
-        val want = StreamingOps.queries("stream_anti_dedup")(spark, sf)
+        val want = SparkEntry.queries("stream_anti_dedup")(spark, sf)
           .collect()
           .map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n_in"),
             r.getAs[Long]("n_dropped"), r.getAs[Long]("n_kept"))).toSet
