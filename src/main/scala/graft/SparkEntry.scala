@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
+import graft.core.Tables
 import graft.etl.StockEtl
 import graft.multimodal.Multimodal
 import graft.queries._
@@ -12,11 +13,22 @@ import graft.udf.Udfs
   * over the same parquet tables that must return the same rows (see
   * graft.queries.Relational's determinism notes). Each query object
   * lists its queries once as a `Seq[QueryDef]`, so a query cannot lack
-  * a twin and a twin cannot outlive its query. */
+  * a twin and a twin cannot outlive its query. A `run` that reads SQL
+  * text gets its tables from `graft.core.Tables.sql`, not from session
+  * temp views (only texts that `spark.sql` alone can run — a script,
+  * `EXECUTE IMMEDIATE` — read a view). */
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracleSql: String)
+
+object QueryDef {
+  /** A query whose Spark SQL is its DuckDB twin, byte for byte: `text`
+    * runs through `Tables.sql`, so each fixture table name in it reads
+    * that table under the fixture directory. */
+  def sql(name: String, text: String): QueryDef =
+    QueryDef(name, (s, dir) => Tables.sql(s, dir, text), text)
+}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryDef
+import graft.core.Tables
 import graft.functions.CleanFns
 
 /** The reference's end-to-end ETL re-expressed Spark-first:
@@ -231,9 +232,7 @@ object StockEtl {
     * both engines); null price/vol rows contribute zero rather than
     * poisoning the running sum. */
   def etlStockObv(s: SparkSession, dir: String): DataFrame = {
-    lowercased(clean(readRawCsv(s, goldenCsv)))
-      .createOrReplaceTempView("graft_obv_cleaned")
-    s.sql("WITH " + obvCensus("graft_obv_cleaned"))
+    Tables.sql(s, dir, "WITH " + obvCensus("cleaned"), cleaned(s))
   }
 
   // One bar per (stock, date) FIRST: the raw CSV carries duplicate-date
@@ -270,10 +269,8 @@ object StockEtl {
     * price; the signal seeds at the first post-seed MACD value.
     * Null-price bars are excluded — an EMA of nothing is undefined. */
   def etlStockMacd(s: SparkSession, dir: String): DataFrame = {
-    lowercased(clean(readRawCsv(s, goldenCsv)))
-      .createOrReplaceTempView("graft_macd_cleaned")
-    s.sql(
-      s"""WITH ${barsCte("graft_macd_cleaned")},
+    Tables.sql(s, dir,
+      s"""WITH ${barsCte("cleaned")},
          |series AS (SELECT stock_name,
          |  transform(array_sort(collect_list(struct(date, price))),
          |            x -> x.price) AS ps
@@ -295,7 +292,7 @@ object StockEtl {
          |SELECT stock_name, CAST(n_bars AS BIGINT) AS n_bars,
          |  r.e12 - r.e26 AS macd, r.sig AS signal,
          |  (r.e12 - r.e26) - r.sig AS histogram
-         |FROM f""".stripMargin)
+         |FROM f""".stripMargin, cleaned(s))
   }
 
   // OHLC bar consolidation (duplicate-date rule as barsCte, but keeps
@@ -314,9 +311,7 @@ object StockEtl {
     * Zero-width ranges pin %K to 50. Emitted from the 16th bar (first
     * full %K window plus two %K values for %D). */
   def etlStockStochastic(s: SparkSession, dir: String): DataFrame = {
-    lowercased(clean(readRawCsv(s, goldenCsv)))
-      .createOrReplaceTempView("graft_sto_cleaned")
-    s.sql(stochasticCensus("graft_sto_cleaned"))
+    Tables.sql(s, dir, stochasticCensus("cleaned"), cleaned(s))
   }
 
   private def stochasticCensus(cleaned: String): String =
@@ -346,9 +341,7 @@ object StockEtl {
     * whose frame-vs-segment-tree ulp sits far under round-6 on
     * O(100) values. */
   def etlStockAtr(s: SparkSession, dir: String): DataFrame = {
-    lowercased(clean(readRawCsv(s, goldenCsv)))
-      .createOrReplaceTempView("graft_atr_cleaned")
-    s.sql(atrCensus("graft_atr_cleaned"))
+    Tables.sql(s, dir, atrCensus("cleaned"), cleaned(s))
   }
 
   private def atrCensus(cleaned: String): String =
@@ -460,12 +453,11 @@ object StockEtl {
           |""".stripMargin +
         atrCensus("cleaned").replaceFirst("WITH ", "")))
 
-  /** Register the lowercased cleaned stock-fixture table under `name` —
-    * the entry point derived queries (e.g. Black–Scholes in
-    * [[graft.queries.Analytics50]]) build on. */
-  def cleanedView(s: SparkSession, name: String): Unit =
-    lowercased(clean(readRawCsv(s, goldenCsv)))
-      .createOrReplaceTempView(name)
+  /** The lowercased cleaned stock-fixture table, named `cleaned` for
+    * `Tables.sql` — the relation the stock queries here and derived
+    * ones (e.g. Black–Scholes in [[graft.queries.Analytics50]]) read. */
+  def cleaned(s: SparkSession): (String, DataFrame) =
+    "cleaned" -> lowercased(clean(readRawCsv(s, goldenCsv)))
 
   /** The consolidated one-bar-per-(stock, date) CTE text, shared with
     * external queries. */

@@ -866,8 +866,8 @@ object Multimodal {
         }
       }
     }
-    coefs.toDF().createOrReplaceTempView("graft_dft_coefs")
-    s.sql("WITH " + dftAggSql("graft_dft_coefs"))
+    Tables.sql(s, dir, "WITH " + dftAggSql("graft_dft_coefs"),
+      "graft_dft_coefs" -> coefs.toDF())
   }
 
   private val dftOracleSql: String =

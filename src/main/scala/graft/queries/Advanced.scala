@@ -19,9 +19,6 @@ import graft.core.{ScratchDirs, Tables}
   */
 object Advanced {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Weighted-walk counting via a recursive CTE (Spark 4 UnionLoop):
     * from the `signup` node, every walk of length ≤ 3 over the
     * event-type transition graph, scored by the product of observed
@@ -37,11 +34,27 @@ object Advanced {
     * BIGINT products of BIGINT counts: exact in both engines (walk
     * score ≤ (n_events)³ per term — far inside int64 at fixture
     * scale; the 100 TB variant would pin DECIMAL(38,0)). */
-  def sqlRecursiveWalk(s: SparkSession, dir: String): DataFrame = {
+  def sqlRecursiveWalk(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir,
+      """WITH RECURSIVE walk(node, depth, score) AS (
+        |  SELECT 'signup', 0, CAST(1 AS BIGINT)
+        |  UNION ALL
+        |  SELECT e.dst, w.depth + 1, w.score * e.w
+        |  FROM walk w JOIN graft_rec_edges e ON e.src = w.node
+        |  WHERE w.depth < 3
+        |)
+        |SELECT node, depth, SUM(score) AS walk_score, COUNT(*) AS n_walks
+        |FROM walk WHERE depth > 0
+        |GROUP BY node, depth""".stripMargin,
+      "graft_rec_edges" -> walkEdges(s, dir))
+
+  /** The (src, dst, w) transition-count table `sql_recursive_walk`
+    * walks, checkpointed. */
+  private[graft] def walkEdges(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id")
       .orderBy(col("us"), col("event_id"))
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("event_id"))
       .withColumn("dst", lead("event_type", 1).over(w))
@@ -56,18 +69,6 @@ object Advanced {
         import graft.core.CkptTap._
         df.tappedLocalCheckpoint()
       }
-      .createOrReplaceTempView("graft_rec_edges")
-    s.sql(
-      """WITH RECURSIVE walk(node, depth, score) AS (
-        |  SELECT 'signup', 0, CAST(1 AS BIGINT)
-        |  UNION ALL
-        |  SELECT e.dst, w.depth + 1, w.score * e.w
-        |  FROM walk w JOIN graft_rec_edges e ON e.src = w.node
-        |  WHERE w.depth < 3
-        |)
-        |SELECT node, depth, SUM(score) AS walk_score, COUNT(*) AS n_walks
-        |FROM walk WHERE depth > 0
-        |GROUP BY node, depth""".stripMargin)
   }
 
   /** Custom DataSource V2 scan ([[graft.sources.TickSource]]) with both
@@ -114,7 +115,7 @@ object Advanced {
     * collection is exact, not sampled. */
   def etlObserve(s: SparkSession, dir: String): DataFrame = {
     val obs = Observation()
-    t(s, dir, "lineitem").observe(obs,
+    Tables.load(s, dir, "lineitem").observe(obs,
       count(lit(1)).as("n_rows"),
       sum(when(col("l_quantity") <= 0d, 1L).otherwise(0L)).as("n_nonpos_qty"),
       sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)).as("n_null_ship"),
@@ -189,7 +190,9 @@ object Advanced {
     * decimals so the variable's value (and therefore the `>` boundary)
     * is bit-identical in both engines. */
   def sqlScripting(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_script_orders")
+    // A script is not a query plan: only spark.sql runs it, so its
+    // table is a session view rather than a Tables.sql binding.
+    Tables.load(s, dir, "orders").createOrReplaceTempView("graft_script_orders")
     s.sql(
       """BEGIN
         |  DECLARE avg_price DOUBLE DEFAULT 0.0;

@@ -25,9 +25,6 @@ import graft.core.Tables
   */
 object Analytics {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Gap-based batch sessionization (30-minute inactivity splits), the
     * batch analog of Structured Streaming's session windows: a new
     * session starts when the gap to the previous event exceeds 30 min;
@@ -39,7 +36,7 @@ object Analytics {
     */
   def eventsSessionize(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("value"), col("event_id"))
       .withColumn("new_s",
@@ -63,7 +60,7 @@ object Analytics {
   def eventsAttribution(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("us"), col("event_type"))
       .withColumn("touch",
@@ -84,7 +81,7 @@ object Analytics {
     * Scale: narrow per-row work, no shuffle at all — chunking 100 TB
     * is embarrassingly parallel and this plan keeps it that way. */
   def llmChunk(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("toks"),
         explode(sequence(lit(0), greatest(size(col("toks")) - 1, lit(0)),
@@ -104,7 +101,7 @@ object Analytics {
     * Scale: the bigram count is a map-side-combinable groupBy on the
     * pair key; corpus totals broadcast back (two scalar rows). */
   def textCollocations(s: SparkSession, dir: String): DataFrame = {
-    val pos = t(s, dir, "documents")
+    val pos = Tables.load(s, dir, "documents")
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "p", "tok")
     val bi = pos
@@ -149,7 +146,7 @@ object Analytics {
     * its scale-8 unscaled value tops 2^53 where DuckDB's wide-decimal →
     * double conversion is 1 ulp off Java's (the dsum2 rule). */
   def aggZscore(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     val st = li.groupBy("l_suppkey")
       .agg(count(col("l_extendedprice")).as("n"),
         sum(col("l_extendedprice").cast(DecimalType(18, 4)))
@@ -188,7 +185,7 @@ object Analytics {
     * shuffle-free on top of it. */
   def etlScd2(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("l_partkey").orderBy("d")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .repartition(col("l_partkey"))
       .groupBy(col("l_partkey"), col("l_shipdate").cast("date").as("d"))
       .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
@@ -214,12 +211,12 @@ object Analytics {
     * demotes to a shuffle join past the threshold. */
   def q3Shipping(s: SparkSession, dir: String): DataFrame = {
     val cut = lit("1998-01-01 00:00:00").cast("timestamp")
-    val c = t(s, dir, "customer")
+    val c = Tables.load(s, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") < cut)
       .select("o_orderkey", "o_custkey", "o_orderdate")
-    val l = t(s, dir, "lineitem")
+    val l = Tables.load(s, dir, "lineitem")
       .filter(col("l_shipdate") > cut)
       .select("l_orderkey", "l_extendedprice", "l_discount")
     l.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -242,17 +239,17 @@ object Analytics {
     * broadcast at fixture scale, AQE demotion to shuffle joins at the
     * SFs where a forced build would OOM. */
   def q5LocalSupplier(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp")
         && col("o_orderdate") < lit("1997-01-01 00:00:00").cast("timestamp"))
       .select("o_orderkey", "o_custkey")
-    val n = t(s, dir, "nation").join(
-      t(s, dir, "region").filter(col("r_name") === "ASIA"),
+    val n = Tables.load(s, dir, "nation").join(
+      Tables.load(s, dir, "region").filter(col("r_name") === "ASIA"),
       col("n_regionkey") === col("r_regionkey"))
       .select("n_nationkey", "n_name")
-    val c = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val sup = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-    t(s, dir, "lineitem")
+    val c = Tables.load(s, dir, "customer").select("c_custkey", "c_nationkey")
+    val sup = Tables.load(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+    Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .join(sup, col("l_suppkey") === col("s_suppkey"))
@@ -273,16 +270,16 @@ object Analytics {
     * filters reach the scans, and the LIMIT tiebreak (revenue DESC,
     * custkey ASC) is explicit so both engines select the same rows. */
   def q10Returns(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01 00:00:00").cast("timestamp")
         && col("o_orderdate") < lit("1996-04-01 00:00:00").cast("timestamp"))
       .select("o_orderkey", "o_custkey")
-    val l = t(s, dir, "lineitem")
+    val l = Tables.load(s, dir, "lineitem")
       .filter(col("l_returnflag") === "R")
       .select("l_orderkey", "l_extendedprice", "l_discount")
-    val c = t(s, dir, "customer")
+    val c = Tables.load(s, dir, "customer")
       .select("c_custkey", "c_name", "c_nationkey")
-    val n = t(s, dir, "nation").select("n_nationkey", "n_name")
+    val n = Tables.load(s, dir, "nation").select("n_nationkey", "n_name")
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -308,7 +305,7 @@ object Analytics {
     val dim = etlScd2(s, dir)
       .select(col("l_partkey").as("d_partkey"), col("valid_from"),
         col("valid_to"), col("price"))
-    val facts = t(s, dir, "lineitem")
+    val facts = Tables.load(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_returnflag"),
         date_add(col("l_shipdate").cast("date"), 7).as("qd"))
     facts.join(dim,
@@ -325,16 +322,14 @@ object Analytics {
     * rule catalog, not the violation set. One pass per table (the
     * FILTER aggregates share a scan), tiny output. */
   def etlDqRules(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_dq_lineitem")
-    t(s, dir, "orders").createOrReplaceTempView("graft_dq_orders")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT rule_id, violations FROM (
         |  SELECT
         |    CAST(COUNT(*) FILTER (WHERE l_quantity <= 0) AS BIGINT) AS lineitem_nonpos_qty,
         |    CAST(COUNT(*) FILTER (WHERE l_discount < 0 OR l_discount > 0.1) AS BIGINT) AS lineitem_discount_range,
         |    CAST(COUNT(*) FILTER (WHERE l_tax < 0 OR l_tax > 0.08) AS BIGINT) AS lineitem_tax_range,
         |    CAST(COUNT(*) FILTER (WHERE l_partkey IS NULL) AS BIGINT) AS lineitem_null_partkey
-        |  FROM graft_dq_lineitem
+        |  FROM lineitem
         |) STACK_SRC
         |LATERAL VIEW STACK(4,
         |  'lineitem_nonpos_qty', lineitem_nonpos_qty,
@@ -346,7 +341,7 @@ object Analytics {
         |  SELECT
         |    CAST(COUNT(*) FILTER (WHERE o_totalprice <= 0) AS BIGINT) AS orders_nonpos_total,
         |    CAST(COUNT(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT) AS orders_null_custkey
-        |  FROM graft_dq_orders
+        |  FROM orders
         |) STACK_SRC2
         |LATERAL VIEW STACK(2,
         |  'orders_nonpos_total', orders_nonpos_total,
@@ -364,7 +359,7 @@ object Analytics {
   def scanJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = graft.core.ScratchDirs.path(s, "graft_jsonl_roundtrip", dir)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
       .write.mode("overwrite").json(path)
@@ -389,7 +384,7 @@ object Analytics {
   def scanCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = graft.core.ScratchDirs.path(s, "graft_csv_roundtrip", dir)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
       .write.mode("overwrite").option("header", "true").csv(path)
@@ -414,7 +409,7 @@ object Analytics {
     * in the wrong partition fails the hash. */
   def scanPartitionedRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = graft.core.ScratchDirs.path(s, "graft_part_roundtrip", dir)
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       .write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
     s.read.parquet(path)

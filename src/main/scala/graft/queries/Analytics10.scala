@@ -28,9 +28,6 @@ import graft.core.CkptTap._
   */
 object Analytics10 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // text_gopher_rules
   // ---------------------------------------------------------------------
@@ -65,7 +62,7 @@ object Analytics10 {
     val pMeanlen = (col("mwl") >= 3.0 && col("mwl") <= 10.0).cast("int")
     val pAlpha = (col("alpha_frac") > 0.8).cast("int")
     val pStop = (col("n_stop") >= 2).cast("int")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), nWords.cast("long").as("n_words"),
         mwl.as("mwl"), alphaFrac.as("alpha_frac"),
         nStop.cast("long").as("n_stop"))
@@ -94,7 +91,7 @@ object Analytics10 {
     * tie hazards — and the oracle runs the identical recursion as a
     * recursive CTE. */
   def graphLabelProp(s: SparkSession, dir: String): DataFrame = {
-    val lab = lpaLabels(s, tradeSym(s, dir, "graft_lp"))
+    val lab = lpaLabels(s, tradeSym(s, dir))
     // nationkey is INT in the fixture; the graded schema pins BIGINT.
     lab.select(col("nk").cast("long").as("nk"),
       col("label").cast("long").as("label"))
@@ -103,20 +100,15 @@ object Analytics10 {
   /** The thresholded symmetrized nation trade graph (the 1.15×-mean
     * edge rule shared by the whole graph family), checkpointed —
     * reused by [[graphLabelProp]] and `graph_modularity`
-    * ([[Analytics24]]). `prefix` namespaces the temp views per
-    * caller. */
-  private[queries] def tradeSym(s: SparkSession, dir: String,
-      prefix: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier")
-      .foreach(n => Tables.load(s, dir, n)
-        .createOrReplaceTempView(s"${prefix}_" + n))
-    s.sql(
-      s"""WITH pair AS (
+    * ([[Analytics24]]). */
+  private[queries] def tradeSym(s: SparkSession, dir: String): DataFrame = {
+    Tables.sql(s, dir,
+      """WITH pair AS (
         |  SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
-        |  FROM ${prefix}_lineitem l
-        |    JOIN ${prefix}_orders o ON l.l_orderkey = o.o_orderkey
-        |    JOIN ${prefix}_customer c ON o.o_custkey = c.c_custkey
-        |    JOIN ${prefix}_supplier s ON l.l_suppkey = s.s_suppkey
+        |  FROM lineitem l
+        |    JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |    JOIN customer c ON o.o_custkey = c.c_custkey
+        |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |  WHERE c.c_nationkey <> s.s_nationkey
         |  GROUP BY 1, 2),
         |und AS (SELECT least(na, nb) AS a, greatest(na, nb) AS b,
@@ -185,7 +177,7 @@ object Analytics10 {
     * `llm_logprob` rule) so the double Σln across engines cannot flip
     * a tercile boundary. */
   def llmCcnetBuckets(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select("doc_id", "lang", "text")
+    val d = Tables.load(s, dir, "documents").select("doc_id", "lang", "text")
     val tok = d.select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
     val uni = tok.groupBy("t").agg(count(lit(1)).as("n"))
     val tot = uni.agg(sum("n").as("nt"))
@@ -236,7 +228,7 @@ object Analytics10 {
     val path = graft.core.ScratchDirs.path(s, "graft_zorder_orders", dir)
     val day = datediff(col("o_orderdate").cast("date"),
       lit("1995-01-01").cast("date")).cast("long")
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
         col("o_totalprice"))
     // max() over zero rows is null — coalesce keeps the empty-corpus

@@ -45,9 +45,6 @@ import graft.core.CkptTap._
   */
 object Analytics11 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_lang_temperature
   // ---------------------------------------------------------------------
@@ -62,7 +59,7 @@ object Analytics11 {
     * the engine: a single map-side-combinable aggregation on a key
     * with bounded cardinality. */
   def llmLangTemperature(s: SparkSession, dir: String): DataFrame = {
-    val perLang = t(s, dir, "documents")
+    val perLang = Tables.load(s, dir, "documents")
       .groupBy("lang")
       .agg(sum(size(split(col("text"), " "))).cast("long").as("n_tokens"))
     val tot = perLang.agg(sum("n_tokens").as("nt"))
@@ -90,7 +87,7 @@ object Analytics11 {
     * Counts stay integer; the two ratios are int/int double
     * divisions, IEEE-identical across engines. */
   def textTtr(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"),
         size(col("ts")).cast("long").as("n_tokens"),
@@ -118,7 +115,7 @@ object Analytics11 {
     * 1e-6 rounding. The prefix variable is doc_id order — at 100 TB
     * one would use ingestion order or a hash order, same plan. */
   def aggHeapsLaw(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
     val tri = d.select(col("doc_id"), explode(expr(
       """CASE WHEN size(ts) >= 3
@@ -155,7 +152,7 @@ object Analytics11 {
     * Integer arithmetic throughout (see object scaladoc) so there is
     * no float-merge-order hazard in the ranking. */
   def graphHits(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "lineitem")
+    val e = Tables.load(s, dir, "lineitem")
       .select(col("l_suppkey").as("s"), col("l_partkey").as("p"))
       .distinct()
     val a1 = e.groupBy("p").agg(count(lit(1)).as("a"))
@@ -181,16 +178,13 @@ object Analytics11 {
     * without the checkpoint the lineage doubles every round). Output:
     * surviving nations with their within-core degree. */
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier")
-      .foreach(n => Tables.load(s, dir, n)
-        .createOrReplaceTempView("graft_kc_" + n))
-    val sym = s.sql(
+    val sym = Tables.sql(s, dir,
       """WITH pair AS (
         |  SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
-        |  FROM graft_kc_lineitem l
-        |    JOIN graft_kc_orders o ON l.l_orderkey = o.o_orderkey
-        |    JOIN graft_kc_customer c ON o.o_custkey = c.c_custkey
-        |    JOIN graft_kc_supplier s ON l.l_suppkey = s.s_suppkey
+        |  FROM lineitem l
+        |    JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |    JOIN customer c ON o.o_custkey = c.c_custkey
+        |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |  WHERE c.c_nationkey <> s.s_nationkey
         |  GROUP BY 1, 2),
         |und AS (SELECT least(na, nb) AS a, greatest(na, nb) AS b,
@@ -248,7 +242,7 @@ object Analytics11 {
     * arithmetic is truncate-then-subtract on epoch seconds (identical
     * to DuckDB's second-boundary count), so durations are integers. */
   def aggKaplanMeier(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val u = ev.groupBy("user_id").agg(min("ts").as("f"))
     val p = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(min("ts").as("fp"))
@@ -306,7 +300,7 @@ object Analytics11 {
     // points), so the hash count is B/8 per row, not B — md5 is the
     // whole cost of this query at bench scale (12.8 s → ~2 s at
     // sf0.1 for B=32).
-    val rep = t(s, dir, "orders")
+    val rep = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))
       .select(col("o_orderkey"), col("price"),
@@ -360,7 +354,7 @@ object Analytics11 {
     val wAsc = org.apache.spark.sql.expressions.Window
       .orderBy(col("m"), col("b"))
     val ranked = means.withColumn("rn", row_number().over(wAsc))
-    val est = t(s, dir, "orders")
+    val est = Tables.load(s, dir, "orders")
       .agg((sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
         / count(lit(1))).as("est"))
     est.crossJoin(broadcast(
@@ -385,16 +379,13 @@ object Analytics11 {
     * merge-order anywhere. The heavy star-join pass runs once;
     * each BFS round is a broadcast-sized join on the tiny graph. */
   def graphCloseness(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier")
-      .foreach(n => Tables.load(s, dir, n)
-        .createOrReplaceTempView("graft_cl_" + n))
-    val sym = s.sql(
+    val sym = Tables.sql(s, dir,
       """WITH pair AS (
         |  SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
-        |  FROM graft_cl_lineitem l
-        |    JOIN graft_cl_orders o ON l.l_orderkey = o.o_orderkey
-        |    JOIN graft_cl_customer c ON o.o_custkey = c.c_custkey
-        |    JOIN graft_cl_supplier s ON l.l_suppkey = s.s_suppkey
+        |  FROM lineitem l
+        |    JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |    JOIN customer c ON o.o_custkey = c.c_custkey
+        |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |  WHERE c.c_nationkey <> s.s_nationkey
         |  GROUP BY 1, 2),
         |und AS (SELECT least(na, nb) AS a, greatest(na, nb) AS b,
@@ -444,7 +435,7 @@ object Analytics11 {
     * recursive CTE — each user's state is two doubles, the
     * one-pass streaming-volatility shape. */
   def winGarch(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         col("value")))).as("xs"))
@@ -476,8 +467,7 @@ object Analytics11 {
     * the tiny daily relation — everything after the first aggregation
     * is O(days), not O(rows). */
   def aggHurst(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_hu_orders")
-    s.sql("WITH " + hurstCensus("graft_hu_orders", "DIV"))
+    Tables.sql(s, dir, "WITH " + hurstCensus("orders", "DIV"))
   }
 
   private def hurstCensus(orders: String, intdiv: String): String =
@@ -532,16 +522,14 @@ object Analytics11 {
     * exact decimal sum of the (identical-double) detrended values cast
     * once over an integer count, resid = three identical doubles. */
   def winSeasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_sd_orders")
-    s.sql(
+    val daily = Tables.sql(s, dir,
       """SELECT CAST(o_orderdate AS DATE) AS d,
         |       dayofweek(CAST(o_orderdate AS DATE)) - 1 AS dow,
         |       SUM(CAST(o_totalprice AS DECIMAL(18, 2))) AS rev_d
-        |FROM graft_sd_orders GROUP BY 1, 2""".stripMargin)
+        |FROM orders GROUP BY 1, 2""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_sd_daily")
-    s.sql("WITH " + decomposeCensus("graft_sd_daily",
-      "date_format(d, 'yyyy-MM-dd')"))
+    Tables.sql(s, dir, "WITH " + decomposeCensus("graft_sd_daily",
+      "date_format(d, 'yyyy-MM-dd')"), "graft_sd_daily" -> daily)
   }
 
   private def decomposeCensus(daily: String, dateStr: String): String =

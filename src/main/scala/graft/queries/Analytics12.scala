@@ -50,9 +50,6 @@ import graft.core.CkptTap._
   */
 object Analytics12 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_rolling_beta
   // ---------------------------------------------------------------------
@@ -101,11 +98,10 @@ object Analytics12 {
        |FROM w""".stripMargin
 
   def winRollingBeta(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_beta_orders")
-    s.sql(monthlySql("graft_beta_orders"))
+    val monthly = Tables.sql(s, dir, monthlySql("orders"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_beta_monthly")
-    s.sql(rollingBetaRestSql("graft_beta_monthly"))
+    Tables.sql(s, dir, rollingBetaRestSql("graft_beta_monthly"),
+      "graft_beta_monthly" -> monthly)
   }
 
   // ---------------------------------------------------------------------
@@ -142,11 +138,6 @@ object Analytics12 {
        |  sqrt(greatest(sum(0.5 * hl * hl - (2.0 * ln(2.0) - 1.0) * co * co)
        |                  / count(*), 0.0)) AS garman_klass
        |FROM terms GROUP BY user_id HAVING count(*) >= 5""".stripMargin
-
-  def aggVolEstimators(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_vol_events")
-    s.sql(volEstimatorsSql("graft_vol_events"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_cointegration
@@ -204,11 +195,9 @@ object Analytics12 {
        |FROM fit2 f CROSS JOIN g""".stripMargin
 
   def aggCointegration(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_coint_orders")
-    s.sql(cointDailySql("graft_coint_orders"))
+    val daily = Tables.sql(s, dir, cointDailySql("orders"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_coint_daily")
-    s.sql(cointRestSql("graft_coint_daily"))
+    Tables.sql(s, dir, cointRestSql("graft_coint_daily"), "graft_coint_daily" -> daily)
   }
 
   // ---------------------------------------------------------------------
@@ -238,14 +227,8 @@ object Analytics12 {
        |acf AS (SELECT lag, corr(sa, sb) AS rho FROM j GROUP BY lag)""".stripMargin
   }
 
-  private def checkpointedDaily(s: SparkSession, dir: String,
-      tag: String): String = {
-    t(s, dir, "events").createOrReplaceTempView(s"graft_${tag}_events")
-    s.sql(acfDailySql(s"graft_${tag}_events"))
-      .tappedLocalCheckpoint()
-      .createOrReplaceTempView(s"graft_${tag}_daily")
-    s"graft_${tag}_daily"
-  }
+  private def checkpointedDaily(s: SparkSession, dir: String): DataFrame =
+    Tables.sql(s, dir, acfDailySql("events")).tappedLocalCheckpoint()
 
   /** PACF at lags 1-3 by the Durbin-Levinson closed form:
     * φ₁₁ = ρ₁, φ₂₂ = (ρ₂−ρ₁²)/(1−ρ₁²), φ₂₁ = ρ₁(1−φ₂₂),
@@ -268,8 +251,8 @@ object Analytics12 {
        |FROM d3""".stripMargin
 
   def aggPacf(s: SparkSession, dir: String): DataFrame =
-    s.sql(pacfSql(checkpointedDaily(s, dir, "pacf"),
-      "date_sub(a.d, l.lag)"))
+    Tables.sql(s, dir, pacfSql("daily", "date_sub(a.d, l.lag)"),
+      "daily" -> checkpointedDaily(s, dir))
 
   /** Ljung-Box portmanteau Q over lags 1-7:
     * Q_h = n(n+2)·Σ_{k≤h} ρ_k²/(n−k), emitted cumulatively per lag so
@@ -287,8 +270,8 @@ object Analytics12 {
        |FROM q""".stripMargin
 
   def aggLjungBox(s: SparkSession, dir: String): DataFrame =
-    s.sql(ljungBoxSql(checkpointedDaily(s, dir, "lb"),
-      "date_sub(a.d, l.lag)"))
+    Tables.sql(s, dir, ljungBoxSql("daily", "date_sub(a.d, l.lag)"),
+      "daily" -> checkpointedDaily(s, dir))
 
   // ---------------------------------------------------------------------
   // llm_bpe_train
@@ -310,10 +293,9 @@ object Analytics12 {
     * rows), not the corpus: the loop cost is independent of corpus
     * size after the first count. */
   def llmBpeTrain(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_bpe_docs")
     // st0 staged once: the chain references each stN twice, so CTE
     // inlining re-ran the corpus tokenize 2^rounds+1 times.
-    stageBpeSt0(s, "graft_bpe_docs", "graft_bpe_st0")
+    val st0 = stageBpeSt0(s, dir)
     val words = "st0 AS (SELECT w, c, s FROM graft_bpe_st0)"
     val pairs = (st: String) =>
       s"""(SELECT pr, sum(c) AS cnt FROM (
@@ -321,26 +303,24 @@ object Analytics12 {
          |    (x, i) -> concat(x, ' ', element_at(syms, i + 2)))) AS pr
          |  FROM (SELECT c, split(trim(s), ' ') AS syms FROM $st))
          |GROUP BY pr)""".stripMargin
-    s.sql(bpeRounds(words, pairs))
+    Tables.sql(s, dir, bpeRounds(words, pairs), "graft_bpe_st0" -> st0)
   }
 
   /** Stage the BPE start state st0 (word census + space-separated
     * symbol string — VOCABULARY-sized, not corpus-sized) as an eagerly
-    * checkpointed temp view `outView` over the documents view
-    * `docsView`. The merge chain references each state twice (pair
-    * census + merge), so left as a deterministic CTE the corpus
-    * tokenize re-ran 2^rounds+1 times (guide §2.4). */
-  private[queries] def stageBpeSt0(s: SparkSession, docsView: String,
-      outView: String): Unit = {
+    * checkpointed frame over the documents table. The merge chain
+    * references each state twice (pair census + merge), so left as a
+    * deterministic CTE the corpus tokenize re-ran 2^rounds+1 times
+    * (guide §2.4). */
+  private[queries] def stageBpeSt0(s: SparkSession, dir: String): DataFrame = {
     import graft.core.CkptTap._
-    s.sql(
-      s"""SELECT w, c,
-         |  ' ' || array_join(regexp_extract_all(w, '.', 0), ' ') || ' ' AS s
-         |FROM (SELECT w, count(*) AS c FROM (
-         |  SELECT explode(split(text, ' ')) AS w FROM $docsView)
-         |  WHERE w RLIKE '^[a-z]+$$' GROUP BY w)""".stripMargin)
+    Tables.sql(s, dir,
+      """SELECT w, c,
+        |  ' ' || array_join(regexp_extract_all(w, '.', 0), ' ') || ' ' AS s
+        |FROM (SELECT w, count(*) AS c FROM (
+        |  SELECT explode(split(text, ' ')) AS w FROM documents)
+        |  WHERE w RLIKE '^[a-z]+$' GROUP BY w)""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView(outView): Unit
   }
 
   private def bpeMerge(st: String, m: String): String =
@@ -477,11 +457,6 @@ object Analytics12 {
        |  1.0 AS epsilon
        |FROM u""".stripMargin
 
-  def llmDpHistogram(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_dp_docs")
-    s.sql(dpHistogramSql("graft_dp_docs"))
-  }
-
   // ---------------------------------------------------------------------
   // graph_adamic_adar
   // ---------------------------------------------------------------------
@@ -544,18 +519,16 @@ object Analytics12 {
        |  JOIN $nat nb ON nb.n_nationkey = ne.b""".stripMargin
 
   def graphAdamicAdar(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier", "nation")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView("graft_aa_" + n))
     // The 4-table star runs ONCE: the thresholded edge list (≤|nations|²
     // rows) is collapsed and checkpointed, exactly as in the rest of the
     // graph family — sym/p2/nonedge reference it five times and an
     // inlined plan would re-run the star per reference.
-    s.sql(aaEdgesSql("graft_aa_lineitem", "graft_aa_orders",
-        "graft_aa_customer", "graft_aa_supplier", ""))
+    val edges = Tables.sql(s, dir, aaEdgesSql("lineitem", "orders",
+        "customer", "supplier", ""))
       .coalesce(1)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_aa_edges")
-    s.sql(aaScoreSql("graft_aa_edges", "graft_aa_nation", ""))
+    Tables.sql(s, dir, aaScoreSql("graft_aa_edges", "nation", ""),
+      "graft_aa_edges" -> edges)
   }
 
   // ---------------------------------------------------------------------
@@ -568,9 +541,8 @@ object Analytics12 {
     * Purely a parser surface — the optimized plan is the same
     * scan→filter→aggregate Catalyst produces for the ANSI text. */
   def sqlPipeSyntax(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_pipe_orders")
-    s.sql(
-      """FROM graft_pipe_orders
+    Tables.sql(s, dir,
+      """FROM orders
         ||> WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         ||> EXTEND CAST(o_totalprice AS DECIMAL(18,2)) AS price
         ||> AGGREGATE COUNT(*) AS n_orders,
@@ -593,7 +565,7 @@ object Analytics12 {
     * file-system-derived grouping equals the value-derived one. */
   def scanMetadataCols(s: SparkSession, dir: String): DataFrame = {
     val path = graft.core.ScratchDirs.path(s, "graft_meta_orders", dir)
-    val laid = t(s, dir, "orders")
+    val laid = Tables.load(s, dir, "orders")
       .withColumn("bkt", pmod(col("o_orderkey"), lit(4)).cast("int"))
       .repartition(4, col("bkt"))
     laid.write.mode("overwrite").partitionBy("bkt").parquet(path)
@@ -621,7 +593,7 @@ object Analytics12 {
     QueryDef("win_rolling_beta", winRollingBeta,
       s"WITH monthly AS (${monthlySql("orders")}),\n" +
         rollingBetaRestSql("monthly").replaceFirst("^WITH ", "")),
-    QueryDef("agg_vol_estimators", aggVolEstimators,
+    QueryDef.sql("agg_vol_estimators",
       volEstimatorsSql("events")),
     QueryDef("agg_cointegration", aggCointegration,
       s"WITH daily AS (${cointDailySql("orders")}),\n" +
@@ -635,7 +607,7 @@ object Analytics12 {
         ljungBoxSql("daily", "a.d - CAST(l.lag AS INTEGER)")
           .replaceFirst("^WITH ", "")),
     QueryDef("llm_bpe_train", llmBpeTrain, bpeOracleSql),
-    QueryDef("llm_dp_histogram", llmDpHistogram, dpHistogramSql("documents")),
+    QueryDef.sql("llm_dp_histogram", dpHistogramSql("documents")),
     // The edges subquery keeps its own WITH clause nested inside the
     // outer CTE body (both engines allow a full statement there).
     QueryDef("graph_adamic_adar", graphAdamicAdar,

@@ -28,9 +28,6 @@ import graft.core.CkptTap._
   */
 object Analytics13 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_frac_diff
   // ---------------------------------------------------------------------
@@ -76,11 +73,9 @@ object Analytics13 {
        |FROM $orders GROUP BY 1""".stripMargin
 
   def winFracDiff(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_fd_orders")
-    s.sql(dailyDollarsSql("graft_fd_orders"))
+    val daily = Tables.sql(s, dir, dailyDollarsSql("orders"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_fd_daily")
-    s.sql(fracDiffSql("graft_fd_daily"))
+    Tables.sql(s, dir, fracDiffSql("graft_fd_daily"), "graft_fd_daily" -> daily)
   }
 
   // ---------------------------------------------------------------------
@@ -108,11 +103,6 @@ object Analytics13 {
        |SELECT CAST(k AS BIGINT) AS k, xk AS x_threshold,
        |  CASE WHEN lnsum > 0.0 THEN k / lnsum END AS hill_alpha
        |FROM s""".stripMargin
-
-  def aggHillTail(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_hill_orders")
-    s.sql(hillSql("graft_hill_orders"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_kendall_tau
@@ -154,19 +144,17 @@ object Analytics13 {
        |WHERE a.p = '1-URGENT' AND b.p = '2-HIGH'""".stripMargin
 
   def aggKendallTau(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_tau_orders")
-    s.sql(
+    val joined = Tables.sql(s, dir,
       s"""WITH daily AS (
          |  SELECT CAST(o_orderdate AS DATE) AS d, o_orderpriority AS p,
          |         CAST(floor(sum(CAST(o_totalprice AS DECIMAL(18,2))))
          |              AS DECIMAL(19,0)) AS rev
-         |  FROM graft_tau_orders
+         |  FROM orders
          |  WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
          |  GROUP BY 1, 2)
          |${tauJoinedSql("daily")}""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_tau_joined")
-    s.sql(tauRestSql("graft_tau_joined"))
+    Tables.sql(s, dir, tauRestSql("graft_tau_joined"), "graft_tau_joined" -> joined)
   }
 
   // ---------------------------------------------------------------------
@@ -180,14 +168,13 @@ object Analytics13 {
     * against st3. Emits per-doc word/char/post-BPE-token counts and
     * the compression ratio (int/int divisions only). */
   def llmBpeApply(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_bpea_docs")
     // st0 (the word census + symbol strings, vocabulary-bounded) is
     // STAGED behind an eager checkpoint: the BPE chain references each
     // stN twice (pairs p(N+1) AND merge st(N+1)), so Spark's CTE
     // inlining re-ran the corpus tokenize 2^rounds+1 = 9 times (plan-
     // verified: 9 parquet scans of documents before, 1 after). The
     // oracle keeps the inline chain — it grades values, not spelling.
-    Analytics12.stageBpeSt0(s, "graft_bpea_docs", "graft_bpea_st0")
+    val st0 = Analytics12.stageBpeSt0(s, dir)
     val words = "st0 AS (SELECT w, c, s FROM graft_bpea_st0)"
     val pairs = (st: String) =>
       s"""(SELECT pr, sum(c) AS cnt FROM (
@@ -198,10 +185,11 @@ object Analytics13 {
     val docToks =
       """SELECT doc_id, w FROM (
         |  SELECT doc_id, explode(split(text, ' ')) AS w
-        |  FROM graft_bpea_docs) WHERE w RLIKE '^[a-z]+$'""".stripMargin
+        |  FROM documents) WHERE w RLIKE '^[a-z]+$'""".stripMargin
     val vocabSize =
       "size(split(trim(s), ' '))"
-    s.sql(Analytics12.bpeApplyChain(words, pairs, docToks, vocabSize))
+    Tables.sql(s, dir, Analytics12.bpeApplyChain(words, pairs, docToks, vocabSize),
+      "graft_bpea_st0" -> st0)
   }
 
   // ---------------------------------------------------------------------
@@ -231,18 +219,13 @@ object Analytics13 {
        |  JOIN ml ON ml.lang = c.lang
        |  JOIN ms ON ms.source = c.source""".stripMargin
 
-  def aggMutualInfo(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_mi_docs")
-    s.sql(miSql("graft_mi_docs"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("win_frac_diff", winFracDiff,
       s"WITH daily AS (${dailyDollarsSql("orders")}),\n" +
         fracDiffSql("daily").replaceFirst("^WITH ", "")),
-    QueryDef("agg_hill_tail", aggHillTail, hillSql("orders")),
+    QueryDef.sql("agg_hill_tail", hillSql("orders")),
     QueryDef("agg_kendall_tau", aggKendallTau,
       s"""WITH daily AS (
           |  SELECT CAST(o_orderdate AS DATE) AS d, o_orderpriority AS p,
@@ -254,5 +237,5 @@ object Analytics13 {
           |""".stripMargin +
         tauRestSql("joined").replaceFirst("^WITH ", "")),
     QueryDef("llm_bpe_apply", llmBpeApply, Analytics12.bpeApplyOracleSql),
-    QueryDef("agg_mutual_info", aggMutualInfo, miSql("documents")))
+    QueryDef.sql("agg_mutual_info", miSql("documents")))
 }

@@ -1,7 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.NameParameterizedQuery
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshims.DatasetShim
 
 import graft.QueryDef
 import graft.core.Tables
@@ -30,9 +33,6 @@ import graft.core.Tables
   */
 object Analytics14 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_nelson_aalen
   // ---------------------------------------------------------------------
@@ -46,7 +46,7 @@ object Analytics14 {
     * row) relation. At scale: two grouped aggregations + a left join
     * on the corpus, windows only on the bounded relation. */
   def aggNelsonAalen(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val u = ev.groupBy("user_id").agg(min("ts").as("f"))
     val p = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(min("ts").as("fp"))
@@ -97,11 +97,6 @@ object Analytics14 {
        |  sqrt(sum(ddpct * ddpct) / count(*)) AS ulcer_index
        |FROM t GROUP BY user_id HAVING count(*) >= 5""".stripMargin
 
-  def winUlcerIndex(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ui_events")
-    s.sql(ulcerSql("graft_ui_events"))
-  }
-
   // ---------------------------------------------------------------------
   // text_burrows_delta
   // ---------------------------------------------------------------------
@@ -136,11 +131,10 @@ object Analytics14 {
        |GROUP BY 1, 2""".stripMargin
 
   def textBurrowsDelta(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_bd_docs")
-    s.sql(burrowsSql(
+    Tables.sql(s, dir, burrowsSql(
       """SELECT source, w FROM (
         |  SELECT source, explode(split(text, ' ')) AS w
-        |  FROM graft_bd_docs) WHERE w RLIKE '^[a-z]+$'""".stripMargin))
+        |  FROM documents) WHERE w RLIKE '^[a-z]+$'""".stripMargin))
   }
 
   // ---------------------------------------------------------------------
@@ -173,22 +167,24 @@ object Analytics14 {
        |       FROM b1 c JOIN e2 e ON e.bg = c.bg GROUP BY 1, 2)""".stripMargin
 
   /** Spark-side staged rouge bases: ev/u1/b1 as eagerly checkpointed
-    * temp views, returning a CTE prefix equivalent to [[rougeCtes]].
+    * frames, returning a CTE prefix equivalent to [[rougeCtes]] and the
+    * frames (with `documents2`, the documents table) it reads.
     * u1/b1 are corpus-wide explode+distinct relations, each referenced
     * TWICE in the chain (e1/o1 resp. e2/o2), and Spark INLINES
     * deterministic CTEs — left lazy, the corpus tokenization and
     * distinct ran twice per n-gram order. The oracle keeps the plain
     * CTE spelling (it grades values, not spelling). */
-  private[queries] def stageRougeBases(s: SparkSession): String = {
+  private[queries] def stageRougeBases(s: SparkSession, dir: String)
+      : (String, Seq[(String, DataFrame)]) = {
     import graft.core.CkptTap._
-    s.sql(
-      """SELECT doc_id FROM documents2
-        |ORDER BY md5(CAST(doc_id AS STRING)), doc_id LIMIT 10""".stripMargin)
-      .tappedLocalCheckpoint().createOrReplaceTempView("graft_rg_ev")
-    s.sql(s"SELECT doc_id, w FROM ($rougeSparkUni) GROUP BY doc_id, w")
-      .tappedLocalCheckpoint().createOrReplaceTempView("graft_rg_u1")
-    s.sql(s"SELECT doc_id, bg FROM ($rougeSparkBi) GROUP BY doc_id, bg")
-      .tappedLocalCheckpoint().createOrReplaceTempView("graft_rg_b1")
+    val docs = "documents2" -> Tables.load(s, dir, "documents")
+    def staged(text: String) = Tables.sql(s, dir, text, docs).tappedLocalCheckpoint()
+    val frames = Seq(docs,
+      "graft_rg_ev" -> staged(
+        """SELECT doc_id FROM documents2
+          |ORDER BY md5(CAST(doc_id AS STRING)), doc_id LIMIT 10""".stripMargin),
+      "graft_rg_u1" -> staged(s"SELECT doc_id, w FROM ($rougeSparkUni) GROUP BY doc_id, w"),
+      "graft_rg_b1" -> staged(s"SELECT doc_id, bg FROM ($rougeSparkBi) GROUP BY doc_id, bg"))
     """ev AS (SELECT * FROM graft_rg_ev),
       |u1 AS (SELECT * FROM graft_rg_u1),
       |b1 AS (SELECT * FROM graft_rg_b1),
@@ -199,7 +195,7 @@ object Analytics14 {
       |o1 AS (SELECT c.doc_id, e.doc_id AS eid, count(*) AS o
       |       FROM u1 c JOIN e1 e ON e.w = c.w GROUP BY 1, 2),
       |o2 AS (SELECT c.doc_id, e.doc_id AS eid, count(*) AS o
-      |       FROM b1 c JOIN e2 e ON e.bg = c.bg GROUP BY 1, 2)""".stripMargin
+      |       FROM b1 c JOIN e2 e ON e.bg = c.bg GROUP BY 1, 2)""".stripMargin -> frames
   }
 
   private def rougeSql(uni: String, bi: String): String =
@@ -235,8 +231,8 @@ object Analytics14 {
       |  UNNEST(generate_series(1, len(d.ts) - 1)) AS t(g)""".stripMargin
 
   def llmRougeDecontam(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("documents2")
-    s.sql(rougeSqlFrom(stageRougeBases(s)))
+    val (ctes, frames) = stageRougeBases(s, dir)
+    Tables.sql(s, dir, rougeSqlFrom(ctes), frames: _*)
   }
 
   private[queries] def rougeOracleSql: String =
@@ -247,22 +243,24 @@ object Analytics14 {
   // sql_named_params
   // ---------------------------------------------------------------------
 
-  /** Parameterized SQL: named parameter markers bound through
-    * `spark.sql(text, args)` — values reach the plan as literals via
-    * the analyzer's parameter binding, not string splicing (the
+  /** Parameterized SQL: the named parameter markers (`:minPrice`,
+    * `:cutoff`) stay parameters in the parsed plan and the analyzer's
+    * parameter binding (`NameParameterizedQuery`, the plan
+    * `spark.sql(text, args)` builds under constants-only substitution)
+    * turns them into literals — no string splicing (the
     * SQL-injection-safe surface). The oracle is the same query with
     * the parameters inlined. */
-  def sqlNamedParams(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_np_orders")
-    s.sql(
-      """SELECT o_orderpriority AS priority, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM graft_np_orders
-        |WHERE o_totalprice >= :minPrice
-        |  AND o_orderdate < CAST(:cutoff AS TIMESTAMP)
-        |GROUP BY o_orderpriority""".stripMargin,
-      Map("minPrice" -> 50000, "cutoff" -> "1999-01-01"))
-  }
+  def sqlNamedParams(s: SparkSession, dir: String): DataFrame =
+    DatasetShim.ofRows(s, NameParameterizedQuery(
+      Tables.plan(s, dir,
+        """SELECT o_orderpriority AS priority, count(*) AS n_orders,
+          |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+          |FROM orders
+          |WHERE o_totalprice >= :minPrice
+          |  AND o_orderdate < CAST(:cutoff AS TIMESTAMP)
+          |GROUP BY o_orderpriority""".stripMargin),
+      Map[String, Expression](
+        "minPrice" -> Literal(50000), "cutoff" -> Literal("1999-01-01"))))
 
   // ---------------------------------------------------------------------
 
@@ -292,7 +290,7 @@ object Analytics14 {
         |  SUM(CAST(d_events AS DOUBLE) / (n_risk * n_risk))
         |    OVER (ORDER BY dur) AS h_var
         |FROM r WHERE d_events > 0""".stripMargin),
-    QueryDef("win_ulcer_index", winUlcerIndex, ulcerSql("events")),
+    QueryDef.sql("win_ulcer_index", ulcerSql("events")),
     QueryDef("text_burrows_delta", textBurrowsDelta, burrowsSql(
       """SELECT source, w FROM (
         |  SELECT source, unnest(string_split(text, ' ')) AS w

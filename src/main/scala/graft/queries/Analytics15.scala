@@ -28,9 +28,6 @@ import graft.core.CkptTap._
   */
 object Analytics15 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_pca_power
   // ---------------------------------------------------------------------
@@ -96,25 +93,22 @@ object Analytics15 {
   }
 
   def aggPcaPower(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "embeddings").createOrReplaceTempView("graft_pca_emb")
     // The one corpus-sized pass: Gram via the pair-exploded
     // aggregation, collapsed and checkpointed (256 rows).
-    s.sql(pcaGramSql(
+    val gram = Tables.sql(s, dir, pcaGramSql(
         """SELECT vec_id, i, CAST(element_at(embedding, i) AS DOUBLE) AS x
-          |FROM graft_pca_emb LATERAL VIEW explode(sequence(1, 16)) t AS i""".stripMargin))
+          |FROM embeddings LATERAL VIEW explode(sequence(1, 16)) t AS i""".stripMargin))
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_pca_g")
-    s.sql("SELECT DISTINCT i, 1.0 AS x FROM graft_pca_g")
+    val g = "graft_pca_g" -> gram
+    val v0 = Tables.sql(s, dir, "SELECT DISTINCT i, 1.0 AS x FROM graft_pca_g", g)
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_pca_v")
     // Each iterate is a 16-row relation; checkpointing it keeps every
     // round's plan two tiny joins deep instead of doubling.
-    for (_ <- 1 to 8) {
-      s.sql(pcaRoundSql("graft_pca_g", "graft_pca_v"))
+    val v8 = (1 to 8).foldLeft(v0) { (v, _) =>
+      Tables.sql(s, dir, pcaRoundSql("graft_pca_g", "graft_pca_v"), g, "graft_pca_v" -> v)
         .coalesce(1).tappedLocalCheckpoint()
-        .createOrReplaceTempView("graft_pca_v")
     }
-    s.sql(pcaFinalSql("graft_pca_g", "graft_pca_v"))
+    Tables.sql(s, dir, pcaFinalSql("graft_pca_g", "graft_pca_v"), g, "graft_pca_v" -> v8)
   }
 
   // ---------------------------------------------------------------------
@@ -168,12 +162,10 @@ object Analytics15 {
        |WHERE nxt IS NOT NULL GROUP BY 1, 2""".stripMargin
 
   def graphRandomWalk(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_rw_events")
-    s.sql(walkEdgesSql("graft_rw_events",
+    val edges = Tables.sql(s, dir, walkEdgesSql("events",
         "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_rw_edges")
-    s.sql(walkSql("graft_rw_edges"))
+    Tables.sql(s, dir, walkSql("graft_rw_edges"), "graft_rw_edges" -> edges)
   }
 
   // ---------------------------------------------------------------------
@@ -197,11 +189,6 @@ object Analytics15 {
        |  CASE WHEN value > dc_high THEN 1
        |       WHEN value < dc_low THEN -1 ELSE 0 END AS breakout
        |FROM w WHERE rn > 20""".stripMargin
-
-  def winDonchian(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_dc_events")
-    s.sql(donchianSql("graft_dc_events"))
-  }
 
   // ---------------------------------------------------------------------
   // text_rake
@@ -250,15 +237,14 @@ object Analytics15 {
        |FROM ranked WHERE rk <= 3""".stripMargin
 
   def textRake(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_rake_docs")
     val tok =
       """SELECT doc_id, pos + 1 AS pos, w FROM (
         |  SELECT doc_id, posexplode(split(text, ' ')) AS (pos, w)
-        |  FROM graft_rake_docs) WHERE w RLIKE '^[a-z]+$'""".stripMargin
+        |  FROM documents) WHERE w RLIKE '^[a-z]+$'""".stripMargin
     val phraseAgg =
       """array_join(transform(array_sort(collect_list(
         |  struct(isl.pos, isl.w))), p -> p.w), ' ')""".stripMargin
-    s.sql(rakeSql(tok, phraseAgg))
+    Tables.sql(s, dir, rakeSql(tok, phraseAgg))
   }
 
   // ---------------------------------------------------------------------
@@ -302,11 +288,6 @@ object Analytics15 {
        |FROM last WHERE rn = 1
        |GROUP BY op""".stripMargin
 
-  def etlCdcApply(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_cdc_orders")
-    s.sql(cdcSql("graft_cdc_orders"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
@@ -320,7 +301,7 @@ object Analytics15 {
           |""".stripMargin +
         walkSql("edges").replaceFirst("^WITH ", "")
           .replace("CAST(walk_id AS STRING)", "CAST(walk_id AS VARCHAR)")),
-    QueryDef("win_donchian", winDonchian, donchianSql("events")),
+    QueryDef.sql("win_donchian", donchianSql("events")),
     QueryDef("text_rake", textRake, rakeSql(
       """SELECT doc_id, g AS pos, d.ts[g] AS w
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
@@ -328,5 +309,5 @@ object Analytics15 {
         |  UNNEST(generate_series(1, len(d.ts))) AS t(g)
         |WHERE regexp_matches(d.ts[g], '^[a-z]+$')""".stripMargin,
       "string_agg(isl.w, ' ' ORDER BY isl.pos)")),
-    QueryDef("etl_cdc_apply", etlCdcApply, cdcSql("orders")))
+    QueryDef.sql("etl_cdc_apply", cdcSql("orders")))
 }

@@ -29,9 +29,6 @@ import graft.core.CkptTap._
   */
 object Analytics16 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_ichimoku
   // ---------------------------------------------------------------------
@@ -64,11 +61,6 @@ object Analytics16 {
        |SELECT event_id, value, tenkan, kijun, senkou_a, senkou_b, chikou
        |FROM c WHERE rn > 77 AND chikou IS NOT NULL""".stripMargin
 
-  def winIchimoku(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ich_events")
-    s.sql(ichimokuSql("graft_ich_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_var_es
   // ---------------------------------------------------------------------
@@ -95,11 +87,6 @@ object Analytics16 {
        |  sum(CASE WHEN r.rn <= k.kk THEN r.pnl ELSE 0.0 END) / k.kk AS es95
        |FROM k JOIN r ON r.user_id = k.user_id
        |GROUP BY k.user_id, k.n, k.kk""".stripMargin
-
-  def aggVarEs(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_var_events")
-    s.sql(varEsSql("graft_var_events"))
-  }
 
   // ---------------------------------------------------------------------
   // llm_cooccurrence
@@ -134,11 +121,10 @@ object Analytics16 {
        |  CROSS JOIN tot CROSS JOIN totp""".stripMargin
 
   def llmCooccurrence(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_co_docs")
-    s.sql(cooccurSql(
+    Tables.sql(s, dir, cooccurSql(
       """SELECT doc_id, pos + 1 AS pos, w FROM (
         |  SELECT doc_id, posexplode(split(text, ' ')) AS (pos, w)
-        |  FROM graft_co_docs) WHERE w RLIKE '^[a-z]+$'""".stripMargin))
+        |  FROM documents) WHERE w RLIKE '^[a-z]+$'""".stripMargin))
   }
 
   // ---------------------------------------------------------------------
@@ -178,18 +164,15 @@ object Analytics16 {
        |FROM $orders GROUP BY 1""".stripMargin
 
   def aggBinsegSplit(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_bs_orders")
-    s.sql(binsegDailySql("graft_bs_orders"))
-      .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_bs_daily")
-    s.sql(binsegSql("graft_bs_daily"))
+    val daily = Tables.sql(s, dir, binsegDailySql("orders")).tappedLocalCheckpoint()
+    Tables.sql(s, dir, binsegSql("graft_bs_daily"), "graft_bs_daily" -> daily)
   }
 
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("win_ichimoku", winIchimoku, ichimokuSql("events")),
-    QueryDef("agg_var_es", aggVarEs, varEsSql("events")),
+    QueryDef.sql("win_ichimoku", ichimokuSql("events")),
+    QueryDef.sql("agg_var_es", varEsSql("events")),
     QueryDef("llm_cooccurrence", llmCooccurrence, cooccurSql(
       """SELECT doc_id, g AS pos, d.ts[g] AS w
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts

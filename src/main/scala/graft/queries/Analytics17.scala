@@ -27,9 +27,6 @@ import graft.core.CkptTap._
   */
 object Analytics17 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_mann_kendall
   // ---------------------------------------------------------------------
@@ -68,11 +65,8 @@ object Analytics17 {
        |FROM $orders GROUP BY 1""".stripMargin
 
   def aggMannKendall(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_mk_orders")
-    s.sql(mkDailySql("graft_mk_orders"))
-      .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_mk_daily")
-    s.sql(mkRestSql("graft_mk_daily"))
+    val daily = Tables.sql(s, dir, mkDailySql("orders")).tappedLocalCheckpoint()
+    Tables.sql(s, dir, mkRestSql("graft_mk_daily"), "graft_mk_daily" -> daily)
   }
 
   // ---------------------------------------------------------------------
@@ -94,8 +88,7 @@ object Analytics17 {
        |FROM src s CROSS JOIN g""".stripMargin
 
   def etlFreshnessSla(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_fr_events")
-    s.sql(freshnessSql("graft_fr_events",
+    Tables.sql(s, dir, freshnessSql("events",
       "(unix_timestamp(g.gmax) - unix_timestamp(s.max_ts)) DIV 3600"))
   }
 
@@ -131,11 +124,11 @@ object Analytics17 {
        |FROM rk WHERE rk <= 3""".stripMargin
 
   def llmHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("documents2")
     // staged rouge bases (see Analytics14.stageRougeBases): the
     // corpus-wide u1/b1 distinct-n-gram relations are checkpointed
     // once instead of re-tokenizing the corpus per CTE reference
-    s.sql(hardNegSql(Analytics14.stageRougeBases(s)))
+    val (ctes, frames) = Analytics14.stageRougeBases(s, dir)
+    Tables.sql(s, dir, hardNegSql(ctes), frames: _*)
   }
 
   // ---------------------------------------------------------------------

@@ -23,9 +23,6 @@ import graft.core.Tables
   */
 object Analytics18 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_span_corruption
   // ---------------------------------------------------------------------
@@ -67,11 +64,10 @@ object Analytics18 {
        |FROM agg_m a LEFT JOIN agg_s s ON s.doc_id = a.doc_id""".stripMargin
 
   def llmSpanCorruption(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_sc_docs")
-    s.sql(spanCorruptionSql(
+    Tables.sql(s, dir, spanCorruptionSql(
       """SELECT doc_id, pos + 1 AS pos FROM (
         |  SELECT doc_id, posexplode(split(text, ' ')) AS (pos, w)
-        |  FROM graft_sc_docs)""".stripMargin))
+        |  FROM documents)""".stripMargin))
   }
 
   // ---------------------------------------------------------------------
@@ -93,11 +89,6 @@ object Analytics18 {
        |    AS hhi
        |FROM r JOIN tot t ON t.yr = r.yr
        |GROUP BY r.yr""".stripMargin
-
-  def aggHhi(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_hhi_orders")
-    s.sql(hhiSql("graft_hhi_orders"))
-  }
 
   // ---------------------------------------------------------------------
   // win_pivot_points
@@ -133,11 +124,6 @@ object Analytics18 {
        |  (ph + pl + pc) / 3 - (ph - pl) AS s2
        |FROM pv WHERE ph IS NOT NULL""".stripMargin
 
-  def winPivotPoints(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_pp_events")
-    s.sql(pivotSql("graft_pp_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
@@ -146,6 +132,6 @@ object Analytics18 {
         |FROM (SELECT doc_id, string_split(text, ' ') AS ts
         |      FROM documents) d,
         |  UNNEST(generate_series(1, len(d.ts))) AS t(g)""".stripMargin)),
-    QueryDef("agg_hhi", aggHhi, hhiSql("orders")),
-    QueryDef("win_pivot_points", winPivotPoints, pivotSql("events")))
+    QueryDef.sql("agg_hhi", hhiSql("orders")),
+    QueryDef.sql("win_pivot_points", pivotSql("events")))
 }

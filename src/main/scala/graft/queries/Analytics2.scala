@@ -18,16 +18,13 @@ import graft.core.Tables
   */
 object Analytics2 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Gaps-and-islands: per-user consecutive-day activity streaks. The
     * island key is `day - row_number() days` — constant within a run
     * of consecutive days — so one window pass plus one aggregation
     * finds every streak with no self-join. */
   def eventsStreaks(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("day")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("user_id"), col("ts").cast("date").as("day")).distinct()
       .withColumn("grp", date_sub(col("day"), row_number().over(w)))
       .groupBy("user_id", "grp")
@@ -43,7 +40,7 @@ object Analytics2 {
     * semantics as `agg_median`), both tiny — they broadcast back to
     * the fact side, which never shuffles. */
   def aggMadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val med = e.groupBy("event_type")
       .agg(expr("percentile(value, 0.5)").as("med"))
     val dev = e.join(broadcast(med), "event_type")
@@ -75,7 +72,7 @@ object Analytics2 {
     * aggregate share it. */
   def llmDedupPriority(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("th").orderBy("source", "doc_id")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(array_join(slice(split(lower(col("text")), " "), 1, 5), " "))
           .as("th"))
@@ -94,7 +91,7 @@ object Analytics2 {
     * reference's load mode, `dump_bigq.py:133-140`). */
   def etlSnapshotDiff(s: SparkSession, dir: String): DataFrame = {
     def snap(lo: String, hi: String) =
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .filter(col("o_orderdate").cast("date").between(lo, hi))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"),
@@ -125,7 +122,7 @@ object Analytics2 {
     * aggregates sharing the same exchange. */
   def etlOhlcResample(s: SparkSession, dir: String): DataFrame = {
     val ord = Window.partitionBy("event_type", "hr").orderBy("us", "event_id")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_type"), date_trunc("hour", col("ts")).as("hr"),
         unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
       .withColumn("o", first("value").over(ord))
@@ -137,23 +134,6 @@ object Analytics2 {
         count(lit(1)).as("n_ticks"))
   }
 
-  /** Per-group least-squares regression: price-on-quantity slope,
-    * intercept, R², and pair count via the SQL regression aggregates —
-    * trend detection as a single map-side-combinable aggregation, no
-    * window, no second pass. Rounding margins: slope/intercept carry
-    * ~1e-8 relative FP divergence across engines vs a 5e-5 rounding
-    * granularity at 4 decimals. */
-  def aggRegression(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_regr_lineitem")
-    s.sql(
-      """SELECT l_returnflag,
-        |  ROUND(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
-        |  ROUND(regr_intercept(l_extendedprice, l_quantity), 4) AS icept,
-        |  ROUND(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
-        |  CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
-        |FROM graft_regr_lineitem GROUP BY l_returnflag""".stripMargin)
-  }
-
   /** First-order Markov transition matrix over each user's event
     * stream: consecutive (from, to) event-type pairs with transition
     * probabilities — the behavioral-model aggregate behind funnel and
@@ -161,7 +141,7 @@ object Analytics2 {
     * 25-cell aggregate; the per-from totals re-enter by broadcast. */
   def eventsTransitions(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val pairs = t(s, dir, "events")
+    val pairs = Tables.load(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
       .withColumn("from_type", lag("event_type", 1).over(w))
@@ -174,20 +154,6 @@ object Analytics2 {
         (col("n") / col("tn")).as("p"))
   }
 
-  /** ROLLUP with grouping-indicator columns: `GROUPING(col)` flags
-    * distinguish subtotal rows from data rows whose key really is the
-    * sentinel — the indicator surface the plain rollup/cube queries
-    * don't exercise. */
-  def aggGroupingId(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_gid_lineitem")
-    s.sql(
-      """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
-        |  COALESCE(l_linestatus, 'ALL') AS ls,
-        |  CAST(GROUPING(l_returnflag)*2 + GROUPING(l_linestatus) AS BIGINT) AS gid,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM graft_gid_lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin)
-  }
-
   /** Top-5 line items per supplier through the custom heap operator
     * ([[graft.plans.TopKPerGroup]]): same semantics as the
     * `row_number() <= k` window (the oracle), but planned as one
@@ -196,7 +162,7 @@ object Analytics2 {
     * result is deterministic. */
   def winTopkHeap(s: SparkSession, dir: String): DataFrame =
     graft.plans.TopKPerGroup(
-      t(s, dir, "lineitem")
+      Tables.load(s, dir, "lineitem")
         .select("l_suppkey", "l_orderkey", "l_linenumber", "l_extendedprice"),
       Seq("l_suppkey"),
       Seq(col("l_extendedprice").desc, col("l_orderkey").asc,
@@ -218,7 +184,7 @@ object Analytics2 {
     * pass. DESC orders negate the key (longs/doubles, no overflow
     * case here); the oracle keeps native NTILE, bit-identical. */
   def eventsRfm(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "events")
+    val p = Tables.load(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .groupBy("user_id")
       .agg(max(unix_micros(col("ts"))).as("last_us"),
@@ -239,7 +205,7 @@ object Analytics2 {
     * exchange. The -Σ p·ln p expression is the same text on both
     * engines. */
   def aggEntropy(s: SparkSession, dir: String): DataFrame = {
-    val cnt = t(s, dir, "events")
+    val cnt = Tables.load(s, dir, "events")
       .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
     val tot = cnt.groupBy("user_id").agg(sum("n").as("tn"))
     cnt.join(tot, "user_id")
@@ -264,8 +230,8 @@ object Analytics2 {
     // customer grows with the SF — no broadcast hint (a forced hint
     // would pin a driver-side build at 100 TB); the optimizer
     // broadcasts it while small, AQE demotes past the threshold.
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer")
+    Tables.load(s, dir, "orders")
+      .join(Tables.load(s, dir, "customer")
         .select("c_custkey", "c_mktsegment"),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"), col("o_orderkey"), col("o_totalprice"),
@@ -294,7 +260,7 @@ object Analytics2 {
     * one grouped aggregate. */
   def eventsCohortLtv(s: SparkSession, dir: String): DataFrame = {
     val epoch = lit("1970-01-01").cast("date")
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
       .select(col("user_id"), col("value"),
         (datediff(col("ts").cast("date"), epoch) / 7).cast("long").as("wk"))
     val cohort = e.groupBy("user_id").agg(min("wk").as("c0"))
@@ -320,7 +286,7 @@ object Analytics2 {
     * IEEE op on both engines. */
   def winRatioToReport(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         (col("o_totalprice")
           / sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
@@ -332,7 +298,7 @@ object Analytics2 {
     * product pipeline ships. Two count-distinct aggregations; the
     * 30-row daily side joins the 5-row weekly side by broadcast. */
   def eventsDauWau(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").select(col("ts").cast("date").as("day"),
+    val e = Tables.load(s, dir, "events").select(col("ts").cast("date").as("day"),
       col("user_id"))
     val d = e.groupBy("day").agg(countDistinct("user_id").as("dau"))
     val w = e.select(date_trunc("week", col("day")).cast("date").as("wk"),
@@ -343,39 +309,12 @@ object Analytics2 {
         (col("dau") / col("wau").cast("double")).as("stickiness"))
   }
 
-  /** Skewness / excess kurtosis from raw power sums: l_quantity is
-    * integral, so s1..s4 are EXACT integers under any partial-agg
-    * order, and the moment projection is then the same expression
-    * tree on both engines — no reliance on either engine's (differing:
-    * population vs sample-corrected) built-in skewness/kurtosis. The
-    * rational steps are IEEE-exact; POWER(x, 1.5) is not correctly
-    * rounded on either engine, so the final doubles agree to a ulp
-    * and the harness's round-to-6 canonicalization absorbs the rest.
-    * One map-side-combinable aggregation pass. */
-  def aggSkewKurt(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_moments_lineitem")
-    s.sql(
-      """WITH s AS (SELECT l_returnflag, COUNT(*) AS n,
-        |             SUM(l_quantity) AS s1, SUM(l_quantity*l_quantity) AS s2,
-        |             SUM(l_quantity*l_quantity*l_quantity) AS s3,
-        |             SUM(l_quantity*l_quantity*l_quantity*l_quantity) AS s4
-        |           FROM graft_moments_lineitem GROUP BY 1)
-        |SELECT l_returnflag, n,
-        |  CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-        |    (s3/n - 3*(s1/n)*(s2/n) + 2*(s1/n)*(s1/n)*(s1/n))
-        |      / POWER(s2/n - (s1/n)*(s1/n), 1.5) END AS skew,
-        |  CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN
-        |    (s4/n - 4*(s1/n)*(s3/n) + 6*(s1/n)*(s1/n)*(s2/n) - 3*(s1/n)*(s1/n)*(s1/n)*(s1/n))
-        |      / POWER(s2/n - (s1/n)*(s1/n), 2) - 3 END AS ex_kurt
-        |FROM s""".stripMargin)
-  }
-
   /** Top-20 three-step event-type paths: double `lead` over each
     * user's stream, then a count — path/journey mining one window pass
     * deep (both leads share the same sort). */
   def eventsPathTop3(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type").as("e1"))
       .withColumn("e2", lead("e1", 1).over(w))
@@ -392,7 +331,7 @@ object Analytics2 {
   def aggModeDet(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("l_returnflag")
       .orderBy(desc("n"), col("l_quantity"))
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag", "l_quantity").agg(count(lit(1)).as("n"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
@@ -409,7 +348,7 @@ object Analytics2 {
     * 100× vocab instead of a driver OOM. The scalar total keeps its
     * hint (one row). */
   def llmLogprob(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
     val uni = tok.groupBy("t").agg(count(lit(1)).as("n"))
     val tot = uni.agg(sum("n").as("nt"))
@@ -429,7 +368,7 @@ object Analytics2 {
     * at sf1 a data point landed exactly on the raw p99 boundary,
     * flipping n_clip_hi by one. */
   def llmWinsorize(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val b = e.groupBy("event_type")
       // one array-percentile buffer for both bounds (the scalar pair
       // built two identical value maps) — values unchanged
@@ -454,8 +393,8 @@ object Analytics2 {
     * the warehouse dimension-build step that replaces source keys. */
   def etlSurrogateKey(s: SparkSession, dir: String): DataFrame = {
     val w = Window.orderBy("r_name", "n_name")
-    t(s, dir, "nation")
-      .join(broadcast(t(s, dir, "region")),
+    Tables.load(s, dir, "nation")
+      .join(broadcast(Tables.load(s, dir, "region")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_name"), col("r_name"),
         dense_rank().over(w).cast("long").as("dim_key"))
@@ -468,14 +407,13 @@ object Analytics2 {
     * the other sketch queries: the oracle emits exact counts and the
     * query proves the estimate lands within the rsd envelope. */
   def aggHllRollup(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_hll_events")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT COALESCE(CAST(CAST(ts AS DATE) AS STRING), 'ALL') AS day,
         |  COUNT(DISTINCT user_id) AS exact_users,
         |  (approx_count_distinct(user_id) BETWEEN
         |     CAST(COUNT(DISTINCT user_id) * 0.85 AS BIGINT)
         |     AND CAST(COUNT(DISTINCT user_id) * 1.15 AS BIGINT)) AS hll_ok
-        |FROM graft_hll_events GROUP BY ROLLUP(CAST(ts AS DATE))""".stripMargin)
+        |FROM events GROUP BY ROLLUP(CAST(ts AS DATE))""".stripMargin)
   }
 
   // ---------------------------------------------------------------- maps
@@ -538,7 +476,16 @@ object Analytics2 {
         |      FROM events GROUP BY 1)
         |SELECT d.day, d.dau, w.wau, d.dau / CAST(w.wau AS DOUBLE) AS stickiness
         |FROM d JOIN w ON CAST(date_trunc('week', d.day) AS DATE) = w.wk""".stripMargin),
-    QueryDef("agg_skew_kurt", aggSkewKurt,
+    // Skewness / excess kurtosis from raw power sums: l_quantity is
+    // integral, so s1..s4 are EXACT integers under any partial-agg
+    // order, and the moment projection is then the same expression
+    // tree on both engines — no reliance on either engine's (differing:
+    // population vs sample-corrected) built-in skewness/kurtosis. The
+    // rational steps are IEEE-exact; POWER(x, 1.5) is not correctly
+    // rounded on either engine, so the final doubles agree to a ulp
+    // and the harness's round-to-6 canonicalization absorbs the rest.
+    // One map-side-combinable aggregation pass.
+    QueryDef.sql("agg_skew_kurt",
       """WITH s AS (SELECT l_returnflag, COUNT(*) AS n,
         |             SUM(l_quantity) AS s1, SUM(l_quantity*l_quantity) AS s2,
         |             SUM(l_quantity*l_quantity*l_quantity) AS s3,
@@ -604,7 +551,13 @@ object Analytics2 {
         |          ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
         |      FROM lineitem)
         |WHERE rn <= 5""".stripMargin),
-    QueryDef("agg_regression", aggRegression,
+    // Per-group least-squares regression: price-on-quantity slope,
+    // intercept, R², and pair count via the SQL regression aggregates —
+    // trend detection as a single map-side-combinable aggregation, no
+    // window, no second pass. Rounding margins: slope/intercept carry
+    // ~1e-8 relative FP divergence across engines vs a 5e-5 rounding
+    // granularity at 4 decimals.
+    QueryDef.sql("agg_regression",
       """SELECT l_returnflag,
         |  ROUND(regr_slope(l_extendedprice, l_quantity), 4) AS slope,
         |  ROUND(regr_intercept(l_extendedprice, l_quantity), 4) AS icept,
@@ -620,7 +573,11 @@ object Analytics2 {
         |tot AS (SELECT from_type, SUM(n) AS tn FROM cnt GROUP BY 1)
         |SELECT c.from_type, c.to_type, c.n, c.n / t.tn AS p
         |FROM cnt c JOIN tot t ON c.from_type = t.from_type""".stripMargin),
-    QueryDef("agg_grouping_id", aggGroupingId,
+    // ROLLUP with grouping-indicator columns: `GROUPING(col)` flags
+    // distinguish subtotal rows from data rows whose key really is the
+    // sentinel — the indicator surface the plain rollup/cube queries
+    // don't exercise.
+    QueryDef.sql("agg_grouping_id",
       """SELECT COALESCE(l_returnflag, 'ALL') AS rf,
         |  COALESCE(l_linestatus, 'ALL') AS ls,
         |  CAST(GROUPING(l_returnflag)*2 + GROUPING(l_linestatus) AS BIGINT) AS gid,

@@ -26,9 +26,6 @@ import graft.core.Tables
   */
 object Analytics20 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_langid_eval
   // ---------------------------------------------------------------------
@@ -58,7 +55,6 @@ object Analytics20 {
        |  JOIN lc ON lc.labeled_lang = c.labeled_lang""".stripMargin
 
   def llmLangidEval(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_le_docs")
     def inList(xs: Seq[String]) = xs.map("'" + _ + "'").mkString(", ")
     val pred =
       s"""SELECT lang AS labeled_lang,
@@ -70,8 +66,8 @@ object Analytics20 {
          |  size(filter(split(text, ' '), x -> x IN (${inList(LlmText.enMarkers)}))) AS en_hits,
          |  size(filter(split(text, ' '), x -> x IN (${inList(LlmText.esMarkers)}))) AS es_hits,
          |  size(filter(split(text, ' '), x -> x IN (${inList(LlmText.deMarkers)}))) AS de_hits
-         |  FROM graft_le_docs)""".stripMargin
-    s.sql(langidEvalSql(pred))
+         |  FROM documents)""".stripMargin
+    Tables.sql(s, dir, langidEvalSql(pred))
   }
 
   private def langidEvalOracle: String = {
@@ -136,11 +132,6 @@ object Analytics20 {
        |  CAST(sum(price) AS DOUBLE) AS total_price
        |FROM visible GROUP BY probe""".stripMargin
 
-  def etlBitemporal(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_bt_orders")
-    s.sql(bitemporalSql("graft_bt_orders"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_two_proportion
   // ---------------------------------------------------------------------
@@ -177,15 +168,10 @@ object Analytics20 {
        |  END AS z
        |FROM w""".stripMargin
 
-  def aggTwoProportion(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_tp_events")
-    s.sql(twoPropSql("graft_tp_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("llm_langid_eval", llmLangidEval, langidEvalOracle),
-    QueryDef("etl_bitemporal", etlBitemporal, bitemporalSql("orders")),
-    QueryDef("agg_two_proportion", aggTwoProportion, twoPropSql("events")))
+    QueryDef.sql("etl_bitemporal", bitemporalSql("orders")),
+    QueryDef.sql("agg_two_proportion", twoPropSql("events")))
 }

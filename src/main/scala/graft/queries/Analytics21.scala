@@ -26,9 +26,6 @@ import graft.core.CkptTap._
   */
 object Analytics21 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_heikin_ashi
   // ---------------------------------------------------------------------
@@ -62,11 +59,8 @@ object Analytics21 {
        |  GROUP BY user_id, d) y""".stripMargin
 
   def winHeikinAshi(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ha_events")
-    s.sql(haBarsSql("graft_ha_events"))
-      .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_ha_bars")
-    s.sql(
+    val bars = Tables.sql(s, dir, haBarsSql("events")).tappedLocalCheckpoint()
+    Tables.sql(s, dir,
       """WITH g AS (SELECT user_id,
         |        array_sort(collect_list(named_struct(
         |          'rn', rn, 'd', d, 'o', o, 'h', h, 'l', l, 'c', c))) AS bs
@@ -92,7 +86,8 @@ object Analytics21 {
         |  greatest(b.h, e.ho, e.hc) AS ha_high,
         |  least(b.l, e.ho, e.hc) AS ha_low
         |FROM e JOIN graft_ha_bars b
-        |  ON b.user_id = e.user_id AND b.rn = e.rn""".stripMargin)
+        |  ON b.user_id = e.user_id AND b.rn = e.rn""".stripMargin,
+      "graft_ha_bars" -> bars)
   }
 
   private def haOracleSql: String =
@@ -128,36 +123,29 @@ object Analytics21 {
        |GROUP BY e.src""".stripMargin
 
   def graphHittingProb(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_hp_events")
-    s.sql(
+    val edges = Tables.sql(s, dir,
       """SELECT src, dst, CAST(cnt AS DOUBLE)
         |    / sum(cnt) OVER (PARTITION BY src) AS wt
         |FROM (SELECT event_type AS src, nxt AS dst, count(*) AS cnt
         |      FROM (SELECT event_type, lead(event_type) OVER (
         |              PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-        |            FROM graft_hp_events) e
+        |            FROM events) e
         |      WHERE nxt IS NOT NULL GROUP BY 1, 2) c""".stripMargin)
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_hp_edges")
-    s.sql("""SELECT DISTINCT src AS event_type,
+    val h0 = Tables.sql(s, dir, """SELECT DISTINCT src AS event_type,
             |  CASE WHEN src = 'purchase' THEN 1.0D ELSE 0.0D END AS p
-            |FROM graft_hp_edges""".stripMargin)
+            |FROM graft_hp_edges""".stripMargin, "graft_hp_edges" -> edges)
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_hp_h")
-    var p4: DataFrame = null
-    for (k <- 1 to 8) {
-      val next = s.sql(hitRoundSql("graft_hp_edges", "graft_hp_h"))
+    val h = (1 to 8).scanLeft(h0) { (prev, _) =>
+      Tables.sql(s, dir, hitRoundSql("graft_hp_edges", "graft_hp_h"),
+        "graft_hp_edges" -> edges, "graft_hp_h" -> prev)
         .coalesce(1).tappedLocalCheckpoint()
-      next.createOrReplaceTempView("graft_hp_h")
-      if (k == 4) {
-        p4 = next
-        next.createOrReplaceTempView("graft_hp_h4")
-      }
     }
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT h8.event_type, h4.p AS p_hit_4, h8.p AS p_hit_8
         |FROM graft_hp_h h8 JOIN graft_hp_h4 h4
-        |  ON h4.event_type = h8.event_type""".stripMargin)
+        |  ON h4.event_type = h8.event_type""".stripMargin,
+      "graft_hp_h" -> h(8), "graft_hp_h4" -> h(4))
   }
 
   private def hitOracleSql: String = {
@@ -236,11 +224,6 @@ object Analytics21 {
        |    AS p_value
        |FROM rstat CROSS JOIN obs GROUP BY obs.d""".stripMargin
 
-  def aggRandomizationTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_rt_events")
-    s.sql(randTestSql("graft_rt_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_chow_test
   // ---------------------------------------------------------------------
@@ -291,8 +274,7 @@ object Analytics21 {
   }
 
   def aggChowTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_chow_orders")
-    s.sql(chowSql("graft_chow_orders",
+    Tables.sql(s, dir, chowSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -301,7 +283,7 @@ object Analytics21 {
   val queries: Seq[QueryDef] = Seq(
     QueryDef("win_heikin_ashi", winHeikinAshi, haOracleSql),
     QueryDef("graph_hitting_prob", graphHittingProb, hitOracleSql),
-    QueryDef("agg_randomization_test", aggRandomizationTest,
+    QueryDef.sql("agg_randomization_test",
       randTestSql("events")),
     QueryDef("agg_chow_test", aggChowTest, chowSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))

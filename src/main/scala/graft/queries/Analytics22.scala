@@ -30,9 +30,6 @@ import graft.core.Tables
   */
 object Analytics22 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // sql_merge_into
   // ---------------------------------------------------------------------
@@ -65,20 +62,18 @@ object Analytics22 {
             |  (k BIGINT NOT NULL, status STRING, price DECIMAL(18,4),
             |   version INT)
             |""".stripMargin)
-    t(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
+    val seed = Tables.load(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
         col("o_totalprice").cast(DecimalType(18, 4)).as("price"),
         lit(1).as("version"))
-      .createOrReplaceTempView("graft_merge_seed")
-    s.sql("""INSERT INTO graft_mem.db.orders_merge
-            |SELECT * FROM graft_merge_seed""".stripMargin)
-    t(s, dir, "orders").filter(col("o_orderkey") % 2 === 0)
+    Tables.sql(s, dir, """INSERT INTO graft_mem.db.orders_merge
+            |SELECT * FROM graft_merge_seed""".stripMargin, "graft_merge_seed" -> seed)
+    val src = Tables.load(s, dir, "orders").filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey").as("k"),
         (col("o_totalprice").cast(DecimalType(18, 4)) *
           lit(1.05).cast(DecimalType(8, 4)))
           .cast(DecimalType(18, 4)).as("price"))
-      .createOrReplaceTempView("graft_merge_src")
-    s.sql("""MERGE INTO graft_mem.db.orders_merge t
+    Tables.sql(s, dir, """MERGE INTO graft_mem.db.orders_merge t
             |USING graft_merge_src s
             |ON t.k = s.k
             |WHEN MATCHED AND s.price > 150000 THEN
@@ -89,7 +84,7 @@ object Analytics22 {
             |  INSERT (k, status, price, version) VALUES (s.k, 'I', s.price, 1)
             |WHEN NOT MATCHED BY SOURCE AND t.price < 100000 THEN
             |  UPDATE SET status = 'S'
-            |""".stripMargin)
+            |""".stripMargin, "graft_merge_src" -> src)
     s.sql("""SELECT status, count(*) AS n,
             |  CAST(sum(price) AS DOUBLE) AS total,
             |  CAST(sum(version) AS BIGINT) AS sum_version
@@ -113,12 +108,12 @@ object Analytics22 {
     s.sql(s"""CREATE TABLE graft_mem.db.$name
              |  (k BIGINT NOT NULL, status STRING, price DECIMAL(18,4),
              |   version INT)""".stripMargin)
-    t(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
+    val seed = Tables.load(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
         col("o_totalprice").cast(DecimalType(18, 4)).as("price"),
         lit(1).as("version"))
-      .createOrReplaceTempView(s"graft_seed_$name")
-    s.sql(s"INSERT INTO graft_mem.db.$name SELECT * FROM graft_seed_$name")
+    Tables.sql(s, dir, s"INSERT INTO graft_mem.db.$name SELECT * FROM seed",
+      "seed" -> seed)
   }
 
   private def statusCensusSql(name: String): String =

@@ -34,9 +34,6 @@ import graft.core.Tables
   */
 object Analytics23 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // scan_csv_multiline
   // ---------------------------------------------------------------------
@@ -54,7 +51,7 @@ object Analytics23 {
   def scanCsvMultiline(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = graft.core.ScratchDirs.path(s, "graft_csv_multiline", dir)
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         regexp_replace(col("text"), " ", "\n").as("text"))
       .write.mode("overwrite").option("header", "true").csv(path)
@@ -85,7 +82,7 @@ object Analytics23 {
     * engines. One explode + two keyed aggregations, all map-side
     * combinable. */
   def textEntropy(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -112,13 +109,13 @@ object Analytics23 {
     // ~97% distinct, so the Percentile aggregate's per-partition maps
     // are the whole column — bit-identical values, relational cost.
     val q = graft.operators.ExactPercentile.of(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        Tables.load(s, dir, "lineitem"), Seq("l_returnflag"),
         col("l_extendedprice"), Seq(0.25 -> "eq1", 0.75 -> "eq3"))
       .select(col("l_returnflag"),
         round(col("eq1"), 4).as("q1"), round(col("eq3"), 4).as("q3"))
       .withColumn("lo", col("q1") - (col("q3") - col("q1")) * 1.5)
       .withColumn("hi", col("q3") + (col("q3") - col("q1")) * 1.5)
-    t(s, dir, "lineitem").join(broadcast(q), "l_returnflag")
+    Tables.load(s, dir, "lineitem").join(broadcast(q), "l_returnflag")
       .groupBy("l_returnflag")
       .agg(first("q1").as("q1"), first("q3").as("q3"),
         count(lit(1)).as("n"),
@@ -143,7 +140,7 @@ object Analytics23 {
     * estimator itself is one bounded sum. */
   def aggPowerLaw(s: SparkSession, dir: String): DataFrame = {
     val k = 1000
-    val top = t(s, dir, "orders")
+    val top = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(k)
@@ -171,7 +168,7 @@ object Analytics23 {
     * is rounded at 6 dp BEFORE the split so an engine ulp cannot flip
     * a phase boundary. */
   def llmCurriculumOrder(s: SparkSession, dir: String): DataFrame = {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
     val df = tok.select("doc_id", "t").distinct()
       .groupBy("t").agg(count(lit(1)).as("df"))
@@ -204,10 +201,9 @@ object Analytics23 {
     * rollup; all counts exact integers, fertility an integer ratio
     * emitted raw. */
   def llmTokenizerFertility(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_fert_docs")
     // st0 staged once (see llmBpeApply: CTE inlining re-ran the corpus
     // tokenize 9× through the doubled stN references — plan-verified).
-    Analytics12.stageBpeSt0(s, "graft_fert_docs", "graft_fert_st0")
+    val st0 = Analytics12.stageBpeSt0(s, dir)
     val words = "st0 AS (SELECT w, c, s FROM graft_fert_st0)"
     val pairs = (st: String) =>
       s"""(SELECT pr, sum(c) AS cnt FROM (
@@ -218,9 +214,9 @@ object Analytics23 {
     val docToks =
       """SELECT lang, w FROM (
         |  SELECT lang, explode(split(text, ' ')) AS w
-        |  FROM graft_fert_docs) WHERE w RLIKE '^[a-z]+$'""".stripMargin
-    s.sql(Analytics12.bpeFertilityChain(words, pairs, docToks,
-      "size(split(trim(s), ' '))"))
+        |  FROM documents) WHERE w RLIKE '^[a-z]+$'""".stripMargin
+    Tables.sql(s, dir, Analytics12.bpeFertilityChain(words, pairs, docToks,
+      "size(split(trim(s), ' '))"), "graft_fert_st0" -> st0)
   }
 
   val queries: Seq[QueryDef] = Seq(

@@ -22,9 +22,6 @@ import graft.core.Tables
   */
 object Analytics24 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // graph_modularity
   // ---------------------------------------------------------------------
@@ -39,7 +36,7 @@ object Analytics24 {
     * the scoring is three bounded-key aggregations over the ≤|n|²
     * edge list. */
   def graphModularity(s: SparkSession, dir: String): DataFrame = {
-    val sym = Analytics10.tradeSym(s, dir, "graft_mod")
+    val sym = Analytics10.tradeSym(s, dir)
     val lab = Analytics10.lpaLabels(s, sym)
     val m2 = sym.count().toDouble // directed edge count = 2m, tiny graph
     val deg = sym.groupBy(col("src").as("nk"))
@@ -76,11 +73,11 @@ object Analytics24 {
     // distinct, so the Percentile aggregate's per-partition maps are
     // the whole column — bit-identical values, relational cost.
     val q = graft.operators.ExactPercentile.of(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        Tables.load(s, dir, "lineitem"), Seq("l_returnflag"),
         col("l_extendedprice"), Seq(0.05 -> "ep05", 0.95 -> "ep95"))
       .select(col("l_returnflag"),
         round(col("ep05"), 4).as("p05"), round(col("ep95"), 4).as("p95"))
-    t(s, dir, "lineitem").join(broadcast(q), "l_returnflag")
+    Tables.load(s, dir, "lineitem").join(broadcast(q), "l_returnflag")
       .groupBy("l_returnflag")
       .agg(first("p05").as("p05"), first("p95").as("p95"),
         count(lit(1)).as("n"),
@@ -111,11 +108,11 @@ object Analytics24 {
     * threshold; the pattern at 100 TB is identical with the dim in a
     * MERGE-maintained table. */
   def etlLateArrivingDim(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
+    val cust = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val onTime = cust.filter(col("c_custkey") % 11 =!= 0)
     val late = cust.filter(col("c_custkey") % 22 === 0)
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_custkey"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
       .join(onTime.select(col("c_custkey").as("o_custkey"),

@@ -30,9 +30,6 @@ import graft.core.CkptTap._
   */
 object Analytics25 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_huber_mean
   // ---------------------------------------------------------------------
@@ -95,14 +92,14 @@ object Analytics25 {
   def aggHuberMean(s: SparkSession, dir: String): DataFrame = {
     // No checkpoint: every pass is a 2-column pushed-down parquet scan
     // — cheaper than materializing the decimal rows.
-    val x = t(s, dir, "events")
+    val x = Tables.load(s, dir, "events")
       .select(col("event_type").as("f"),
         col("value").cast(DecimalType(18, 4)).as("x"))
     // median over the RAW double column: a ≤4-dec value's
     // DECIMAL(18,4) → double round-trip is the identity, so the values
     // (and the interpolated median) are bit-identical to the oracle's
     // CAST(x AS DOUBLE) — and the pass skips the decimal conversion.
-    val m0 = t(s, dir, "events")
+    val m0 = Tables.load(s, dir, "events")
       .groupBy(col("event_type").as("f"))
       .agg(round(expr("percentile(value, 0.5)"), 4)
         .cast(DecimalType(18, 4)).as("mu"))
@@ -166,7 +163,7 @@ object Analytics25 {
     val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_txnlog", dir))
     val logDir = new java.io.File(base, "_log")
     logDir.mkdirs()
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
     def writeData(name: String, df: DataFrame): Seq[String] = {
@@ -229,15 +226,14 @@ object Analytics25 {
     * carries the unrounded value — states ('H'/'L') decode from the
     * unrounded probability identically on both sides. */
   def winHmmFilter(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_hmm_events")
-    s.sql(
+    Tables.sql(s, dir,
       """WITH thr AS (SELECT CAST(ROUND(percentile(value, 0.5), 4) AS DOUBLE)
-        |               AS thr FROM graft_hmm_events),
+        |               AS thr FROM events),
         |obs AS (SELECT user_id,
         |          CAST(row_number() OVER (PARTITION BY user_id
         |            ORDER BY ts, event_id) AS BIGINT) AS rn,
         |          CASE WHEN value > thr THEN 1 ELSE 0 END AS o
-        |        FROM graft_hmm_events CROSS JOIN thr),
+        |        FROM events CROSS JOIN thr),
         |g AS (SELECT user_id,
         |        array_sort(collect_list(named_struct('rn', rn, 'o', o))) AS os
         |      FROM obs GROUP BY user_id),

@@ -24,9 +24,6 @@ import graft.core.CkptTap._
   */
 object Analytics26 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // graph_betweenness
   // ---------------------------------------------------------------------
@@ -44,7 +41,7 @@ object Analytics26 {
     * rounded to 9 dp and summed as DECIMAL — the cross-pair sum order
     * can therefore never flip a 6-dp graded digit. */
   def graphBetweenness(s: SparkSession, dir: String): DataFrame = {
-    val sym = Analytics10.tradeSym(s, dir, "graft_bw")
+    val sym = Analytics10.tradeSym(s, dir)
     var frontier = sym.select(col("src").as("s"), col("dst").as("t"),
       lit(1).as("len"), array().cast("array<int>").as("via"))
     var walks = frontier
@@ -115,8 +112,7 @@ object Analytics26 {
        |  JOIN p3 ON p3.b = a.b""".stripMargin
 
   def winHaar(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_haar_orders")
-    s.sql("WITH " + haarSql("graft_haar_orders", "DIV"))
+    Tables.sql(s, dir, "WITH " + haarSql("orders", "DIV"))
   }
 
   val queries: Seq[QueryDef] = Seq(

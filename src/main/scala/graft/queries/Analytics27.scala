@@ -24,9 +24,6 @@ import graft.core.Tables
   */
 object Analytics27 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_stl_decompose
   // ---------------------------------------------------------------------
@@ -70,8 +67,7 @@ object Analytics27 {
        |FROM dt JOIN seas ON seas.wd = dt.wd""".stripMargin
 
   def winStlDecompose(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_stl_orders")
-    s.sql("WITH " + stlSql("graft_stl_orders",
+    Tables.sql(s, dir, "WITH " + stlSql("orders",
       d => s"datediff($d, DATE '1970-01-01')"))
   }
 
@@ -99,8 +95,7 @@ object Analytics27 {
        |WHERE ABS(r.resid) > 3 * madr.mad""".stripMargin
 
   def winStlAnomaly(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_stla_orders")
-    s.sql("WITH " + stlAnomalySql("graft_stla_orders",
+    Tables.sql(s, dir, "WITH " + stlAnomalySql("orders",
       d => s"datediff($d, DATE '1970-01-01')",
       e => s"percentile($e, 0.5)"))
   }
@@ -134,17 +129,12 @@ object Analytics27 {
        |    AS utilization
        |FROM src CROSS JOIN tot""".stripMargin
 
-  def llmDataMixtureEpochs(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_mix_docs")
-    s.sql("WITH " + mixtureSql("graft_mix_docs"))
-  }
-
   val queries: Seq[QueryDef] = Seq(
     QueryDef("win_stl_decompose", winStlDecompose, "WITH " + stlSql("orders",
       d => s"datediff('day', DATE '1970-01-01', $d)")),
     QueryDef("win_stl_anomaly", winStlAnomaly, "WITH " + stlAnomalySql("orders",
       d => s"datediff('day', DATE '1970-01-01', $d)",
       e => s"quantile_cont($e, 0.5)")),
-    QueryDef("llm_data_mixture_epochs", llmDataMixtureEpochs,
+    QueryDef.sql("llm_data_mixture_epochs",
       "WITH " + mixtureSql("documents")))
 }

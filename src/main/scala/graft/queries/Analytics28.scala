@@ -25,9 +25,6 @@ import graft.core.CkptTap._
   */
 object Analytics28 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // scan_csv_permissive
   // ---------------------------------------------------------------------
@@ -44,7 +41,7 @@ object Analytics28 {
   def scanCsvPermissive(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = graft.core.ScratchDirs.path(s, "graft_csv_permissive", dir)
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         // decimal → string renders plain "12345.67" (no grouping
         // separators, fixed 2-digit scale) — CSV-safe
@@ -120,10 +117,8 @@ object Analytics28 {
        |    '<=', fk2.orphans <= 0 FROM fk2) x""".stripMargin
 
   def etlDqExpectations(s: SparkSession, dir: String): DataFrame = {
-    Seq("orders", "customer", "lineitem").foreach(n =>
-      t(s, dir, n).createOrReplaceTempView("graft_dq_" + n))
-    s.sql("WITH " + dqSql("graft_dq_orders", "graft_dq_customer",
-      "graft_dq_lineitem"))
+    Tables.sql(s, dir, "WITH " + dqSql("orders", "customer",
+      "lineitem"))
   }
 
   val queries: Seq[QueryDef] = Seq(

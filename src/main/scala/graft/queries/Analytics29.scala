@@ -22,9 +22,6 @@ import graft.core.Tables
   */
 object Analytics29 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // events_did
   // ---------------------------------------------------------------------
@@ -59,8 +56,7 @@ object Analytics29 {
        |FROM p""".stripMargin
 
   def eventsDid(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_did_events")
-    s.sql("WITH " + didSql("graft_did_events",
+    Tables.sql(s, dir, "WITH " + didSql("events",
       ts => s"unix_micros($ts)", "DIV"))
   }
 
@@ -96,8 +92,7 @@ object Analytics29 {
        |FROM d WHERE n_chars > 0""".stripMargin
 
   def textCodeDetect(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_code_docs")
-    s.sql("WITH " + codeDetectSql("graft_code_docs",
+    Tables.sql(s, dir, "WITH " + codeDetectSql("documents",
       cls => s"REGEXP_REPLACE(text, '$cls', '')"))
   }
 

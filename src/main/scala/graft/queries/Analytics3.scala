@@ -26,16 +26,13 @@ import graft.core.CkptTap._
   */
 object Analytics3 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Explicit cartesian product: nation × region with a home-region
     * indicator. The one join shape with no key at all — Spark plans a
     * BroadcastNestedLoopJoin; both sides are dimension-tiny, which is
     * the only situation a cross join is legitimate at scale. */
   def joinCross(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      .crossJoin(t(s, dir, "region").select(col("r_regionkey"), col("r_name")))
+    Tables.load(s, dir, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
+      .crossJoin(Tables.load(s, dir, "region").select(col("r_regionkey"), col("r_name")))
       .select(col("n_name"), col("r_name"),
         (col("n_regionkey") === col("r_regionkey")).cast("int").as("is_home"))
 
@@ -48,7 +45,7 @@ object Analytics3 {
     * is O(events-per-user), the same bound every per-user window in
     * the suite already carries. */
   def winEwma(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"), col("value"))))
         .as("xs"))
@@ -73,7 +70,7 @@ object Analytics3 {
     * so the inner-join mass-update loses no node; the oracle is the
     * same recursion as a recursive CTE. */
   def graphPagerank(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select("user_id", "ts", "event_id", "event_type")
+    val ev = Tables.load(s, dir, "events").select("user_id", "ts", "event_id", "event_type")
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val wnorm = ev.withColumn("nxt", lead(col("event_type"), 1).over(w))
       .filter(col("nxt").isNotNull)
@@ -115,7 +112,7 @@ object Analytics3 {
     * is a higher-order expression (array_min ∘ transform) — no
     * explode, no extra shuffle. */
   def llmEditDistance(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").filter(col("n_chars") < 120)
+    val d = Tables.load(s, dir, "documents").filter(col("n_chars") < 120)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         expr("array_min(transform(split(text, ' '), t -> md5(t)))")
           .as("band"))
@@ -138,9 +135,8 @@ object Analytics3 {
     * slope drifts far from it is the standard red flag for boilerplate
     * or synthetic-text contamination in a training mix. */
   def llmZipf(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_zipf_docs")
-    s.sql(
-      """WITH tok AS (SELECT explode(split(text, ' ')) AS term FROM graft_zipf_docs),
+    Tables.sql(s, dir,
+      """WITH tok AS (SELECT explode(split(text, ' ')) AS term FROM documents),
         |tf AS (SELECT term, CAST(count(*) AS DOUBLE) AS tf FROM tok GROUP BY term),
         |top AS (SELECT term, tf FROM tf ORDER BY tf DESC, term LIMIT 100),
         |r AS (SELECT tf, row_number() OVER (ORDER BY tf DESC, term) AS rank FROM top)
@@ -149,40 +145,6 @@ object Analytics3 {
         |       regr_r2(ln(tf), ln(rank)) AS zipf_r2,
         |       CAST(count(*) AS BIGINT) AS n_terms
         |FROM r""".stripMargin)
-  }
-
-  /** Welch's unequal-variance two-sample t on purchase vs click event
-    * values — the A/B significance primitive. Two grouped moments
-    * (one scan, map-side combinable), then scalar algebra on a 1×1
-    * cross join; var_samp's cross-engine drift is ~1e-12 relative,
-    * absorbed by the harness's 6-decimal canonicalization. */
-  def aggTtestWelch(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_tt_events")
-    s.sql(
-      """WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |             avg(value) AS m, var_samp(value) AS v
-        |           FROM graft_tt_events
-        |           WHERE event_type IN ('purchase', 'click')
-        |           GROUP BY event_type),
-        |a AS (SELECT * FROM g WHERE event_type = 'purchase'),
-        |b AS (SELECT * FROM g WHERE event_type = 'click')
-        |SELECT a.n AS n_a, b.n AS n_b, a.m AS mean_a, b.m AS mean_b,
-        |  (a.m - b.m) / sqrt(a.v / a.n + b.v / b.n) AS t_stat,
-        |  pow(a.v / a.n + b.v / b.n, 2)
-        |    / (pow(a.v / a.n, 2) / (a.n - 1) + pow(b.v / b.n, 2) / (b.n - 1))
-        |    AS df_welch
-        |FROM a CROSS JOIN b""".stripMargin)
-  }
-
-  /** Pearson chi-square independence test of the lang × source
-    * contingency table — "is language mix independent of source?", the
-    * standard stratification check before corpus mixing. The full
-    * expected grid (row-totals × col-totals) is built so structurally
-    * absent cells still contribute their expectation; every relation
-    * after the first grouped pass is marginal-tiny. */
-  def aggChi2(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_chi2_docs")
-    s.sql(chi2Sql("graft_chi2_docs"))
   }
 
   private def chi2Sql(table: String): String =
@@ -209,7 +171,7 @@ object Analytics3 {
     * tolerance, every earlier one is too. Same single-shuffle
     * union-and-carry plan as `join_asof`. */
   def joinAsOfTolerance(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val errors = e.filter(col("event_type") === "error")
       .select("event_id", "user_id", "ts")
     val signups = e.filter(col("event_type") === "signup")
@@ -280,7 +242,12 @@ object Analytics3 {
         |       regr_r2(ln(tf), ln(rank)) AS zipf_r2,
         |       CAST(count(*) AS BIGINT) AS n_terms
         |FROM r""".stripMargin),
-    QueryDef("agg_ttest_welch", aggTtestWelch,
+    // Welch's unequal-variance two-sample t on purchase vs click event
+    // values — the A/B significance primitive. Two grouped moments
+    // (one scan, map-side combinable), then scalar algebra on a 1×1
+    // cross join; var_samp's cross-engine drift is ~1e-12 relative,
+    // absorbed by the harness's 6-decimal canonicalization.
+    QueryDef.sql("agg_ttest_welch",
       """WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |             avg(value) AS m, var_samp(value) AS v
         |           FROM events
@@ -294,7 +261,13 @@ object Analytics3 {
         |    / (pow(a.v / a.n, 2) / (a.n - 1) + pow(b.v / b.n, 2) / (b.n - 1))
         |    AS df_welch
         |FROM a CROSS JOIN b""".stripMargin),
-    QueryDef("agg_chi2", aggChi2, chi2Sql("documents")),
+    // Pearson chi-square independence test of the lang × source
+    // contingency table — "is language mix independent of source?", the
+    // standard stratification check before corpus mixing. The full
+    // expected grid (row-totals × col-totals) is built so structurally
+    // absent cells still contribute their expectation; every relation
+    // after the first grouped pass is marginal-tiny.
+    QueryDef.sql("agg_chi2", chi2Sql("documents")),
     QueryDef("join_asof_tolerance", joinAsOfTolerance,
       """WITH err AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |             FROM events WHERE event_type = 'error'),

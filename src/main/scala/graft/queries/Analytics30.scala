@@ -30,9 +30,6 @@ import graft.core.Tables
   */
 object Analytics30 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // etl_record_linkage
   // ---------------------------------------------------------------------
@@ -81,12 +78,6 @@ object Analytics30 {
        |FROM pairs
        |WHERE w_num + w_bal + w_sign > 5.0""".stripMargin
 
-  def etlRecordLinkage(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("graft_rl_customer")
-    t(s, dir, "supplier").createOrReplaceTempView("graft_rl_supplier")
-    s.sql("WITH " + linkageSql("graft_rl_customer", "graft_rl_supplier"))
-  }
-
   // ---------------------------------------------------------------------
   // etl_k_anonymity
   // ---------------------------------------------------------------------
@@ -106,11 +97,6 @@ object Analytics30 {
        |  k >= 5 AS k_anon_ok,
        |  CAST(1.0 AS DOUBLE) / k AS reident_risk
        |FROM cls""".stripMargin
-
-  def etlKAnonymity(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("graft_ka_customer")
-    s.sql("WITH " + kAnonSql("graft_ka_customer"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_bh_fdr
@@ -160,12 +146,6 @@ object Analytics30 {
        |       AND UNBOUNDED FOLLOWING)) <= 0.10 AS reject
        |FROM p""".stripMargin
 
-  def aggBhFdr(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_bh_orders")
-    t(s, dir, "customer").createOrReplaceTempView("graft_bh_customer")
-    s.sql("WITH " + bhFdrSql("graft_bh_orders", "graft_bh_customer"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_cramers_v
   // ---------------------------------------------------------------------
@@ -197,11 +177,6 @@ object Analytics30 {
        |  sqrt(chi.chi2 / (tot.n * least(tot.n_st - 1, tot.n_pr - 1)))
        |    AS cramers_v
        |FROM chi CROSS JOIN tot""".stripMargin
-
-  def aggCramersV(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_cv_orders")
-    s.sql("WITH " + cramersSql("graft_cv_orders"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_durbin_watson  /  agg_adf_test — shared daily series
@@ -249,8 +224,7 @@ object Analytics30 {
        |FROM d""".stripMargin
 
   def aggDurbinWatson(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_dw_orders")
-    s.sql("WITH " + dwSql("graft_dw_orders",
+    Tables.sql(s, dir, "WITH " + dwSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -290,8 +264,7 @@ object Analytics30 {
        |FROM fit""".stripMargin
 
   def aggAdfTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_adf_orders")
-    s.sql("WITH " + adfSql("graft_adf_orders",
+    Tables.sql(s, dir, "WITH " + adfSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -301,11 +274,11 @@ object Analytics30 {
     "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))"
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("etl_record_linkage", etlRecordLinkage,
+    QueryDef.sql("etl_record_linkage",
       "WITH " + linkageSql("customer", "supplier")),
-    QueryDef("etl_k_anonymity", etlKAnonymity, "WITH " + kAnonSql("customer")),
-    QueryDef("agg_bh_fdr", aggBhFdr, "WITH " + bhFdrSql("orders", "customer")),
-    QueryDef("agg_cramers_v", aggCramersV, "WITH " + cramersSql("orders")),
+    QueryDef.sql("etl_k_anonymity", "WITH " + kAnonSql("customer")),
+    QueryDef.sql("agg_bh_fdr", "WITH " + bhFdrSql("orders", "customer")),
+    QueryDef.sql("agg_cramers_v", "WITH " + cramersSql("orders")),
     QueryDef("agg_durbin_watson", aggDurbinWatson,
       "WITH " + dwSql("orders", duckDay)),
     QueryDef("agg_adf_test", aggAdfTest, "WITH " + adfSql("orders", duckDay)))

@@ -31,9 +31,6 @@ import graft.core.Tables
   */
 object Analytics31 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_adx
   // ---------------------------------------------------------------------
@@ -86,11 +83,6 @@ object Analytics31 {
        |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS adx
        |FROM dx WHERE rn >= 29""".stripMargin
 
-  def winAdx(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_adx_events")
-    s.sql("WITH " + adxSql("graft_adx_events"))
-  }
-
   // ---------------------------------------------------------------------
   // win_cci
   // ---------------------------------------------------------------------
@@ -119,11 +111,6 @@ object Analytics31 {
        |SELECT user_id, event_id, v, sma, mad,
        |  CASE WHEN mad > 0.0 THEN (v - sma) / (0.015 * mad) END AS cci
        |FROM d""".stripMargin
-
-  def winCci(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_win_cci_events")
-    s.sql("WITH " + cciSql("graft_win_cci_events"))
-  }
 
   // ---------------------------------------------------------------------
   // win_parabolic_sar — shared transition expressions
@@ -157,7 +144,7 @@ object Analytics31 {
   def winParabolicSar(s: SparkSession, dir: String): DataFrame = {
     val (nu, nsar, nep, naf, nfl) =
       sarStep("acc.u", "acc.sar", "acc.ep", "acc.af", "acc.fl", "v")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         col("value")))).as("xs"))
@@ -221,7 +208,7 @@ object Analytics31 {
     * brick leave the state unchanged. Integer brick censuses — the
     * only doubles are the reference line itself. */
   def winRenko(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         col("value")))).as("xs"))
@@ -282,7 +269,7 @@ object Analytics31 {
     * branch); parts with a single demand day emit null interval and
     * forecast. Daily sizes are exact decimal sums cast once. */
   def aggCroston(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey"),
         datediff(col("l_shipdate").cast("date"),
           to_date(lit("1995-01-01"))).cast("long").as("day"))
@@ -343,8 +330,8 @@ object Analytics31 {
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("win_adx", winAdx, "WITH " + adxSql("events")),
-    QueryDef("win_cci", winCci, "WITH " + cciSql("events")),
+    QueryDef.sql("win_adx", "WITH " + adxSql("events")),
+    QueryDef.sql("win_cci", "WITH " + cciSql("events")),
     QueryDef("win_parabolic_sar", winParabolicSar, sarOracleSql),
     QueryDef("win_renko", winRenko, renkoOracleSql),
     QueryDef("agg_croston", aggCroston, crostonOracleSql(

@@ -27,9 +27,6 @@ import graft.core.CkptTap._
   */
 object Analytics32 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_mrl_recall
   // ---------------------------------------------------------------------
@@ -43,7 +40,7 @@ object Analytics32 {
     * per width against a broadcast query set; at 100 TB each width is
     * the same brute-force baseline sweep `llm_cosine_topk` runs. */
   def llmMrlRecall(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     def top3(width: Option[Int]): DataFrame = {
@@ -211,47 +208,39 @@ object Analytics32 {
     * so every emitted double matches the oracle's inlined spelling
     * bit-for-bit. */
   def llmBradleyTerry(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_bt_docs")
-    s.sql("WITH " + btCensusCtes("graft_bt_docs", "DIV",
+    def staged(text: String, frames: (String, DataFrame)*) =
+      Tables.sql(s, dir, text, frames: _*).coalesce(1).tappedLocalCheckpoint()
+    val m0 = "graft_bt_m0" -> staged("WITH " + btCensusCtes("documents", "DIV",
         e => s"shiftleft(CAST(1 AS BIGINT), CAST($e AS INT))") + "\n"
         + btCensusSelect)
-      .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_bt_m0")
-    s.sql(
+    val edges = "graft_bt_edges" -> staged(
       """SELECT si AS i, sj AS j, n, w FROM graft_bt_m0
-        |UNION ALL SELECT sj, si, n, n - w FROM graft_bt_m0""".stripMargin)
-      .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_bt_edges")
-    s.sql(
+        |UNION ALL SELECT sj, si, n, n - w FROM graft_bt_m0""".stripMargin, m0)
+    val wtot = "graft_bt_wtot" -> staged(
       """SELECT i, CAST(sum(n) AS BIGINT) AS n_comp,
         |  CAST(sum(w) AS BIGINT) AS wins
-        |FROM graft_bt_edges GROUP BY i""".stripMargin)
-      .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_bt_wtot")
-    s.sql("SELECT i, CAST(1.0 AS DOUBLE) AS p FROM graft_bt_wtot")
-      .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_bt_p0")
-    (1 to 3).foreach { t =>
-      s.sql(
-        s"""WITH r AS (SELECT e.i, max(w1.wins) AS wins,
-           |    sum(e.n / (pi.p + pj.p)) AS denom
-           |  FROM graft_bt_edges e
-           |    JOIN graft_bt_p${t - 1} pi ON pi.i = e.i
-           |    JOIN graft_bt_p${t - 1} pj ON pj.i = e.j
-           |    JOIN graft_bt_wtot w1 ON w1.i = e.i
-           |  GROUP BY e.i),
-           |k AS (SELECT CAST(count(*) AS BIGINT) AS k
-           |      FROM graft_bt_wtot)
-           |SELECT i, (wins / denom) * k.k
-           |    / (SELECT sum(wins / denom) FROM r) AS p
-           |FROM r CROSS JOIN k""".stripMargin)
-        .coalesce(1).tappedLocalCheckpoint()
-        .createOrReplaceTempView(s"graft_bt_p$t")
+        |FROM graft_bt_edges GROUP BY i""".stripMargin, edges)
+    val p0 = staged("SELECT i, CAST(1.0 AS DOUBLE) AS p FROM graft_bt_wtot", wtot)
+    val p3 = (1 to 3).foldLeft(p0) { (prev, _) =>
+      staged(
+        """WITH r AS (SELECT e.i, max(w1.wins) AS wins,
+          |    sum(e.n / (pi.p + pj.p)) AS denom
+          |  FROM graft_bt_edges e
+          |    JOIN graft_bt_prev pi ON pi.i = e.i
+          |    JOIN graft_bt_prev pj ON pj.i = e.j
+          |    JOIN graft_bt_wtot w1 ON w1.i = e.i
+          |  GROUP BY e.i),
+          |k AS (SELECT CAST(count(*) AS BIGINT) AS k
+          |      FROM graft_bt_wtot)
+          |SELECT i, (wins / denom) * k.k
+          |    / (SELECT sum(wins / denom) FROM r) AS p
+          |FROM r CROSS JOIN k""".stripMargin,
+        edges, wtot, "graft_bt_prev" -> prev)
     }
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT w.i AS source, w.n_comp, w.wins, p3.p AS bt_strength
         |FROM graft_bt_wtot w JOIN graft_bt_p3 p3 ON p3.i = w.i"""
-        .stripMargin)
+        .stripMargin, wtot, "graft_bt_p3" -> p3)
   }
 
   // ---------------------------------------------------------------------
@@ -271,11 +260,6 @@ object Analytics32 {
       |GROUP BY ALL
       |ORDER BY ALL""".stripMargin
 
-  def sqlGroupByAll(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_gba_lineitem")
-    s.sql(groupByAllSql.format("graft_gba_lineitem"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
@@ -284,6 +268,6 @@ object Analytics32 {
       "WITH " + btCensusCtes("documents", "//",
           e => s"(CAST(1 AS BIGINT) << CAST($e AS INT))")
         + ",\nm0 AS (" + btCensusSelect + "),\n" + btFitSql("m0")),
-    QueryDef("sql_group_by_all", sqlGroupByAll,
+    QueryDef.sql("sql_group_by_all",
       groupByAllSql.format("lineitem")))
 }

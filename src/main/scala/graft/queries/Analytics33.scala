@@ -33,23 +33,20 @@ import graft.core.CkptTap._
   */
 object Analytics33 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // graph_scc
   // ---------------------------------------------------------------------
 
   /** Directed thresholded trade edges (the 1.15×-mean rule of the
     * graph family, WITHOUT symmetrization: na buys from nb). */
-  private def dirEdgeSql(p: String): String =
-    s"""WITH pair AS (
+  private val dirEdgeSql: String =
+    """WITH pair AS (
        |  SELECT CAST(c.c_nationkey AS BIGINT) AS na,
        |         CAST(s.s_nationkey AS BIGINT) AS nb, count(*) AS cnt
-       |  FROM ${p}lineitem l
-       |    JOIN ${p}orders o ON l.l_orderkey = o.o_orderkey
-       |    JOIN ${p}customer c ON o.o_custkey = c.c_custkey
-       |    JOIN ${p}supplier s ON l.l_suppkey = s.s_suppkey
+       |  FROM lineitem l
+       |    JOIN orders o ON l.l_orderkey = o.o_orderkey
+       |    JOIN customer c ON o.o_custkey = c.c_custkey
+       |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
        |  WHERE c.c_nationkey <> s.s_nationkey
        |  GROUP BY 1, 2),
        |tot AS (SELECT sum(cnt) AS t, count(*) AS np FROM pair)
@@ -63,10 +60,7 @@ object Analytics33 {
     * (the graph-family fixpoint rule; at real-graph scale the cutover
     * follows |edges| as in LlmText.minLabelComponents). */
   def graphScc(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier")
-      .foreach(n => t(s, dir, n)
-        .createOrReplaceTempView("graft_scc_" + n))
-    var reach = s.sql(dirEdgeSql("graft_scc_"))
+    var reach = Tables.sql(s, dir, dirEdgeSql)
       .coalesce(1).tappedLocalCheckpoint()
     // Fixpoint early-exit: reach only GROWS (each round unions itself
     // in), so an unchanged count means transitive closure is reached
@@ -86,7 +80,7 @@ object Analytics33 {
       converged = c == reachCount
       reachCount = c
     }
-    val nodes = t(s, dir, "nation")
+    val nodes = Tables.load(s, dir, "nation")
       .select(col("n_nationkey").cast("long").as("v"))
     val mut = reach.alias("a")
       .join(reach.alias("b"),
@@ -191,7 +185,7 @@ object Analytics33 {
     * pins. */
   def eventsPropensityStrata(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val e = t(s, dir, "events").select(col("user_id"),
+    val e = Tables.load(s, dir, "events").select(col("user_id"),
       (col("user_id") % 2).as("treat"), unix_micros(col("ts")).as("us"),
       col("value").cast(DecimalType(18, 4)).as("v"))
     val mid = e.agg(expr("(MIN(us) + MAX(us)) DIV 2").as("m"))
@@ -299,17 +293,16 @@ object Analytics33 {
       s"CAST(length($rel.$c) AS INT))) $a AS p"
 
   def llmWordpieceApply(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_wp_docs")
-    s.sql("WITH tok AS (SELECT explode(split(text, ' ')) AS w "
-        + "FROM graft_wp_docs)\n" + wpWordsSelect("tok"))
+    val words = Tables.sql(s, dir,
+      "WITH tok AS (SELECT explode(split(text, ' ')) AS w "
+        + "FROM documents)\n" + wpWordsSelect("tok"))
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_wp_words")
-    s.sql("WITH " + wpVocabCtes("graft_wp_words", sparkLat) + "\n"
-        + wpVocabSelect)
+    val vocab = Tables.sql(s, dir,
+      "WITH " + wpVocabCtes("graft_wp_words", sparkLat) + "\n" + wpVocabSelect,
+      "graft_wp_words" -> words)
       .coalesce(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_wp_vocab")
-    s.sql("WITH " + wpFitSql("graft_wp_words", "graft_wp_vocab",
-      sparkLat))
+    Tables.sql(s, dir, "WITH " + wpFitSql("graft_wp_words", "graft_wp_vocab",
+      sparkLat), "graft_wp_words" -> words, "graft_wp_vocab" -> vocab)
   }
 
   // ---------------------------------------------------------------------

@@ -33,9 +33,6 @@ import graft.core.CkptTap._
   */
 object Analytics34 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // etl_psi_drift
   // ---------------------------------------------------------------------
@@ -80,8 +77,7 @@ object Analytics34 {
        |FROM grid""".stripMargin
 
   def etlPsiDrift(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_psi_events")
-    s.sql("WITH " + psiSql("graft_psi_events",
+    Tables.sql(s, dir, "WITH " + psiSql("events",
       ts => s"unix_micros($ts)", "DIV"))
   }
 
@@ -105,7 +101,7 @@ object Analytics34 {
       s.sql(s"""CREATE TABLE graft_mem.db.$n
                |  (k BIGINT NOT NULL, n BIGINT,
                |   revenue DECIMAL(18,4))""".stripMargin))
-    t(s, dir, "orders").join(t(s, dir, "customer"),
+    val load = Tables.load(s, dir, "orders").join(Tables.load(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"))
       .filter(stagePredicate)
       .groupBy(col("c_nationkey").cast("long").as("k"))
@@ -114,11 +110,9 @@ object Analytics34 {
           .cast(org.apache.spark.sql.types.DecimalType(18, 4)))
           .cast(org.apache.spark.sql.types.DecimalType(18, 4))
           .as("revenue"))
-      .createOrReplaceTempView("graft_wap_load")
-    s.sql("""INSERT INTO graft_mem.db.wap_stage
-            |SELECT * FROM graft_wap_load""".stripMargin)
-    s.sql("""CREATE OR REPLACE TEMPORARY VIEW graft_wap_audit AS
-            |SELECT 'completeness' AS check_name,
+    Tables.sql(s, dir, """INSERT INTO graft_mem.db.wap_stage
+            |SELECT * FROM graft_wap_load""".stripMargin, "graft_wap_load" -> load)
+    val audit = s.sql("""SELECT 'completeness' AS check_name,
             |  (SELECT count(*) FROM graft_mem.db.wap_stage) = 25 AS ok
             |UNION ALL SELECT 'non_negative',
             |  (SELECT coalesce(min(revenue), 0) >= 0
@@ -126,15 +120,17 @@ object Analytics34 {
             |UNION ALL SELECT 'key_unique',
             |  (SELECT count(*) = count(DISTINCT k)
             |   FROM graft_mem.db.wap_stage)""".stripMargin)
-    s.sql("""INSERT INTO graft_mem.db.wap_pub
+    Tables.sql(s, dir, """INSERT INTO graft_mem.db.wap_pub
             |SELECT * FROM graft_mem.db.wap_stage
             |WHERE (SELECT min(CASE WHEN ok THEN 1 ELSE 0 END)
-            |       FROM graft_wap_audit) = 1""".stripMargin)
-    s.sql("""SELECT k AS c_nationkey, n AS n_orders,
+            |       FROM graft_wap_audit) = 1""".stripMargin,
+      "graft_wap_audit" -> audit)
+    Tables.sql(s, dir, """SELECT k AS c_nationkey, n AS n_orders,
             |  CAST(revenue AS DOUBLE) AS revenue,
             |  (SELECT min(CASE WHEN ok THEN 1 ELSE 0 END)
             |   FROM graft_wap_audit) = 1 AS audit_passed
-            |FROM graft_mem.db.wap_pub""".stripMargin)
+            |FROM graft_mem.db.wap_pub""".stripMargin,
+      "graft_wap_audit" -> audit)
   }
 
   def etlWriteAuditPublish(s: SparkSession, dir: String): DataFrame =
@@ -157,7 +153,7 @@ object Analytics34 {
     * similarities accumulate float inputs in double in index order
     * (bit-identical engines), ties break on vec_id. */
   def llmMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         bucket(col("embedding")).as("bkt"))
     val q = e.filter(col("vec_id") < 10)
@@ -276,8 +272,7 @@ object Analytics34 {
        |FROM sym GROUP BY user_id""".stripMargin
 
   def winSax(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_sax_events")
-    s.sql("WITH " + saxSql("graft_sax_events", "DIV",
+    Tables.sql(s, dir, "WITH " + saxSql("events", "DIV",
       "listagg(chr(CAST(97 + sym AS INT)), '') WITHIN GROUP (ORDER BY seg)"))
   }
 

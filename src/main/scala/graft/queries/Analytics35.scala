@@ -28,9 +28,6 @@ import graft.core.Tables
   */
 object Analytics35 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_mcnemar
   // ---------------------------------------------------------------------
@@ -66,8 +63,7 @@ object Analytics35 {
        |FROM cells""".stripMargin
 
   def aggMcnemar(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_mcn_events")
-    s.sql("WITH " + mcnemarSql("graft_mcn_events",
+    Tables.sql(s, dir, "WITH " + mcnemarSql("events",
       ts => s"unix_micros($ts)", "DIV"))
   }
 
@@ -99,11 +95,6 @@ object Analytics35 {
        |  FROM cells)
        |SELECT n, n11, n00, po, pe, (po - pe) / (1.0 - pe) AS kappa
        |FROM p""".stripMargin
-
-  def aggCohensKappa(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_kap_orders")
-    s.sql("WITH " + kappaSql("graft_kap_orders"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_partial_corr
@@ -147,11 +138,6 @@ object Analytics35 {
        |FROM rr""".stripMargin
   }
 
-  def aggPartialCorr(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_pc_lineitem")
-    s.sql("WITH " + partialSql("graft_pc_lineitem"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_lorenz_curve
   // ---------------------------------------------------------------------
@@ -187,14 +173,13 @@ object Analytics35 {
   def aggLorenzCurve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val r = graft.operators.ScalableNtile.withNtile(
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .select(col("o_totalprice").cast(DecimalType(18, 2)).as("v"),
           col("o_totalprice"), col("o_orderkey")),
       10, Nil, col("o_totalprice"), Seq(col("o_orderkey")), "decile")
-    r.groupBy(col("decile"))
+    val d = r.groupBy(col("decile"))
       .agg(count(lit(1)).cast("long").as("n"), sum("v").as("sv"))
-      .createOrReplaceTempView("graft_lz_d")
-    s.sql(
+    Tables.sql(s, dir,
       """WITH c AS (SELECT decile, n, sv,
         |        sum(sv) OVER (ORDER BY decile
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -204,7 +189,7 @@ object Analytics35 {
         |SELECT decile, n,
         |  CAST(sv AS DOUBLE) / CAST(tot_sv AS DOUBLE) AS share,
         |  CAST(cum_sv AS DOUBLE) / CAST(tot_sv AS DOUBLE) AS cum_share
-        |FROM c""".stripMargin)
+        |FROM c""".stripMargin, "graft_lz_d" -> d)
   }
 
   // ---------------------------------------------------------------------
@@ -212,8 +197,8 @@ object Analytics35 {
   val queries: Seq[QueryDef] = Seq(
     QueryDef("agg_mcnemar", aggMcnemar, "WITH " + mcnemarSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))", "//")),
-    QueryDef("agg_cohens_kappa", aggCohensKappa, "WITH " + kappaSql("orders")),
-    QueryDef("agg_partial_corr", aggPartialCorr,
+    QueryDef.sql("agg_cohens_kappa", "WITH " + kappaSql("orders")),
+    QueryDef.sql("agg_partial_corr",
       "WITH " + partialSql("lineitem")),
     QueryDef("agg_lorenz_curve", aggLorenzCurve, "WITH " + lorenzSql("orders")))
 }

@@ -29,9 +29,6 @@ import graft.core.CkptTap._
   */
 object Analytics36 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_hodges_lehmann
   // ---------------------------------------------------------------------
@@ -101,13 +98,12 @@ object Analytics36 {
     * keeps the inline CTE spelling. */
   def aggHodgesLehmann(s: SparkSession, dir: String): DataFrame = {
     import graft.core.CkptTap._
-    t(s, dir, "orders").createOrReplaceTempView("graft_hl_orders")
-    val daily = s.sql(
+    val daily = Tables.sql(s, dir,
       """SELECT CAST(datediff(CAST(o_orderdate AS DATE),
         |                     DATE '1995-01-01') AS BIGINT) AS x,
         |  CAST(floor(sum(CAST(o_totalprice AS DECIMAL(18,2))))
         |       AS DECIMAL(19,0)) AS y
-        |FROM graft_hl_orders GROUP BY 1""".stripMargin)
+        |FROM orders GROUP BY 1""".stripMargin)
       .tappedLocalCheckpoint()
     def pairs = daily.select(col("x").as("i"), col("y").as("ya"))
       .repartition(col("i"))
@@ -171,7 +167,7 @@ object Analytics36 {
   def aggTrimmedMean(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val r = graft.operators.ScalableNtile.withRowNumberAndCount(
-      t(s, dir, "orders")
+      Tables.load(s, dir, "orders")
         .select(col("o_totalprice").cast(DecimalType(18, 2)).as("v"),
           col("o_totalprice"), col("o_orderkey")),
       Nil, col("o_totalprice"), Seq(col("o_orderkey")), "rn", "n")
@@ -238,9 +234,8 @@ object Analytics36 {
   }
 
   def textTextrank(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_tr_docs")
-    s.sql("WITH " + textrankEdgeCtes(
-      """SELECT doc_id, p.pos, p.w FROM graft_tr_docs
+    val edges = Tables.sql(s, dir, "WITH " + textrankEdgeCtes(
+      """SELECT doc_id, p.pos, p.w FROM documents
         |LATERAL VIEW posexplode(split(text, ' ')) p AS pos, w""".stripMargin)
       + "\n" + textrankEdgeSelect)
       // repartition(1), NOT coalesce(1): coalesce fuses into the
@@ -249,13 +244,12 @@ object Analytics36 {
       // and moves only the small edge table to the single partition
       // the fit's nine references probe.
       .repartition(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_tr_edges")
-    s.sql("""SELECT DISTINCT p.w FROM graft_tr_docs
+    val words = Tables.sql(s, dir, """SELECT DISTINCT p.w FROM documents
             |LATERAL VIEW posexplode(split(text, ' ')) p AS pos, w"""
         .stripMargin)
       .repartition(1).tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_tr_words")
-    s.sql("WITH " + textrankFitSql("graft_tr_edges", "graft_tr_words"))
+    Tables.sql(s, dir, "WITH " + textrankFitSql("graft_tr_edges",
+      "graft_tr_words"), "graft_tr_edges" -> edges, "graft_tr_words" -> words)
   }
 
   // ---------------------------------------------------------------------

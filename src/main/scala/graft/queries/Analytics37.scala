@@ -25,9 +25,6 @@ import graft.core.Tables
   */
 object Analytics37 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_beta_binomial_eb
   // ---------------------------------------------------------------------
@@ -58,12 +55,6 @@ object Analytics37 {
        |  (ab.alpha + g.x) / (ab.alpha + ab.beta + g.n) AS shrunk_rate
        |FROM g CROSS JOIN ab""".stripMargin
 
-  def aggBetaBinomialEb(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_eb_orders")
-    t(s, dir, "customer").createOrReplaceTempView("graft_eb_customer")
-    s.sql("WITH " + ebSql("graft_eb_orders", "graft_eb_customer"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_capture_recapture
   // ---------------------------------------------------------------------
@@ -91,8 +82,7 @@ object Analytics37 {
        |FROM c""".stripMargin
 
   def aggCaptureRecapture(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_cr_events")
-    s.sql("WITH " + crSql("graft_cr_events",
+    Tables.sql(s, dir, "WITH " + crSql("events",
       ts => s"unix_micros($ts)", "DIV"))
   }
 
@@ -122,9 +112,8 @@ object Analytics37 {
        |FROM w CROSS JOIN tot""".stripMargin
 
   def llmSubsampleFrequent(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_ss_docs")
-    s.sql("WITH " + subsampleSql(
-      "SELECT explode(split(text, ' ')) AS w FROM graft_ss_docs"))
+    Tables.sql(s, dir, "WITH " + subsampleSql(
+      "SELECT explode(split(text, ' ')) AS w FROM documents"))
   }
 
   // ---------------------------------------------------------------------
@@ -156,15 +145,10 @@ object Analytics37 {
        |FROM g JOIN r w ON w.c_nationkey = g.c_nationkey
        |  AND w.res = g.res AND w.rk = 1""".stripMargin
 
-  def etlDedupSurvivorship(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("graft_sv_customer")
-    s.sql("WITH " + survivorshipSql("graft_sv_customer"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_beta_binomial_eb", aggBetaBinomialEb,
+    QueryDef.sql("agg_beta_binomial_eb",
       "WITH " + ebSql("orders", "customer")),
     QueryDef("agg_capture_recapture", aggCaptureRecapture,
       "WITH " + crSql("events",
@@ -172,6 +156,6 @@ object Analytics37 {
     QueryDef("llm_subsample_frequent", llmSubsampleFrequent,
       "WITH " + subsampleSql(
         "SELECT unnest(string_split(text, ' ')) AS w FROM documents")),
-    QueryDef("etl_dedup_survivorship", etlDedupSurvivorship,
+    QueryDef.sql("etl_dedup_survivorship",
       "WITH " + survivorshipSql("customer")))
 }

@@ -26,9 +26,6 @@ import graft.core.Tables
   */
 object Analytics38 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_auc_roc
   // ---------------------------------------------------------------------
@@ -58,7 +55,7 @@ object Analytics38 {
     * single-task window); the Mann–Whitney identity then consumes one
     * exact integer rank sum. */
   def aggAucRoc(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").select(
+    val e = Tables.load(s, dir, "events").select(
       col("value").cast("double").as("score"),
       when(col("event_type") === "error", 1).otherwise(0).as("y"),
       col("event_id"))
@@ -113,7 +110,7 @@ object Analytics38 {
     * of the oracle's single-task `OVER ()` pair; prob/bin/Brier
     * expressions are spelled identically. */
   def aggBrierCalibration(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").select(
+    val e = Tables.load(s, dir, "events").select(
       col("value").cast("double").as("v"),
       when(col("event_type") === "error", 1).otherwise(0).as("y"),
       col("event_id"))
@@ -169,7 +166,7 @@ object Analytics38 {
   def eventsSprt(s: SparkSession, dir: String): DataFrame = {
     val (nllr, ndec, nstep, ni) =
       sprtStep("acc.llr", "acc.dec", "acc.step", "acc.i", "y")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         when(col("event_type") === "error", 1).otherwise(0).as("y"))))

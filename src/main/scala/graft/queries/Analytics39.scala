@@ -25,9 +25,6 @@ import graft.core.Tables
   */
 object Analytics39 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_newey_west
   // ---------------------------------------------------------------------
@@ -101,8 +98,7 @@ object Analytics39 {
        |FROM s""".stripMargin
 
   def aggNeweyWest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_nw_orders")
-    s.sql("WITH " + nwSql("graft_nw_orders",
+    Tables.sql(s, dir, "WITH " + nwSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -122,8 +118,7 @@ object Analytics39 {
        |FROM e CROSS JOIN hwm GROUP BY e.user_id""".stripMargin
 
   def eventsDecayScore(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_dk_events")
-    s.sql("WITH " + decaySql("graft_dk_events",
+    Tables.sql(s, dir, "WITH " + decaySql("events",
       ts => s"unix_micros($ts)"))
   }
 
@@ -158,7 +153,7 @@ object Analytics39 {
     val next = s"named_struct('l', $nl, 'b', $nb, " +
       nss.zipWithIndex.map { case (e, k) => s"'s$k', $e" }
         .mkString(", ") + s", 'i', $ni)"
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         col("value")))).as("xs"))

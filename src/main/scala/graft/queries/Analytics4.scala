@@ -31,9 +31,6 @@ import graft.core.CkptTap._
   */
 object Analytics4 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Winnowing document fingerprints (Schleimer et al., SIGMOD'03 —
     * the MOSS algorithm): k=3 token grams, guarantee window w=4,
     * select the minimal gram hash per window, rightmost on ties.
@@ -45,7 +42,7 @@ object Analytics4 {
     * Graded per doc by gram count, fingerprint count, and the exact
     * integer fingerprint-set sum. */
   def textWinnowing(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .filter(size(col("ts")) >= 3)
       .select(col("doc_id"), (size(col("ts")) - 2).cast("long").as("n_grams"),
@@ -62,20 +59,6 @@ object Analytics4 {
       .select(col("doc_id"), col("n_grams"),
         size(col("fp")).cast("long").as("n_fp"),
         expr("aggregate(fp, 0L, (a, x) -> a + x)").as("fp_sum"))
-
-  /** Two-sample Kolmogorov-Smirnov D between the purchase and click
-    * value distributions. One grouped pass builds per-distinct-value
-    * class counts; a window cumsum gives both empirical CDFs; D is
-    * max |cum_a*n_b - cum_b*n_a| / (n_a*n_b) — integer arithmetic
-    * until the final division, so the statistic is bit-identical
-    * across engines. The window has no PARTITION BY, but it runs over
-    * the DISTINCT-value relation (already reduced by the group-by),
-    * not the raw events — the same single-partition trade every exact
-    * global quantile in the suite makes. */
-  def aggKsTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ks_events")
-    s.sql(ksSql("graft_ks_events"))
-  }
 
   // Grand totals come from unbounded window sums over the SAME
   // per-value relation as the CDFs — a separate totals CTE would make
@@ -95,17 +78,6 @@ object Analytics4 {
        |  CAST(max(abs(cuma * nb - cumb * na)) AS DOUBLE) / (na * nb)
        |    * sqrt(CAST(na AS DOUBLE) * nb / (na + nb)) AS ks_z
        |FROM c GROUP BY na, nb""".stripMargin
-
-  /** Mann-Whitney U (rank-sum) between purchase and click values, with
-    * the standard tie-corrected normal approximation. Average ranks
-    * come from grouped per-value counts (rank-sum ×2 stays integer:
-    * avg_rank = (2*cnt_less + cnt_eq + 1)/2), and the tie term
-    * Σ(t³−t) is integer too — U and the variance numerator are exact
-    * on both engines; only the final z division/sqrt is floating. */
-  def aggMannWhitney(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_mw_events")
-    s.sql(mwSql("graft_mw_events"))
-  }
 
   private def mwSql(table: String): String =
     s"""WITH p AS (SELECT value, CAST(event_type = 'purchase' AS INT) AS ia
@@ -143,7 +115,7 @@ object Analytics4 {
     * tie counts come from broadcast value histograms instead of
     * PARTITION BY value windows. */
   def aggSpearman(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("n_chars").as("x"),
         size(split(col("text"), " ")).as("y"))
     val cx = d.groupBy("x").agg(count(lit(1)).as("cx"))
@@ -165,11 +137,10 @@ object Analytics4 {
     * engine-identical; the 7-lag self-join then runs on the tiny daily
     * relation (broadcast, O(days) rows). */
   def eventsAcf(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_acf_events")
-    s.sql(
+    Tables.sql(s, dir,
       """WITH daily AS (SELECT CAST(date_trunc('DAY', ts) AS DATE) AS d,
         |                 CAST(sum(CAST(value AS DECIMAL(38, 18))) AS DOUBLE) AS s
-        |               FROM graft_acf_events GROUP BY 1),
+        |               FROM events GROUP BY 1),
         |lags AS (SELECT explode(sequence(1, 7)) AS lag),
         |j AS (SELECT l.lag, a.s AS sa, b.s AS sb
         |      FROM lags l CROSS JOIN daily a
@@ -187,7 +158,7 @@ object Analytics4 {
     * ordered pair; the DuckDB oracle is the same enumeration as a
     * recursive CTE. */
   def graphBestPath(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select("user_id", "ts", "event_id", "event_type")
+    val ev = Tables.load(s, dir, "events").select("user_id", "ts", "event_id", "event_type")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val edges = ev.withColumn("nxt", lead(col("event_type"), 1).over(w))
@@ -226,26 +197,23 @@ object Analytics4 {
     * then runs on the ≤ |nations|² edge relation. Emits per-nation
     * triangle participation counts. */
   def graphTriangles(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier", "nation")
-      .foreach(n => t(s, dir, n).createOrReplaceTempView("graft_tri_" + n))
     // Materialize the undirected pair-flow relation (≤ |nations|² rows)
     // before the census: Spark inlines CTE references, so writing this
     // as one statement re-runs the heavy 4-table star join once per
     // edge alias (3×). Checkpointing caps the distributed pass at one
     // execution; the census runs on the tiny in-memory relation.
-    s.sql(
+    val und = Tables.sql(s, dir,
       """SELECT least(na, nb) AS a, greatest(na, nb) AS b, sum(cnt) AS cnt
         |FROM (SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
-        |      FROM graft_tri_lineitem l
-        |        JOIN graft_tri_orders o ON l.l_orderkey = o.o_orderkey
-        |        JOIN graft_tri_customer c ON o.o_custkey = c.c_custkey
-        |        JOIN graft_tri_supplier s ON l.l_suppkey = s.s_suppkey
+        |      FROM lineitem l
+        |        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |        JOIN customer c ON o.o_custkey = c.c_custkey
+        |        JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |      WHERE c.c_nationkey <> s.s_nationkey
         |      GROUP BY 1, 2)
         |GROUP BY 1, 2""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_tri_und")
-    s.sql(
+    Tables.sql(s, dir,
       """WITH tot AS (SELECT sum(cnt) AS t, count(*) AS np FROM graft_tri_und),
         |edges AS (SELECT a, b FROM graft_tri_und CROSS JOIN tot
         |          WHERE cnt * np * 100 > 115 * t),
@@ -255,8 +223,8 @@ object Analytics4 {
         |corners AS (SELECT a AS nk FROM tri UNION ALL SELECT b FROM tri
         |            UNION ALL SELECT c FROM tri)
         |SELECT n.n_name, CAST(count(*) AS BIGINT) AS n_tri
-        |FROM corners JOIN graft_tri_nation n ON n.n_nationkey = corners.nk
-        |GROUP BY n.n_name""".stripMargin)
+        |FROM corners JOIN nation n ON n.n_nationkey = corners.nk
+        |GROUP BY n.n_name""".stripMargin, "graft_tri_und" -> und)
   }
 
   /** Holt double-exponential smoothing (α=0.3, β=0.1) of each user's
@@ -266,7 +234,7 @@ object Analytics4 {
     * IEEE operation sequence DuckDB's `list_reduce` replays exactly
     * (level seeded at the first observation, trend at 0). */
   def winHolt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"), col("value"))))
         .as("xs"))
@@ -299,8 +267,23 @@ object Analytics4 {
         |       CAST(len(fp) AS BIGINT) AS n_fp,
         |       CAST(list_sum(fp) AS BIGINT) AS fp_sum
         |FROM s""".stripMargin),
-    QueryDef("agg_ks_test", aggKsTest, ksSql("events")),
-    QueryDef("agg_mannwhitney", aggMannWhitney, mwSql("events")),
+    // Two-sample Kolmogorov-Smirnov D between the purchase and click
+    // value distributions. One grouped pass builds per-distinct-value
+    // class counts; a window cumsum gives both empirical CDFs; D is
+    // max |cum_a*n_b - cum_b*n_a| / (n_a*n_b) — integer arithmetic
+    // until the final division, so the statistic is bit-identical
+    // across engines. The window has no PARTITION BY, but it runs over
+    // the DISTINCT-value relation (already reduced by the group-by),
+    // not the raw events — the same single-partition trade every exact
+    // global quantile in the suite makes.
+    QueryDef.sql("agg_ks_test", ksSql("events")),
+    // Mann-Whitney U (rank-sum) between purchase and click values, with
+    // the standard tie-corrected normal approximation. Average ranks
+    // come from grouped per-value counts (rank-sum ×2 stays integer:
+    // avg_rank = (2*cnt_less + cnt_eq + 1)/2), and the tie term
+    // Σ(t³−t) is integer too — U and the variance numerator are exact
+    // on both engines; only the final z division/sqrt is floating.
+    QueryDef.sql("agg_mannwhitney", mwSql("events")),
     QueryDef("agg_spearman", aggSpearman,
       """WITH d AS (SELECT n_chars AS x, len(string_split(text, ' ')) AS y
         |           FROM documents),

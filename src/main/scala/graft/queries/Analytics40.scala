@@ -38,9 +38,6 @@ import graft.core.Tables
   */
 object Analytics40 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // win_aroon
   // ---------------------------------------------------------------------
@@ -79,11 +76,6 @@ object Analytics40 {
        |    - 4.0 * CAST(25 - (rn - lo_rn) AS DOUBLE) AS aroon_osc
        |FROM d""".stripMargin
 
-  def winAroon(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_aroon_events")
-    s.sql("WITH " + aroonSql("graft_aroon_events"))
-  }
-
   // ---------------------------------------------------------------------
   // win_williams_r
   // ---------------------------------------------------------------------
@@ -106,11 +98,6 @@ object Analytics40 {
        |  CASE WHEN hh > ll THEN -100.0 * (hh - v) / (hh - ll) END
        |    AS williams_r
        |FROM m WHERE rn >= 14""".stripMargin
-
-  def winWilliamsR(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_wr_events")
-    s.sql("WITH " + williamsSql("graft_wr_events"))
-  }
 
   // ---------------------------------------------------------------------
   // win_mfi
@@ -147,11 +134,6 @@ object Analytics40 {
        |       WHEN pos_mf > 0.0 THEN 100.0 END AS mfi
        |FROM w WHERE rn >= 15""".stripMargin
 
-  def winMfi(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_mfi_events")
-    s.sql("WITH " + mfiSql("graft_mfi_events"))
-  }
-
   // ---------------------------------------------------------------------
   // win_trix
   // ---------------------------------------------------------------------
@@ -171,7 +153,7 @@ object Analytics40 {
 
   def winTrix(s: SparkSession, dir: String): DataFrame = {
     val (n1, n2, n3) = trixStep("acc.e1", "acc.e2", "acc.e3", "v")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"),
         col("value")))).as("xs"))
@@ -216,8 +198,8 @@ object Analytics40 {
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("win_aroon", winAroon, "WITH " + aroonSql("events")),
-    QueryDef("win_williams_r", winWilliamsR, "WITH " + williamsSql("events")),
-    QueryDef("win_mfi", winMfi, "WITH " + mfiSql("events")),
+    QueryDef.sql("win_aroon", "WITH " + aroonSql("events")),
+    QueryDef.sql("win_williams_r", "WITH " + williamsSql("events")),
+    QueryDef.sql("win_mfi", "WITH " + mfiSql("events")),
     QueryDef("win_trix", winTrix, trixOracleSql))
 }

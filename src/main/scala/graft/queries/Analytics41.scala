@@ -35,9 +35,6 @@ import graft.core.Tables
   */
 object Analytics41 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_kruskal_wallis
   // ---------------------------------------------------------------------
@@ -82,11 +79,6 @@ object Analytics41 {
        |    AS h_corrected
        |FROM agg CROSS JOIN tot CROSS JOIN tie""".stripMargin
 
-  def aggKruskalWallis(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_kw_events")
-    s.sql("WITH " + kwSql("graft_kw_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_g_test
   // ---------------------------------------------------------------------
@@ -111,11 +103,6 @@ object Analytics41 {
        |  CAST((SELECT n FROM tot) AS BIGINT) AS n
        |FROM grid g CROSS JOIN tot t
        |  LEFT JOIN c ON c.lang = g.lang AND c.source = g.source""".stripMargin
-
-  def aggGTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_gt_docs")
-    s.sql("WITH " + gTestSql("graft_gt_docs"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_odds_ratio
@@ -147,11 +134,6 @@ object Analytics41 {
        |                    + CAST(1 AS DOUBLE)/cc + CAST(1 AS DOUBLE)/d))
        |    AS ci_hi
        |FROM c""".stripMargin
-
-  def aggOddsRatio(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_or_lineitem")
-    s.sql("WITH " + oddsSql("graft_or_lineitem"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_fisher_exact
@@ -208,8 +190,7 @@ object Analytics41 {
        |  FROM $supplier)""".stripMargin
 
   def aggFisherExact(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "supplier").createOrReplaceTempView("graft_fx_supplier")
-    s.sql("WITH " + fisherMargins("graft_fx_supplier") + ",\n" +
+    Tables.sql(s, dir, "WITH " + fisherMargins("supplier") + ",\n" +
       "idx AS (SELECT explode(sequence(1L, m.n)) AS i FROM m),\n" +
       fisherBody)
   }
@@ -223,8 +204,8 @@ object Analytics41 {
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_kruskal_wallis", aggKruskalWallis, "WITH " + kwSql("events")),
-    QueryDef("agg_g_test", aggGTest, "WITH " + gTestSql("documents")),
-    QueryDef("agg_odds_ratio", aggOddsRatio, "WITH " + oddsSql("lineitem")),
+    QueryDef.sql("agg_kruskal_wallis", "WITH " + kwSql("events")),
+    QueryDef.sql("agg_g_test", "WITH " + gTestSql("documents")),
+    QueryDef.sql("agg_odds_ratio", "WITH " + oddsSql("lineitem")),
     QueryDef("agg_fisher_exact", aggFisherExact, fisherOracleSql))
 }

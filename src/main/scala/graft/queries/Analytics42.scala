@@ -31,21 +31,17 @@ import graft.core.Tables
   */
 object Analytics42 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // sql_pivot / sql_unpivot
   // ---------------------------------------------------------------------
 
   def sqlPivot(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_pv_orders")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT o_orderpriority,
         |  coalesce(F, 0L) AS f_cnt, coalesce(O, 0L) AS o_cnt,
         |  coalesce(P, 0L) AS p_cnt
         |FROM (SELECT o_orderpriority, o_orderstatus
-        |      FROM graft_pv_orders)
+        |      FROM orders)
         |PIVOT (count(1) FOR o_orderstatus IN ('F' AS F, 'O' AS O,
         |                                      'P' AS P))""".stripMargin)
   }
@@ -61,14 +57,13 @@ object Analytics42 {
       |FROM orders GROUP BY o_orderpriority""".stripMargin
 
   def sqlUnpivot(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_upv_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT l_orderkey, l_linenumber, metric,
         |  CAST(value AS DOUBLE) AS value
         |FROM (SELECT l_orderkey, l_linenumber,
         |        CAST(l_quantity AS DECIMAL(18,2)) AS l_quantity,
         |        CAST(l_extendedprice AS DECIMAL(18,2)) AS l_extendedprice
-        |      FROM graft_upv_lineitem)
+        |      FROM lineitem)
         |UNPIVOT (value FOR metric IN (l_quantity, l_extendedprice))
         |""".stripMargin)
   }
@@ -98,7 +93,7 @@ object Analytics42 {
     * the oracle computes directly from orders). */
   def etlDynamicPartitionOverwrite(s: SparkSession, dir: String): DataFrame = {
     val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_dpo", dir))
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
         col("o_orderpriority").as("prio"))
@@ -149,7 +144,7 @@ object Analytics42 {
     val base = new java.io.File(graft.core.ScratchDirs.path(s, "graft_vac", dir))
     val logDir = new java.io.File(base, "_log")
     logDir.mkdirs()
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
     def writeData(name: String, df: DataFrame): Seq[String] = {

@@ -29,9 +29,6 @@ import graft.core.CkptTap._
   */
 object Analytics43 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Day-indexed revenue census with exact decimal prefix sums:
     * (i = 1-based day rank, x = day offset, y = floored daily revenue,
     * cum = Σ_{≤i} y). The cumulative window runs single-partition over
@@ -77,8 +74,7 @@ object Analytics43 {
     * operate on the identical doubles over identical sets — the fit is
     * bit-identical (the oracle keeps the broadcast-a spelling). */
   def aggIsotonic(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_iso_orders")
-    val dd = s.sql(dailySql("graft_iso_orders",
+    val dd = Tables.sql(s, dir, dailySql("orders",
         "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
       .tappedLocalCheckpoint()
     val a = dd.select(col("i").as("i"), col("cum").as("a_cum"),
@@ -133,14 +129,12 @@ object Analytics43 {
        |FROM sp CROSS JOIN vv""".stripMargin
 
   def aggPeriodogram(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_pg_orders")
-    s.sql(dailySql("graft_pg_orders",
+    val daily = Tables.sql(s, dir, dailySql("orders",
         "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_pg_daily")
-    s.sql("WITH dd AS (SELECT * FROM graft_pg_daily),\n" +
+    Tables.sql(s, dir, "WITH dd AS (SELECT * FROM graft_pg_daily),\n" +
       "per AS (SELECT explode(sequence(2L, 30L)) AS p),\n" +
-      periodogramBody)
+      periodogramBody, "graft_pg_daily" -> daily)
   }
 
   private val periodogramOracleSql: String =

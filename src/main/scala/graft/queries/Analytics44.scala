@@ -35,9 +35,6 @@ import graft.core.Tables
   */
 object Analytics44 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // shared: two-regressor OLS over a relation reg(y, x1, x2)
   // ---------------------------------------------------------------------
@@ -112,8 +109,7 @@ object Analytics44 {
        |FROM fit CROSS JOIN res""".stripMargin
 
   def aggGranger(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_gr_orders")
-    s.sql("WITH " + grangerSql("graft_gr_orders",
+    Tables.sql(s, dir, "WITH " + grangerSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -153,8 +149,7 @@ object Analytics44 {
        |FROM fit""".stripMargin
 
   def eventsBassDiffusion(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_bass_events")
-    s.sql("WITH " + bassSql("graft_bass_events",
+    Tables.sql(s, dir, "WITH " + bassSql("events",
       "datediff(CAST(ts AS DATE), DATE '2024-01-01')"))
   }
 
@@ -197,11 +192,6 @@ object Analytics44 {
        |FROM gr a JOIN gr b ON a.event_type < b.event_type
        |  CROSS JOIN tot CROSS JOIN tie""".stripMargin
 
-  def aggDunnPosthoc(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_dunn_events")
-    s.sql("WITH " + dunnSql("graft_dunn_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
@@ -210,5 +200,5 @@ object Analytics44 {
     QueryDef("events_bass_diffusion", eventsBassDiffusion,
       "WITH " + bassSql("events",
         "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))")),
-    QueryDef("agg_dunn_posthoc", aggDunnPosthoc, "WITH " + dunnSql("events")))
+    QueryDef.sql("agg_dunn_posthoc", "WITH " + dunnSql("events")))
 }

@@ -26,9 +26,6 @@ import graft.core.Tables
   */
 object Analytics45 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // events_cuped
   // ---------------------------------------------------------------------
@@ -70,8 +67,7 @@ object Analytics45 {
        |FROM m""".stripMargin
 
   def eventsCuped(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_cuped_events")
-    s.sql("WITH " + cupedSql("graft_cuped_events",
+    Tables.sql(s, dir, "WITH " + cupedSql("events",
       ts => s"unix_micros($ts)"))
   }
 
@@ -112,11 +108,6 @@ object Analytics45 {
        |    / (CAST(n_a + n_b AS DOUBLE) / 2.0) > 3.841 AS srm_flag
        |FROM c""".stripMargin
 
-  def eventsSrmCheck(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_srm_events")
-    s.sql("WITH " + srmSql("graft_srm_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_cpk
   // ---------------------------------------------------------------------
@@ -140,16 +131,11 @@ object Analytics45 {
        |    / (3.0 * sqrt((svv - sv * sv / n) / (n - 1))) AS cpk
        |FROM m""".stripMargin
 
-  def aggCpk(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_cpk_events")
-    s.sql("WITH " + cpkSql("graft_cpk_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("events_cuped", eventsCuped, "WITH " + cupedSql("events",
       ts => s"epoch_us(CAST($ts AS TIMESTAMP))")),
-    QueryDef("events_srm_check", eventsSrmCheck, "WITH " + srmSql("events")),
-    QueryDef("agg_cpk", aggCpk, "WITH " + cpkSql("events")))
+    QueryDef.sql("events_srm_check", "WITH " + srmSql("events")),
+    QueryDef.sql("agg_cpk", "WITH " + cpkSql("events")))
 }

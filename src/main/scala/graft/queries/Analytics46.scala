@@ -27,9 +27,6 @@ import graft.core.Tables
   */
 object Analytics46 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // typed_user_stats
   // ---------------------------------------------------------------------
@@ -40,7 +37,7 @@ object Analytics46 {
 
   def typedUserStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val evs = t(s, dir, "events")
+    val evs = Tables.load(s, dir, "events")
       .select(col("user_id"), expr("unix_micros(ts)").as("us"),
         // 2-decimal rationals -> exact integer cents
         expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
@@ -75,7 +72,7 @@ object Analytics46 {
   // ---------------------------------------------------------------------
 
   def statCrosstab(s: SparkSession, dir: String): DataFrame = {
-    val ct = t(s, dir, "documents").stat.crosstab("lang", "source")
+    val ct = Tables.load(s, dir, "documents").stat.crosstab("lang", "source")
     val valueCols = ct.columns.filter(_ != "lang_source").sorted
     if (valueCols.isEmpty) {
       // empty corpus: crosstab has ZERO value columns and unpivot

@@ -30,9 +30,6 @@ import graft.core.Tables
   */
 object Analytics47 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_decision_stump
   // ---------------------------------------------------------------------
@@ -76,11 +73,6 @@ object Analytics47 {
        |  g_root - wg AS gain
        |FROM best WHERE rn = 1""".stripMargin
 
-  def aggDecisionStump(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_stump_events")
-    s.sql("WITH " + stumpSql("graft_stump_events"))
-  }
-
   // ---------------------------------------------------------------------
   // text_jsd
   // ---------------------------------------------------------------------
@@ -118,10 +110,9 @@ object Analytics47 {
        |FROM ctr""".stripMargin
 
   def textJsd(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_jsd_docs")
-    s.sql("WITH tok AS (SELECT lang AS grp, " +
+    Tables.sql(s, dir, "WITH tok AS (SELECT lang AS grp, " +
       "explode(split(lower(text), ' ')) AS term " +
-      "FROM graft_jsd_docs WHERE lang IN ('en', 'de')),\n" + jsdBody)
+      "FROM documents WHERE lang IN ('en', 'de')),\n" + jsdBody)
   }
 
   private val jsdOracleSql: String =
@@ -187,15 +178,14 @@ object Analytics47 {
        |FROM s""".stripMargin
 
   def aggLogrank(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_lr_events")
-    s.sql("WITH " + logrankSql("graft_lr_events",
+    Tables.sql(s, dir, "WITH " + logrankSql("events",
       ts => s"unix_timestamp($ts)"))
   }
 
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_decision_stump", aggDecisionStump,
+    QueryDef.sql("agg_decision_stump",
       "WITH " + stumpSql("events")),
     QueryDef("text_jsd", textJsd, jsdOracleSql),
     QueryDef("agg_logrank", aggLogrank, "WITH " + logrankSql("events",

@@ -27,9 +27,6 @@ import graft.core.Tables
   */
 object Analytics48 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_embed_outlier
   // ---------------------------------------------------------------------
@@ -45,7 +42,7 @@ object Analytics48 {
   }
 
   def llmEmbedOutlier(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
     val flat = e.select(posexplode(col("embedding")).as(Seq("pos", "v")))
     val cent = flat.groupBy("pos")
       .agg((sum(col("v").cast(DecimalType(20, 8))).cast("double")
@@ -124,11 +121,6 @@ object Analytics48 {
        |SELECT CAST(rnk AS BIGINT) AS rnk, l_orderkey, l_linenumber, d2
        |FROM r WHERE rnk <= 10""".stripMargin
 
-  def aggMahalanobis(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_maha_lineitem")
-    s.sql("WITH " + mahaSql("graft_maha_lineitem"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_youden
   // ---------------------------------------------------------------------
@@ -165,15 +157,10 @@ object Analytics48 {
        |SELECT CAST(v AS DOUBLE) AS threshold, tpr, fpr, youden_j
        |FROM best WHERE rn = 1""".stripMargin
 
-  def aggYouden(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_yj_events")
-    s.sql("WITH " + youdenSql("graft_yj_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("llm_embed_outlier", llmEmbedOutlier, embedOutlierOracleSql),
-    QueryDef("agg_mahalanobis", aggMahalanobis, "WITH " + mahaSql("lineitem")),
-    QueryDef("agg_youden", aggYouden, "WITH " + youdenSql("events")))
+    QueryDef.sql("agg_mahalanobis", "WITH " + mahaSql("lineitem")),
+    QueryDef.sql("agg_youden", "WITH " + youdenSql("events")))
 }

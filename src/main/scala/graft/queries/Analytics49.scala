@@ -31,9 +31,6 @@ import graft.core.Tables
   */
 object Analytics49 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // shared: Acklam's inverse normal CDF over a column name
   // ---------------------------------------------------------------------
@@ -110,8 +107,7 @@ object Analytics49 {
   }
 
   def aggProbitQq(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_qq_orders")
-    s.sql("WITH " + probitQqSql("graft_qq_orders",
+    Tables.sql(s, dir, "WITH " + probitQqSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -157,8 +153,7 @@ object Analytics49 {
        |FROM m""".stripMargin
 
   def eventsWeibullFit(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_wb_events")
-    s.sql("WITH " + weibullSql("graft_wb_events",
+    Tables.sql(s, dir, "WITH " + weibullSql("events",
       ts => s"unix_timestamp($ts)"))
   }
 
@@ -187,11 +182,6 @@ object Analytics49 {
        |  CAST(sum(has_rev) AS DOUBLE) / count(*) AS reciprocity
        |FROM rec""".stripMargin
 
-  def graphReciprocity(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_rc_events")
-    s.sql("WITH " + reciprocitySql("graft_rc_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
@@ -200,6 +190,6 @@ object Analytics49 {
     QueryDef("events_weibull_fit", eventsWeibullFit,
       "WITH " + weibullSql("events",
         ts => s"CAST(floor(epoch(CAST($ts AS TIMESTAMP))) AS BIGINT)")),
-    QueryDef("graph_reciprocity", graphReciprocity,
+    QueryDef.sql("graph_reciprocity",
       "WITH " + reciprocitySql("events")))
 }

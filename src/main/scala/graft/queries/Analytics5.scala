@@ -50,9 +50,6 @@ import graft.core.CkptTap._
   */
 object Analytics5 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Brand-level market-basket association: for every unordered brand
     * pair co-occurring in an order, support counts and lift. The heavy
     * distributed pass is basket derivation (lineitem ⋈ broadcast part
@@ -79,8 +76,8 @@ object Analytics5 {
     // (`c`) and order count (`n`) ride the same grouped relation
     // (guide §2.4). All censuses are exact integers; the oracle keeps
     // the self-join spelling.
-    val orders = t(s, dir, "lineitem")
-      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+    val orders = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "part"), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("brand"))
       .distinct()
       .groupBy("ok").agg(sort_array(collect_list(col("brand"))).as("bs"))
@@ -126,16 +123,6 @@ object Analytics5 {
        |       CROSS JOIN n
        |WHERE p.cnt_ab >= 2""".stripMargin
 
-  /** Degree distribution of the supplier→part bipartite graph: each
-    * supplier's degree is its distinct supplied-part count; the census
-    * is the (degree, supplier-count) histogram. Two map-side-combined
-    * aggregations over one scan — at 100 TB the first group-by is the
-    * only real shuffle and the histogram relation is tiny. */
-  def graphDegreeDist(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_dd_lineitem")
-    s.sql(degreeSql("graft_dd_lineitem"))
-  }
-
   private def degreeSql(table: String): String =
     s"""WITH deg AS (SELECT l_suppkey, count(DISTINCT l_partkey) AS degree
        |             FROM $table GROUP BY l_suppkey)
@@ -159,11 +146,10 @@ object Analytics5 {
     * immaterial). The slope median is checkpointed (1 row) so the
     * intercept pass cannot re-run the pair census. */
   def aggTheilSen(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_ts_orders")
-    val daily = s.sql(
+    val daily = Tables.sql(s, dir,
       """SELECT datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01') AS x,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y
-        |FROM graft_ts_orders GROUP BY 1""".stripMargin)
+        |FROM orders GROUP BY 1""".stripMargin)
       .tappedLocalCheckpoint()
     val p = daily.select(col("x").as("ax"), col("y").as("ay"))
       .join(daily.select(col("x").as("bx"), col("y").as("by")),
@@ -192,7 +178,7 @@ object Analytics5 {
     * list_reduce — DuckDB 1.0 mutates struct accumulators
     * field-by-field, see [[Analytics4.winHolt]]'s note). */
   def winCusum(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"), col("value"))))
         .as("xs"))
@@ -222,7 +208,7 @@ object Analytics5 {
     * only floating step and run in the same textual order on both
     * engines. */
   def textReadability(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_words"),
         greatest(lit(1L),
@@ -247,11 +233,9 @@ object Analytics5 {
     * map-side-combined pass at any scale; the 5-row group relation is
     * checkpointed because the census reads it twice. */
   def aggAnova(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_an_orders")
-    s.sql(anovaGroups("graft_an_orders"))
+    val g = Tables.sql(s, dir, anovaGroups("orders"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_an_g")
-    s.sql("WITH " + anovaCensus("graft_an_g"))
+    Tables.sql(s, dir, "WITH " + anovaCensus("graft_an_g"), "graft_an_g" -> g)
   }
 
   private def anovaGroups(table: String): String =
@@ -282,10 +266,9 @@ object Analytics5 {
     * floating steps, computed identically from integers. One
     * map-side-combined 9-group aggregation at any scale. */
   def aggBenford(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_bf_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """WITH d AS (SELECT CAST(substring(CAST(l_extendedprice AS STRING), 1, 1) AS INT) AS digit
-        |           FROM graft_bf_lineitem),
+        |           FROM lineitem),
         |c AS (SELECT digit, count(*) AS n_obs FROM d GROUP BY digit),
         |w AS (SELECT digit, n_obs, sum(n_obs) OVER () AS n FROM c)
         |SELECT digit, n_obs, CAST(n_obs AS DOUBLE) / n AS p_obs,
@@ -301,7 +284,12 @@ object Analytics5 {
       s"""WITH baskets AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
           |                 FROM lineitem JOIN part ON l_partkey = p_partkey),
           |""".stripMargin + mbCensus("baskets")),
-    QueryDef("graph_degree_dist", graphDegreeDist, degreeSql("lineitem")),
+    // Degree distribution of the supplier→part bipartite graph: each
+    // supplier's degree is its distinct supplied-part count; the census
+    // is the (degree, supplier-count) histogram. Two map-side-combined
+    // aggregations over one scan — at 100 TB the first group-by is the
+    // only real shuffle and the histogram relation is tiny.
+    QueryDef.sql("graph_degree_dist", degreeSql("lineitem")),
     QueryDef("agg_theil_sen", aggTheilSen,
       """WITH daily AS MATERIALIZED (SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS x,
         |                 CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y

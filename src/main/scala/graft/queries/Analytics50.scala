@@ -30,9 +30,6 @@ import graft.core.Tables
   */
 object Analytics50 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // shared: Φ(x) over an expression
   // ---------------------------------------------------------------------
@@ -91,8 +88,7 @@ object Analytics50 {
        |FROM s""".stripMargin
 
   def aggAndersonDarling(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_ad_orders")
-    s.sql("WITH " + adSql("graft_ad_orders",
+    Tables.sql(s, dir, "WITH " + adSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -138,9 +134,8 @@ object Analytics50 {
        |FROM ph2""".stripMargin
 
   def etlStockBlackScholes(s: SparkSession, dir: String): DataFrame = {
-    graft.etl.StockEtl.cleanedView(s, "graft_bs_cleaned")
-    s.sql("WITH " + graft.etl.StockEtl.barsCteFor("graft_bs_cleaned") +
-      ",\n" + bsBody)
+    Tables.sql(s, dir, "WITH " + graft.etl.StockEtl.barsCteFor("cleaned") +
+      ",\n" + bsBody, graft.etl.StockEtl.cleaned(s))
   }
 
   // ---------------------------------------------------------------------

@@ -1,10 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.QueryDef
-import graft.core.Tables
 
 /** Round-11 batch AF: behavioral predictability, experiment design,
   * and the exact energy distance.
@@ -27,9 +23,6 @@ import graft.core.Tables
   *    cost with zero floating-point until the final normalization.
   */
 object Analytics51 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ---------------------------------------------------------------------
   // events_markov_entropy
@@ -57,11 +50,6 @@ object Analytics51 {
        |  -CAST(sum(CAST(c AS DECIMAL(38,18))) AS DOUBLE) / ln(2.0e0)
        |    AS entropy_rate_bits
        |FROM terms""".stripMargin
-
-  def eventsMarkovEntropy(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_me_events")
-    s.sql("WITH " + markovEntropySql("graft_me_events"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_power_twoprop
@@ -112,11 +100,6 @@ object Analytics51 {
        |  ${normCdf("(zeff - 1.959964e0)")} AS power_at_observed,
        |  (1.959964e0 + 8.41621e-1) * se AS mde_80
        |FROM z""".stripMargin
-
-  def aggPowerTwoprop(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_pw_events")
-    s.sql("WITH " + powerSql("graft_pw_events"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_energy_distance
@@ -174,18 +157,13 @@ object Analytics51 {
        |  / 1.0e2 AS energy_dist
        |FROM s""".stripMargin
 
-  def aggEnergyDistance(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_en_events")
-    s.sql("WITH " + energySql("graft_en_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("events_markov_entropy", eventsMarkovEntropy,
+    QueryDef.sql("events_markov_entropy",
       "WITH " + markovEntropySql("events")),
-    QueryDef("agg_power_twoprop", aggPowerTwoprop,
+    QueryDef.sql("agg_power_twoprop",
       "WITH " + powerSql("events")),
-    QueryDef("agg_energy_distance", aggEnergyDistance,
+    QueryDef.sql("agg_energy_distance",
       "WITH " + energySql("events")))
 }

@@ -25,9 +25,6 @@ import graft.core.Tables
   */
 object Analytics52 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_conformal_interval
   // ---------------------------------------------------------------------
@@ -74,8 +71,7 @@ object Analytics52 {
        |FROM q""".stripMargin
 
   def aggConformalInterval(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_cf_orders")
-    s.sql("WITH " + conformalSql("graft_cf_orders",
+    Tables.sql(s, dir, "WITH " + conformalSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -134,9 +130,8 @@ object Analytics52 {
        |FROM sig""".stripMargin
 
   def etlStockPairsSpread(s: SparkSession, dir: String): DataFrame = {
-    graft.etl.StockEtl.cleanedView(s, "graft_pair_cleaned")
-    s.sql("WITH " + graft.etl.StockEtl.barsCteFor("graft_pair_cleaned") +
-      ",\n" + pairsBody)
+    Tables.sql(s, dir, "WITH " + graft.etl.StockEtl.barsCteFor("cleaned") +
+      ",\n" + pairsBody, graft.etl.StockEtl.cleaned(s))
   }
 
   // ---------------------------------------------------------------------

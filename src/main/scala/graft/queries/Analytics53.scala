@@ -27,9 +27,6 @@ import graft.core.Tables
   */
 object Analytics53 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_jackknife_ratio
   // ---------------------------------------------------------------------
@@ -65,8 +62,7 @@ object Analytics53 {
        |FROM jk""".stripMargin
 
   def aggJackknifeRatio(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_jk_orders")
-    s.sql("WITH " + jackknifeSql("graft_jk_orders",
+    Tables.sql(s, dir, "WITH " + jackknifeSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -116,8 +112,7 @@ object Analytics53 {
        |    FROM $orders GROUP BY 1))""".stripMargin
 
   def eventsCcf(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_crosscorr_orders")
-    s.sql("WITH " + ccfSeries("graft_crosscorr_orders",
+    Tables.sql(s, dir, "WITH " + ccfSeries("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')") +
       ",\nlg AS (SELECT explode(sequence(-5L, 5L)) AS l),\n" + ccfBody)
   }

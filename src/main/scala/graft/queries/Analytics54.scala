@@ -24,9 +24,6 @@ import graft.core.Tables
   */
 object Analytics54 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** The shared paired-diff CTE: d(x) = y(x+7) − y(x), exact integers. */
   private def pairedCte(orders: String, dayIdx: String): String =
     s"""daily AS (
@@ -55,8 +52,7 @@ object Analytics54 {
        |FROM m""".stripMargin
 
   def aggTtestPaired(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_pt_orders")
-    s.sql("WITH " + pairedTSql("graft_pt_orders",
+    Tables.sql(s, dir, "WITH " + pairedTSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -88,8 +84,7 @@ object Analytics54 {
        |FROM s""".stripMargin
 
   def aggWilcoxonSignedRank(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_wx_orders")
-    s.sql("WITH " + wilcoxonSql("graft_wx_orders",
+    Tables.sql(s, dir, "WITH " + wilcoxonSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -131,8 +126,7 @@ object Analytics54 {
        |  FROM pd)""".stripMargin
 
   def aggSignTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_sg_orders")
-    s.sql("WITH " + signMargins("graft_sg_orders",
+    Tables.sql(s, dir, "WITH " + signMargins("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')") +
       ",\nidx AS (SELECT explode(sequence(1L, m.n)) AS i FROM m),\n" +
       signBody)

@@ -1,10 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.QueryDef
-import graft.core.Tables
 
 /** Round-11 batch AJ: measurement-reliability statistics over the
   * user × event-type value matrix.
@@ -21,9 +17,6 @@ import graft.core.Tables
   *    2-decimal rationals).
   */
 object Analytics55 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ---------------------------------------------------------------------
   // agg_cronbach_alpha
@@ -65,11 +58,6 @@ object Analytics55 {
        |    * (1.0e0 - agg.sv / tv.v) AS cronbach_alpha
        |FROM agg CROSS JOIN tv""".stripMargin
 
-  def aggCronbachAlpha(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ca_events")
-    s.sql("WITH " + cronbachSql("graft_ca_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_icc
   // ---------------------------------------------------------------------
@@ -100,15 +88,10 @@ object Analytics55 {
        |          - 1.0e0) * ((ss - sgm) / (n - i))) AS icc1
        |FROM tot""".stripMargin
 
-  def aggIcc(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_icc_events")
-    s.sql("WITH " + iccSql("graft_icc_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_cronbach_alpha", aggCronbachAlpha,
+    QueryDef.sql("agg_cronbach_alpha",
       "WITH " + cronbachSql("events")),
-    QueryDef("agg_icc", aggIcc, "WITH " + iccSql("events")))
+    QueryDef.sql("agg_icc", "WITH " + iccSql("events")))
 }

@@ -27,9 +27,6 @@ import graft.core.Tables
   */
 object Analytics56 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Daily census + 1-var OLS fit CTEs (exact decimal moments). */
   private def fitCte(orders: String, dayIdx: String): String =
     s"""daily AS (
@@ -78,8 +75,7 @@ object Analytics56 {
        |FROM am""".stripMargin
 
   def aggBreuschPagan(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_bp_orders")
-    s.sql("WITH " + bpSql("graft_bp_orders",
+    Tables.sql(s, dir, "WITH " + bpSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -112,8 +108,7 @@ object Analytics56 {
        |FROM rk WHERE rn <= 10""".stripMargin
 
   def aggCooksDistance(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_ck_orders")
-    s.sql("WITH " + cooksSql("graft_ck_orders",
+    Tables.sql(s, dir, "WITH " + cooksSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -152,8 +147,7 @@ object Analytics56 {
        |FROM m""".stripMargin
 
   def aggVif(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_vf_orders")
-    s.sql("WITH " + vifSql("graft_vf_orders",
+    Tables.sql(s, dir, "WITH " + vifSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 

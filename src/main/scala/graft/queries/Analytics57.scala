@@ -22,9 +22,6 @@ import graft.core.Tables
   */
 object Analytics57 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // llm_domain_cap
   // ---------------------------------------------------------------------
@@ -41,11 +38,6 @@ object Analytics57 {
        |  CAST(sum(CASE WHEN rk > 20 THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_dropped
        |FROM r GROUP BY source""".stripMargin
-
-  def llmDomainCap(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_dc_docs")
-    s.sql("WITH " + domainCapSql("graft_dc_docs"))
-  }
 
   // ---------------------------------------------------------------------
   // llm_vocab_coverage
@@ -73,9 +65,8 @@ object Analytics57 {
        |FROM cv CROSS JOIN tot""".stripMargin
 
   def llmVocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents").createOrReplaceTempView("graft_vc_docs")
-    s.sql("WITH tok AS (SELECT explode(split(lower(text), ' ')) AS term" +
-      " FROM graft_vc_docs),\n" +
+    Tables.sql(s, dir, "WITH tok AS (SELECT explode(split(lower(text), ' ')) AS term" +
+      " FROM documents),\n" +
       "kv AS (SELECT explode(array(10L, 100L, 1000L, 10000L)) AS k),\n" +
       vocabCoverageBody)
   }
@@ -90,7 +81,7 @@ object Analytics57 {
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("llm_domain_cap", llmDomainCap,
+    QueryDef.sql("llm_domain_cap",
       "WITH " + domainCapSql("documents")),
     QueryDef("llm_vocab_coverage", llmVocabCoverage, vocabCoverageOracleSql))
 }

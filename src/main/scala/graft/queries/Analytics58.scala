@@ -21,9 +21,6 @@ import graft.core.Tables
   */
 object Analytics58 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_qq_two_sample
   // ---------------------------------------------------------------------
@@ -58,9 +55,8 @@ object Analytics58 {
        |FROM dq""".stripMargin
 
   def aggQqTwoSample(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_qq2_events")
-    s.sql("WITH dk AS (SELECT explode(sequence(1L, 9L)) AS d),\n" +
-      qqSql("graft_qq2_events"))
+    Tables.sql(s, dir, "WITH dk AS (SELECT explode(sequence(1L, 9L)) AS d),\n" +
+      qqSql("events"))
   }
 
   private val qqOracleSql: String =
@@ -102,8 +98,7 @@ object Analytics58 {
        |FROM cl""".stripMargin
 
   def aggXbarRChart(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_xr_orders")
-    s.sql("WITH " + xbarSql("graft_xr_orders",
+    Tables.sql(s, dir, "WITH " + xbarSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 

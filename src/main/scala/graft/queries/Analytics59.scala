@@ -21,9 +21,6 @@ import graft.core.Tables
   */
 object Analytics59 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private def dailyCte(orders: String, dayIdx: String): String =
     s"""daily AS (
        |  SELECT CAST($dayIdx AS BIGINT) AS x,
@@ -63,9 +60,8 @@ object Analytics59 {
        |FROM terms GROUP BY j""".stripMargin
 
   def aggKde(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_kde_orders")
-    s.sql("WITH gj AS (SELECT explode(sequence(0L, 20L)) AS j),\n" +
-      kdeSql("graft_kde_orders",
+    Tables.sql(s, dir, "WITH gj AS (SELECT explode(sequence(0L, 20L)) AS j),\n" +
+      kdeSql("orders",
         "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
@@ -89,9 +85,8 @@ object Analytics59 {
        |FROM grid gr""".stripMargin
 
   def aggEcdf(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_ec_orders")
-    s.sql("WITH gj AS (SELECT explode(sequence(0L, 20L)) AS j),\n" +
-      ecdfSql("graft_ec_orders",
+    Tables.sql(s, dir, "WITH gj AS (SELECT explode(sequence(0L, 20L)) AS j),\n" +
+      ecdfSql("orders",
         "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 

@@ -34,9 +34,6 @@ import graft.core.CkptTap._
   * (the [[Analytics4.graphTriangles]] lesson). */
 object Analytics6 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Per-user 1-D random-walk Kalman filter over the event-value
     * series (process noise Q=4, measurement noise R=25): predict
     * P←P+Q, gain K=P/(P+R), update x̂←x̂+K(z−x̂), P←(1−K)P, seeded at
@@ -44,7 +41,7 @@ object Analytics6 {
     * and gain — the one-pass streaming-state shape (each user's fold
     * is a bounded sequential scan inside the row). */
   def winKalman(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("ts"), col("event_id"), col("value"))))
         .as("xs"))
@@ -68,16 +65,14 @@ object Analytics6 {
     * ranked relation is checkpointed: both the median pick and the
     * deviation join read it. */
   def aggLevene(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_lv_orders")
-    s.sql(
+    val r = Tables.sql(s, dir,
       """SELECT o_orderpriority AS grp, o_totalprice / 100000.0 AS x,
         |       row_number() OVER (PARTITION BY o_orderpriority
         |                          ORDER BY o_totalprice / 100000.0) AS rn,
         |       count(*) OVER (PARTITION BY o_orderpriority) AS n
-        |FROM graft_lv_orders""".stripMargin)
+        |FROM orders""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_lv_r")
-    s.sql("WITH " + leveneCensus("graft_lv_r", "div"))
+    Tables.sql(s, dir, "WITH " + leveneCensus("graft_lv_r", "div"), "graft_lv_r" -> r)
   }
 
   private def leveneCensus(r: String, intdiv: String): String =
@@ -108,12 +103,11 @@ object Analytics6 {
     * checkpointed); degrees are two map-side-combined group-bys joined
     * back on their keys — all equi-joins, linear at any scale. */
   def graphAssortativity(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem")
+    val edges = Tables.load(s, dir, "lineitem")
       .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk"))
       .distinct()
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_as_edges")
-    s.sql(assortCensus("graft_as_edges"))
+    Tables.sql(s, dir, assortCensus("graft_as_edges"), "graft_as_edges" -> edges)
   }
 
   private def assortCensus(e: String): String =
@@ -130,7 +124,7 @@ object Analytics6 {
     * token scores summed inside the row — pure projection, zero
     * shuffle; the mean is the one final division. */
   def textSentiment(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"),
         expr(s"""aggregate(transform(split(text, ' '), t -> $sentCase), 0L,
                   (a, x) -> a + x)""").as("sent_sum"))
@@ -144,16 +138,6 @@ object Analytics6 {
     """CASE t WHEN 'fast' THEN 2L WHEN 'slow' THEN -2L WHEN 'big' THEN 1L
       |       WHEN 'small' THEN -1L WHEN 'dup' THEN -2L WHEN 'merge' THEN 1L
       |       ELSE 0L END""".stripMargin.replace('\n', ' ')
-
-  /** Method-of-moments Gumbel fit of the daily maximum event value:
-    * β = s·√6/π, μ = x̄ − γβ over the ~30 daily maxima. The daily max
-    * is an exact per-group reduction; mean/std of the maxima ride
-    * DECIMAL sums. One distributed pass + a scalar fit — the classic
-    * "what peak load should we provision for" question. */
-  def aggGumbelFit(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_gb_events")
-    s.sql(gumbelSql("graft_gb_events"))
-  }
 
   // std expression repeated textually so both engines evaluate the
   // identical tree; γ is the Euler-Mascheroni double literal.
@@ -181,17 +165,16 @@ object Analytics6 {
     * elements; the only floating steps are the three final /1e6
     * conversions. */
   def eventsInterarrival(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_ia_events")
-    s.sql(
+    val gaps = Tables.sql(s, dir,
       """SELECT event_type,
         |       unix_micros(ts) - lag(unix_micros(ts))
         |         OVER (PARTITION BY user_id, event_type
         |               ORDER BY unix_micros(ts), event_id) AS gap
-        |FROM graft_ia_events""".stripMargin)
+        |FROM events""".stripMargin)
       .filter(col("gap").isNotNull)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_ia_gaps")
-    s.sql("WITH " + iaCensus("graft_ia_gaps", "div"))
+    Tables.sql(s, dir, "WITH " + iaCensus("graft_ia_gaps", "div"),
+      "graft_ia_gaps" -> gaps)
   }
 
   private def iaCensus(gaps: String, intdiv: String): String =
@@ -252,7 +235,12 @@ object Analytics6 {
          |       CASE WHEN sent_sum > 0 THEN 'pos' WHEN sent_sum < 0 THEN 'neg'
          |            ELSE 'neu' END AS sent_label
          |FROM c""".stripMargin),
-    QueryDef("agg_gumbel_fit", aggGumbelFit, gumbelSql("events")),
+    // Method-of-moments Gumbel fit of the daily maximum event value:
+    // β = s·√6/π, μ = x̄ − γβ over the ~30 daily maxima. The daily max
+    // is an exact per-group reduction; mean/std of the maxima ride
+    // DECIMAL sums. One distributed pass + a scalar fit — the classic
+    // "what peak load should we provision for" question.
+    QueryDef.sql("agg_gumbel_fit", gumbelSql("events")),
     QueryDef("events_interarrival", eventsInterarrival,
       """WITH gaps0 AS (SELECT event_type,
          |         epoch_us(ts) - lag(epoch_us(ts))

@@ -22,9 +22,6 @@ import graft.core.Tables
   */
 object Analytics60 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_theil_decomposition
   // ---------------------------------------------------------------------
@@ -61,11 +58,6 @@ object Analytics60 {
        |SELECT tt.t_total, agg.t_between, agg.t_within,
        |  agg.t_between + agg.t_within AS t_recomposed
        |FROM tt CROSS JOIN agg""".stripMargin
-
-  def aggTheilDecomposition(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_th_orders")
-    s.sql("WITH " + theilSql("graft_th_orders"))
-  }
 
   // ---------------------------------------------------------------------
   // events_retention_halflife
@@ -112,15 +104,14 @@ object Analytics60 {
        |FROM m""".stripMargin
 
   def eventsRetentionHalflife(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_hl_events")
-    s.sql("WITH " + halflifeSql("graft_hl_events",
+    Tables.sql(s, dir, "WITH " + halflifeSql("events",
       ts => s"unix_timestamp($ts)"))
   }
 
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_theil_decomposition", aggTheilDecomposition,
+    QueryDef.sql("agg_theil_decomposition",
       "WITH " + theilSql("orders")),
     QueryDef("events_retention_halflife", eventsRetentionHalflife,
       "WITH " + halflifeSql("events",

@@ -1,10 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.QueryDef
-import graft.core.Tables
 
 /** Round-11 batch AP: repeated-measures tests over the user ×
   * event-type matrix — completing the nonparametric family
@@ -20,9 +16,6 @@ import graft.core.Tables
   *    with zero floating surface before the final division.
   */
 object Analytics61 {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ---------------------------------------------------------------------
   // agg_friedman
@@ -69,11 +62,6 @@ object Analytics61 {
        |  sst.v / sse.v AS friedman_chi2
        |FROM dims CROSS JOIN sst CROSS JOIN sse""".stripMargin
 
-  def aggFriedman(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_fr_events")
-    s.sql("WITH " + friedmanSql("graft_fr_events"))
-  }
-
   // ---------------------------------------------------------------------
   // agg_cochran_q
   // ---------------------------------------------------------------------
@@ -103,14 +91,9 @@ object Analytics61 {
        |  k - 1 AS dof
        |FROM s""".stripMargin
 
-  def aggCochranQ(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_cq_events")
-    s.sql("WITH " + cochranSql("graft_cq_events"))
-  }
-
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_friedman", aggFriedman, "WITH " + friedmanSql("events")),
-    QueryDef("agg_cochran_q", aggCochranQ, "WITH " + cochranSql("events")))
+    QueryDef.sql("agg_friedman", "WITH " + friedmanSql("events")),
+    QueryDef.sql("agg_cochran_q", "WITH " + cochranSql("events")))
 }

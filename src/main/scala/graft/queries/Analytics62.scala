@@ -21,9 +21,6 @@ import graft.core.Tables
   */
 object Analytics62 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   // ---------------------------------------------------------------------
   // agg_beta_fit
   // ---------------------------------------------------------------------
@@ -45,11 +42,6 @@ object Analytics62 {
        |  mu * (mu * (1.0e0 - mu) / var - 1.0e0) AS alpha,
        |  (1.0e0 - mu) * (mu * (1.0e0 - mu) / var - 1.0e0) AS beta
        |FROM st""".stripMargin
-
-  def aggBetaFit(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_bf_lineitem")
-    s.sql("WITH " + betaSql("graft_bf_lineitem"))
-  }
 
   // ---------------------------------------------------------------------
   // agg_negbin_fit
@@ -74,15 +66,14 @@ object Analytics62 {
        |FROM st""".stripMargin
 
   def aggNegbinFit(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_nb_orders")
-    s.sql("WITH " + negbinSql("graft_nb_orders",
+    Tables.sql(s, dir, "WITH " + negbinSql("orders",
       "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"))
   }
 
   // ---------------------------------------------------------------------
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("agg_beta_fit", aggBetaFit, "WITH " + betaSql("lineitem")),
+    QueryDef.sql("agg_beta_fit", "WITH " + betaSql("lineitem")),
     QueryDef("agg_negbin_fit", aggNegbinFit, "WITH " + negbinSql("orders",
       "datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))")))
 }

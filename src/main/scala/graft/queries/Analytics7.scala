@@ -32,22 +32,6 @@ import graft.core.CkptTap._
   */
 object Analytics7 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
-  private def eventsView(s: SparkSession, dir: String, name: String): Unit =
-    t(s, dir, "events").createOrReplaceTempView(name)
-
-  /** 14-period SMA RSI of each user's event-value series: mean gain /
-    * mean loss over the trailing 14 diffs, RSI = 100 − 100/(1+RS);
-    * all-gain windows pin to 100. Emitted from the 15th observation
-    * (first full window). One shuffle on user_id; the frames run
-    * inside each partition. */
-  def winRsi(s: SparkSession, dir: String): DataFrame = {
-    eventsView(s, dir, "graft_rsi_events")
-    s.sql(rsiSql("graft_rsi_events"))
-  }
-
   private def rsiSql(table: String): String =
     s"""WITH d AS (SELECT user_id, event_id,
        |             value - lag(value) OVER
@@ -68,14 +52,6 @@ object Analytics7 {
        |            ELSE 100.0 - 100.0 / (1.0 + ag / al) END AS rsi14
        |FROM g WHERE rn >= 15""".stripMargin
 
-  /** 20-period Bollinger bands (SMA ± 2·sample-stddev) with %B
-    * position. Emitted from the 20th observation; degenerate
-    * zero-width bands emit %B = 0.5. */
-  def winBollinger(s: SparkSession, dir: String): DataFrame = {
-    eventsView(s, dir, "graft_bb_events")
-    s.sql(bollingerSql("graft_bb_events"))
-  }
-
   private def bollingerSql(table: String): String =
     s"""WITH r AS (SELECT user_id, event_id, value,
        |             row_number() OVER
@@ -94,19 +70,6 @@ object Analytics7 {
        |       CASE WHEN sd = 0.0 THEN 0.5
        |            ELSE (value - (mid - 2.0 * sd)) / (4.0 * sd) END AS bb_pctb
        |FROM b WHERE rn >= 20""".stripMargin
-
-  /** Maximum drawdown of each user's synthetic P&L curve (per-event
-    * P&L = value − 50, a mixed-sign series on this fixture; on a real
-    * price table the diffs would be the P&L): running DECIMAL(18,2)
-    * total, running peak, and the largest peak-to-trough drop — the
-    * risk statistic every stock dashboard reports. Exact: every
-    * intermediate stays decimal (running window sums in decimal are
-    * order-pinned by the frame), so all emitted columns are
-    * bit-identical across engines after the final double cast. */
-  def winDrawdown(s: SparkSession, dir: String): DataFrame = {
-    eventsView(s, dir, "graft_dd_events")
-    s.sql(drawdownSql("graft_dd_events"))
-  }
 
   private def drawdownSql(table: String): String =
     s"""WITH c AS (SELECT user_id,
@@ -134,14 +97,13 @@ object Analytics7 {
     * The daily relation is checkpointed — the median cut and the run
     * count both read it. */
   def aggRunsTest(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_rt_orders")
-    s.sql(
+    val daily = Tables.sql(s, dir,
       """SELECT CAST(o_orderdate AS DATE) AS d,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y
-        |FROM graft_rt_orders GROUP BY 1""".stripMargin)
+        |FROM orders GROUP BY 1""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_rt_daily")
-    s.sql("WITH " + runsCensus("graft_rt_daily", "div"))
+    Tables.sql(s, dir, "WITH " + runsCensus("graft_rt_daily", "div"),
+      "graft_rt_daily" -> daily)
   }
 
   private def runsCensus(daily: String, intdiv: String): String =
@@ -173,7 +135,7 @@ object Analytics7 {
     * map-side-combined count — the exact shape of a distributed BPE
     * trainer's census step at 100 TB. */
   def llmBpePairs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(split(col("text"), " ").as("ts"))
       .filter(size(col("ts")) >= 2)
       .select(explode(expr(
@@ -188,9 +150,25 @@ object Analytics7 {
       .select(col("rnk"), col("pair"), col("cnt"))
 
   val queries: Seq[QueryDef] = Seq(
-    QueryDef("win_rsi", winRsi, rsiSql("events")),
-    QueryDef("win_bollinger", winBollinger, bollingerSql("events")),
-    QueryDef("win_drawdown", winDrawdown, drawdownSql("events")),
+    // 14-period SMA RSI of each user's event-value series: mean gain /
+    // mean loss over the trailing 14 diffs, RSI = 100 − 100/(1+RS);
+    // all-gain windows pin to 100. Emitted from the 15th observation
+    // (first full window). One shuffle on user_id; the frames run
+    // inside each partition.
+    QueryDef.sql("win_rsi", rsiSql("events")),
+    // 20-period Bollinger bands (SMA ± 2·sample-stddev) with %B
+    // position. Emitted from the 20th observation; degenerate
+    // zero-width bands emit %B = 0.5.
+    QueryDef.sql("win_bollinger", bollingerSql("events")),
+    // Maximum drawdown of each user's synthetic P&L curve (per-event
+    // P&L = value − 50, a mixed-sign series on this fixture; on a real
+    // price table the diffs would be the P&L): running DECIMAL(18,2)
+    // total, running peak, and the largest peak-to-trough drop — the
+    // risk statistic every stock dashboard reports. Exact: every
+    // intermediate stays decimal (running window sums in decimal are
+    // order-pinned by the frame), so all emitted columns are
+    // bit-identical across engines after the final double cast.
+    QueryDef.sql("win_drawdown", drawdownSql("events")),
     QueryDef("agg_runs_test", aggRunsTest,
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
          |                 CAST(sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS DOUBLE) AS y

@@ -31,9 +31,6 @@ import graft.core.CkptTap._
   */
 object Analytics8 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Fasttext-style quality classifier INFERENCE with fixed weights
     * over engineered features — the model-based filter stage of a
     * curation pipeline (cf. CCNet/DSIR): z = −1.5 + 0.02·words
@@ -41,7 +38,7 @@ object Analytics8 {
     * σ(z), keep at score ≥ 0.5. Pure projection; every feature is a
     * ratio of integers. */
   def llmQualityLogit(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"),
         size(col("ts")).cast("long").as("n_words"),
@@ -71,12 +68,11 @@ object Analytics8 {
     * the probe-side shape that scales to a 100 TB corpus. Emits the
     * raw log weight (exp would overflow on long docs). */
   def llmDsirWeights(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("tok"))
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_dsir_toks")
-    s.sql(dsirCensus("graft_dsir_toks"))
+    Tables.sql(s, dir, dsirCensus("graft_dsir_toks"), "graft_dsir_toks" -> toks)
   }
 
   private def dsirCensus(toks: String): String =
@@ -94,25 +90,6 @@ object Analytics8 {
        |       sum(lr.llr) AS log_weight
        |FROM $toks t JOIN lr ON lr.tok = t.tok
        |GROUP BY t.doc_id""".stripMargin
-
-  /** Per-user annualized Sharpe ratio of the synthetic P&L series
-    * (value − 50, the win_drawdown curve): mean/std from exact
-    * DECIMAL Σx and Σx², √252 annualization. One map-side-combined
-    * pass.
-    *
-    * Scale choice is load-bearing: the P&L is a 2-decimal rational
-    * and its square a 4-decimal one, so DECIMAL(18,2)/(18,4) keeps
-    * every UNSCALED sum below 2^53 — where both engines' decimal→
-    * double casts are exact. At scale 18 DuckDB's cast (int128 ×
-    * 10⁻¹⁸ in floating point) can sit one ulp off Spark's
-    * correctly-rounded BigDecimal path, and this query's means
-    * (exact cents / 2^k counts) land EXACTLY on 6-decimal midpoints,
-    * where one ulp flips the harness round — observed on 6/1500 rows
-    * at sf0.1 before the scale was narrowed. */
-  def winSharpe(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "events").createOrReplaceTempView("graft_sh_events")
-    s.sql(sharpeSql("graft_sh_events"))
-  }
 
   private def sharpeSql(table: String): String =
     s"""WITH g AS (SELECT user_id, count(*) AS n,
@@ -134,14 +111,12 @@ object Analytics8 {
     * relation feeds the dow census and the grand total. Spark's
     * dayofweek is 1-based (Sunday=1); −1 aligns it to DuckDB's. */
   def aggSeasonality(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_se_orders")
-    s.sql(
+    val daily = Tables.sql(s, dir,
       """SELECT dayofweek(CAST(o_orderdate AS DATE)) - 1 AS dow,
         |       sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS y
-        |FROM graft_se_orders GROUP BY CAST(o_orderdate AS DATE)""".stripMargin)
+        |FROM orders GROUP BY CAST(o_orderdate AS DATE)""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_se_daily")
-    s.sql(seasonCensus("graft_se_daily"))
+    Tables.sql(s, dir, seasonCensus("graft_se_daily"), "graft_se_daily" -> daily)
   }
 
   private def seasonCensus(daily: String): String =
@@ -182,7 +157,21 @@ object Analytics8 {
          |              FROM documents),
          |""".stripMargin +
         dsirCensus("toks").replaceFirst("WITH ", "")),
-    QueryDef("win_sharpe", winSharpe, sharpeSql("events")),
+    // Per-user annualized Sharpe ratio of the synthetic P&L series
+    // (value − 50, the win_drawdown curve): mean/std from exact
+    // DECIMAL Σx and Σx², √252 annualization. One map-side-combined
+    // pass.
+    //
+    // Scale choice is load-bearing: the P&L is a 2-decimal rational
+    // and its square a 4-decimal one, so DECIMAL(18,2)/(18,4) keeps
+    // every UNSCALED sum below 2^53 — where both engines' decimal→
+    // double casts are exact. At scale 18 DuckDB's cast (int128 ×
+    // 10⁻¹⁸ in floating point) can sit one ulp off Spark's
+    // correctly-rounded BigDecimal path, and this query's means
+    // (exact cents / 2^k counts) land EXACTLY on 6-decimal midpoints,
+    // where one ulp flips the harness round — observed on 6/1500 rows
+    // at sf0.1 before the scale was narrowed.
+    QueryDef.sql("win_sharpe", sharpeSql("events")),
     QueryDef("agg_seasonality", aggSeasonality,
       """WITH daily AS (SELECT dayofweek(CAST(o_orderdate AS DATE)) AS dow,
          |                 sum(CAST(o_totalprice AS DECIMAL(18, 2))) AS y

@@ -26,22 +26,18 @@ object Analytics9 {
     * triads Σd(d−1)/2, the a<b<c triangle join — runs on the
     * ≤|nations|² relation. */
   def graphClustering(s: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "orders", "customer", "supplier")
-      .foreach(n => Tables.load(s, dir, n)
-        .createOrReplaceTempView("graft_cl_" + n))
-    s.sql(
+    val und = Tables.sql(s, dir,
       """SELECT least(na, nb) AS a, greatest(na, nb) AS b, sum(cnt) AS cnt
         |FROM (SELECT c.c_nationkey AS na, s.s_nationkey AS nb, count(*) AS cnt
-        |      FROM graft_cl_lineitem l
-        |        JOIN graft_cl_orders o ON l.l_orderkey = o.o_orderkey
-        |        JOIN graft_cl_customer c ON o.o_custkey = c.c_custkey
-        |        JOIN graft_cl_supplier s ON l.l_suppkey = s.s_suppkey
+        |      FROM lineitem l
+        |        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |        JOIN customer c ON o.o_custkey = c.c_custkey
+        |        JOIN supplier s ON l.l_suppkey = s.s_suppkey
         |      WHERE c.c_nationkey <> s.s_nationkey
         |      GROUP BY 1, 2)
         |GROUP BY 1, 2""".stripMargin)
       .tappedLocalCheckpoint()
-      .createOrReplaceTempView("graft_cl_und")
-    s.sql("WITH " + clusteringCensus("graft_cl_und"))
+    Tables.sql(s, dir, "WITH " + clusteringCensus("graft_cl_und"), "graft_cl_und" -> und)
   }
 
   private def clusteringCensus(und: String): String =
@@ -69,15 +65,6 @@ object Analytics9 {
        |            ELSE CAST(3.0 AS DOUBLE) * n_triangles / n_triads
        |       END AS clustering_coeff
        |FROM agg""".stripMargin
-
-  /** Jarque-Bera normality test of daily revenue: skewness, excess
-    * kurtosis, and JB = n/6·(S² + K²/4) from exact decimal raw
-    * moments of the /1e6-rescaled daily series. One distributed
-    * daily aggregation; the moment algebra is scalar. */
-  def aggJarqueBera(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "orders").createOrReplaceTempView("graft_jb_orders")
-    s.sql(jbSql("graft_jb_orders"))
-  }
 
   private def jbSql(table: String): String =
     s"""WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS d,
@@ -114,8 +101,7 @@ object Analytics9 {
     * wrap SILENTLY); the only floating steps are the final
     * mean/variance divisions. */
   def eventsBurstiness(s: SparkSession, dir: String): DataFrame = {
-    Tables.load(s, dir, "events").createOrReplaceTempView("graft_bn_events")
-    s.sql(burstSql("graft_bn_events", "unix_micros(ts)"))
+    Tables.sql(s, dir, burstSql("events", "unix_micros(ts)"))
   }
 
   private def burstSql(table: String, epochUs: String): String =
@@ -151,7 +137,11 @@ object Analytics9 {
          |""".stripMargin +
         clusteringCensus("und")
           .replaceFirst("edges AS \\(", "edges AS MATERIALIZED (")),
-    QueryDef("agg_jarque_bera", aggJarqueBera, jbSql("orders")),
+    // Jarque-Bera normality test of daily revenue: skewness, excess
+    // kurtosis, and JB = n/6·(S² + K²/4) from exact decimal raw
+    // moments of the /1e6-rescaled daily series. One distributed
+    // daily aggregation; the moment algebra is scalar.
+    QueryDef.sql("agg_jarque_bera", jbSql("orders")),
     QueryDef("events_burstiness", eventsBurstiness,
       burstSql("events", "epoch_us(ts)")))
 }

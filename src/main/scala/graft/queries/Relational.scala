@@ -24,9 +24,6 @@ import graft.core.Tables
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Exact money arithmetic: decimal in, double out (see class doc). */
   private def d18(c: Column): Column = c.cast(DecimalType(18, 4))
   private def d8(c: Column): Column = c.cast(DecimalType(8, 4))
@@ -45,7 +42,7 @@ object Relational {
 
   /** TPC-H Q1-shape pricing summary (SURVEY §2B Aggregation). */
   def q1Agg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(col("l_shipdate") < lit("2001-01-01").cast("timestamp_ntz"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
@@ -66,7 +63,7 @@ object Relational {
 
   /** Exact distinct-count aggregation. */
   def aggCountDistinct(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         countDistinct(col("l_partkey")).as("n_parts"),
@@ -77,7 +74,7 @@ object Relational {
     * asserts the sketch lands within 5% of exact, so the oracle row is a
     * constant `true` next to the exact count. */
   def aggApproxCd(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       // Dedup-first, then count + sketch the deduped keys (same values:
       // count of deduped keys IS the distinct count, and HLL state is
       // duplicate-insensitive). The one-aggregate countDistinct+approx
@@ -106,12 +103,12 @@ object Relational {
     // is unchanged (the sketch is deterministic on this data and sits
     // ~0.01% off the exact point, nowhere near the 2% boundary).
     val ex = graft.operators.ExactPercentile.of(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        Tables.load(s, dir, "lineitem"), Seq("l_returnflag"),
         col("l_extendedprice"), Seq(0.5 -> "pe50", 0.9 -> "pe90"))
       .select(col("l_returnflag"),
         round(col("pe50"), 4).as("p50_exact"),
         round(col("pe90"), 4).as("p90_exact"))
-    val ap = t(s, dir, "lineitem")
+    val ap = Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(expr("percentile_approx(l_extendedprice, array(0.5, 0.9), 10000)")
         .as("pa"))
@@ -138,52 +135,32 @@ object Relational {
     * instead; sf1 exposed exactly this when a 2²⁰−1 literal silently
     * undercounted). */
   def aggBitmapDistinct(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_bmd_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT l_returnflag, l_linestatus,
         |  bitmap_distinct(l_partkey, 9999999) AS n_parts,
         |  bitmap_distinct(l_suppkey, 9999999) AS n_supps
-        |FROM graft_bmd_lineitem
+        |FROM lineitem
         |GROUP BY l_returnflag, l_linestatus""".stripMargin)
   }
 
   /** GROUP BY ... HAVING on a per-supplier volume threshold. */
   def aggHaving(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_suppkey")
       .agg(dsum2(d18(col("l_quantity"))).as("total_qty"),
         count(lit(1)).as("n_items"))
       .filter(col("total_qty") > 14000)
 
-  /** ROLLUP over the region→nation customer hierarchy. Expressed via
-    * spark.sql: Dataset.rollup after a join trips Spark 4.1's
-    * ambiguous-self-join analyzer check even with fresh attributes
-    * (the SQL analyzer path resolves the same plan fine). The dims are
-    * far below autoBroadcastJoinThreshold, so both joins still plan as
-    * BroadcastHashJoin. */
-  def aggRollup(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("graft_rollup_customer")
-    t(s, dir, "nation").createOrReplaceTempView("graft_rollup_nation")
-    t(s, dir, "region").createOrReplaceTempView("graft_rollup_region")
-    s.sql(
-      """SELECT r_name, n_name, COUNT(*) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_bal
-        |FROM graft_rollup_customer
-        |JOIN graft_rollup_nation ON c_nationkey = n_nationkey
-        |JOIN graft_rollup_region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin)
-  }
-
   /** CUBE over order status × priority. */
   def aggCube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .cube("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         dsum(d18(col("o_totalprice"))).as("sum_price"))
 
   /** GROUPING SETS ((flag), (status), ()). */
   def aggGroupingSets(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq()),
         col("l_returnflag"), col("l_linestatus"))
@@ -194,11 +171,11 @@ object Relational {
 
   /** Five-table star join, dims broadcast: revenue per region. */
   def joinInnerStar(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    val c = t(s, dir, "customer")
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
+    val li = Tables.load(s, dir, "lineitem")
+    val o = Tables.load(s, dir, "orders")
+    val c = Tables.load(s, dir, "customer")
+    val n = Tables.load(s, dir, "nation")
+    val r = Tables.load(s, dir, "region")
     li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
@@ -212,8 +189,8 @@ object Relational {
 
   /** Left join keeping order-less customers (zero counts, 0.0 spend). */
   def joinLeftAgg(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = Tables.load(s, dir, "customer")
+    val o = Tables.load(s, dir, "orders")
     c.join(o, c("c_custkey") === o("o_custkey"), "left")
       .groupBy("c_custkey")
       .agg(count(col("o_orderkey")).as("n_orders"),
@@ -222,8 +199,8 @@ object Relational {
 
   /** Right join keeping never-ordered parts. */
   def joinRightAgg(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val p = t(s, dir, "part")
+    val li = Tables.load(s, dir, "lineitem")
+    val p = Tables.load(s, dir, "part")
     li.join(p, li("l_partkey") === p("p_partkey"), "right")
       .groupBy("p_partkey", "p_brand")
       .agg(count(col("l_orderkey")).as("n_li"))
@@ -231,9 +208,9 @@ object Relational {
 
   /** Full outer join of two per-nation aggregates. */
   def joinFull(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").groupBy(col("c_nationkey").as("ck"))
+    val c = Tables.load(s, dir, "customer").groupBy(col("c_nationkey").as("ck"))
       .agg(count(lit(1)).as("n_customers"))
-    val sup = t(s, dir, "supplier").groupBy(col("s_nationkey").as("sk"))
+    val sup = Tables.load(s, dir, "supplier").groupBy(col("s_nationkey").as("sk"))
       .agg(count(lit(1)).as("n_suppliers"))
     c.join(sup, c("ck") === sup("sk"), "full_outer")
       .select(coalesce(col("ck"), col("sk")).as("nationkey"),
@@ -242,16 +219,16 @@ object Relational {
 
   /** Left-semi: customers having at least one open order. */
   def joinSemi(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
+    val c = Tables.load(s, dir, "customer")
+    val o = Tables.load(s, dir, "orders").filter(col("o_orderstatus") === "O")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .select("c_custkey", "c_name", "c_mktsegment")
   }
 
   /** Left-anti: customers with no orders at all. */
   def joinAnti(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
+    val c = Tables.load(s, dir, "customer")
+    val o = Tables.load(s, dir, "orders")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .select("c_custkey", "c_name", "c_nationkey")
   }
@@ -270,7 +247,7 @@ object Relational {
     * (the partner's bucket is unique and the two probed buckets are
     * distinct). */
   def joinRange(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val a = e.select(col("user_id").as("a_user"), col("ts").as("a_ts"),
       col("event_type").as("type_a"))
       .withColumn("a_bkt", explode(array(
@@ -292,7 +269,7 @@ object Relational {
     * union-and-carry-forward formulation (one shuffle by user, no join
     * blowup) — see [[graft.operators.AsOf]]. Oracle: DuckDB ASOF JOIN. */
   def joinAsOf(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val errors = e.filter(col("event_type") === "error")
       .select("event_id", "user_id", "ts")
     val signups = e.filter(col("event_type") === "signup")
@@ -309,7 +286,7 @@ object Relational {
     * of [[graft.operators.AsOf.leftAsOfForward]]. Same single-shuffle
     * union-and-carry plan as `join_asof`, traversed descending. */
   def joinAsOfForward(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val errors = e.filter(col("event_type") === "error")
       .select("event_id", "user_id", "ts")
     val signups = e.filter(col("event_type") === "signup")
@@ -327,7 +304,7 @@ object Relational {
     * .leftAsOfNearest]]) — engines disagree on nearest-tie semantics,
     * so the operator (and the oracle, identically) decides. */
   def joinAsOfNearest(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val errors = e.filter(col("event_type") === "error")
       .select("event_id", "user_id", "ts")
     val signups = e.filter(col("event_type") === "signup")
@@ -345,8 +322,8 @@ object Relational {
     * join would instead be banded into an equi-join on a bucket key
     * (see joinRange for that pattern). */
   def joinTheta(s: SparkSession, dir: String): DataFrame = {
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region")
+    val n = Tables.load(s, dir, "nation")
+    val r = Tables.load(s, dir, "region")
     n.join(broadcast(r), col("n_regionkey") < col("r_regionkey"))
       .groupBy("r_name")
       .agg(count(lit(1)).as("n_nations_below"))
@@ -358,7 +335,7 @@ object Relational {
   def winTopkPerGroup(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= 3)
       .select("o_orderpriority", "rn", "o_orderkey", "o_totalprice")
@@ -371,7 +348,7 @@ object Relational {
     * precision gap between Spark and the oracle. */
   def winLagLead(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    t(s, dir, "events").select(
+    Tables.load(s, dir, "events").select(
       col("event_id"), col("user_id"),
       // Raw: a single subtraction of identical doubles is bit-identical
       // on both engines; rounding it per-engine only adds boundary risk.
@@ -388,7 +365,7 @@ object Relational {
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_orderdate"), col("o_orderkey"))
       .rowsBetween(-6, 0)
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"), col("o_custkey"),
       (sum(d18(col("o_totalprice"))).over(w).cast(DoubleType)
         / count(lit(1)).over(w)).as("ma7"))
@@ -399,7 +376,7 @@ object Relational {
     val w = Window.partitionBy("l_suppkey")
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
         col("l_suppkey"),
         first(col("l_extendedprice")).over(w).as("first_price"),
         last(col("l_extendedprice")).over(w).as("last_price"))
@@ -416,7 +393,7 @@ object Relational {
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
       round(sum(col("l_quantity")).over(w), 4).as("cum_qty"))
   }
@@ -424,7 +401,7 @@ object Relational {
   /** rank/dense_rank with ties: top-10 account balances per segment. */
   def winRank(s: SparkSession, dir: String): DataFrame = {
     val ord = Window.partitionBy("c_mktsegment").orderBy(col("c_acctbal").desc)
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .withColumn("rnk", rank().over(ord).cast("long"))
       .withColumn("drnk", dense_rank().over(ord).cast("long"))
       .filter(col("rnk") <= 10)
@@ -435,7 +412,7 @@ object Relational {
   def winNtile(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice"), col("o_orderkey"))
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderpriority"), ntile(4).over(w).cast("long").as("quartile"),
         col("o_orderkey"))
   }
@@ -444,7 +421,7 @@ object Relational {
     * explicit value list — at scale the values MUST be pinned (an
     * unpinned pivot runs a distinct scan first). */
   def aggPivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy("o_orderpriority")
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(count(lit(1)))
@@ -455,7 +432,7 @@ object Relational {
 
   /** Unpivot (melt) wide metric columns to long form. */
   def reshapeUnpivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .unpivot(
         Array(col("l_orderkey"), col("l_linenumber")),
         Array(col("l_quantity"), col("l_extendedprice")),
@@ -467,7 +444,7 @@ object Relational {
   def winRangeFrame(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("epoch"))
       .rangeBetween(-3600, 0)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         unix_timestamp(col("ts")).as("epoch"), col("value"))
       .select(col("event_id"), col("user_id"),
@@ -476,23 +453,11 @@ object Relational {
         sum(d18(col("value"))).over(w).cast(DoubleType).as("rolling_1h"))
   }
 
-  /** Correlated scalar subquery: orders 1.5× above their customer's
-    * average (decorrelated by Catalyst into an aggregate + join). */
-  def subqCorrelated(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_subq_orders")
-    s.sql(
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM graft_subq_orders o
-        |WHERE o_totalprice > 1.5 * (SELECT AVG(o2.o_totalprice)
-        |                            FROM graft_subq_orders o2
-        |                            WHERE o2.o_custkey = o.o_custkey)""".stripMargin)
-  }
-
   // --------------------------------------------------------- sort / limit
 
   /** Global top-100 orders by price (unique tiebreak for determinism). */
   def sortTopN(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(100)
       .select(col("o_orderkey"), col("o_totalprice"),
@@ -501,7 +466,7 @@ object Relational {
   /** sortWithinPartitions: partition-local sort (no global shuffle); the
     * result *set* is the projection — order is a physical property. */
   def sortWithinParts(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .repartition(col("l_suppkey"))
       .sortWithinPartitions(col("l_suppkey"), col("l_shipdate"))
       .select("l_orderkey", "l_linenumber", "l_suppkey", "l_quantity")
@@ -509,11 +474,11 @@ object Relational {
   // -------------------------------------------------------------- set ops
 
   private def sliceHighValue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_totalprice") > 200000)
+    Tables.load(s, dir, "orders").filter(col("o_totalprice") > 200000)
       .select("o_orderkey", "o_orderstatus", "o_orderpriority")
 
   private def sliceUrgent(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
+    Tables.load(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey", "o_orderstatus", "o_orderpriority")
 
   /** UNION ALL of two overlapping slices (duplicates preserved). */
@@ -539,8 +504,8 @@ object Relational {
     * the PLAIN join — any dup/loss from the salt handling breaks the
     * hash compare. */
   def joinSalted(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select("l_suppkey", "l_quantity")
-    val sup = t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+    val li = Tables.load(s, dir, "lineitem").select("l_suppkey", "l_quantity")
+    val sup = Tables.load(s, dir, "supplier").select("s_suppkey", "s_nationkey")
     graft.operators.Salting.saltedEquiJoin(li, sup, "l_suppkey", "s_suppkey", 8)
       .groupBy("s_nationkey")
       .agg(dsum(d18(col("l_quantity"))).as("sum_qty"),
@@ -557,7 +522,7 @@ object Relational {
     * value once and picks ranks relationally, bit-identical values. */
   def aggMedian(s: SparkSession, dir: String): DataFrame =
     graft.operators.ExactPercentile.of(
-        t(s, dir, "lineitem"), Seq("l_returnflag"),
+        Tables.load(s, dir, "lineitem"), Seq("l_returnflag"),
         col("l_extendedprice"),
         Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75"))
       .select(col("l_returnflag"),
@@ -571,7 +536,7 @@ object Relational {
     * boundary; a per-engine round(6) would flip there). */
   def winPercentRank(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice"))
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"), col("o_orderpriority"),
       percent_rank().over(w).as("pct_rank"),
       cume_dist().over(w).as("cume"))
@@ -582,7 +547,7 @@ object Relational {
     * so the sort is part of the operator's contract (and what makes it
     * oracle-comparable). */
   def aggCollectList(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .filter(col("c_acctbal") > 9000)
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n"),
@@ -595,7 +560,7 @@ object Relational {
     * no window over the raw event stream. */
   def eventsFunnel(s: SparkSession, dir: String): DataFrame = {
     val fmt = "yyyy-MM-dd HH:mm:ss"
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     def firstAfter(etype: String, prev: DataFrame, prevTs: String,
         outTs: String): DataFrame =
       e.filter(col("event_type") === etype)
@@ -622,8 +587,8 @@ object Relational {
     * Similarities are emitted RAW — both engines produce bit-identical
     * doubles, and engine-side rounding reintroduces midpoint skew. */
   def fuzzyMatch(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-    val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
+    val c = Tables.load(s, dir, "customer").select(col("c_custkey"), col("c_name"))
+    val sup = Tables.load(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
     c.join(sup, col("c_custkey") === col("s_suppkey"))
       .select(col("c_custkey"),
         call_function("jaro_winkler", col("c_name"), col("s_name"))
@@ -643,14 +608,14 @@ object Relational {
           col(ck) === col(pk), "left_anti")
         .agg(count(lit(1)).as("n_orphans"))
         .select(lit(name).as("fk_edge"), col("n_orphans"))
-    orphans("lineitem->orders", t(s, dir, "lineitem"), t(s, dir, "orders"),
+    orphans("lineitem->orders", Tables.load(s, dir, "lineitem"), Tables.load(s, dir, "orders"),
         "l_orderkey", "o_orderkey")
-      .unionByName(orphans("orders->customer", t(s, dir, "orders"),
-        t(s, dir, "customer"), "o_custkey", "c_custkey"))
-      .unionByName(orphans("customer->nation", t(s, dir, "customer"),
-        t(s, dir, "nation"), "c_nationkey", "n_nationkey"))
-      .unionByName(orphans("supplier->nation", t(s, dir, "supplier"),
-        t(s, dir, "nation"), "s_nationkey", "n_nationkey"))
+      .unionByName(orphans("orders->customer", Tables.load(s, dir, "orders"),
+        Tables.load(s, dir, "customer"), "o_custkey", "c_custkey"))
+      .unionByName(orphans("customer->nation", Tables.load(s, dir, "customer"),
+        Tables.load(s, dir, "nation"), "c_nationkey", "n_nationkey"))
+      .unionByName(orphans("supplier->nation", Tables.load(s, dir, "supplier"),
+        Tables.load(s, dir, "nation"), "s_nationkey", "n_nationkey"))
   }
 
   /** Cohort retention: users grouped by first-seen week, counted as
@@ -658,7 +623,7 @@ object Relational {
     * all hash-partitioned by user — the standard distributed retention
     * shape (no per-user window over raw events). */
   def eventsRetention(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
       .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
     val firsts = e.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
     e.distinct()
@@ -676,7 +641,7 @@ object Relational {
     * merge-based moments vs sequential) stays far under the rounding
     * step; variance-scale outputs (≥1e8) are deliberately excluded. */
   def aggStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         round(stddev_samp(col("l_extendedprice")), 4).as("sd_price"),
@@ -690,10 +655,10 @@ object Relational {
     * driver involvement. Money flows through DECIMAL(18,4) (a 1.1×
     * price bump adds one decimal digit, still exact at scale 4). */
   def etlUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
         d18(col("o_totalprice")).as("price"), lit(1).as("version"))
-    val updates = t(s, dir, "orders")
+    val updates = Tables.load(s, dir, "orders")
       .filter(col("o_orderkey") % 10 === 0)
       .select(col("o_orderkey"), lit("U").as("o_orderstatus"),
         (d18(col("o_totalprice")) * d8(lit(1.1)))
@@ -711,7 +676,7 @@ object Relational {
     * single double division — identical on any engine, unlike
     * width_bucket variants). One map-side-combining aggregation. */
   def aggHistogram(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(floor(col("l_extendedprice") / 10000).cast("long").as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"))
@@ -722,7 +687,7 @@ object Relational {
   def winMisc(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey")
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"), col("o_orderpriority"),
       nth_value(col("o_totalprice"), 3).over(running).as("nth3"),
       lag(col("o_totalprice"), 2, -1.0).over(w).as("lag2_dflt"),
@@ -746,34 +711,15 @@ object Relational {
           .as("n_distinct_5"))
   }
 
-  /** Existence join: an IN-subquery inside a disjunction can't become
-    * a plain semi join (rows may pass on the other disjunct alone), so
-    * Catalyst plans an ExistenceJoin — the semi join variant that adds
-    * an exists flag instead of filtering. The aggregate keys on the
-    * flag, proving both disjunct paths flow through. */
-  def joinExistence(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_exist_orders")
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_exist_lineitem")
-    s.sql(
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
-        |    AS sum_price
-        |FROM graft_exist_orders
-        |WHERE o_totalprice > 300000
-        |   OR o_orderkey IN (SELECT l_orderkey FROM graft_exist_lineitem
-        |                     WHERE l_quantity > 49)
-        |GROUP BY o_orderpriority""".stripMargin)
-  }
-
   /** Null-safe equality join (`<=>`): plain `=` drops every null key
     * on both sides; `<=>` lets null groups match each other — the
     * semantics a dimension join needs when "unknown" is itself a valid
     * bucket. Nation 5 is nulled on both sides to exercise the match. */
   def joinNullSafe(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "customer")
+    val a = Tables.load(s, dir, "customer")
       .select(nullif(col("c_nationkey"), lit(5)).as("k"))
       .groupBy("k").agg(count(lit(1)).as("n_cust"))
-    val b = t(s, dir, "supplier")
+    val b = Tables.load(s, dir, "supplier")
       .select(nullif(col("s_nationkey"), lit(5)).as("bk"))
       .groupBy("bk").agg(count(lit(1)).as("n_supp"))
     a.join(b, a("k") <=> b("bk"))
@@ -797,28 +743,6 @@ object Relational {
       (countDistinct(col("user_id")) === countDistinct(col("token")))
         .as("cardinality_preserved"),
       min(col("token")).as("min_token"))
-  }
-
-  /** LATERAL correlated subquery join: every order row pairs with an
-    * aggregate computed over ITS lineitems — the SQL surface for
-    * per-row correlated computation; Catalyst decorrelates it into an
-    * ordinary aggregate + join, so nothing is executed per-row.
-    * Engines DISAGREE on lineitem-less orders (Spark keeps a NULL-mq
-    * row, DuckDB's inner lateral drops it), so the query pins the
-    * semantics explicitly with `WHERE mq IS NOT NULL`. */
-  def joinLateral(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders").createOrReplaceTempView("graft_lat_orders")
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_lat_lineitem")
-    s.sql(
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CASE WHEN mq >= 45 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_big_max,
-        |  COUNT(*) AS n
-        |FROM graft_lat_orders o,
-        |  LATERAL (SELECT MAX(l_quantity) AS mq FROM graft_lat_lineitem
-        |           WHERE l_orderkey = o.o_orderkey)
-        |WHERE mq IS NOT NULL
-        |GROUP BY o_orderpriority""".stripMargin)
   }
 
   /** Rolling z-score over a trailing row frame — the streaming-shaped
@@ -867,7 +791,7 @@ object Relational {
     * in-group ORDER BY makes the concatenation deterministic under any
     * partitioning. */
   def aggListagg(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(
         expr("listagg(DISTINCT o_orderstatus, ',') " +
@@ -878,7 +802,7 @@ object Relational {
     * and FILTER-style conditional sums — all exact, all map-side
     * combinable. */
   def aggBoolMisc(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         expr("count_if(l_quantity > 25)").as("n_high"),
@@ -891,8 +815,8 @@ object Relational {
   /** Multiset set ops: EXCEPT ALL / INTERSECT ALL preserve duplicate
     * counts (bag semantics), unlike their DISTINCT counterparts. */
   def setopMultiset(s: SparkSession, dir: String): DataFrame = {
-    val a = t(s, dir, "lineitem").select(col("l_suppkey"), col("l_returnflag"))
-    val b = t(s, dir, "lineitem")
+    val a = Tables.load(s, dir, "lineitem").select(col("l_suppkey"), col("l_returnflag"))
+    val b = Tables.load(s, dir, "lineitem")
       .filter(col("l_quantity") > 25)
       .select(col("l_suppkey"), col("l_returnflag"))
     a.exceptAll(b)
@@ -927,7 +851,7 @@ object Relational {
     * join (DuckDB plans it as an IEJoin) — identical output, the
     * engines just differ in HOW they count. */
   def joinInterval(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val us = unix_micros(col("ts"))
     val deltas = e.filter(col("event_type") === "error")
       .select(us.as("sweep_us"), lit(0).as("kind"), lit(1L).as("delta"),
@@ -953,8 +877,7 @@ object Relational {
     * collision mass, far above the e^-depth tail). Oracle emits the
     * exact counts plus literal TRUE. */
   def aggCms(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("graft_cms_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT l_returnflag,
         |  CAST(SUM(CASE WHEN l_quantity = 1 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q1,
         |  CAST(SUM(CASE WHEN l_quantity = 25 THEN 1 ELSE 0 END) AS BIGINT) AS exact_q25,
@@ -967,7 +890,7 @@ object Relational {
         |   AND cms_estimate(CAST(l_quantity AS BIGINT), 25, 4, 2048)
         |     <= SUM(CASE WHEN l_quantity = 25 THEN 1 ELSE 0 END) + 8.0 * COUNT(*) / 2048)
         |    AS cms_ok
-        |FROM graft_cms_lineitem GROUP BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)
   }
 
   // ---------------------------------------------------------------- maps
@@ -1035,7 +958,12 @@ object Relational {
         |    THEN CAST(l_extendedprice AS DECIMAL(18,4)) END), 2) AS DOUBLE)
         |    AS high_qty_price
         |FROM lineitem GROUP BY l_returnflag""".stripMargin),
-    QueryDef("join_existence", joinExistence,
+    // Existence join: an IN-subquery inside a disjunction can't become
+    // a plain semi join (rows may pass on the other disjunct alone), so
+    // Catalyst plans an ExistenceJoin — the semi join variant that adds
+    // an exists flag instead of filtering. The aggregate keys on the
+    // flag, proving both disjunct paths flow through.
+    QueryDef.sql("join_existence",
       """SELECT o_orderpriority, COUNT(*) AS n,
         |  CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,4))), 2) AS DOUBLE)
         |    AS sum_price
@@ -1081,7 +1009,14 @@ object Relational {
         |    AS statuses,
         |  COUNT(*) AS n
         |FROM orders GROUP BY o_orderpriority""".stripMargin),
-    QueryDef("join_lateral", joinLateral,
+    // LATERAL correlated subquery join: every order row pairs with an
+    // aggregate computed over ITS lineitems — the SQL surface for
+    // per-row correlated computation; Catalyst decorrelates it into an
+    // ordinary aggregate + join, so nothing is executed per-row.
+    // Engines DISAGREE on lineitem-less orders (Spark keeps a NULL-mq
+    // row, DuckDB's inner lateral drops it), so the query pins the
+    // semantics explicitly with `WHERE mq IS NOT NULL`.
+    QueryDef.sql("join_lateral",
       """SELECT o_orderpriority,
         |  CAST(SUM(CASE WHEN mq >= 45 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_big_max,
@@ -1230,7 +1165,13 @@ object Relational {
         |  COUNT(DISTINCT l_partkey) AS n_parts,
         |  COUNT(DISTINCT l_suppkey) AS n_supps
         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
-    QueryDef("agg_rollup", aggRollup,
+    // ROLLUP over the region→nation customer hierarchy. Expressed via
+    // spark.sql: Dataset.rollup after a join trips Spark 4.1's
+    // ambiguous-self-join analyzer check even with fresh attributes
+    // (the SQL analyzer path resolves the same plan fine). The dims are
+    // far below autoBroadcastJoinThreshold, so both joins still plan as
+    // BroadcastHashJoin.
+    QueryDef.sql("agg_rollup",
       """SELECT r_name, n_name, COUNT(*) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_bal
         |FROM customer
@@ -1347,7 +1288,9 @@ object Relational {
         |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    AS rolling_1h
         |FROM e""".stripMargin),
-    QueryDef("subq_correlated", subqCorrelated,
+    // Correlated scalar subquery: orders 1.5× above their customer's
+    // average (decorrelated by Catalyst into an aggregate + join).
+    QueryDef.sql("subq_correlated",
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice > 1.5 * (SELECT AVG(o2.o_totalprice)

@@ -13,12 +13,9 @@ import graft.core.Tables
   */
 object Scalars {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** IS NULL / IN / LIKE / BETWEEN predicate stack on part. */
   def filterPredicates(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .filter(col("p_type").like("P%")
         && col("p_size").isin(5, 10, 15, 20, 25)
         && col("p_retailprice").between(900, 1500)
@@ -27,7 +24,7 @@ object Scalars {
 
   /** String functions over customer names. */
   def scalarString(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(
+    Tables.load(s, dir, "customer").select(
       col("c_custkey"),
       upper(col("c_name")).as("uname"),
       substring(col("c_name"), 1, 8).as("pre"),
@@ -40,7 +37,7 @@ object Scalars {
 
   /** Date functions over orders. */
   def scalarDate(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"),
       col("o_orderdate").cast("date").as("odate"),
       year(col("o_orderdate")).cast("long").as("yr"),
@@ -54,7 +51,7 @@ object Scalars {
 
   /** Math functions over lineitem. */
   def scalarMath(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
       (col("l_extendedprice").cast(DecimalType(18,4)) * (lit(1) - col("l_discount")).cast(DecimalType(8,4))).cast("double").as("net"),
       round(abs(col("l_discount") - col("l_tax")), 4).as("absdiff"),
@@ -68,7 +65,7 @@ object Scalars {
     * coverage. Trig outputs are irrational, so a round(6) can never sit
     * on a midpoint; bit ops are exact integers. */
   def scalarMisc(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
       (col("l_orderkey").bitwiseAND(lit(255L))).as("key_and"),
       (col("l_orderkey").bitwiseOR(col("l_linenumber"))).as("key_or"),
@@ -84,7 +81,7 @@ object Scalars {
 
   /** when/otherwise, coalesce, nullif. */
   def scalarConditional(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"),
       when(col("o_totalprice") > 300000, "high")
         .when(col("o_totalprice") > 150000, "mid")
@@ -96,7 +93,7 @@ object Scalars {
   /** JSON extraction from events.props (both get_json_object and a
     * schema-full from_json path must agree). */
   def jsonExtract(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").select(
+    Tables.load(s, dir, "events").select(
       col("event_id"),
       get_json_object(col("props"), "$.k").as("k_str"),
       get_json_object(col("props"), "$.k").cast("long").as("k_num"),
@@ -110,7 +107,7 @@ object Scalars {
     * materialization per row). A missing path surfaces null, not an
     * error, under variant_get's try semantics here. */
   def jsonVariant(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), expr("parse_json(props)").as("v"))
       .select(
         col("event_id"),
@@ -123,7 +120,7 @@ object Scalars {
     * oracle (which has no float arithmetic surprises) sees identical
     * IEEE operations in identical order. */
   def arrayOps(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(
+    Tables.load(s, dir, "embeddings").select(
       col("vec_id"),
       size(col("embedding")).cast("long").as("dim"),
       round(element_at(col("embedding"), 1).cast("double"), 6).as("e1"),
@@ -138,7 +135,7 @@ object Scalars {
     * under non-ANSI element_at), cardinality. */
   def scalarMap(s: SparkSession, dir: String): DataFrame = {
     val m = map(lit("qty"), col("l_quantity"), lit("disc"), col("l_discount"))
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
       element_at(m, "qty").as("qty_val"),
       element_at(m, "disc").as("disc_val"),
@@ -151,7 +148,7 @@ object Scalars {
     val pricing = struct(col("l_extendedprice").as("price"),
       col("l_discount").as("disc"))
     val nested = struct(pricing.as("pricing"), col("l_returnflag").as("flag"))
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
       pricing.getField("price").as("price_out"),
       nested.getField("pricing").getField("disc").as("disc_out"),
@@ -164,19 +161,18 @@ object Scalars {
     * DuckDB `xor()`/`<<`); semantics are two's-complement BIGINT on
     * both. */
   def scalarBitwise(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "part").createOrReplaceTempView("graft_bw_part")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT p_partkey,
         |  p_partkey & 170 AS band, p_partkey | 85 AS bor,
         |  p_partkey ^ 204 AS bxor, ~p_partkey AS bnot,
         |  shiftleft(p_partkey, 2) AS shl, shiftright(p_partkey, 1) AS shr,
         |  bit_count(p_partkey) AS bcnt
-        |FROM graft_bw_part WHERE p_partkey < 512""".stripMargin)
+        |FROM part WHERE p_partkey < 512""".stripMargin)
   }
 
   /** Generator surface: explode tokens, global top-20 token counts. */
   def explodeTokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("n"))

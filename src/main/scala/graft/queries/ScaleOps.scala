@@ -30,9 +30,6 @@ import graft.core.CkptTap._
   */
 object ScaleOps {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   private def d18(c: Column): Column = c.cast(DecimalType(18, 4))
   private def d8(c: Column): Column = c.cast(DecimalType(8, 4))
   private def dsum2(c: Column): Column = round(sum(c), 2).cast(DoubleType)
@@ -54,14 +51,14 @@ object ScaleOps {
     * funneling the whole table (the 100 TB difference between a
     * layout job and a stalled pipeline). */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .repartition(buckets, col("o_orderkey"))
       .write.mode("overwrite").format("parquet")
       .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
       .option("path", ScratchDirs.path(s, "graft_bkt_orders", dir))
       .saveAsTable("graft_bkt_orders")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount", "l_quantity")
       .repartition(buckets, col("l_orderkey"))
       .write.mode("overwrite").format("parquet")
@@ -92,7 +89,7 @@ object ScaleOps {
     * so a lonely anomaly still reports n_nearby = 0). Each non-anomaly
     * event has exactly one bucket, so no pair can match twice. */
   def joinBand(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
       .select(col("event_id"), unix_micros(col("ts")).as("us"), col("value"))
     val ab = expr(s"us div $bandUs")
     val a = e.filter(col("value") > 320)
@@ -116,7 +113,7 @@ object ScaleOps {
     * original parquet, so any loss in the round-trip fails the hash. */
   def scanOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = ScratchDirs.path(s, "graft_orc_roundtrip", dir)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
       .write.mode("overwrite").orc(path)
@@ -146,7 +143,7 @@ object ScaleOps {
     // stay single-file — their serializers are IO-cheap and a 1-file
     // layout is itself a coverage point.)
     val fanout = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"))
       .repartition(fanout)
@@ -179,7 +176,7 @@ object ScaleOps {
     * Σx² − 2s·Σxq + s²·Σq² with identical per-term fold order. */
   def llmQuantizeInt8(s: SparkSession, dir: String): DataFrame = {
     val emb = transform(col("embedding"), x => x.cast(DoubleType))
-    val base = t(s, dir, "embeddings")
+    val base = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), emb.as("emb"))
       .withColumn("scale",
         array_max(transform(col("emb"), x => abs(x))) / lit(127.0))
@@ -219,7 +216,7 @@ object ScaleOps {
     * (freq > n/8 > n/(k+1) with k=8 counters); the oracle emits literal
     * TRUE. An in_sketch=false row is a real sketch bug, not noise. */
   def aggHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val tot = e.agg(count(lit(1)).as("total"))
     val cands = e.agg(expr("heavy_hitters(event_type, 8)").as("cands"))
     e.groupBy("event_type").agg(count(lit(1)).as("cnt"))
@@ -239,7 +236,7 @@ object ScaleOps {
   def etlCompact(s: SparkSession, dir: String): DataFrame = {
     val small = ScratchDirs.path(s, "graft_compact_small", dir)
     val big = ScratchDirs.path(s, "graft_compact_big", dir)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select("event_id", "user_id", "event_type", "value")
       .repartition(64).write.mode("overwrite").parquet(small)
     s.read.parquet(small)
@@ -287,7 +284,7 @@ object ScaleOps {
     * be content-preserving. */
   def scanZorder(s: SparkSession, dir: String): DataFrame = {
     val path = ScratchDirs.path(s, "graft_zorder", dir)
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
         "l_quantity", "l_extendedprice")
       .withColumn("z", morton(col("l_partkey"), col("l_suppkey")))
@@ -310,7 +307,7 @@ object ScaleOps {
     * At 100 TB with 4096 buckets that's a 1000× read reduction for
     * key lookups, with no index structure to maintain. */
   def scanBucketPruned(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .repartition(buckets, col("o_orderkey")) // distributed one-file-per-bucket (see joinBucketed)
       .write.mode("overwrite").format("parquet")
@@ -337,7 +334,7 @@ object ScaleOps {
     * catalog tables" note concrete beyond join_bucketed's single-axis
     * ad-hoc layout; ScaleQueriesSpec pins both prunings in one plan. */
   def scanCatalogBucketed(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_totalprice", "o_orderpriority")
       // distributed layout write: each of the `buckets` tasks holds one
       // bucket across all partition dirs -> one file per (priority,
@@ -364,7 +361,7 @@ object ScaleOps {
     * day, not the whole history — and the oracle proves merged partials
     * are indistinguishable from a full recompute. */
   def etlIncrementalRollup(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
       .select(col("event_type"), dayofmonth(col("ts")).as("d"),
         col("value").cast(DecimalType(18, 2)).as("v"))
     def part(df: DataFrame): DataFrame =
@@ -389,7 +386,7 @@ object ScaleOps {
   def joinDpp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = ScratchDirs.path(s, "graft_dpp_lineitem", dir)
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     // The dim must be file-backed with a positively-selective filter:
@@ -425,7 +422,7 @@ object ScaleOps {
       col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
       col("o_totalprice").cast(DecimalType(18, 2)).cast("string"),
       date_format(col("o_orderdate"), "yyyy-MM-dd"), col("o_orderpriority"))
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(conv(substring(md5(rowStr), 1, 12), 16, 10).cast("long").as("h"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("h").cast(DecimalType(38, 0))).cast(DecimalType(38, 0))
@@ -456,7 +453,7 @@ object ScaleOps {
 
   def scanCachedReuse(s: SparkSession, dir: String): DataFrame = {
     val base = cachedReuseBase(s).computeIfAbsent(dir,
-      _ => t(s, dir, "lineitem")
+      _ => Tables.load(s, dir, "lineitem")
         .filter(col("l_quantity") > 10)
         .select("l_returnflag", "l_quantity", "l_extendedprice")
         .persist())
@@ -478,9 +475,9 @@ object ScaleOps {
     * sort passes, at the price of holding one partition's build side
     * in memory — a deliberate, auditable trade. */
   def joinShuffleHash(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
+    val l = Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount")
-    val o = t(s, dir, "orders").hint("shuffle_hash")
+    val o = Tables.load(s, dir, "orders").hint("shuffle_hash")
       .select("o_orderkey", "o_orderpriority")
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .groupBy("o_orderpriority")
@@ -521,9 +518,9 @@ object ScaleOps {
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val l = t(s, dir, "lineitem")
+      val l = Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount", "l_returnflag")
-      val o = t(s, dir, "orders")
+      val o = Tables.load(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select("o_orderkey")
       val df = l.join(o, l("l_orderkey") === o("o_orderkey"))
@@ -547,7 +544,7 @@ object ScaleOps {
     * shape next to the old, never by rewriting history. */
   def etlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val root = ScratchDirs.path(s, "graft_schema_evo", dir)
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), dayofmonth(col("ts")).as("d"))
     e.filter(col("d") <= 15).select("event_id", "user_id", "value")

@@ -367,24 +367,25 @@ object StreamingOps {
       .parquet(s"$base/in")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // foreachBatch runs in a CLONED session: the temp view and the
-        // MERGE must both go through batch.sparkSession (the catalog
-        // store is JVM-shared per name, so the clone sees the table).
-        batch.groupBy("event_type")
+        // foreachBatch runs in a CLONED session: the MERGE must go
+        // through batch.sparkSession (the catalog store is JVM-shared
+        // per name, so the clone sees the table).
+        val agg = batch.groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast(
                 org.apache.spark.sql.types.DecimalType(18, 4)))
               .cast(org.apache.spark.sql.types.DecimalType(18, 4))
               .as("total"))
-          .createOrReplaceTempView("graft_su_batch")
-        batch.sparkSession.sql("""MERGE INTO graft_mem.db.stream_upsert t
+        Tables.sql(batch.sparkSession, dir,
+          """MERGE INTO graft_mem.db.stream_upsert t
                 |USING graft_su_batch s ON t.event_type = s.event_type
                 |WHEN MATCHED THEN UPDATE SET
                 |  n = t.n + s.n,
                 |  total = CAST(t.total + s.total AS DECIMAL(18,4))
                 |WHEN NOT MATCHED THEN
                 |  INSERT (event_type, n, total)
-                |  VALUES (s.event_type, s.n, s.total)""".stripMargin)
+                |  VALUES (s.event_type, s.n, s.total)""".stripMargin,
+          "graft_su_batch" -> agg)
         ()
       }
       .option("checkpointLocation", s"$base/ckpt")

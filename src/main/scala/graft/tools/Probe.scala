@@ -157,15 +157,13 @@ object Probe {
         val df = graft.SparkEntry.queries(name)(spark, dir)
         df.collect()
         println(df.queryExecution.executedPlan.toString)
-      // Ad-hoc SQL over the fixture tables (each registered as a temp
-      // view by name), statement read from the file at <path>. Full
+      // Ad-hoc SQL over the fixture tables (bound by name through
+      // Tables.sql), statement read from the file at <path>. Full
       // 17-digit doubles so cross-engine ulp diffs are visible.
       case "sql" :: dir :: path :: Nil =>
-        Tables.names.foreach(n =>
-          Tables.load(spark, dir, n).createOrReplaceTempView(n))
         val stmt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(path)), "UTF-8")
-        spark.sql(stmt).collect().foreach { r =>
+        Tables.sql(spark, dir, stmt).collect().foreach { r =>
           println((0 until r.length).map { i =>
             r.get(i) match {
               case d: java.lang.Double => "%.17g".format(d)

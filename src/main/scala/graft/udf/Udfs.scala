@@ -81,12 +81,11 @@ object Udfs {
   def udfMagnitudeSql(s: SparkSession, dir: String): DataFrame = {
     if (!s.catalog.functionExists("parse_magnitude"))
       s.udf.register("parse_magnitude", (x: String) => parseMagnitudeScala(x))
-    Tables.load(s, dir, "lineitem").createOrReplaceTempView("graft_udf_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT l_orderkey, l_linenumber,
         |  round(parse_magnitude(concat(cast(l_quantity AS STRING), 'K')), 4) AS qty_k,
         |  parse_magnitude('garbage') AS bad
-        |FROM graft_udf_lineitem""".stripMargin)
+        |FROM lineitem""".stripMargin)
   }
 
   /** UDAF: per-supplier VWAP. */
@@ -112,13 +111,11 @@ object Udfs {
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(p DOUBLE, d DOUBLE)
           |RETURNS DECIMAL(27,8)
           |RETURN CAST(p AS DECIMAL(18,4)) * CAST(1 - d AS DECIMAL(8,4))""".stripMargin)
-    Tables.load(s, dir, "lineitem")
-      .createOrReplaceTempView("graft_sqlf_lineitem")
-    s.sql(
+    Tables.sql(s, dir,
       """SELECT l_returnflag, COUNT(*) AS n,
         |  CAST(ROUND(SUM(graft_disc_price(l_extendedprice, l_discount)), 2)
         |       AS DOUBLE) AS sum_disc
-        |FROM graft_sqlf_lineitem GROUP BY l_returnflag""".stripMargin)
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)
   }
 
   /** Generator (UDTF-shape): posexplode tokens with 1-based positions. */

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** The one place graft touches Spark's `private[sql]` surface: wrapping
-  * a custom [[LogicalPlan]] back into a user-facing DataFrame, and
+/** The one place graft touches Spark's `private[sql]` surface: parsing
+  * SQL text to a [[LogicalPlan]], wrapping a custom plan back into a
+  * user-facing DataFrame, and
   * draining the `private[spark]` listener bus. This is
   * the established packaging for plan-level extension libraries (the
   * same move Delta Lake et al. make); everything else in graft sticks
@@ -15,6 +16,12 @@ import org.apache.spark.sql.classic
 object DatasetShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `text` parsed by the session's SQL parser, unresolved (what
+    * `spark.sql` runs before analysis). */
+  def parsePlan(spark: SparkSession, text: String): LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.sqlParser
+      .parsePlan(text)
 
   /** Column → Catalyst Expression (Spark 4 made Column node-based; the
     * converter lives behind private[sql]). */

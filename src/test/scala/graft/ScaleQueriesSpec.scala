@@ -197,7 +197,7 @@ class ScaleQueriesSpec extends SparkTestBase {
   }
 
   test("join_existence plans an ExistenceJoin for IN-subquery in disjunction") {
-    val df = graft.queries.Relational.joinExistence(spark, sf)
+    val df = SparkEntry.queries("join_existence")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ExistenceJoin"),
       s"IN-subquery under OR should plan an ExistenceJoin:\n$plan")

@@ -56,7 +56,7 @@ class TickSourceSpec extends SparkTestBase {
     val out = graft.queries.Advanced.sqlRecursiveWalk(spark, sf)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
     // Independent recompute: walk scores are (count-matrix)^k rows.
-    val edges = spark.table("graft_rec_edges")
+    val edges = graft.queries.Advanced.walkEdges(spark, sf)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     var front: Map[String, Long] = Map("signup" -> 1L)
     (1 to 3).foreach { depth =>

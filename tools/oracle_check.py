@@ -9,7 +9,7 @@ both sides (sort columns by name, round doubles, stringify timestamps,
 sort rows) and reports per-query PASS/FAIL. Dev tool only — the engine
 itself never depends on DuckDB or Python.
 """
-import sys, json, glob, math, os
+import sys, json, glob, math, os, atexit, shutil, tempfile
 import duckdb
 import pandas as pd
 
@@ -45,6 +45,26 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
              .reset_index(drop=True)
 
 
+# One spill directory per process, removed at exit.
+SPILL_DIR = os.path.join(tempfile.gettempdir(),
+                         f"graft_duckdb_spill_{os.getpid()}")
+atexit.register(shutil.rmtree, SPILL_DIR, ignore_errors=True)
+
+
+def host_limits(spill_dir: str):
+    """DuckDB's memory limit and spill cap in MB, sized to the host the
+    way tools/host_sizing.sh sizes Spark: half of MemTotal, and half of
+    the space free on the spill directory's filesystem at start."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    st = os.statvfs(os.path.dirname(spill_dir))
+    free_mb = st.f_bavail * st.f_frsize // 2**20
+    return max(1024, kb // 1024 // 2), max(1024, free_mb // 2)
+
+
+MEMORY_MB, SPILL_MB = host_limits(SPILL_DIR)
+
+
 def fresh_con(sfdir: str):
     # One connection PER QUERY: a single shared connection accumulates
     # state across 252 oracle queries and intermittently dies with
@@ -52,9 +72,13 @@ def fresh_con(sfdir: str):
     # joins (observed on graph_triangles at sf0.1, 1-in-3 full runs).
     # Fresh connections + an explicit spill directory make the gate's
     # verdict a property of the QUERY, not of run-accumulated state.
+    # Memory and spill are capped to the host (host_limits): a limit
+    # above physical memory gets the process killed, an uncapped spill
+    # can fill the disk.
     con = duckdb.connect()
-    con.execute(f"SET temp_directory='/tmp/graft_duckdb_spill_{os.getpid()}'")
-    con.execute("SET memory_limit='24GB'")
+    con.execute(f"SET temp_directory='{SPILL_DIR}'")
+    con.execute(f"SET memory_limit='{MEMORY_MB}MB'")
+    con.execute(f"SET max_temp_directory_size='{SPILL_MB}MB'")
     for t in TABLES:
         # Driver fixtures are single files; the local sf1 fixture is
         # Spark-written (a directory of part files) — glob inside it.
