@@ -32,6 +32,29 @@ import org.apache.spark.sql.SparkSession
   *   none: a working set under 500. The cache holds 2000, over 3× that; re-run the census as the
   *   registry grows. It is a static conf: it takes effect only on the
   *   first session a JVM creates.
+  * - local files without forks: with no Hadoop native library on the
+  *   library path (the Spark jars this build uses bring none), Hadoop's
+  *   local filesystem forks `chmod` for every file and directory a
+  *   parquet write, the commit protocol or a checkpoint creates, and
+  *   the FileContext checkpoint manager forks `readlink` 2–3 times per
+  *   checkpoint rename. A JFR census of one `daily_etl` benchmark run
+  *   (warm-up plus one unit, 4 cores) counted 530 process starts, 514
+  *   of them Hadoop `Shell` forks: about 40 per one-file increment and
+  *   81 per 12-file backfill, at 2.0–3.6 ms each from a JVM with a 7 GB
+  *   heap, a third of the increment's wall time. So `file:` is
+  *   [[GraftLocalFileSystem]] (java.nio permissions, `.crc` checksums
+  *   kept; without the setting it is Hive's `ProxyLocalFileSystem`,
+  *   which the hive-exec jar registers for `file:` and which wraps
+  *   Hadoop's), and streaming checkpoints commit through Spark's
+  *   `FileSystemBasedCheckpointFileManager`, which renames with
+  *   rename(2). Hadoop caches one `FileSystem` per scheme per JVM,
+  *   built from the configuration of the first lookup, so the session
+  *   factory must make the first `file:` lookup: every entry point
+  *   builds its session before it touches a file. On HDFS the
+  *   FileSystem-based manager is the weaker one: `FileContext` renames
+  *   atomically without overwrite, while it checks that the target is
+  *   absent and then renames. Every checkpoint here has one writer, and
+  *   Spark already uses it for any scheme without a `FileContext`.
   */
 object GraftSession {
   val CodegenCacheEntries = "2000"
@@ -60,6 +83,10 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
 
   def get(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val spark = builder(cores).getOrCreate()

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.QueryDef
-import graft.core.{ScratchDirs, Tables}
+import graft.core.Tables
 
 /** Round-7 surface, part 2: the Spark-4 SQL/connector features a user
   * migrating a warehouse workload expects to keep — recursive CTEs
@@ -149,38 +149,16 @@ object Advanced {
     * of the same table agree bit-for-bit. */
   def streamDsv2(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    // Unique sink name per INVOCATION: the bench's min-of-two rerun
-    // policy re-executes this query in the same session, and reusing
-    // one memory-sink name would make the rerun's result table (and
-    // its first-batch timing) entangle with the first run's; a fresh
-    // name keeps every run an independent cold start of the same
-    // multi-batch drain, so consecutive archived runs measure the
-    // plan, not sink-name reuse artifacts.
-    val name = "graft_stream_dsv2_" +
-      java.lang.Long.toHexString(System.nanoTime())
-    // reclaim the previous run's ~8-row sink view (same session)
-    lastDsv2Sink.getAndSet(name) match {
-      case null => ()
-      case prev => s.catalog.dropTempView(prev): Unit
-    }
-    val ckpt = ScratchDirs.perRun(s, "graft_stream_dsv2", dir)
-    val q = s.readStream.format("graft.sources.TickSource")
+    val w = s.readStream.format("graft.sources.TickSource")
       .option("rows", "100000").option("parts", "8")
       .option("batchRows", "30000").load()
       .groupBy("sym")
       .agg(count(lit(1)).as("n"), sum("price_cents").as("sum_cents"))
       .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
-      .format("memory").queryName(name).start()
-    try q.awaitTermination()
-    finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
-    s.table(name)
+    graft.streaming.StreamingOps.memorySinkRun(s, "graft_stream_dsv2", dir, w)(
+      _.awaitTermination())
   }
-
-  /** Most recent streamDsv2 sink view, reclaimed on the next run. */
-  private val lastDsv2Sink =
-    new java.util.concurrent.atomic.AtomicReference[String]()
 
   /** SQL scripting (Spark 4 `BEGIN … END` with session variables): a
     * two-step procedural flow — compute a corpus statistic into a

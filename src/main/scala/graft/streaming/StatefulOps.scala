@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.QueryDef
-import graft.core.{ScratchDirs, Tables}
+import graft.core.Tables
 
 /** Custom keyed state beyond what session_window expresses
   * (SURVEY §2B streaming note): per-user running statistics with
@@ -306,19 +306,12 @@ object StatefulOps {
     s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     try {
-      val name = "graft_timer_sessions_" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      val src = graft.streaming.StreamingOps.eventsStream(s, dir)
+      val src = StreamingOps.eventsStream(s, dir)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
-      val ckpt = ScratchDirs.perRun(s, name, dir)
-      val q = timerSessions(src).toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
-      s.table(name)
+      StreamingOps.memorySinkRun(s, "graft_timer_sessions", dir,
+        timerSessions(src).toDF().writeStream.outputMode("append"))(
+        _.processAllAvailable())
     } finally {
       prev match {
         case Some(v) => s.conf.set(key, v)

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.QueryDef
 import graft.core.{ScratchDirs, Tables}
@@ -264,19 +265,34 @@ object StreamingOps {
   def availableNowRun(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.DecimalType
-    val ckpt = ScratchDirs.perRun(s, "graft_avail_now", dir)
-    val q = eventsStream(s, dir)
+    val w = eventsStream(s, dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast("double")
           .as("sum_value"))
       .writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
-      .format("memory").queryName("graft_avail_now").start()
-    try q.awaitTermination()
+    memorySinkRun(s, "graft_avail_now", dir, w)(_.awaitTermination())
+  }
+
+  /** Runs the stream `w` into a memory sink, checkpointed in a fresh
+    * [[ScratchDirs.perRun]] directory, drains it with `drain`, and
+    * returns the sink's rows. The sink's view gets a name unique to
+    * this run (`name` plus a random suffix) and is dropped before
+    * return, so no run leaves a session view behind and no two runs
+    * (two scales, two threads) share a sink; the returned frame reads
+    * the sink itself, not the view. */
+  def memorySinkRun(s: SparkSession, name: String, dir: String,
+      w: DataStreamWriter[Row])(drain: StreamingQuery => Unit): DataFrame = {
+    val sink = s"${name}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = ScratchDirs.perRun(s, name, dir)
+    val q = w.option("checkpointLocation", ckpt)
+      .format("memory").queryName(sink).start()
+    try drain(q)
     finally { q.stop(); ScratchDirs.rm(new java.io.File(ckpt)) }
-    s.table("graft_avail_now")
+    val rows = s.table(sink)
+    s.catalog.dropTempView(sink)
+    rows
   }
 
   /** Watermark-lateness profile under WORST-CASE arrival — the tuning

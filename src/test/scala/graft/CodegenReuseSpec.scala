@@ -16,7 +16,7 @@ class CodegenReuseSpec extends SparkTestBase {
   import DailyIncrementSpec.{CanonicalHeader, bar, land}
 
   test("a warm daily increment compiles no new classes") {
-    val root = Files.createTempDirectory("graft-codegen")
+    val root = tempDir("graft-codegen")
     val landing = root.resolve("landing"); Files.createDirectories(landing)
     def run(): Long = DailyRunner.runOnce(spark, landing.toString,
       root.resolve("table").toString, root.resolve("ckpt").toString)
@@ -31,7 +31,5 @@ class CodegenReuseSpec extends SparkTestBase {
     assert(run() == 1L)
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
     assert(compiled == 0L, s"a warm increment compiled $compiled classes")
-
-    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }

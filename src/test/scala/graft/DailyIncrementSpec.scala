@@ -42,7 +42,7 @@ class DailyIncrementSpec extends SparkTestBase {
   }
 
   test("backfill, increment, double-fire and header-only file count what they load") {
-    val root = Files.createTempDirectory("graft-increment")
+    val root = tempDir("graft-increment")
     val landing = root.resolve("landing"); Files.createDirectories(landing)
     val table = root.resolve("table").toString
     val ckpt = root.resolve("ckpt").toString
@@ -80,8 +80,6 @@ class DailyIncrementSpec extends SparkTestBase {
     land(landing, "day4.csv", CanonicalHeader)
     assert(run() == 0L, "a header-only file must load nothing")
     assert(tableRows(table) == before)
-
-    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }
 

@@ -13,7 +13,7 @@ import java.nio.file.Files
 class DailyRunnerSpec extends SparkTestBase {
 
   test("daily run loads the landing zone, is idempotent, and picks up new files") {
-    val root = Files.createTempDirectory("graft-daily").toString
+    val root = tempDir("graft-daily").toString
     val landing = s"$root/landing"; val table = s"$root/table"
     val ckpt = s"$root/ckpt"
     new java.io.File(landing).mkdirs()
@@ -48,7 +48,5 @@ class DailyRunnerSpec extends SparkTestBase {
     assert(newRow.length == 1 &&
       newRow(0).getAs[Double]("Price") == 101.5 &&
       newRow(0).getAs[Double]("Vol") == 1500000.0)
-
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Zero-row robustness: every sampled query must run on an EMPTY
   * corpus and return a schema-correct empty result — no
   * head-of-empty crashes, no null-seeded aggregates, no divide-
@@ -13,7 +11,7 @@ class EmptyInputSpec extends SparkTestBase {
   /** sf0.001 schemas with zero rows, written RAW (no ts conversion) so
     * Tables.load applies its normal nanos handling on read-back. */
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty_sf").toString
+    val dir = tempDir("graft_empty_sf").toString
     graft.core.Tables.names.foreach { n =>
       spark.read.parquet(s"$sf/$n.parquet").limit(0)
         .write.mode("overwrite").parquet(s"$dir/$n.parquet")

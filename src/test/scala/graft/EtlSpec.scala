@@ -11,8 +11,7 @@ import graft.etl.StockEtl
 class EtlSpec extends SparkTestBase {
 
   private lazy val table: org.apache.spark.sql.DataFrame = {
-    val target = java.nio.file.Files
-      .createTempDirectory("graft_etl_spec").toString + "/stock"
+    val target = tempDir("graft_etl_spec").toString + "/stock"
     StockEtl.runPipeline(spark, "/root/reference/stock_data.csv", target)
   }
 
@@ -52,8 +51,7 @@ class EtlSpec extends SparkTestBase {
   }
 
   test("overwrite sink is a full refresh (idempotent re-run)") {
-    val target = java.nio.file.Files
-      .createTempDirectory("graft_etl_spec2").toString + "/stock"
+    val target = tempDir("graft_etl_spec2").toString + "/stock"
     // count each run before the next overwrite invalidates its files
     val n1 = StockEtl.runPipeline(spark, "/root/reference/stock_data.csv", target).count()
     val n2 = StockEtl.runPipeline(spark, "/root/reference/stock_data.csv", target).count()
@@ -154,7 +152,7 @@ class EtlSpec extends SparkTestBase {
 
   test("fixture copy: a file left under its name with other bytes is replaced") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_fixture_copy")
+    val dir = tempDir("graft_fixture_copy")
     val bytes = "Date,Price\n\"Mar 07, 2025\",\"42,801.72\"\n".getBytes("UTF-8")
     def othersRead(p: java.nio.file.Path) = Files.getPosixFilePermissions(p)
       .contains(java.nio.file.attribute.PosixFilePermission.OTHERS_READ)

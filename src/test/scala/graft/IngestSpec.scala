@@ -101,7 +101,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("K1/JSON-lines sinks round-trip; O3 preview") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sinks").toString
+    val tmp = tempDir("graft_sinks").toString
     val df = graft.core.Tables.load(spark, sf, "region")
     Sinks.writeCsv(df, s"$tmp/csv")
     Sinks.writeJsonLines(df, s"$tmp/json")

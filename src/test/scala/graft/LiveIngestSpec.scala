@@ -60,8 +60,7 @@ class LiveIngestSpec extends SparkTestBase {
       })
     server.start()
     val port = server.getAddress.getPort
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_live_ingest").toString
+    val tmp = tempDir("graft_live_ingest").toString
     try {
       val landed = graft.tools.DailyRunner.scrapeOnce(spark,
         s"http://127.0.0.1:$port/", s"$tmp/landing",
@@ -79,10 +78,7 @@ class LiveIngestSpec extends SparkTestBase {
       val names = spark.read.parquet(s"$tmp/warehouse")
         .select("stock_name").distinct().collect().map(_.getString(0)).toSet
       assert(names == Set("Alpha", "Beta"))
-    } finally {
-      server.stop(0)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    } finally server.stop(0)
   }
 
   test("httpFetcher: non-2xx throws (so retry/isolation see a failure)") {

@@ -13,11 +13,8 @@ class QuerySmokeSpec extends SparkTestBase {
 
   /** The queries that register a temp view by design: SQL texts that
     * only `spark.sql` itself can bind (a `BEGIN … END` script,
-    * `EXECUTE IMMEDIATE`), and streaming queries whose memory sink is a
-    * view named after the query. */
-  private val registersViews = Set(
-    "sql_scripting", "sql_execute_immediate",
-    "stream_available_now", "stream_dsv2", "stream_timer_sessions")
+    * `EXECUTE IMMEDIATE`). */
+  private val registersViews = Set("sql_scripting", "sql_execute_immediate")
 
   private def tempViews(): Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary)

@@ -12,7 +12,7 @@ import graft.streaming.StreamingOps
 class RobustnessSpec extends SparkTestBase {
 
   test("PERMISSIVE CSV quarantine: bad rows captured, good rows flow") {
-    val dir = Files.createTempDirectory("graft_quarantine").toString
+    val dir = tempDir("graft_quarantine").toString
     val csv =
       """Date,Price,Vol.
         |"Mar 07, 2025","42,801.72",763.44M
@@ -28,7 +28,7 @@ class RobustnessSpec extends SparkTestBase {
   }
 
   test("Trigger.AvailableNow + checkpoint: file sink is exactly-once across restarts") {
-    val base = Files.createTempDirectory("graft_stream_ck").toString
+    val base = tempDir("graft_stream_ck").toString
     def runOnce(): Unit = {
       val q = StreamingOps.tumbling(StreamingOps.eventsStream(spark, sf))
         .writeStream
@@ -50,7 +50,7 @@ class RobustnessSpec extends SparkTestBase {
   }
 
   test("foreachBatch + checkpoint: committed batches are not redelivered") {
-    val base = Files.createTempDirectory("graft_feb_ck").toString
+    val base = tempDir("graft_feb_ck").toString
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
     def runOnce(): Unit = {
       val q = StreamingOps.eventsStream(spark, sf)

@@ -62,8 +62,7 @@ class ScaleOpsSpec extends SparkTestBase {
 
   test("dynamic partition overwrite rewrites only incoming partitions") {
     import graft.etl.StockEtl
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_dynpart").toString + "/t"
+    val path = tempDir("graft_dynpart").toString + "/t"
     val all = StockEtl.clean(
       StockEtl.readRawCsv(spark, "/root/reference/stock_data.csv"))
     StockEtl.overwritePartitioned(all, path, "stock_name")

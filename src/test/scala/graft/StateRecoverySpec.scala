@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Encoders
 
 import graft.streaming.StatefulOps
@@ -30,11 +28,6 @@ class StateRecoverySpec extends SparkTestBase {
     }
   }
 
-  private def rm(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-    f.delete(): Unit
-  }
-
   private def stage(dir: java.io.File, rows: Seq[StatefulOps.Ev]): Unit =
     rows.toDF().coalesce(1).write.mode("append")
       .parquet(dir.getAbsolutePath)
@@ -61,58 +54,54 @@ class StateRecoverySpec extends SparkTestBase {
   test("ValueState (running max) survives kill/restart: prev_max " +
       "comes from the pre-kill tranche") {
     withRocksDb {
-      val root = Files.createTempDirectory("graft_recov_vs").toFile
+      val root = tempDir("graft_recov_vs").toFile
       val src = new java.io.File(root, "src"); src.mkdirs()
       val ck = new java.io.File(root, "ck")
       val out = new java.io.File(root, "out")
-      try {
-        stage(src, Seq(StatefulOps.Ev(1L, 1L, 10.0),
-          StatefulOps.Ev(1L, 2L, 20.0), StatefulOps.Ev(2L, 3L, 100.0)))
-        val a = incarnation(src, ck, out)(StatefulOps.newHighs)
-          .as[StatefulOps.NewHigh].collect().toSet
-        // first value per key only initializes state
-        assert(a == Set(StatefulOps.NewHigh(1L, 2L, 20.0, 10.0)))
+      stage(src, Seq(StatefulOps.Ev(1L, 1L, 10.0),
+        StatefulOps.Ev(1L, 2L, 20.0), StatefulOps.Ev(2L, 3L, 100.0)))
+      val a = incarnation(src, ck, out)(StatefulOps.newHighs)
+        .as[StatefulOps.NewHigh].collect().toSet
+      // first value per key only initializes state
+      assert(a == Set(StatefulOps.NewHigh(1L, 2L, 20.0, 10.0)))
 
-        // post-restart tranche: 15 < recovered max 20 must stay silent;
-        // 25 must carry prev_max = 20 (a LOST store would re-initialize
-        // on 15 and emit prev_max = 15); 50 < user 2's recovered 100.
-        stage(src, Seq(StatefulOps.Ev(1L, 4L, 15.0),
-          StatefulOps.Ev(1L, 5L, 25.0), StatefulOps.Ev(2L, 6L, 50.0)))
-        val b = incarnation(src, ck, out)(StatefulOps.newHighs)
-          .as[StatefulOps.NewHigh].collect().toSet
-        assert(b == a + StatefulOps.NewHigh(1L, 5L, 25.0, 20.0),
-          s"state not recovered from checkpoint: $b")
-      } finally rm(root)
+      // post-restart tranche: 15 < recovered max 20 must stay silent;
+      // 25 must carry prev_max = 20 (a LOST store would re-initialize
+      // on 15 and emit prev_max = 15); 50 < user 2's recovered 100.
+      stage(src, Seq(StatefulOps.Ev(1L, 4L, 15.0),
+        StatefulOps.Ev(1L, 5L, 25.0), StatefulOps.Ev(2L, 6L, 50.0)))
+      val b = incarnation(src, ck, out)(StatefulOps.newHighs)
+        .as[StatefulOps.NewHigh].collect().toSet
+      assert(b == a + StatefulOps.NewHigh(1L, 5L, 25.0, 20.0),
+        s"state not recovered from checkpoint: $b")
     }
   }
 
   test("MapState (per-type counters) survives kill/restart: totals " +
       "continue from the pre-kill tranche") {
     withRocksDb {
-      val root = Files.createTempDirectory("graft_recov_ms").toFile
+      val root = tempDir("graft_recov_ms").toFile
       val src = new java.io.File(root, "src"); src.mkdirs()
       val ck = new java.io.File(root, "ck")
       val out = new java.io.File(root, "out")
-      try {
-        val typed = (ds: org.apache.spark.sql.Dataset[StatefulOps.Ev]) =>
-          StatefulOps.typeCounts(ds.map(e => StatefulOps.EvTyped(
-            e.user_id, e.event_id, if (e.value < 50) "click" else "buy")))
-        stage(src, Seq(StatefulOps.Ev(1L, 1L, 1.0),
-          StatefulOps.Ev(1L, 2L, 2.0), StatefulOps.Ev(1L, 3L, 99.0)))
-        val a = incarnation(src, ck, out)(typed)
-          .as[StatefulOps.TypeCount].collect().toSet
-        assert(a == Set(StatefulOps.TypeCount(1L, "click", 2L),
-          StatefulOps.TypeCount(1L, "buy", 1L)))
+      val typed = (ds: org.apache.spark.sql.Dataset[StatefulOps.Ev]) =>
+        StatefulOps.typeCounts(ds.map(e => StatefulOps.EvTyped(
+          e.user_id, e.event_id, if (e.value < 50) "click" else "buy")))
+      stage(src, Seq(StatefulOps.Ev(1L, 1L, 1.0),
+        StatefulOps.Ev(1L, 2L, 2.0), StatefulOps.Ev(1L, 3L, 99.0)))
+      val a = incarnation(src, ck, out)(typed)
+        .as[StatefulOps.TypeCount].collect().toSet
+      assert(a == Set(StatefulOps.TypeCount(1L, "click", 2L),
+        StatefulOps.TypeCount(1L, "buy", 1L)))
 
-        // one more click: the restarted incarnation must report
-        // click = 3 AND re-emit buy = 1 from the restored map — a
-        // fresh store would say click = 1 and know nothing of buys.
-        stage(src, Seq(StatefulOps.Ev(1L, 4L, 3.0)))
-        val b = incarnation(src, ck, out)(typed)
-          .as[StatefulOps.TypeCount].collect().toSet
-        assert(b == a + StatefulOps.TypeCount(1L, "click", 3L),
-          s"MapState not recovered from checkpoint: $b")
-      } finally rm(root)
+      // one more click: the restarted incarnation must report
+      // click = 3 AND re-emit buy = 1 from the restored map — a
+      // fresh store would say click = 1 and know nothing of buys.
+      stage(src, Seq(StatefulOps.Ev(1L, 4L, 3.0)))
+      val b = incarnation(src, ck, out)(typed)
+        .as[StatefulOps.TypeCount].collect().toSet
+      assert(b == a + StatefulOps.TypeCount(1L, "click", 3L),
+        s"MapState not recovered from checkpoint: $b")
     }
   }
 }

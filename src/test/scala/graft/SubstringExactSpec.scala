@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Independent brute-force validation of the window-coverage
@@ -35,7 +33,7 @@ class SubstringExactSpec extends SparkTestBase {
     9L -> "dup1 dup2 dup3 dup4 dup5 dup6")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_substr_exact").toString
+    val d = tempDir("graft_substr_exact").toString
     val rows = corpus.map { case (id, text) =>
       (id, text, "en", s"src$id", text.length.toLong)
     }

@@ -28,7 +28,7 @@ class SumSinkSpec extends SparkTestBase {
     import org.apache.spark.sql.streaming.Trigger
     SumSink.results.remove("stream")
     SumSink.epochs.remove("stream")
-    val ck = java.nio.file.Files.createTempDirectory("graft_sumsink_ck").toString
+    val ck = tempDir("graft_sumsink_ck").toString
     def runOnce(): Unit = {
       val q = graft.streaming.StreamingOps.eventsStream(spark, sf)
         .select(col("event_id"))
